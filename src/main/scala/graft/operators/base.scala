@@ -48,6 +48,12 @@ abstract class FrozenStage extends GraftTransformer {
   def release(): Unit = ()
 }
 
+/** A transformer whose statistics come from the frame it transforms
+  * (Imputer, MinorityTransformer, RangeTransformer, SetTransformer):
+  * `transform` may run Spark jobs and user callbacks, so [[FitFusion]]
+  * never probes one — it ends a fit batch instead. */
+trait TransformTimeStats { self: GraftTransformer => }
+
 /** Stateless operator: pure DataFrame → DataFrame plan extension. */
 abstract class GraftTransformer extends Transformer {
   override val uid: String = Identifiable.randomUID(getClass.getSimpleName)
@@ -84,16 +90,21 @@ abstract class GraftEstimator[M <: GraftModel[M]] extends Estimator[M] {
   * (dfpipeline/DataframePipeline.py:34-46) on `spark.ml.Pipeline` —
   * `fit`/`transform`/`fit_transform` interleaving (ibid:48-107) is exactly
   * `Pipeline.fit` + `PipelineModel.transform`. The returned pipeline fits
-  * with shared-scan fit fusion ([[FitFusion]]): consecutive independent
-  * estimator fits over the same key collapse into one aggregation job. */
+  * with shared-scan fit fusion ([[FitFusion]]): the stages are walked in
+  * batches — estimators that read no earlier batch member's output, with
+  * the row-preserving transformers between them — and every batch's
+  * fusable statistics come from one grouping-sets aggregate over the batch's
+  * base frame (the fraud pipeline: one batch, two jobs). */
 object DFPipeline {
   def apply(stages: PipelineStage*): Pipeline =
     new GraftPipeline().setStages(stages.toArray)
 }
 
-/** `Pipeline` whose `fit` groups mutually-independent estimator fits into
-  * shared scans (see [[FitFusion]]); the result is a plain `PipelineModel`
-  * with identical stage models. */
+/** `Pipeline` whose `fit` is [[FitFusion.fitPipeline]]: independent
+  * estimator fits run as batches, each batch's fusable statistics as one
+  * grouping-sets aggregate, the rest fitted one by one against the batch
+  * base. The result is a plain `PipelineModel` whose stage models equal
+  * the per-stage fits (see [[FitFusion]] for the one ≤ 1e-12 exception). */
 class GraftPipeline extends Pipeline {
   override def setStages(value: Array[_ <: PipelineStage]): this.type =
     { super.setStages(value); this }

@@ -75,6 +75,12 @@ class TargetEncoder(
     outputs.foldLeft(schema)((s, o) =>
       GraftSchema.withField(s, o, DoubleType))
 
+  /** (inputs, outputs, targetCol, idCol, nFolds, smoothing, maxCollect) for
+    * [[FitFusion]]'s shared-scan fit. */
+  private[operators] def fuseInfo
+      : (Seq[String], Seq[String], String, String, Int, Double, Long) =
+    (inputs, outputs, targetCol, idCol, nFolds, smoothing, maxCollect)
+
   override def fitDF(df: DataFrame): TargetEncoderModel = {
     val y = col(targetCol).cast(DoubleType)
     val fold = TargetEncoder.foldOf(col(idCol), nFolds)
@@ -91,7 +97,8 @@ class TargetEncoder(
       val prior = df.agg(avg(y)).head().getDouble(0)
       val m = lit(smoothing)
       val pr = lit(prior)
-      // per-value totals from the partials (cardinality-sized input)
+      // per-value totals from the partials (cardinality-sized input); the
+      // driver-side twin of these formulas is TargetEncoder.smallState
       val w = org.apache.spark.sql.expressions.Window.partitionBy("__i", "__v")
       val full = (sum("__s").over(w) + m * pr) /
         (sum("__c").over(w) + m)
@@ -132,6 +139,29 @@ object TargetEncoder {
   /** Deterministic fold id in [0, nFolds). */
   def foldOf(id: Column, nFolds: Int): Column =
     pmod(GraftFunctions.md5_hash60(id.cast(StringType)), lit(nFolds.toLong))
+
+  /** One column's fitted state from its collected (value, fold, Σy, count)
+    * partials (count ≥ 1, value non-null) — the same out-of-fold and
+    * all-data formulas, in the same operation order, as `fitDF`'s window
+    * expressions. The per-value sums add the folds in partial order, so
+    * Σy may differ from the windowed sum in the last bits on a real-valued
+    * target (exact on integer targets). */
+  private[operators] def smallState(
+      partials: Seq[(String, Long, Double, Long)],
+      prior: Double, smoothing: Double): SmallTarget = {
+    val mp = smoothing * prior
+    val totals = partials.groupBy(_._1).map { case (v, ps) =>
+      v -> (ps.map(_._3).sum, ps.map(_._4).sum)
+    }
+    val oof = partials.map { case (v, f, s, c) =>
+      val (sv, cv) = totals(v)
+      val den = (cv - c) + smoothing
+      s"$v\u0001$f" -> (if (den > 0) (sv - s + mp) / den else prior)
+    }.toMap
+    SmallTarget(oof, totals.map { case (v, (sv, cv)) =>
+      v -> (sv + mp) / (cv + smoothing)
+    })
+  }
 }
 
 sealed trait TargetState

@@ -87,7 +87,11 @@ object ExactStats {
         val pos = p * (n - 1)
         val (lo, hi) = (math.floor(pos).toLong, math.ceil(pos).toLong)
         val (vLo, vHi) = (resolved((i, lo)), resolved((i, hi)))
-        Some(if (lo == hi) vLo else vLo + (pos - lo) * (vHi - vLo))
+        // Spark `percentile`'s own operation order, so a fit through this
+        // path and one through a fused `percentile` aggregate agree to the
+        // bit (DuckDB's `lo + d·(hi − lo)` can differ in the last ulp)
+        Some(if (lo == hi || vLo == vHi) vLo
+             else (hi - pos) * vLo + (pos - lo) * vHi)
       }
     }
   }

@@ -473,19 +473,25 @@ class Scaler(inputs: Seq[String], outputs: Seq[String], strategy: String)
       }
       return new ScalerModel(inputs, outputs, strategy, stats)
     }
-    val aggs = inputs.flatMap { c =>
-      Seq(min(col(c)), max(col(c)).cast(DoubleType),
-        avg(col(c)), stddev_pop(col(c)))
-    }
+    val aggs = inputs.flatMap(c => Scaler.statAggs.map(_(col(c))))
     val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val stats = inputs.indices.map { i =>
-      ScalerStats(
-        minRaw = row.get(i * 4),
-        max = Option(row.get(i * 4 + 1)).fold(0.0)(_.asInstanceOf[Double]),
-        mean = Option(row.get(i * 4 + 2)).fold(0.0)(_.asInstanceOf[Double]),
-        stdPop = Option(row.get(i * 4 + 3)).fold(0.0)(_.asInstanceOf[Double]))
+    new ScalerModel(inputs, outputs, strategy,
+      Scaler.statsOf(row.get, inputs.length))
+  }
+}
+
+object Scaler {
+  /** The per-input fit aggregates: min (raw type), max, mean, pop std. */
+  private[operators] val statAggs: Seq[Column => Column] = Seq(
+    min(_), max(_).cast(DoubleType), avg(_), stddev_pop(_))
+
+  /** Decode `n` inputs' [[statAggs]] values, slot `i * 4 + j` for input i. */
+  private[operators] def statsOf(v: Int => Any, n: Int): Seq[ScalerStats] = {
+    def dbl(j: Int) = Option(v(j)).fold(0.0)(_.asInstanceOf[Double])
+    (0 until n).map { i =>
+      ScalerStats(minRaw = v(i * 4), max = dbl(i * 4 + 1),
+        mean = dbl(i * 4 + 2), stdPop = dbl(i * 4 + 3))
     }
-    new ScalerModel(inputs, outputs, strategy, stats)
   }
 }
 
@@ -586,11 +592,11 @@ class WinsorizerModel(
 
 object WinsorizerModel {
   /** Decode n array-percentile slots (`[lo, hi]` each, null on an all-null
-    * column) starting at `off` into per-column bounds. */
+    * column) into per-column bounds. */
   private[operators] def boundsOf(
-      row: Row, n: Int, off: Int): Seq[(Option[Double], Option[Double])] =
+      v: Int => Any, n: Int): Seq[(Option[Double], Option[Double])] =
     (0 until n).map { i =>
-      Option(row.get(off + i)) match {
+      Option(v(i)) match {
         case Some(arr) =>
           val s = arr.asInstanceOf[scala.collection.Seq[Double]]
           (Some(s(0)), Some(s(1)))

@@ -1,139 +1,350 @@
 package graft.operators
 
-import org.apache.spark.ml.{Estimator, Model, PipelineStage, Transformer}
+import org.apache.spark.ml.{Estimator, PipelineModel, PipelineStage,
+  Transformer}
 import org.apache.spark.ml.graft.MLBridge
-import org.apache.spark.ml.PipelineModel
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Shared-scan fit fusion — the fit-time analog of Catalyst's shared-subplan
   * reuse, applied across pipeline stages.
   *
-  * `Pipeline.fit` runs every estimator's fit as its own Spark job(s), so a
-  * fraud-shaped pipeline (ComplementLabelEncoder + FrequencyEncoder +
-  * grouped Aggregator, all keyed on the same composite column —
-  * FraudDetection1.py:135-152) scans and shuffles the training frame once
-  * PER STAGE even though all three fits are aggregations over the same
-  * `groupBy(key)`. At 100 TB that's three full scans + three shuffles where
-  * one suffices. This pass groups consecutive, mutually-independent
-  * estimator fits and serves each group from ONE aggregation job:
+  * `Pipeline.fit` runs every estimator's fit as its own Spark job(s), each
+  * against the frame as transformed by every earlier stage, so a
+  * fraud-shaped pipeline (label encoder + frequency encoder + grouped
+  * aggregate + target encoder + scaler + one-hot, all over the same few
+  * keys — FraudDetection1.py:135-152) scans, shuffles and re-derives the
+  * training frame once per stage. Here the stages are fitted in
+  * '''batches''', and every batch's fusable statistics come from ONE
+  * grouping-sets aggregate.
   *
-  *  - '''keyed fits''' (label-encoder vocabulary, frequency counts, one-hot
-  *    categories, grouped training aggregates) sharing one key column fuse
-  *    into a single `groupBy(key).agg(count, aggs…)`;
-  *  - '''scalar fits''' (Scaler min/max/mean/std, global Aggregator) fuse
-  *    into a single `df.agg(…)` row.
+  * '''Batch rule.''' A batch starts at an estimator; the frame at that point
+  * (earlier stages applied) is the batch base. Walking on:
+  *  - an estimator joins when none of its fit inputs is written by an
+  *    earlier batch member (inputs read from the base are then the same
+  *    values the sequential fit would see). Multi-column
+  *    ComplementLabelEncoder / FrequencyEncoder / TargetEncoder / OneHot
+  *    decompose into one part per input column;
+  *  - a transformer joins when its analyzed plan over the batch frame is
+  *    only `Project`s (it keeps every row); the attributes it adds, re-binds
+  *    or drops — compared by exprId, not name — join the written set;
+  *  - anything else ends the batch: a fit reading a batch output, a
+  *    row-changing transformer (RowTransformer's filter), a transformer
+  *    computing transform-time statistics (never probed: its `transform`
+  *    runs jobs), an estimator whose inputs are not statically known.
+  * Members whose fit cannot be fused (robust Scaler, distributed
+  * percentiles, a non-string grouped-aggregate key) still fit against the
+  * batch base — never the deep frame — with their own jobs.
   *
-  * Semantics are bit-identical to the per-stage fits (same stringification,
-  * same null handling, same lexicographic vocabulary order) — asserted
-  * stage-by-stage in FusionSpec and end-to-end by the unchanged q_pipeline /
-  * q_pipeline_catenc oracles. Fusion is only attempted where it is provably
-  * safe: a stage joins a fusion run only if its fit inputs are untouched by
-  * the outputs of every earlier stage in the run, grouped Aggregators fuse
-  * only on string keys (their fit groups by the RAW key; the fused scan
-  * groups by the stringified key — identical only when the key is already a
-  * string), and a fused vocabulary falling above `maxCollect` falls back to
-  * the stages' own fits (which then take their distributed BigDict paths).
+  * '''One aggregate per batch.''' `groupingSets` over one set per distinct
+  * key: a stringified column (shared by label-encoder vocabularies,
+  * frequencies, one-hot categories and string-keyed grouped aggregates),
+  * `(column, fold)` per target-encoded column, and `()` for Scaler stats,
+  * global aggregates, Winsorizer/QuantileBinner percentiles and the target
+  * prior. Each aggregate sees only its own set's rows
+  * (`CASE WHEN grouping_id() = g THEN x END`). The result — vocabulary-sized
+  * — is collected once through a `coalesce(1).limit(guard + 1)` guard (two
+  * jobs under AQE: the shuffle map stage and the collect) and every model is
+  * built on the driver. A result over the guard (the smallest member
+  * `maxCollect`) falls back to per-stage fits on the batch base, which then
+  * take their distributed BigDict paths.
+  *
+  * '''Equivalence.''' Fused models equal per-stage fits exactly — same
+  * stringification, null handling, lexicographic vocabulary order, and
+  * the same per-partition aggregation order — with one documented
+  * exception: a TargetEncoder's per-value target sums add the per-fold
+  * partial sums in a different order than its own window sum, so on a
+  * real-valued target its encodings may differ by ≤ 1e-12 relative (exact
+  * on 0/1 or other integer targets). FusionSpec asserts all of it.
+  *
+  * Every batch logs one INFO line: its fused members, the grouping sets,
+  * the members that fit alone with the reason (`not-fusable`, `single`,
+  * `overflow`, `empty-input`) and what ended the batch
+  * (`reads-batch-output`, `row-changing-transformer`,
+  * `transform-time-stats`, `not-fusable`).
   */
 object FitFusion {
-  /** Fusable-fit descriptor for one estimator. */
-  private sealed trait Part {
-    def stage: Estimator[_]
-    /** Columns the fit reads. */
-    def fitInputs: Set[String]
-    /** Columns the transform writes (None = statically unknown). */
-    def outCols: Option[Set[String]]
-  }
-  private case class KeyedPart(stage: Estimator[_], key: String,
-      fitInputs: Set[String], outCols: Option[Set[String]],
-      maxCollect: Long) extends Part
-  private case class ScalarPart(stage: Estimator[_],
-      fitInputs: Set[String], outCols: Option[Set[String]]) extends Part
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def partOf(st: PipelineStage, schema: StructType): Option[Part] =
+  private final case class Fold(idCol: String, nFolds: Int)
+  /** One grouping set: a stringified key column, optionally with a
+    * TargetEncoder fold; `GSet(None, None)` is the global set `()`. */
+  private final case class GSet(key: Option[String], fold: Option[Fold]) {
+    override def toString: String =
+      (key.toSeq ++ fold.map(f => s"fold(${f.idCol} % ${f.nFolds})"))
+        .mkString("(", ", ", ")")
+  }
+  private val Global = GSet(None, None)
+  private def keyed(c: String) = GSet(Some(c), None)
+
+  /** One aggregate a fit needs: `agg` over `in`, on `set`'s rows only. */
+  private final case class Slot(set: GSet, in: Column, agg: Column => Column)
+
+  /** A fusable fit: the grouping sets it reads only keys and counts of,
+    * the aggregates it needs, the result size it can take on the driver,
+    * and its model builder. */
+  private final case class Fused(
+      keySets: Seq[GSet], slots: Seq[Slot], guard: Long,
+      build: Stats => Transformer) {
+    def sets: Seq[GSet] = (keySets ++ slots.map(_.set)).distinct
+  }
+
+  /** An estimator whose fit inputs and outputs are statically known
+    * (`writes` None = output names depend on the fit, like one-hot's). */
+  private final case class Member(
+      index: Int, stage: Estimator[_], reads: Set[String],
+      writes: Option[Set[String]], fused: Option[Fused]) {
+    def name: String = s"${stage.getClass.getSimpleName}#$index"
+  }
+
+  /** One group (result row) of the batch aggregate. */
+  private final case class Group(key: String, fold: Long, count: Long,
+      row: Row)
+
+  /** The batch aggregate as one fused stage sees it: its j-th slot is
+    * result column `first + j`. */
+  private final class Stats(val spark: SparkSession,
+      bySet: Map[GSet, Seq[Group]], schema: StructType, first: Int) {
+    def groups(s: GSet): Seq[Group] = bySet.getOrElse(s, Nil)
+    /** Non-null-key groups of `s`. */
+    def values(s: GSet): Seq[Group] = groups(s).filter(_.key != null)
+    def slot(g: Group, j: Int): Any = g.row.get(first + j)
+    def global(j: Int): Any = slot(bySet(Global).head, j)
+    def slotType(j: Int): DataType = schema(first + j).dataType
+  }
+
+  private def memberOf(
+      index: Int, st: Estimator[_], schema: StructType): Option[Member] = {
+    def member(reads: Iterable[String], writes: Option[Iterable[String]],
+        fused: Option[Fused]) =
+      Some(Member(index, st, reads.toSet, writes.map(_.toSet), fused))
     st match {
       case e: ComplementLabelEncoder =>
-        val (ins, outs, maxCollect) = e.fuseInfo
-        if (ins.length != 1) None // _PARM_ALL / multi-column: own fit
-        else Some(KeyedPart(e, ins.head, ins.toSet,
-          Some((if (outs.isEmpty) ins else outs).toSet), maxCollect))
+        val (ins, outs0, maxCollect) = e.fuseInfo
+        val outs = if (outs0.isEmpty) ins else outs0
+        if (ins.isEmpty) None // _PARM_ALL: inputs resolve at fit time
+        else member(ins, Some(outs), Some(Fused(ins.map(keyed), Nil,
+          maxCollect, s => cleModel(ins, outs, s))))
       case e: FrequencyEncoder =>
-        val (ins, outs, _, maxCollect) = e.fuseInfo
-        if (ins.length != 1) None
-        else Some(KeyedPart(e, ins.head, ins.toSet, Some(outs.toSet),
-          maxCollect))
+        val (ins, outs, normalize, maxCollect) = e.fuseInfo
+        member(ins, Some(outs), Some(Fused(ins.map(keyed), Nil, maxCollect,
+          s => freqModel(ins, outs, normalize, s))))
       case e: OneHotEncoder =>
-        e.fuseCols match {
-          // output names depend on fitted categories → statically unknown
-          case Seq(c) => Some(KeyedPart(e, c, Set(c), None,
-            ComplementLabelEncoder.DefaultMaxCollect))
-          case _ => None
-        }
+        val cols = e.fuseCols
+        member(cols, None, Some(Fused(cols.map(keyed), Nil,
+          ComplementLabelEncoder.DefaultMaxCollect,
+          s => new OneHotEncoderModel(cols,
+            cols.map(c => s.values(keyed(c)).map(_.key).distinct.sorted)))))
+      case e: TargetEncoder =>
+        val (ins, outs, target, idCol, _, _, _) = e.fuseInfo
+        member(ins :+ target :+ idCol, Some(outs),
+          Some(targetFused(e)))
       case e: Aggregator =>
         val (ins, outs, groupby, _) = e.fuseInfo
-        if (groupby.isEmpty)
-          Some(ScalarPart(e, ins.toSet, Some(outs.toSet)))
-        else if (groupby.distinct.length == 1 &&
-            schema.fieldNames.contains(groupby.head) &&
-            schema(groupby.head).dataType == StringType)
-          Some(KeyedPart(e, groupby.head, ins.toSet + groupby.head,
-            Some(outs.toSet), Aggregator.CollectMax))
-        else None
+        val stringKeys = groupby.forall(k =>
+          schema.fieldNames.contains(k) && schema(k).dataType == StringType)
+        member(ins ++ groupby, Some(outs),
+          if (groupby.isEmpty || stringKeys) Some(aggregatorFused(e))
+          else None) // the fit groups by the RAW key; the scan by its string
       case e: Scaler =>
         val (ins, outs, strategy) = e.fuseInfo
-        if (strategy == "robust") None // quantile fit: multi-pass, no fusion
-        else Some(ScalarPart(e, ins.toSet, Some(outs.toSet)))
+        member(ins, Some(outs),
+          if (strategy == "robust") None // quantile fit: multi-pass
+          else Some(Fused(Nil, ins.flatMap(c => Scaler.statAggs.map(
+              a => Slot(Global, col(c), a))), Long.MaxValue,
+            s => new ScalerModel(ins, outs, strategy,
+              Scaler.statsOf(s.global, ins.length)))))
       case e: Winsorizer =>
-        if (e.isDistributed) None // multi-pass fit: nothing to fuse into
-        else {
-          val (ins, outs, _, _) = e.fuseInfo
-          Some(ScalarPart(e, ins.toSet, Some(outs.toSet)))
-        }
+        val (ins, outs, lo, hi) = e.fuseInfo
+        member(ins, Some(outs),
+          if (e.isDistributed) None
+          else Some(Fused(Nil, ins.map(c => Slot(Global, col(c),
+              percentile(_, array(lit(lo), lit(hi))))), Long.MaxValue,
+            s => new WinsorizerModel(ins, outs,
+              WinsorizerModel.boundsOf(s.global, ins.length)))))
       case e: QuantileBinner =>
-        if (e.isDistributed) None // multi-pass fit: nothing to fuse into
-        else {
-          val (ins, outs, _) = e.fuseInfo
-          Some(ScalarPart(e, ins.toSet, Some(outs.toSet)))
-        }
+        val (ins, outs, ps) = e.fuseInfo
+        member(ins, Some(outs),
+          if (e.isDistributed) None
+          else Some(Fused(Nil, ins.map(c => Slot(Global, col(c),
+              percentile(_, array(ps.map(lit(_)): _*)))), Long.MaxValue,
+            s => new QuantileBinnerModel(ins, outs,
+              ins.indices.map(i => Option(s.global(i))
+                .map(_.asInstanceOf[scala.collection.Seq[Double]].toSeq))))))
       case _ => None
     }
-
-  /** Longest prefix of `stages` (from `from`) that can fit against the
-    * frame as it stands at `from` — every stage fusable and reading only
-    * columns no earlier run member writes. */
-  private def fusionRun(
-      stages: Array[PipelineStage], from: Int,
-      schema: StructType): Seq[Part] = {
-    val run = ArrayBuffer.empty[Part]
-    var written = Set.empty[String]
-    var unknownWrites = false
-    var j = from
-    var done = false
-    while (j < stages.length && !done) {
-      partOf(stages(j), schema) match {
-        case Some(p)
-            if p.fitInputs.intersect(written).isEmpty &&
-              // after a statically-unknown writer (OneHot), only inputs that
-              // can't collide with its `col__cat` outputs are safe
-              (!unknownWrites || p.fitInputs.forall(!_.contains("__"))) =>
-          run += p
-          written ++= p.outCols.getOrElse(Set.empty)
-          if (p.outCols.isEmpty) unknownWrites = true
-          j += 1
-        case _ => done = true
-      }
-    }
-    run.toSeq
   }
 
-  /** Does fusing this run actually save jobs? */
-  private def worthFusing(run: Seq[Part]): Boolean = {
-    val keyed = run.collect { case p: KeyedPart => p }
-    val scalar = run.collect { case p: ScalarPart => p }
-    keyed.groupBy(_.key).values.exists(_.size >= 2) || scalar.size >= 2
+  private def cleModel(ins: Seq[String], outs: Seq[String],
+      s: Stats): ComplementLabelEncoderModel = {
+    val S = ComplementLabelEncoder.Sentinel
+    new ComplementLabelEncoderModel(ins, outs, ins.map { c =>
+      val vals = s.groups(keyed(c))
+        .map(g => if (g.key == null) S else g.key).distinct.sorted
+      val classes = if (vals.contains(S)) vals else vals :+ S
+      val m = classes.zipWithIndex.toMap
+      SmallDict(m, m(S))
+    })
+  }
+
+  private def freqModel(ins: Seq[String], outs: Seq[String],
+      normalize: Boolean, s: Stats): FrequencyEncoderModel =
+    new FrequencyEncoderModel(ins, outs, normalize, ins.map { c =>
+      val gs = s.values(keyed(c))
+      val total = gs.map(_.count).sum
+      SmallFreq(gs.map { g =>
+        g.key -> (if (normalize) g.count / total.toDouble
+                  else g.count.toDouble)
+      }.toMap)
+    })
+
+  /** Slots: the target mean on `()` (the prior), then Σy and count(y) on
+    * each input's `(column, fold)` set. A `(value, fold)` group whose rows
+    * all have a null target (count 0) is dropped, as the own fit's
+    * `y IS NOT NULL` filter drops it. */
+  private def targetFused(e: TargetEncoder): Fused = {
+    val (ins, outs, target, idCol, nFolds, smoothing, maxCollect) =
+      e.fuseInfo
+    val y = col(target).cast(DoubleType)
+    val sets = ins.map(c => GSet(Some(c), Some(Fold(idCol, nFolds))))
+    Fused(Nil,
+      Slot(Global, y, avg) +: sets.flatMap(g =>
+        Seq(Slot(g, y, sum), Slot(g, y, count))),
+      maxCollect,
+      s => {
+        val prior = s.global(0).asInstanceOf[java.lang.Double].doubleValue
+        new TargetEncoderModel(ins, outs, idCol, nFolds, prior,
+          sets.zipWithIndex.map { case (g, i) =>
+            val (sumJ, cntJ) = (1 + 2 * i, 2 + 2 * i)
+            val partials = s.values(g)
+              .filter(p => s.slot(p, cntJ).asInstanceOf[Long] > 0)
+              .map(p => (p.key, p.fold, s.slot(p, sumJ).asInstanceOf[Double],
+                s.slot(p, cntJ).asInstanceOf[Long]))
+            TargetEncoder.smallState(partials, prior, smoothing)
+          })
+      })
+  }
+
+  /** Global aggregates ride `()`; grouped ones their key's set, one lookup
+    * relation per distinct key like the own fit. */
+  private def aggregatorFused(e: Aggregator): Fused = {
+    val (ins, outs, groupby, func) = e.fuseInfo
+    if (groupby.isEmpty)
+      Fused(Nil, ins.map(c => Slot(Global, col(c), e.fuseAgg)),
+        Long.MaxValue, s => new AggregatorModel(ins, outs, Nil, func,
+          ins.indices.map(s.global), Nil))
+    else {
+      val byKey = groupby.distinct.map { k =>
+        k -> ins.zip(outs).zip(groupby).collect { case (io, `k`) => io }
+      }
+      val slots = byKey.flatMap { case (k, cols) =>
+        cols.map { case (in, _) => Slot(keyed(k), col(in), e.fuseAgg) }
+      }
+      Fused(Nil, slots, Aggregator.CollectMax,
+        s => {
+          val offs = byKey.scanLeft(0)(_ + _._2.length)
+          new AggregatorModel(ins, outs, groupby, func, Nil,
+            byKey.zip(offs).map { case ((k, cols), off) =>
+              val vOuts = cols.map(_._2)
+              val schema = StructType(StructField("__agg_k", StringType) +:
+                vOuts.zipWithIndex.map { case (o, j) =>
+                  StructField(s"__agg_v_$o", s.slotType(off + j))
+                })
+              val rows = s.values(keyed(k)).map(g => Row.fromSeq(
+                g.key +: vOuts.indices.map(j => s.slot(g, off + j))))
+              AggLookup(k, vOuts,
+                s.spark.createDataFrame(rows.asJava, schema),
+                broadcastable = true)
+            })
+        })
+    }
+  }
+
+  /** The attribute names `after` adds, re-binds or drops relative to
+    * `before`, if `after`'s analyzed plan is only `Project`s over
+    * `before`'s (so it keeps every row); None otherwise. */
+  private def projectWrites(
+      before: DataFrame, after: DataFrame): Option[Set[String]] = {
+    val child = before.queryExecution.analyzed
+    def onlyProjects(p: LogicalPlan): Boolean =
+      (p eq child) || p == child || (p match {
+        case Project(_, c) => onlyProjects(c)
+        case _ => false
+      })
+    val plan = after.queryExecution.analyzed
+    if (!onlyProjects(plan)) None
+    else {
+      val inIds = child.output.map(_.exprId).toSet
+      val outIds = plan.output.map(_.exprId).toSet
+      Some((plan.output.filterNot(a => inIds(a.exprId)) ++
+        child.output.filterNot(a => outIds(a.exprId))).map(_.name).toSet)
+    }
+  }
+
+  /** A batch: stages `from until until`; `members` are its estimators. */
+  private final case class Batch(from: Int, until: Int,
+      members: Seq[Member], end: Option[String])
+
+  /** Plan the batch starting at estimator `from` against `base`. */
+  private def planBatch(stages: Array[PipelineStage], from: Int,
+      lastEst: Int, base: DataFrame): Batch = {
+    val members = ArrayBuffer.empty[Member]
+    var probe = base // the batch frame with absorbed transformers applied
+    var written = Set.empty[String]
+    var unknownWrites = false
+    var end: Option[String] = None
+    var done = false
+    var j = from
+    def stop(reason: String): Unit = {
+      end = Some(s"${stages(j).getClass.getSimpleName}#$j:$reason")
+      done = true
+    }
+    while (j <= lastEst && !done) {
+      stages(j) match {
+        case est: Estimator[_] =>
+          memberOf(j, est, base.schema) match {
+            case Some(m) if m.reads.intersect(written).isEmpty &&
+                // after a writer of unknown names (one-hot's `col__cat`),
+                // only inputs that cannot be such an output are safe
+                (!unknownWrites || m.reads.forall(!_.contains("__"))) =>
+              members += m
+              m.writes match {
+                case Some(w) => written ++= w
+                case None => unknownWrites = true
+              }
+              j += 1
+            case Some(_) => stop("reads-batch-output")
+            case None if members.isEmpty =>
+              // unknown inputs and outputs: a batch of its own
+              members += Member(j, est, Set.empty, None, None)
+              j += 1
+              done = true
+            case None => stop("not-fusable")
+          }
+        case _: TransformTimeStats => stop("transform-time-stats")
+        case t: Transformer =>
+          val out = try Right(t.transform(probe).toDF())
+            catch { case NonFatal(_) => Left("reads-batch-output") }
+          out.flatMap(o => projectWrites(probe, o).map(o -> _)
+              .toRight("row-changing-transformer")) match {
+            case Right((o, w)) =>
+              probe = o
+              written ++= w
+              j += 1
+            case Left(reason) => stop(reason)
+          }
+        case other => throw new IllegalArgumentException(
+          s"stage ${other.getClass.getName} is neither Estimator nor " +
+            "Transformer")
+      }
+    }
+    Batch(from, j, members.toSeq, end)
   }
 
   /** Drop-in replacement for `Pipeline.fit` with fit fusion. Returns a
@@ -145,198 +356,117 @@ object FitFusion {
     // same upfront schema-chain validation as Pipeline.fit
     stages.foldLeft(df.schema)((s, st) => st.transformSchema(s))
     val lastEst = stages.lastIndexWhere(_.isInstanceOf[Estimator[_]])
-    val fitted = ArrayBuffer.empty[Transformer]
+    val fitted = new Array[Transformer](stages.length)
     var cur = df
     var i = 0
+    def advance(t: Transformer): Unit = {
+      fitted(i) = t
+      if (i < lastEst) cur = t.transform(cur).toDF()
+      i += 1
+    }
     while (i < stages.length) {
       stages(i) match {
-        case est: Estimator[_] =>
-          val run = fusionRun(stages, i, cur.schema)
-          val models: Seq[Transformer] =
-            if (run.length >= 2 && worthFusing(run)) fuseRun(run, cur)
-            else Seq(fitOne(est, cur))
-          models.foreach { m =>
-            fitted += m
-            if (i < lastEst) cur = m.transform(cur).toDF()
-            i += 1
+        case _: Estimator[_] =>
+          val batch = planBatch(stages, i, lastEst, cur)
+          val models = fitBatch(batch, cur)
+          while (i < batch.until) stages(i) match {
+            case _: Estimator[_] => advance(models(i))
+            case t: Transformer => advance(t)
           }
-        case t: Transformer =>
-          fitted += t
-          if (i < lastEst) cur = t.transform(cur).toDF()
-          i += 1
+        case t: Transformer => advance(t)
         case other => throw new IllegalArgumentException(
           s"stage ${other.getClass.getName} is neither Estimator nor " +
             "Transformer")
       }
     }
-    MLBridge.pipelineModel(fitted.toArray)
+    MLBridge.pipelineModel(fitted)
   }
 
-  /** Fit every part of a run against the run's base frame, fusing keyed
-    * groups and the scalar group; models returned in stage order. */
-  private def fuseRun(run: Seq[Part], df: DataFrame): Seq[Transformer] = {
-    val models = new Array[Transformer](run.length)
-    val idx = run.zipWithIndex
-
-    val keyedGroups = idx.collect { case (p: KeyedPart, i) => (p, i) }
-      .groupBy(_._1.key)
-    keyedGroups.foreach { case (key, parts) =>
-      if (parts.size >= 2) {
-        fuseKeyed(df, key, parts.map(_._1)) match {
-          case Some(ms) =>
-            parts.map(_._2).zip(ms).foreach { case (i, m) => models(i) = m }
-          case None => // vocabulary overflow → per-stage fits (BigDict path)
-            parts.foreach { case (p, i) => models(i) = fitOne(p.stage, df) }
-        }
-      } else parts.foreach { case (p, i) => models(i) = fitOne(p.stage, df) }
+  /** Fit every member of `batch` against `base`: the fused ones from one
+    * grouping-sets aggregate, the rest one by one. */
+  private def fitBatch(
+      batch: Batch, base: DataFrame): Map[Int, Transformer] = {
+    val (fusable, solo) = batch.members.partition(_.fused.isDefined)
+    val alone = ArrayBuffer.empty[(Member, String)]
+    solo.foreach(m => alone += m -> "not-fusable")
+    val fusedModels: Seq[(Member, Transformer)] =
+      if (fusable.length < 2) {
+        fusable.foreach(m => alone += m -> "single")
+        Nil
+      } else aggregate(base, fusable.map(_.fused.get)) match {
+        case Right(ms) => fusable.zip(ms)
+        case Left(reason) =>
+          fusable.foreach(m => alone += m -> reason)
+          Nil
+      }
+    val sets =
+      if (fusable.length < 2) Nil
+      else fusable.flatMap(_.fused.get.sets).distinct
+    log.info(s"FitFusion batch stages ${batch.from}-${batch.until - 1}: " +
+      s"fused=${fusedModels.map(_._1.name).mkString("[", ", ", "]")} " +
+      s"sets=${sets.mkString("[", ", ", "]")} " +
+      s"alone=${alone.map { case (m, r) => s"${m.name}:$r" }
+        .mkString("[", ", ", "]")} end=${batch.end.getOrElse("none")}")
+    val own = alone.map { case (m, _) =>
+      m -> m.stage.fit(base).asInstanceOf[Transformer]
     }
-
-    val scalars = idx.collect { case (p: ScalarPart, i) => (p, i) }
-    if (scalars.size >= 2) {
-      val ms = fuseScalar(df, scalars.map(_._1))
-      scalars.map(_._2).zip(ms).foreach { case (i, m) => models(i) = m }
-    } else scalars.foreach { case (p, i) => models(i) = fitOne(p.stage, df) }
-
-    models.toSeq
+    (fusedModels ++ own).map { case (m, t) => m.index -> t }.toMap
   }
 
-  private def fitOne(est: Estimator[_], df: DataFrame): Transformer =
-    est.fit(df).asInstanceOf[Transformer]
-
-  /** One `groupBy(key)` serves every keyed fit: group keys are the
-    * vocabulary (nulls ride along as the null group), `count(*)` the
-    * frequencies, and the grouped Aggregators contribute their aggregate
-    * expressions. Collected through a `limit(maxCollect+1)` guard — a
-    * single job; on overflow returns None and the stages refit themselves
-    * distributedly. */
-  private def fuseKeyed(
-      df: DataFrame, key: String,
-      parts: Seq[KeyedPart]): Option[Seq[Transformer]] = {
-    val S = ComplementLabelEncoder.Sentinel
-    val aggParts = parts.zipWithIndex
-      .collect { case (p @ KeyedPart(a: Aggregator, _, _, _, _), i) =>
-        (a, i)
+  /** One grouping-sets aggregate for all `parts`, collected once, and each
+    * part's model built from it — or the reason it could not be
+    * (`overflow`: more result rows than the smallest guard; `empty-input`:
+    * no rows, so no `()` group). */
+  private def aggregate(base: DataFrame,
+      parts: Seq[Fused]): Either[String, Seq[Transformer]] = {
+    val sets = parts.flatMap(_.sets).distinct
+    val keys = sets.flatMap(_.key).distinct
+    val folds = sets.flatMap(_.fold).distinct
+    val kName = keys.zipWithIndex.map { case (k, n) => k -> s"__ff_k$n" }.toMap
+    val fName = folds.zipWithIndex.map { case (f, n) => f -> s"__ff_f$n" }
+      .toMap
+    val groupCols = keys.map(kName) ++ folds.map(fName)
+    def members(s: GSet) = s.key.map(kName).toSet ++ s.fold.map(fName)
+    // grouping_id(): bit (n-1-i) set when grouping column i is NOT in the set
+    val gid = sets.map { s =>
+      s -> groupCols.zipWithIndex.foldLeft(0L) { case (g, (c, i)) =>
+        if (members(s)(c)) g else g | (1L << (groupCols.length - 1 - i))
       }
-    val aggExprs = ArrayBuffer[Column](count(lit(1)).as("__cnt"))
-    aggParts.foreach { case (a, i) =>
-      val (ins, outs, _, _) = a.fuseInfo
-      ins.zip(outs).foreach { case (in, out) =>
-        aggExprs += a.fuseAgg(col(in)).as(s"__v_${i}_$out")
+    }.toMap
+    val framed = base.select(col("*") +:
+      (keys.map(k => col(k).cast(StringType).as(kName(k))) ++
+        folds.map(f => TargetEncoder.foldOf(col(f.idCol), f.nFolds)
+          .as(fName(f)))): _*)
+    val slots = parts.flatMap(_.slots)
+    val aggs = Seq(grouping_id().as("__ff_g"), count(lit(1)).as("__ff_n")) ++
+      slots.zipWithIndex.map { case (sl, j) =>
+        sl.agg(when(grouping_id() === lit(gid(sl.set)), sl.in))
+          .as(s"__ff_a$j")
       }
-    }
-    val base = df.groupBy(col(key).cast(StringType).as("__k"))
-      .agg(aggExprs.head, aggExprs.tail.toSeq: _*)
-    val maxCollect = math.min(parts.map(_.maxCollect).min,
-      Int.MaxValue - 2L).toInt
+    val result = framed.groupingSets(
+      sets.map(s => groupCols.filter(members(s)).map(col)),
+      groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val guard = math.min(parts.map(_.guard).min, Int.MaxValue - 2L).toInt
     // coalesce(1): the final reduce of a vocab-sized aggregate runs in one
     // task, so the guarded collect is exactly ONE job (executeTake would
-    // otherwise probe the 32 reduce partitions incrementally = several jobs)
-    val rows = base.coalesce(1).limit(maxCollect + 1).collect()
-    if (rows.length > maxCollect) return None
-
-    val nonNull = rows.filterNot(_.isNullAt(0))
-    val total = nonNull.map(_.getLong(1)).sum
-
-    Some(parts.zipWithIndex.map { case (p, i) =>
-      p.stage match {
-        case e: ComplementLabelEncoder =>
-          val (ins, outs0, _) = e.fuseInfo
-          val outs = if (outs0.isEmpty) ins else outs0
-          val vals = rows
-            .map(r => if (r.isNullAt(0)) S else r.getString(0))
-            .distinct.sorted
-          val classes = if (vals.contains(S)) vals else vals :+ S
-          val m = classes.zipWithIndex.toMap
-          new ComplementLabelEncoderModel(ins, outs,
-            Seq(SmallDict(m, m(S))))
-        case e: FrequencyEncoder =>
-          val (ins, outs, normalize, _) = e.fuseInfo
-          val m = nonNull.map { r =>
-            r.getString(0) -> (if (normalize) r.getLong(1) / total.toDouble
-                               else r.getLong(1).toDouble)
-          }.toMap
-          new FrequencyEncoderModel(ins, outs, normalize, Seq(SmallFreq(m)))
-        case e: OneHotEncoder =>
-          new OneHotEncoderModel(e.fuseCols,
-            Seq(nonNull.map(_.getString(0)).distinct.sorted.toSeq))
-        case a: Aggregator =>
-          val (ins, outs, groupby, func) = a.fuseInfo
-          val schema = StructType(
-            StructField("__agg_k", StringType) +:
-              outs.map(o => StructField(s"__agg_v_$o",
-                base.schema(s"__v_${i}_$o").dataType)))
-          val lookupRows: Seq[Row] = nonNull.map { r =>
-            Row.fromSeq(r.getString(0) +:
-              outs.map(o => r.get(r.fieldIndex(s"__v_${i}_$o"))))
-          }.toSeq
-          val lookup = df.sparkSession.createDataFrame(
-            new java.util.ArrayList[Row](
-              scala.jdk.CollectionConverters.SeqHasAsJava(lookupRows).asJava),
-            schema)
-          new AggregatorModel(ins, outs, groupby, func, Nil,
-            Seq(AggLookup(key, outs, lookup, broadcastable = true)))
-      }
-    })
-  }
-
-  /** One `df.agg(…)` row serves every scalar fit (Scaler stats, global
-    * Aggregator values). */
-  private def fuseScalar(
-      df: DataFrame, parts: Seq[ScalarPart]): Seq[Transformer] = {
-    val exprs = ArrayBuffer.empty[Column]
-    val offsets = parts.map { p =>
-      val off = exprs.length
-      p.stage match {
-        case s: Scaler =>
-          val (ins, _, _) = s.fuseInfo
-          ins.foreach { c =>
-            exprs ++= Seq(min(col(c)), max(col(c)).cast(DoubleType),
-              avg(col(c)), stddev_pop(col(c)))
-          }
-        case a: Aggregator =>
-          val (ins, _, _, _) = a.fuseInfo
-          ins.foreach(c => exprs += a.fuseAgg(col(c)))
-        case w: Winsorizer =>
-          val (ins, _, lo, hi) = w.fuseInfo
-          ins.foreach(c =>
-            exprs += percentile(col(c), array(lit(lo), lit(hi))))
-        case q: QuantileBinner =>
-          val (ins, _, ps) = q.fuseInfo
-          ins.foreach(c =>
-            exprs += percentile(col(c), array(ps.map(lit(_)): _*)))
-      }
-      off
+    // otherwise probe the reduce partitions incrementally = several jobs)
+    val rows = result.coalesce(1).limit(guard + 1).collect()
+    if (rows.length > guard) return Left("overflow")
+    val nG = groupCols.length
+    val setOf = gid.map(_.swap)
+    val bySet = rows.toSeq.groupBy(_.getLong(nG)).map { case (g, rs) =>
+      val s = setOf(g)
+      val ki = s.key.map(keys.indexOf)
+      val fi = s.fold.map(f => keys.length + folds.indexOf(f))
+      s -> rs.map(r => Group(ki.map(r.getString).orNull,
+        fi.fold(-1L)(r.getLong), r.getLong(nG + 1), r))
     }
-    val row = df.agg(exprs.head, exprs.tail.toSeq: _*).head()
-    parts.zip(offsets).map { case (p, off) =>
-      p.stage match {
-        case s: Scaler =>
-          val (ins, outs, strategy) = s.fuseInfo
-          val stats = ins.indices.map { i =>
-            ScalerStats(
-              minRaw = row.get(off + i * 4),
-              max = Option(row.get(off + i * 4 + 1))
-                .fold(0.0)(_.asInstanceOf[Double]),
-              mean = Option(row.get(off + i * 4 + 2))
-                .fold(0.0)(_.asInstanceOf[Double]),
-              stdPop = Option(row.get(off + i * 4 + 3))
-                .fold(0.0)(_.asInstanceOf[Double]))
-          }
-          new ScalerModel(ins, outs, strategy, stats)
-        case a: Aggregator =>
-          val (ins, outs, _, func) = a.fuseInfo
-          new AggregatorModel(ins, outs, Nil, func,
-            ins.indices.map(i => row.get(off + i)), Nil)
-        case w: Winsorizer =>
-          val (ins, outs, _, _) = w.fuseInfo
-          new WinsorizerModel(ins, outs,
-            WinsorizerModel.boundsOf(row, ins.length, off))
-        case q: QuantileBinner =>
-          val (ins, outs, _) = q.fuseInfo
-          val cuts = ins.indices.map(i => Option(row.get(off + i))
-            .map(_.asInstanceOf[scala.collection.Seq[Double]].toSeq))
-          new QuantileBinnerModel(ins, outs, cuts)
-      }
+    if (sets.contains(Global) && !bySet.contains(Global)) Left("empty-input")
+    else {
+      val firsts = parts.scanLeft(nG + 2)(_ + _.slots.length)
+      Right(parts.zip(firsts).map { case (p, first) =>
+        p.build(new Stats(base.sparkSession, bySet, result.schema, first))
+      })
     }
   }
 }

@@ -20,7 +20,7 @@ class Imputer(
     val strategy: Option[String] = None,
     val value: Any = -1,
     val distributedMedian: Boolean = false)
-    extends GraftTransformer {
+    extends GraftTransformer with TransformTimeStats {
   require(inputs.length == outputs.length)
 
   override def transformDF(df: DataFrame): DataFrame = strategy match {
@@ -84,7 +84,7 @@ class MinorityTransformer(
     val outputs: Seq[String],
     val threshold: Long,
     val replacedTo: Any)
-    extends GraftTransformer {
+    extends GraftTransformer with TransformTimeStats {
   require(inputs.length == outputs.length)
 
   override def transformDF(df: DataFrame): DataFrame =
@@ -140,7 +140,7 @@ class RangeTransformer(
     val outputs: Seq[String],
     val rules: Seq[((Option[Double], Option[Double]), Any)],
     val useAllElements: Boolean = false)
-    extends GraftTransformer {
+    extends GraftTransformer with TransformTimeStats {
   require(inputs.length == outputs.length)
 
   private def mask(c: Column, upper: Option[Double], lower: Option[Double]) =
@@ -232,7 +232,7 @@ class SetTransformer(
     val outputFunc: Option[Seq[String] => Unit] = None,
     val outputOperand: Option[String] = None,
     val orderCol: Option[String] = None)
-    extends GraftTransformer {
+    extends GraftTransformer with TransformTimeStats {
 
   def resultDF(df: DataFrame): DataFrame = {
     val spark = df.sparkSession

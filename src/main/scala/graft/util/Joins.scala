@@ -27,14 +27,35 @@ import org.apache.spark.sql.functions.broadcast
   */
 object Joins {
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Row threshold when `SPARK_GRAFT_BCAST_MAX_ROWS` is unset or invalid:
+    * 1M rows ≈ tens of MB for the (string node, long) relations the loops
+    * carry — comfortably under the guide's "few hundred MB is usually
+    * fine" and far under the 8 GB / 512M-row broadcast hard cap. */
+  val FallbackMaxRows = 1000000L
+
   /** Max rows to broadcast-hint; env-overridable for cluster tuning
-    * (`SPARK_GRAFT_BCAST_MAX_ROWS`). Default 1M rows ≈ tens of MB for
-    * the (string node, long) relations the loops carry — comfortably
-    * under the guide's "few hundred MB is usually fine" and far under
-    * the 8 GB / 512M-row broadcast hard cap. */
+    * (`SPARK_GRAFT_BCAST_MAX_ROWS`, see [[parseMaxRows]]). */
   val DefaultMaxRows: Long =
-    sys.env.get("SPARK_GRAFT_BCAST_MAX_ROWS").map(_.toLong)
-      .getOrElse(1000000L)
+    maxRowsOf(sys.env.get("SPARK_GRAFT_BCAST_MAX_ROWS"))
+
+  /** The threshold a raw env value selects: unset → the fallback; a value
+    * that is not a positive decimal integer (`"1e6"`, `"-5"`, `""`) → the
+    * fallback plus a warning, never an initializer error. */
+  def maxRowsOf(raw: Option[String]): Long = raw match {
+    case None => FallbackMaxRows
+    case Some(v) =>
+      parseMaxRows(v).getOrElse {
+        log.warn(s"SPARK_GRAFT_BCAST_MAX_ROWS='$v' is not a positive " +
+          s"integer; using $FallbackMaxRows")
+        FallbackMaxRows
+      }
+  }
+
+  /** A positive decimal row count, or None. */
+  def parseMaxRows(raw: String): Option[Long] =
+    raw.trim.toLongOption.filter(_ > 0)
 
   /** Broadcast-hint `df` iff its exact `rows` count is ≤ `maxRows`. */
   def maybeBroadcast(df: DataFrame, rows: Long,

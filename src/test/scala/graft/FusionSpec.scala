@@ -1,13 +1,15 @@
 package graft
 
 import graft.operators._
+import org.apache.spark.ml.{Estimator, PipelineStage, Transformer}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Shared-scan fit fusion: the fused pipeline fit must produce models
-  * bit-identical to per-stage fits, in fewer Spark jobs, and must refuse to
-  * fuse when a later fit reads an earlier stage's output. */
+  * bit-identical to per-stage fits (a real-valued TargetEncoder target to
+  * 1e-12 relative), in fewer Spark jobs, and must refuse to fuse when a
+  * later fit reads an earlier stage's output or a stage changes the rows. */
 class FusionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -148,5 +150,212 @@ class FusionSpec extends SparkSpec {
       case (d, t: GraftTransformer) => t.transform(d)
     }
     sameFrames(fused, seq)
+  }
+
+  /** Sequential reference: each stage fitted on, and applied to, the frame
+    * as every earlier stage left it. */
+  private def sequential(stages: Seq[PipelineStage], df: DataFrame) =
+    stages.foldLeft(df) {
+      case (d, e: Estimator[_]) =>
+        e.fit(d).asInstanceOf[Transformer].transform(d)
+      case (d, t: Transformer) => t.transform(d)
+    }
+
+  /** The fraud feature pipeline's input shape: > 1000 distinct cards (the
+    * broadcast-lookup dictionary path), a composite merchant key, a 0/1
+    * label, and nulls in card and country. */
+  private def fraudFrame(n: Int): DataFrame = spark.range(0, n, 1, 3).select(
+    col("id").as("row_id"),
+    when(col("id") % 211 === 0, null)
+      .otherwise(concat(lit("c"), (col("id") * 7919 % 1500).cast("string")))
+      .as("card"),
+    concat(lit("m"), (col("id") * 31 % 60).cast("string")).as("merchant"),
+    (col("id") * 17 % 12).cast("int").as("mcc"),
+    when(col("id") % 97 === 0, null)
+      .otherwise(concat(lit("k"), (col("id") * 13 % 15).cast("string")))
+      .as("country"),
+    round(exp((col("id") * 37 % 1000) / 100.0), 2).as("amount"),
+    (col("id") % 24).cast("int").as("hour"),
+    when(col("id") * 101 % 17 === 0, 1).otherwise(0).as("label"))
+
+  private def fraudStages(): Seq[PipelineStage] = Seq(
+    new StringConcatenator(Seq(Seq("merchant", "mcc")), Seq("mkey"), "_"),
+    new ComplementLabelEncoder(Seq("card", "mkey"),
+      Seq("card_code", "mkey_code")),
+    new FrequencyEncoder(Seq("country", "mkey"),
+      Seq("country_freq", "mkey_freq"), normalize = true),
+    new Aggregator(Seq("amount"), Seq("mkey_amount_mean"), Seq("mkey"),
+      "mean"),
+    new TargetEncoder(Seq("mkey"), Seq("mkey_te"), targetCol = "label",
+      idCol = "row_id"),
+    new HashingEncoder(Seq("card"), Seq("card_bucket"), 256),
+    new Scaler(Seq("amount", "hour"), Seq("amount_std", "hour_std"),
+      "standard"),
+    new OneHotEncoder(Seq("country")))
+
+  test("fraud pipeline: one batch, ≤ 3 jobs, equal to the stage-by-stage fit") {
+    val df = fraudFrame(3000)
+    var model: org.apache.spark.ml.PipelineModel = null
+    val jobs = countJobs { model = DFPipeline(fraudStages(): _*).fit(df); () }
+    assert(jobs <= 3, s"fused fraud fit ran $jobs jobs")
+    sameFrames(model.transform(df), sequential(fraudStages(), df))
+  }
+
+  test("multi-column ComplementLabelEncoder and FrequencyEncoder fuse") {
+    val df = fraudFrame(500).persist()
+    df.count()
+    val stages = () => Seq(
+      new ComplementLabelEncoder(Seq("card", "country"),
+        Seq("card_code", "country_code")),
+      new FrequencyEncoder(Seq("country", "merchant"),
+        Seq("country_freq", "merchant_freq")))
+    var model: org.apache.spark.ml.PipelineModel = null
+    val jobs = countJobs { model = DFPipeline(stages(): _*).fit(df); () }
+    assert(jobs <= 2, s"fused multi-column fit ran $jobs jobs")
+    sameFrames(model.transform(df), sequential(stages(), df))
+    df.unpersist()
+  }
+
+  private def targetModel(stages: Seq[PipelineStage], df: DataFrame) =
+    DFPipeline(stages: _*).fit(df).stages
+      .collectFirst { case m: TargetEncoderModel => m }.get
+
+  private def targetTables(m: TargetEncoderModel) = m.states.map {
+    case SmallTarget(oof, full) => (oof, full)
+    case other => fail(s"expected a driver-side table, got $other")
+  }
+
+  test("TargetEncoder in a batch equals its own fit (0/1 target: exactly)") {
+    val df = fraudFrame(2000).persist()
+    df.count()
+    val te = () => new TargetEncoder(Seq("country", "merchant"),
+      Seq("country_te", "merchant_te"), targetCol = "label", idCol = "row_id",
+      nFolds = 4, smoothing = 5.0)
+    val stages = Seq(new FrequencyEncoder(Seq("country"), Seq("cf")), te())
+    var fused: TargetEncoderModel = null
+    val jobs = countJobs { fused = targetModel(stages, df); () }
+    assert(jobs <= 2, s"fused fit ran $jobs jobs")
+    val own = te().fit(df)
+    assert(fused.prior == own.prior)
+    assert(targetTables(fused) == targetTables(own))
+    val train = (m: TargetEncoderModel) => m.transformTrain(df)
+      .select("row_id", "country_te", "merchant_te")
+    sameFrames(train(fused), train(own))
+    df.unpersist()
+  }
+
+  test("TargetEncoder in a batch: a real-valued target within 1e-12 relative") {
+    val df = fraudFrame(2000).withColumn("y", col("amount") / 7.0)
+    val te = () => new TargetEncoder(Seq("country"), Seq("country_te"),
+      targetCol = "y", idCol = "row_id")
+    val fused = targetModel(
+      Seq(new ComplementLabelEncoder(Seq("card"), Seq("cc")), te()), df)
+    val own = te().fit(df)
+    val close = (a: Double, b: Double) =>
+      math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b))
+    assert(close(fused.prior, own.prior))
+    targetTables(fused).zip(targetTables(own)).foreach {
+      case ((fo, ff), (oo, of)) =>
+        assert(fo.keySet == oo.keySet && ff.keySet == of.keySet)
+        fo.foreach { case (k, v) => assert(close(v, oo(k)), s"oof $k") }
+        ff.foreach { case (k, v) => assert(close(v, of(k)), s"full $k") }
+    }
+  }
+
+  test("a RowTransformer between two fits ends the batch") {
+    val df = train
+    val stages = () => Seq(
+      new FrequencyEncoder(Seq("k"), Seq("k_freq"), normalize = true),
+      new RowTransformer(Seq("k"), Seq("a")),
+      new FrequencyEncoder(Seq("k"), Seq("k_freq2"), normalize = true),
+      new ComplementLabelEncoder(Seq("k"), Seq("k_code")))
+    val fused = DFPipeline(stages(): _*).fit(df).transform(df)
+    sameFrames(fused, sequential(stages(), df))
+    // rows 3..6 survive the filter; k_freq counted all six rows, k_freq2
+    // and k_code only the kept ones
+    assertColApprox(fused, "k_freq", Seq(0.4, 0.0, 0.2, 0.4).map(Some(_)))
+    assertColApprox(fused, "k_freq2",
+      Seq(2.0 / 3, 0.0, 1.0 / 3, 2.0 / 3).map(Some(_)))
+    assertCol(fused, "k_code", Seq(0, 2, 1, 0))
+  }
+
+  test("a Winsorizer in a batch with keyed parts equals its own fit") {
+    val df = fraudFrame(1000)
+    val winsor = () => new Winsorizer(Seq("amount", "hour"),
+      Seq("amount_w", "hour_w"), 0.05, 0.9)
+    val stages = () => Seq(
+      new ComplementLabelEncoder(Seq("country"), Seq("country_code")),
+      winsor(),
+      new FrequencyEncoder(Seq("country"), Seq("country_freq")))
+    val model = DFPipeline(stages(): _*).fit(df)
+    val fused = model.stages.collectFirst { case m: WinsorizerModel => m }.get
+    assert(fused.bounds == winsor().fit(df).bounds)
+    sameFrames(model.transform(df), sequential(stages(), df))
+  }
+
+  test("a transform-time-statistics transformer ends the batch unprobed") {
+    val df = train
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = Seq(
+      new ComplementLabelEncoder(Seq("k"), Seq("k_code")),
+      new SetTransformer(Left("k"), Right(Seq("a", "b")), "&",
+        outputFunc = Some(_ => { calls.incrementAndGet(); () })),
+      new FrequencyEncoder(Seq("k"), Seq("k_freq")))
+    DFPipeline(stages: _*).fit(df)
+    // once, on the frame the sequential fit hands it — never on a probe
+    assert(calls.get() == 1)
+  }
+
+  /** The INFO lines FitFusion logs while `body` runs. */
+  private def decisions(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val name = FitFusion.getClass.getName
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("fusion-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        { lines.add(e.getMessage.getFormattedMessage); () }
+    }
+    appender.start()
+    Configurator.setLevel(name, Level.INFO)
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    logger.setAdditive(false)
+    logger.addAppender(appender)
+    try body finally {
+      logger.removeAppender(appender)
+      Configurator.setLevel(name, Level.WARN)
+    }
+    scala.jdk.CollectionConverters.CollectionHasAsScala(lines).asScala.toSeq
+  }
+
+  test("one decision line per batch: members, grouping sets, fallbacks") {
+    val fraud = decisions {
+      DFPipeline(fraudStages(): _*).fit(fraudFrame(300))
+      ()
+    }
+    assert(fraud.length == 1, fraud)
+    val line = fraud.head
+    assert(line.contains("fused=[ComplementLabelEncoder#1, " +
+      "FrequencyEncoder#2, Aggregator#3, TargetEncoder#4, Scaler#6, " +
+      "OneHotEncoder#7]"), line)
+    Seq("(card)", "(mkey)", "(country)", "(mkey, fold(row_id % 5))", "()")
+      .foreach(set => assert(line.contains(set), s"$set in $line"))
+    assert(line.contains("alone=[] end=none"), line)
+
+    val filtered = decisions {
+      DFPipeline(new FrequencyEncoder(Seq("k"), Seq("f")),
+        new RowTransformer(Seq("k"), Seq("a")),
+        new ComplementLabelEncoder(Seq("k"), Seq("c"), maxCollect = 0L),
+        new FrequencyEncoder(Seq("v"), Seq("vf"))).fit(train)
+      ()
+    }
+    assert(filtered.length == 2, filtered)
+    assert(filtered.head.contains("alone=[FrequencyEncoder#0:single] " +
+      "end=RowTransformer#1:row-changing-transformer"), filtered.head)
+    assert(filtered(1).contains("alone=[ComplementLabelEncoder#2:overflow, " +
+      "FrequencyEncoder#3:overflow]"), filtered(1))
   }
 }
