@@ -37,10 +37,16 @@ import scala.util.control.NonFatal
   *  - anything else ends the batch: a fit reading a batch output, a
   *    row-changing transformer (RowTransformer's filter), a transformer
   *    computing transform-time statistics (never probed: its `transform`
-  *    runs jobs), an estimator whose inputs are not statically known.
+  *    runs jobs), an estimator whose inputs are not statically known, a
+  *    fit whose grouping columns (one per key, one per fold) would take
+  *    the batch past the 64 `grouping_id()` bits.
   * Members whose fit cannot be fused (robust Scaler, distributed
-  * percentiles, a non-string grouped-aggregate key) still fit against the
-  * batch base — never the deep frame — with their own jobs.
+  * percentiles, a non-string grouped-aggregate key, a fit needing over 64
+  * grouping columns by itself) still fit against the batch base — never
+  * the deep frame — with their own jobs. So do `percentile`-based fits
+  * (Winsorizer, QuantileBinner, global median) in a batch with keyed sets:
+  * their value→count buffers merge in one task there, slower than their
+  * own ExactStats fits; beside only `()` aggregates they fuse.
   *
   * '''One aggregate per batch.''' `groupingSets` over one set per distinct
   * key: a stringified column (shared by label-encoder vocabularies,
@@ -49,11 +55,12 @@ import scala.util.control.NonFatal
   * global aggregates, Winsorizer/QuantileBinner percentiles and the target
   * prior. Each aggregate sees only its own set's rows
   * (`CASE WHEN grouping_id() = g THEN x END`). The result — vocabulary-sized
-  * — is collected once through a `coalesce(1).limit(guard + 1)` guard (two
-  * jobs under AQE: the shuffle map stage and the collect) and every model is
-  * built on the driver. A result over the guard (the smallest member
-  * `maxCollect`) falls back to per-stage fits on the batch base, which then
-  * take their distributed BigDict paths.
+  * — is collected once through a `coalesce(1).limit(n)` guard (two jobs
+  * under AQE: the shuffle map stage and the collect), `n` covering each
+  * keyed set up to its readers' largest `maxCollect`, and every model is
+  * built on the driver. A member with more groups in one of its sets than
+  * its own `maxCollect` falls back to its per-stage fit on the batch base
+  * (which then takes its distributed BigDict path); the others stay fused.
   *
   * '''Equivalence.''' Fused models equal per-stage fits exactly — same
   * stringification, null handling, lexicographic vocabulary order, and
@@ -64,10 +71,10 @@ import scala.util.control.NonFatal
   * on 0/1 or other integer targets). FusionSpec asserts all of it.
   *
   * Every batch logs one INFO line: its fused members, the grouping sets,
-  * the members that fit alone with the reason (`not-fusable`, `single`,
-  * `overflow`, `empty-input`) and what ended the batch
-  * (`reads-batch-output`, `row-changing-transformer`,
-  * `transform-time-stats`, `not-fusable`).
+  * the members that fit alone with the reason (`not-fusable`,
+  * `grouping-limit`, `percentile`, `single`, `overflow`, `empty-input`) and
+  * what ended the batch (`reads-batch-output`, `row-changing-transformer`,
+  * `transform-time-stats`, `not-fusable`, `grouping-limit`).
   */
 object FitFusion {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -87,19 +94,26 @@ object FitFusion {
   private final case class Slot(set: GSet, in: Column, agg: Column => Column)
 
   /** A fusable fit: the grouping sets it reads only keys and counts of,
-    * the aggregates it needs, the result size it can take on the driver,
-    * and its model builder. */
+    * the aggregates it needs, the groups per keyed set it can take on the
+    * driver, and its model builder. `percentile`: it aggregates through
+    * `percentile` on `()` (Winsorizer, QuantileBinner, global median). */
   private final case class Fused(
       keySets: Seq[GSet], slots: Seq[Slot], guard: Long,
-      build: Stats => Transformer) {
+      build: Stats => Transformer, percentile: Boolean = false) {
     def sets: Seq[GSet] = (keySets ++ slots.map(_.set)).distinct
   }
 
+  /** The grouping columns `sets` need: one per key, one per fold. */
+  private def groupingCols(sets: Seq[GSet]): Seq[Any] =
+    sets.flatMap(_.key).distinct ++ sets.flatMap(_.fold).distinct
+
   /** An estimator whose fit inputs and outputs are statically known
-    * (`writes` None = output names depend on the fit, like one-hot's). */
+    * (`writes` None = output names depend on the fit, like one-hot's);
+    * `alone` is why it fits on its own when `fused` is None. */
   private final case class Member(
       index: Int, stage: Estimator[_], reads: Set[String],
-      writes: Option[Set[String]], fused: Option[Fused]) {
+      writes: Option[Set[String]], fused: Option[Fused],
+      alone: String = "not-fusable") {
     def name: String = s"${stage.getClass.getSimpleName}#$index"
   }
 
@@ -167,7 +181,8 @@ object FitFusion {
           else Some(Fused(Nil, ins.map(c => Slot(Global, col(c),
               percentile(_, array(lit(lo), lit(hi))))), Long.MaxValue,
             s => new WinsorizerModel(ins, outs,
-              WinsorizerModel.boundsOf(s.global, ins.length)))))
+              WinsorizerModel.boundsOf(s.global, ins.length)),
+            percentile = true)))
       case e: QuantileBinner =>
         val (ins, outs, ps) = e.fuseInfo
         member(ins, Some(outs),
@@ -176,7 +191,8 @@ object FitFusion {
               percentile(_, array(ps.map(lit(_)): _*)))), Long.MaxValue,
             s => new QuantileBinnerModel(ins, outs,
               ins.indices.map(i => Option(s.global(i))
-                .map(_.asInstanceOf[scala.collection.Seq[Double]].toSeq))))))
+                .map(_.asInstanceOf[scala.collection.Seq[Double]].toSeq))),
+            percentile = true)))
       case _ => None
     }
   }
@@ -238,7 +254,7 @@ object FitFusion {
     if (groupby.isEmpty)
       Fused(Nil, ins.map(c => Slot(Global, col(c), e.fuseAgg)),
         Long.MaxValue, s => new AggregatorModel(ins, outs, Nil, func,
-          ins.indices.map(s.global), Nil))
+          ins.indices.map(s.global), Nil), percentile = func == "median")
     else {
       val byKey = groupby.distinct.map { k =>
         k -> ins.zip(outs).zip(groupby).collect { case (io, `k`) => io }
@@ -291,10 +307,18 @@ object FitFusion {
   private final case class Batch(from: Int, until: Int,
       members: Seq[Member], end: Option[String])
 
+  /** Most grouping columns one aggregate can take: `grouping_id()` has
+    * one bit per column and is a Long (an Int under the legacy flag). */
+  private def groupingLimit(spark: SparkSession): Int =
+    if (spark.conf.get("spark.sql.legacy.integerGroupingId", "false")
+        .toBoolean) 32 else 64
+
   /** Plan the batch starting at estimator `from` against `base`. */
   private def planBatch(stages: Array[PipelineStage], from: Int,
       lastEst: Int, base: DataFrame): Batch = {
+    val limit = groupingLimit(base.sparkSession)
     val members = ArrayBuffer.empty[Member]
+    var sets = Seq.empty[GSet] // the fused members' grouping sets
     var probe = base // the batch frame with absorbed transformers applied
     var written = Set.empty[String]
     var unknownWrites = false
@@ -309,16 +333,28 @@ object FitFusion {
       stages(j) match {
         case est: Estimator[_] =>
           memberOf(j, est, base.schema) match {
-            case Some(m) if m.reads.intersect(written).isEmpty &&
+            case Some(m0) if m0.reads.intersect(written).isEmpty &&
                 // after a writer of unknown names (one-hot's `col__cat`),
                 // only inputs that cannot be such an output are safe
-                (!unknownWrites || m.reads.forall(!_.contains("__"))) =>
-              members += m
-              m.writes match {
-                case Some(w) => written ++= w
-                case None => unknownWrites = true
+                (!unknownWrites || m0.reads.forall(!_.contains("__"))) =>
+              val m = m0.fused match {
+                case Some(f) if groupingCols(f.sets).length > limit =>
+                  m0.copy(fused = None, alone = "grouping-limit")
+                case _ => m0
               }
-              j += 1
+              // never true for the first member: alone it is within limit
+              if (m.fused.exists(f =>
+                  groupingCols(sets ++ f.sets).length > limit))
+                stop("grouping-limit")
+              else {
+                members += m
+                sets ++= m.fused.toSeq.flatMap(_.sets)
+                m.writes match {
+                  case Some(w) => written ++= w
+                  case None => unknownWrites = true
+                }
+                j += 1
+              }
             case Some(_) => stop("reads-batch-output")
             case None if members.isEmpty =>
               // unknown inputs and outputs: a batch of its own
@@ -387,21 +423,25 @@ object FitFusion {
   private def fitBatch(
       batch: Batch, base: DataFrame): Map[Int, Transformer] = {
     val (fusable, solo) = batch.members.partition(_.fused.isDefined)
+    // percentile buffers merge single-threaded and grow with the distinct
+    // values; beside keyed sets (whose final merge runs in one task) they
+    // would slow the whole aggregate, so there they keep their own
+    // ExactStats fits
+    val keyed = fusable.exists(_.fused.get.sets.exists(_ != Global))
+    val (pct, rest) = fusable.partition(keyed && _.fused.get.percentile)
     val alone = ArrayBuffer.empty[(Member, String)]
-    solo.foreach(m => alone += m -> "not-fusable")
+    solo.foreach(m => alone += m -> m.alone)
+    pct.foreach(m => alone += m -> "percentile")
     val fusedModels: Seq[(Member, Transformer)] =
-      if (fusable.length < 2) {
-        fusable.foreach(m => alone += m -> "single")
+      if (rest.length < 2) {
+        rest.foreach(m => alone += m -> "single")
         Nil
-      } else aggregate(base, fusable.map(_.fused.get)) match {
-        case Right(ms) => fusable.zip(ms)
-        case Left(reason) =>
-          fusable.foreach(m => alone += m -> reason)
-          Nil
+      } else {
+        val (ok, over) = aggregate(base, rest)
+        alone ++= over
+        ok
       }
-    val sets =
-      if (fusable.length < 2) Nil
-      else fusable.flatMap(_.fused.get.sets).distinct
+    val sets = fusedModels.flatMap(_._1.fused.get.sets).distinct
     log.info(s"FitFusion batch stages ${batch.from}-${batch.until - 1}: " +
       s"fused=${fusedModels.map(_._1.name).mkString("[", ", ", "]")} " +
       s"sets=${sets.mkString("[", ", ", "]")} " +
@@ -413,12 +453,22 @@ object FitFusion {
     (fusedModels ++ own).map { case (m, t) => m.index -> t }.toMap
   }
 
-  /** One grouping-sets aggregate for all `parts`, collected once, and each
-    * part's model built from it — or the reason it could not be
-    * (`overflow`: more result rows than the smallest guard; `empty-input`:
-    * no rows, so no `()` group). */
-  private def aggregate(base: DataFrame,
-      parts: Seq[Fused]): Either[String, Seq[Transformer]] = {
+  /** One grouping-sets aggregate for all `ms`, collected once: the models
+    * built from it, and the members that must fit alone with the reason
+    * (`overflow`: one of its keyed sets has more groups than its guard;
+    * `empty-input`: no rows, so no `()` group; `single`: the only member
+    * left after the others overflowed a truncated collect).
+    *
+    * Each keyed set needs one row more than the largest guard among its
+    * readers to show whether it overflows (`()` has one row); the collect
+    * takes one row past the sum. Within the sum it holds every group, so
+    * each member is judged on its own sets and the rest are built from the
+    * same rows. Past it, the collect is truncated, but then some set is
+    * over its limit, so its readers overflow and the others are aggregated
+    * again without them. */
+  private def aggregate(base: DataFrame, ms: Seq[Member])
+      : (Seq[(Member, Transformer)], Seq[(Member, String)]) = {
+    val parts = ms.map(_.fused.get)
     val sets = parts.flatMap(_.sets).distinct
     val keys = sets.flatMap(_.key).distinct
     val folds = sets.flatMap(_.fold).distinct
@@ -438,7 +488,8 @@ object FitFusion {
         folds.map(f => TargetEncoder.foldOf(col(f.idCol), f.nFolds)
           .as(fName(f)))): _*)
     val slots = parts.flatMap(_.slots)
-    val aggs = Seq(grouping_id().as("__ff_g"), count(lit(1)).as("__ff_n")) ++
+    val aggs = Seq(grouping_id().cast(LongType).as("__ff_g"),
+        count(lit(1)).as("__ff_n")) ++
       slots.zipWithIndex.map { case (sl, j) =>
         sl.agg(when(grouping_id() === lit(gid(sl.set)), sl.in))
           .as(s"__ff_a$j")
@@ -446,12 +497,17 @@ object FitFusion {
     val result = framed.groupingSets(
       sets.map(s => groupCols.filter(members(s)).map(col)),
       groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    val guard = math.min(parts.map(_.guard).min, Int.MaxValue - 2L).toInt
+    val need = sets.map { s =>
+      if (s == Global) 1L
+      else math.min(parts.filter(_.sets.contains(s)).map(_.guard).max,
+        Int.MaxValue.toLong) + 1
+    }.sum
+    // one row past `need` tells a complete collect from a truncated one
+    val limit = math.min(need + 1, Int.MaxValue - 1L).toInt
     // coalesce(1): the final reduce of a vocab-sized aggregate runs in one
     // task, so the guarded collect is exactly ONE job (executeTake would
     // otherwise probe the reduce partitions incrementally = several jobs)
-    val rows = result.coalesce(1).limit(guard + 1).collect()
-    if (rows.length > guard) return Left("overflow")
+    val rows = result.coalesce(1).limit(limit).collect()
     val nG = groupCols.length
     val setOf = gid.map(_.swap)
     val bySet = rows.toSeq.groupBy(_.getLong(nG)).map { case (g, rs) =>
@@ -461,12 +517,25 @@ object FitFusion {
       s -> rs.map(r => Group(ki.map(r.getString).orNull,
         fi.fold(-1L)(r.getLong), r.getLong(nG + 1), r))
     }
-    if (sets.contains(Global) && !bySet.contains(Global)) Left("empty-input")
+    val (over, fit) = ms.partition(m => m.fused.get.sets.exists(s =>
+      s != Global && bySet.get(s).exists(_.length > m.fused.get.guard)))
+    val overflow = over.map(_ -> "overflow")
+    if (rows.length == limit) { // truncated: the members in `fit` unjudged
+      if (over.isEmpty) (Nil, ms.map(_ -> "overflow")) // only past Int.Max
+      else if (fit.length < 2) (Nil, overflow ++ fit.map(_ -> "single"))
+      else {
+        val (ok, alone) = aggregate(base, fit)
+        (ok, overflow ++ alone)
+      }
+    } else if (sets.contains(Global) && !bySet.contains(Global))
+      (Nil, ms.map(_ -> "empty-input"))
     else {
       val firsts = parts.scanLeft(nG + 2)(_ + _.slots.length)
-      Right(parts.zip(firsts).map { case (p, first) =>
-        p.build(new Stats(base.sparkSession, bySet, result.schema, first))
-      })
+      val built = ms.zip(firsts).collect {
+        case (m, first) if fit.contains(m) => m -> m.fused.get.build(
+          new Stats(base.sparkSession, bySet, result.schema, first))
+      }
+      (built, overflow)
     }
   }
 }

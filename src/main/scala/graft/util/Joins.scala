@@ -33,10 +33,10 @@ object Joins {
     * 1M rows ≈ tens of MB for the (string node, long) relations the loops
     * carry — comfortably under the guide's "few hundred MB is usually
     * fine" and far under the 8 GB / 512M-row broadcast hard cap. */
-  val FallbackMaxRows = 1000000L
+  private val FallbackMaxRows = 1000000L
 
   /** Max rows to broadcast-hint; env-overridable for cluster tuning
-    * (`SPARK_GRAFT_BCAST_MAX_ROWS`, see [[parseMaxRows]]). */
+    * (`SPARK_GRAFT_BCAST_MAX_ROWS`, see [[maxRowsOf]]). */
   val DefaultMaxRows: Long =
     maxRowsOf(sys.env.get("SPARK_GRAFT_BCAST_MAX_ROWS"))
 
@@ -46,16 +46,12 @@ object Joins {
   def maxRowsOf(raw: Option[String]): Long = raw match {
     case None => FallbackMaxRows
     case Some(v) =>
-      parseMaxRows(v).getOrElse {
+      v.trim.toLongOption.filter(_ > 0).getOrElse {
         log.warn(s"SPARK_GRAFT_BCAST_MAX_ROWS='$v' is not a positive " +
           s"integer; using $FallbackMaxRows")
         FallbackMaxRows
       }
   }
-
-  /** A positive decimal row count, or None. */
-  def parseMaxRows(raw: String): Option[Long] =
-    raw.trim.toLongOption.filter(_ > 0)
 
   /** Broadcast-hint `df` iff its exact `rows` count is ≤ `maxRows`. */
   def maybeBroadcast(df: DataFrame, rows: Long,

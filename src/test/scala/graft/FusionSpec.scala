@@ -320,13 +320,15 @@ class FusionSpec extends SparkSpec {
         { lines.add(e.getMessage.getFormattedMessage); () }
     }
     appender.start()
-    Configurator.setLevel(name, Level.INFO)
     val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    val (level, additive) = (logger.getLevel, logger.isAdditive)
+    Configurator.setLevel(name, Level.INFO)
     logger.setAdditive(false)
     logger.addAppender(appender)
     try body finally {
       logger.removeAppender(appender)
-      Configurator.setLevel(name, Level.WARN)
+      logger.setAdditive(additive)
+      Configurator.setLevel(name, level)
     }
     scala.jdk.CollectionConverters.CollectionHasAsScala(lines).asScala.toSeq
   }
@@ -355,7 +357,72 @@ class FusionSpec extends SparkSpec {
     assert(filtered.length == 2, filtered)
     assert(filtered.head.contains("alone=[FrequencyEncoder#0:single] " +
       "end=RowTransformer#1:row-changing-transformer"), filtered.head)
-    assert(filtered(1).contains("alone=[ComplementLabelEncoder#2:overflow, " +
-      "FrequencyEncoder#3:overflow]"), filtered(1))
+    // only the overflowing member falls back; the other keeps its fused fit
+    assert(filtered(1).contains("fused=[FrequencyEncoder#3] sets=[(v)] " +
+      "alone=[ComplementLabelEncoder#2:overflow]"), filtered(1))
+  }
+
+  test("an overflowing member fits alone, the others stay fused") {
+    val df = train
+    // guards 1 and 4: the (v) set's 6 groups overflow the first; the (k)
+    // set's 4 groups (a, b, c, null) fit the others. The collect stops at
+    // 2 + 5 + 1 rows of 10, so the two are aggregated again on their own
+    val stages = () => Seq(
+      new ComplementLabelEncoder(Seq("v"), Seq("v_code"), maxCollect = 1L),
+      new FrequencyEncoder(Seq("k"), Seq("k_freq"), maxCollect = 4L),
+      new ComplementLabelEncoder(Seq("k"), Seq("k_code"), maxCollect = 4L))
+    var model: org.apache.spark.ml.PipelineModel = null
+    val lines = decisions { model = DFPipeline(stages(): _*).fit(df); () }
+    assert(lines.length == 1, lines)
+    assert(lines.head.contains("fused=[FrequencyEncoder#1, " +
+      "ComplementLabelEncoder#2] sets=[(k)] " +
+      "alone=[ComplementLabelEncoder#0:overflow]"), lines.head)
+    sameFrames(model.transform(df), sequential(stages(), df))
+  }
+
+  test("a batch never takes more than 64 grouping columns") {
+    val df = spark.range(0, 40, 1, 2).select(col("id").as("row_id") +:
+      (0 until 70).map(i => (col("id") * (i + 3) % 7).cast("string")
+        .as(s"c$i")): _*)
+    val cs = (n: Range) => n.map(i => s"c$i")
+    val stages = () => Seq(
+      // 65 keys by itself: fits alone, the batch goes on
+      new ComplementLabelEncoder(cs(0 until 65), cs(0 until 65).map(_ + "_a")),
+      new FrequencyEncoder(cs(0 until 40), cs(0 until 40).map(_ + "_f")),
+      new ComplementLabelEncoder(cs(0 until 10), cs(0 until 10).map(_ + "_b")),
+      // 40 + 30 keys: ends the batch, starts the next
+      new FrequencyEncoder(cs(40 until 70), cs(40 until 70).map(_ + "_f")))
+    var model: org.apache.spark.ml.PipelineModel = null
+    val lines = decisions { model = DFPipeline(stages(): _*).fit(df); () }
+    assert(lines.length == 2, lines)
+    assert(lines.head.contains("fused=[FrequencyEncoder#1, " +
+      "ComplementLabelEncoder#2]"), lines.head)
+    assert(lines.head.contains("alone=[ComplementLabelEncoder#0:" +
+      "grouping-limit] end=FrequencyEncoder#3:grouping-limit"), lines.head)
+    assert(lines(1).contains("alone=[FrequencyEncoder#3:single]"), lines(1))
+    sameFrames(model.transform(df), sequential(stages(), df))
+  }
+
+  test("percentile fits stay out of keyed batches and fuse beside () sets") {
+    val df = fraudFrame(600)
+    val winsor = () => new Winsorizer(Seq("amount"), Seq("amount_w"),
+      0.05, 0.9)
+    val binner = () => new QuantileBinner(Seq("hour"), Seq("hour_bin"), 4)
+    val keyed = () => Seq(winsor(),
+      new ComplementLabelEncoder(Seq("country"), Seq("country_code")),
+      new FrequencyEncoder(Seq("country"), Seq("country_freq")), binner())
+    val global = () => Seq(winsor(),
+      new Scaler(Seq("amount"), Seq("amount_std"), "standard"), binner())
+    for ((stages, line) <- Seq(
+        keyed -> ("fused=[ComplementLabelEncoder#1, FrequencyEncoder#2] " +
+          "sets=[(country)] alone=[Winsorizer#0:percentile, " +
+          "QuantileBinner#3:percentile]"),
+        global -> ("fused=[Winsorizer#0, Scaler#1, QuantileBinner#2] " +
+          "sets=[()] alone=[]"))) {
+      var model: org.apache.spark.ml.PipelineModel = null
+      val lines = decisions { model = DFPipeline(stages(): _*).fit(df); () }
+      assert(lines.length == 1 && lines.head.contains(line), lines)
+      sameFrames(model.transform(df), sequential(stages(), df))
+    }
   }
 }

@@ -16,6 +16,5 @@ class JoinsSpec extends AnyFunSuite {
   test("a positive integer SPARK_GRAFT_BCAST_MAX_ROWS is taken as is") {
     assert(Joins.maxRowsOf(Some("250000")) == 250000L)
     assert(Joins.maxRowsOf(Some(" 42 ")) == 42L)
-    assert(Joins.parseMaxRows("1e6").isEmpty)
   }
 }
