@@ -58,7 +58,9 @@ object Geo {
     * centidegrees) producing each unordered pair within `radiusCdeg`
     * centidegrees (flat-grid euclidean: dx² + dy² ≤ r², exact integer
     * arithmetic). Output: (id_a, id_b, dist_cdeg2, haversine_km) with
-    * id_a < id_b, haversine rounded 6 dp.
+    * id_a < id_b, haversine rounded 6 dp. A pair whose ids are equal or
+    * null is never emitted: points sharing an id are one entity, and
+    * [[densityClusters]] feeds the pairs to components that need ids.
     *
     * Cell size = radius (in centidegrees), so matching pairs are always
     * in the same or an adjacent cell; the left side explodes to a
@@ -114,7 +116,7 @@ object Geo {
     val d1 = lat1 - lat2
     val d2 = lon1 - lon2
     left.join(right, Seq("__cy", "__cx"))
-      .filter(!col("__self") || aFirst)
+      .filter((!col("__self") || aFirst) && col("id_a") =!= col("id_b"))
       .filter(dy * dy + dx * dx <= lit(radiusCdeg.toLong * radiusCdeg))
       .select(
         sel(col("id_a"), col("id_b")).as("id_a"),

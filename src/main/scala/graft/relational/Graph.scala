@@ -1,9 +1,7 @@
 package graft.relational
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Weighted PageRank (Page et al. 1999) on an edge relation, in EXACT
   * integer arithmetic so any SQL engine replays every iteration
@@ -24,21 +22,22 @@ import org.apache.spark.storage.StorageLevel
   * edges + N per round, far below rank magnitudes, and both engines
   * leak identically.
   *
-  * Shape at 100 TB: the edge relation (with pre-joined out-weights) is
-  * built ONCE and persisted; each iteration is one join of the
-  * (node, rank) relation — always the small side, broadcast by AQE when
-  * it fits — one dst-aggregate (map-side combined), and one scalar
-  * action for the dangling mass. `localCheckpoint` per round truncates
-  * the iterative lineage exactly like
-  * [[graft.text.Dedup]]'s distributed components loop. Overflow bound:
+  * Shape at 100 TB: a [[graft.util.Fixpoint]] loop over the edges
+  * persisted on `dst`, plus one marker row per edge keyed on its SOURCE
+  * (weight in `pw`): every node is a `dst` group whose Σ pw is its
+  * out-weight — no node table, no out-weight join. An iteration is one
+  * left join with the broadcast (node, ow, rank) state and one `dst`
+  * aggregate with no exchange; its dangling mass is observed on that job
+  * and enters the next iteration as an exact literal. Overflow bound:
   * needs scale · max(w) < 2^63 / 85 — at the default 1e9 scale that
   * allows per-edge weights up to ~10^8.
   */
 object Graph {
+  import graft.util.Fixpoint
 
   /** PageRank over `(srcCol, dstCol, wCol)` edges (long weights > 0;
-    * rows with w ≤ 0 are dropped). Returns `(node, rank)` with rank in
-    * integer `scale` units; Σ rank ≈ scale. */
+    * rows with w ≤ 0 or a null endpoint are dropped). Returns
+    * `(node, rank)` with rank in integer `scale` units; Σ rank ≈ scale. */
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
       iters: Int, scale: Long = 1000000000L): DataFrame = {
@@ -46,50 +45,28 @@ object Graph {
     require(scale >= 1000L, s"need scale >= 1000, got $scale")
     val e0 = edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"), col(wCol).cast("long").as("w"))
-      .filter(col("w") > 0L)
-    val outW = e0.groupBy("src").agg(sum("w").as("ow"))
-    val e = e0.join(outW, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    // the dangling set (nodes with no out-edges) is STATIC: flag it once
-    // on the persisted node relation instead of re-deriving it with a
-    // per-iteration anti-join (round 10, guide §2.4 — one join per round
-    // removed; the rank relation carries one extra boolean)
-    val nodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node"))).distinct()
-      .join(outW.select(col("src").as("node"))
-        .withColumn("__hasout", lit(true)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__hasout"), lit(false))
-        .as("__hasout"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = math.max(nodes.count(), 1L)
-    var r = nodes.withColumn("rank", lit(scale / n))
-    for (_ <- 1 to iters) {
-      // dangling mass rides the plan as a broadcast one-row relation, so
-      // each iteration is ONE job (the eager localCheckpoint) — no
-      // driver scalar round trip per round; the static flag turns the
-      // old per-round anti-join into a filter over the rank relation
-      val dang = r.filter(!col("__hasout"))
-        .agg(coalesce(sum("rank"), lit(0L)).as("__dang"))
-      // rank side broadcast when the EXACT node count (already in hand)
-      // fits (round 11, guide §2.4/§3.1): the persisted edge relation is
-      // then never re-shuffled per round — the only remaining exchange
-      // is the map-side-combined dst aggregate
-      val contrib = e.join(graft.util.Joins.maybeBroadcast(
-          r.select(col("node").as("src"), col("rank")), n),
-          "src")
-        .select(col("dst").as("node"),
-          expr("(85 * ((rank * w) div ow)) div 100").as("__c"))
-        .groupBy("node").agg(sum("__c").as("__inflow"))
-      r = nodes.join(contrib, Seq("node"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"), col("__hasout"),
-          (coalesce(col("__inflow"), lit(0L)) +
-            lit(15L * scale / (100L * n)) +
-            expr(s"(85 * (__dang div ${n}L)) div 100")).as("rank"))
-        .localCheckpoint(true)
-    }
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    r.select("node", "rank")
+      .filter(col("w") > 0L && col("src").isNotNull && col("dst").isNotNull)
+    val e = Fixpoint.edges(e0.withColumn("pw", lit(null).cast("long"))
+      .union(e0.select(lit(null).cast("string"), col("src"),
+        lit(null).cast("long"), col("w"))), "dst", dedup = false)
+    val seed = Fixpoint.checkpoint(
+      e.groupBy(col("dst").as("node")).agg(sum("pw").as("ow")),
+      count(lit(1)).as("nodes"), count(when(col("ow").isNull, 1)).as("sinks"))
+    val n = math.max(seed("nodes"), 1L)
+    val rank0 = Fixpoint.State(seed.df.withColumn("rank", lit(scale / n)),
+      Map("dang" -> seed("sinks") * (scale / n)))
+    Fixpoint.iterate("pageRank", e, rank0, iters)(_ => false) { r =>
+      val base = 15L * scale / (100L * n) + 85L * (r.state("dang") / n) / 100L
+      Fixpoint.checkpoint(e.join(r.broadcast(r.state.df.select(
+            col("node").as("src"), col("ow").as("sow"), col("rank")), n),
+          Seq("src"), "left")
+        .groupBy(col("dst").as("node"))
+        .agg(sum("pw").as("ow"),
+          sum(expr("(85 * ((rank * w) div sow)) div 100")).as("inflow"))
+        .select(col("node"), col("ow"),
+          (coalesce(col("inflow"), lit(0L)) + lit(base)).as("rank")),
+        sum(when(col("ow").isNull, col("rank"))).as("dang"))
+    }.df.select("node", "rank")
   }
 
   /** EXACT triangle count over an undirected edge relation — the
@@ -129,56 +106,40 @@ object Graph {
     * pure integer iteration, deterministic in any engine (min hop
     * distance is unique; no weights, no floats). Returns (node, dist).
     *
-    * Frontier-style: each round expands only the LAST round's frontier
-    * and anti-joins the visited set, so per-round work is proportional
-    * to the frontier, not to everything seen so far — the difference
-    * between BFS and quadratic blowup on small-diameter graphs. Per
-    * round: one join with the (persisted, deduped) edge relation, one
-    * distinct, one anti-join; `localCheckpoint` truncates the iterative
-    * lineage like [[pageRank]]'s loop. An empty frontier short-circuits
-    * the remaining rounds (one cheap `isEmpty` action per round on the
-    * already-checkpointed frontier). */
+    * Frontier-style, as a [[graft.util.Fixpoint]] loop over the edges
+    * persisted on `dst`. The visited set is a union of checkpointed
+    * frontiers, broadcast into two lookups: an edge from a visited node to
+    * an unvisited one must leave the last frontier (an older source's
+    * targets are visited by now), so those edges' `dst` distinct — on the
+    * edge partitioning, no exchange — IS the next frontier. Its size is
+    * observed on the round's job; an empty frontier ends the loop. */
   def shortestPaths(
       edges: DataFrame, srcCol: String, dstCol: String,
       sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 20,
       s"need 1 <= maxHops <= 20, got $maxHops")
-    val e = edges.select(col(srcCol).cast("string").as("src"),
+    val e = Fixpoint.edges(edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var visited = sources.select(col(sources.columns.head)
+      .filter(col("src") =!= col("dst")), "dst")
+    val frontier = count(lit(1)).as("frontier")
+    val seed = Fixpoint.checkpoint(sources.select(col(sources.columns.head)
         .cast("string").as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    var frontier = visited.select("node")
-    // frontier/visited counts are exact and carried incrementally, so
-    // the per-round joins broadcast the node-sized side when it fits
-    // (round 11, guide §2.4/§3.1) — the persisted edge relation is then
-    // never shuffled; the count replaces the old isEmpty check (same
-    // one action per round over the checkpointed frontier)
-    var nFrontier = visited.count()
-    var nVisited = nFrontier
-    var hop = 1
-    var done = false
-    while (hop <= maxHops && !done) {
-      frontier = e.join(graft.util.Joins.maybeBroadcast(
-          frontier.withColumnRenamed("node", "src"), nFrontier), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(graft.util.Joins.maybeBroadcast(visited, nVisited),
-          Seq("node"), "left_anti")
-        .localCheckpoint(true)
-      nFrontier = frontier.count()
-      if (nFrontier == 0L) done = true
-      else {
-        visited = visited
-          .union(frontier.withColumn("dist", lit(hop.toLong)))
-          .localCheckpoint(true)
-        nVisited += nFrontier
-        hop += 1
-      }
-    }
-    e.unpersist(blocking = false)
-    visited
+      .withColumn("dist", lit(0L)), frontier)
+    Fixpoint.iterate("shortestPaths", e,
+        seed + ("visited" -> seed("frontier")), maxHops)(
+        _("frontier") == 0L) { r =>
+      val visited = r.broadcast(r.state.df.select("node"), r.state("visited"))
+      val next = Fixpoint.checkpoint(e
+          .join(visited.withColumnRenamed("node", "src"), "src")
+          .join(visited.withColumnRenamed("node", "dst"), Seq("dst"),
+            "left_anti")
+          .select(col("dst").as("node")).distinct()
+          .withColumn("dist", lit(r.index.toLong)),
+        frontier)
+      Fixpoint.State(r.state.df.union(next.df),
+        Map("frontier" -> next("frontier"),
+          "visited" -> (r.state("visited") + next("frontier"))))
+    }.df
   }
 
   /** Generated BFS oracle: the identical frontier replay as unrolled SQL
@@ -218,48 +179,40 @@ object Graph {
     * round is a FIXPOINT: Spark short-circuits when a round removes
     * nothing, while the generated oracle ([[kCoreSql]]) always unrolls
     * all `maxRounds` — identical output either way, which is what makes
-    * the early exit safe under the oracle. Per round: one join of the
-    * persisted edge relation against the (checkpointed, node-sized)
-    * active set + one count aggregate — work is edges-bound and shrinks
-    * with the active set; nothing is ever quadratic. */
+    * the early exit safe under the oracle. A [[graft.util.Fixpoint]] loop
+    * over the symmetric edges persisted on `d`, whose state is the
+    * surviving nodes' within-core degrees — the converged round's degrees
+    * ARE the output, no final recount. Per round the kept nodes (deg ≥ k)
+    * are broadcast into both endpoint joins and one `d` count runs on the
+    * edge partitioning with no exchange, observing the kept count that
+    * decides convergence; work is edges-bound, never quadratic. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxRounds: Int): DataFrame = {
     require(k >= 1 && maxRounds >= 1 && maxRounds <= 30,
       s"need k >= 1, 1 <= maxRounds <= 30; got k=$k rounds=$maxRounds")
+    val e = Fixpoint.edges(undirected(edges, srcCol, dstCol), "d")
+    def degrees(in: DataFrame) = Fixpoint.checkpoint(
+      in.groupBy(col("d").as("node")).agg(count(lit(1)).as("deg")),
+      count(lit(1)).as("nodes"), count(when(col("deg") >= k, 1)).as("kept"))
+    // "active" is |active set|: a round converges when it keeps them all
+    val seed = degrees(e)
+    Fixpoint.iterate("kCore", e, seed + ("active" -> seed("nodes")),
+        maxRounds)(s => s("kept") == s("active")) { r =>
+      val kept = r.broadcast(
+        r.state.df.filter(col("deg") >= k).select("node"), r.state("kept"))
+      degrees(e.join(kept.withColumnRenamed("node", "s"), "s")
+        .join(kept.withColumnRenamed("node", "d"), "d")) +
+        ("active" -> r.state("kept"))
+    }.df
+  }
+
+  /** `(s, d)` string edges made symmetric, self-loops dropped. */
+  private[graft] def undirected(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = {
     val dir = edges.select(col(srcCol).cast("string").as("s"),
       col(dstCol).cast("string").as("d"))
-    val e = dir.union(dir.select(col("d").as("s"), col("s").as("d")))
-      .filter(col("s") =!= col("d")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // active side broadcast into BOTH joins when the EXACT count from
-    // the round's own convergence check fits (round 11, guide
-    // §2.4/§3.1): the persisted edge relation is then never re-shuffled
-    // per round — only the node-sized degree aggregate exchanges
-    def coreDegrees(active: DataFrame, nActive: Long): DataFrame =
-      e.join(graft.util.Joins.maybeBroadcast(
-          active.withColumnRenamed("node", "s"), nActive), "s")
-        .join(graft.util.Joins.maybeBroadcast(
-          active.withColumnRenamed("node", "d"), nActive), "d")
-        .groupBy(col("s").as("node")).agg(count(lit(1)).as("deg"))
-    var active = e.select(col("s").as("node")).distinct()
-      .localCheckpoint(true)
-    var nActive = active.count()
-    var round = 1
-    var done = nActive == 0L
-    while (round <= maxRounds && !done) {
-      val next = coreDegrees(active, nActive).filter(col("deg") >= k)
-        .select("node").localCheckpoint(true)
-      val m = next.count()
-      if (m == nActive) done = true // fixpoint: further rounds identical
-      else { active = next; nActive = m; round += 1 }
-    }
-    // materialize the final degrees BEFORE releasing the edge cache —
-    // unpersisting first hands back a lazy plan that recomputes the
-    // union+distinct from raw edges on first action (ADVICE r6); the
-    // output is node-sized, so the eager checkpoint is cheap
-    val out = coreDegrees(active, nActive).localCheckpoint(eager = true)
-    e.unpersist(blocking = false)
-    out
+    dir.union(dir.select(col("d").as("s"), col("s").as("d")))
+      .filter(col("s") =!= col("d"))
   }
 
   /** Generated k-core oracle: the identical peeling replay as unrolled
@@ -304,68 +257,48 @@ object Graph {
     * invariant under further rounds, so the short-circuit is safe
     * under the always-unrolled oracle, exactly like [[kCore]]).
     *
-    * Shape at 100 TB: per round, ONE join of the persisted edge
-    * relation against the node-sized label relation, one
-    * (node, label)-keyed count aggregate (map-side combined), and one
-    * per-node argmax window — partitioned by node, so the sort is
-    * degree-bounded per node, never global. `localCheckpoint`
-    * truncates the iterative lineage like [[pageRank]]'s loop; the
-    * fixpoint check rides the same action. */
+    * Shape at 100 TB: a [[graft.util.Fixpoint]] loop over the symmetric
+    * edges persisted on `d`. Round 1 is the seed aggregate: labels are
+    * still node ids, so every vote ties at 1 and the smallest of the node
+    * and its neighbors wins. Each later round ([[labelPropagationVote]])
+    * broadcasts the labels into the neighbor (`s`) and own (`d`) joins and
+    * runs its count and argmax aggregates on the edge partitioning with no
+    * exchange, observing the changed-label count on the same job. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 30,
       s"need 1 <= rounds <= 30, got $rounds")
-    val dir = edges.select(col(srcCol).cast("string").as("s"),
-      col(dstCol).cast("string").as("d"))
-    val e = dir.union(dir.select(col("d").as("s"), col("s").as("d")))
-      .filter(col("s") =!= col("d")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = e.select(col("s").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint(true)
-    // every node keeps exactly one label, so the relation's cardinality
-    // is the node count, constant across rounds — count it ONCE and
-    // broadcast the label side into the per-round edge join when it
-    // fits (round 11, guide §2.4/§3.1): the persisted edge relation is
-    // then never re-shuffled; the vote aggregate is the only exchange
-    val nNodes = labels.count()
-    var round = 1
-    var done = false
-    while (round <= rounds && !done) {
-      val votes = e.join(graft.util.Joins.maybeBroadcast(
-          labels.withColumnRenamed("node", "s"), nNodes), "s")
-        .select(col("d").as("node"), col("label"))
-        .union(labels)
-      // per-node argmax as a second AGGREGATE, not a window (round 10,
-      // guide §2.4/§4): min(struct(-cnt, label)) realizes the identical
-      // (cnt DESC, label ASC) total order — struct comparison is
-      // field-lexicographic and Spark string order is bytewise, the same
-      // order the row_number window sorted by — but the aggregate is
-      // map-side combined, whole-stage-codegen'd, and skips the window's
-      // per-node sort (WindowExec is not codegen'd). Plan: Sort+Window →
-      // partial/final HashAggregate; one exchange either way.
-      val next = votes
-        .groupBy("node", "label").agg(count(lit(1)).as("__cnt"))
-        .groupBy("node").agg(min(struct((-col("__cnt")).as("nc"),
-          col("label").as("label"))).as("__best"))
-        .select(col("node"), col("__best.label").as("label"))
-        .localCheckpoint(true)
-      // fixpoint: a round that changes nothing leaves every later
-      // round identical (the vote inputs are a pure function of the
-      // labeling) — short-circuit like kCore's peeling. isEmpty stops at
-      // the FIRST changed row (early rounds change thousands — the old
-      // full count evaluated the whole join every round), and the last
-      // round's check is skipped outright: its only consumer is the
-      // loop condition that is about to exit anyway (round 10, guide
-      // §1.2 — don't compute things you throw away)
-      val changed = round < rounds &&
-        !next.join(graft.util.Joins.maybeBroadcast(
-            labels.withColumnRenamed("label", "__old"), nNodes), "node")
-          .filter(col("label") =!= col("__old")).isEmpty
-      labels = next
-      if (!changed) done = true else round += 1
-    }
-    e.unpersist(blocking = false)
-    labels.withColumnRenamed("label", "community")
+    val e = Fixpoint.edges(undirected(edges, srcCol, dstCol), "d")
+    def labels(df: DataFrame) = Fixpoint.checkpoint(df,
+      count(lit(1)).as("nodes"),
+      count(when(col("label") =!= col("own"), 1)).as("changed"))
+    val seed = labels(e.groupBy(col("d").as("node"))
+      .agg(least(col("d"), min("s")).as("label"))
+      .select(col("node"), col("node").as("own"), col("label")))
+    Fixpoint.iterate("labelPropagation", e, seed, rounds - 1)(
+        _("changed") == 0L) { r =>
+      labels(labelPropagationVote(e, r.broadcast(r.state.df, seed("nodes"))))
+    }.df.select(col("node"), col("label").as("community"))
+  }
+
+  /** One vote round over symmetric edges `e` and the (node, label)
+    * relation `labels`, joined on both endpoints. min(struct(-cnt, label))
+    * is the oracle's (cnt DESC, label ASC) row_number order as an
+    * aggregate (struct comparison is field-lexicographic, string order
+    * bytewise); the self-vote adds 1 to the own label's neighbor count,
+    * or competes alone at count 1. Output: (node, own, label). */
+  private[graft] def labelPropagationVote(e: DataFrame, labels: DataFrame)
+      : DataFrame = {
+    val best = min(struct(
+      (-col("cnt") - when(col("nbr") === col("own"), 1L).otherwise(0L))
+        .as("nc"), col("nbr").as("label")))
+    e.join(labels.select(col("node").as("s"), col("label").as("nbr")), "s")
+      .join(labels.select(col("node").as("d"), col("label").as("own")), "d")
+      .groupBy("d", "own", "nbr").agg(count(lit(1)).as("cnt"))
+      .groupBy(col("d").as("node"), col("own")).agg(best.as("best"))
+      .select(col("node"), col("own"), least(col("best"),
+        struct(lit(-1L).as("nc"), col("own").as("label"))).getField("label")
+        .as("label"))
   }
 
   /** Generated label-propagation oracle: the identical deterministic

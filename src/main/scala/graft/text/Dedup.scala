@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.functions.GraftFunctions
+import graft.util.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -579,7 +580,7 @@ object Dedup {
     * milliseconds, zero iterative jobs); above it, the pairs are
     * symmetrized + deduplicated and distributed min-label propagation runs —
     * each round every node takes the min of its own and its neighbors'
-    * labels (one join + one aggregate per round), converging in
+    * labels (one job plus a broadcast per round), converging in
     * O(cluster diameter) rounds (near-dup clusters are dense, so diameter
     * is small; `maxIter` bounds pathological chains). */
   def duplicateComponents(
@@ -591,13 +592,12 @@ object Dedup {
     // Undirected, possibly-duplicated pairs: union-find is insensitive to
     // edge direction and multiplicity, so the common (driver-side) path
     // pays NO shuffle at all — symmetrization + distinct happen only if
-    // the edge list overflows into the iterative path.
-    val undirected = pairs.select(col(idA).cast("long").as("a"),
-        col(idB).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .persist()
-    val nPairs = undirected.count()
-    if (nPairs <= maxCollect) {
+    // the edge list overflows into the iterative path. The pairs are
+    // materialized once, their count observed on that same job.
+    val undirected = Fixpoint.checkpoint(pairs.select(
+        col(idA).cast("long").as("a"), col(idB).cast("long").as("b"))
+      .filter(col("a") =!= col("b")), count(lit(1)).as("pairs"))
+    if (undirected("pairs") <= maxCollect) {
       // driver-side union-find with path compression + min-root finish
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
@@ -609,11 +609,10 @@ object Dedup {
         }
         r
       }
-      undirected.collect().foreach { r =>
+      undirected.df.collect().foreach { r =>
         val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      undirected.unpersist(blocking = false)
       val nodes = (parent.keys ++ parent.values).toArray.distinct
       val rows = nodes.map(n => Row(n, find(n))).toSeq
       import org.apache.spark.sql.types._
@@ -623,57 +622,32 @@ object Dedup {
         StructType(Seq(StructField(idA, LongType, nullable = false),
           StructField("component", LongType, nullable = false))))
     }
-    val edges = undirected
-      .union(undirected.select(col("b").as("a"), col("a").as("b")))
-      .distinct().persist()
-    edges.count()
-    undirected.unpersist(blocking = false)
-    // localCheckpoint (not persist): each round's plan would otherwise
-    // nest the whole previous round's plan — after ~10 rounds the lineage
-    // tree alone OOMs the driver. Checkpointing truncates lineage per
-    // round; on a cluster with a checkpoint dir configured, swap in
-    // reliable `checkpoint()` for fault tolerance across executor loss.
-    // seed with round 1 folded in: label = min(self, direct neighbors) —
-    // dense clusters (verify emits most intra-cluster pairs) then converge
-    // on the first confirmation round
-    var labels = edges.groupBy(col("a").as("node"))
+    // a Fixpoint loop over the symmetric pairs persisted on `a`, the side
+    // that receives its neighbors' labels; the seed is round 1 — min(self,
+    // direct neighbors) — so dense clusters (verify emits most
+    // intra-cluster pairs) converge on the first confirmation round
+    val edges = Fixpoint.edges(undirected.df
+      .union(undirected.df.select(col("b").as("a"), col("a").as("b"))), "a")
+    def labels(df: DataFrame) = Fixpoint.checkpoint(df,
+      count(lit(1)).as("nodes"),
+      count(when(col("component") =!= col("own"), 1)).as("changed"))
+    val seed = labels(edges.groupBy(col("a").as("node"))
       .agg(least(min(col("b")), col("a")).as("component"))
-      .localCheckpoint(eager = true)
-    // one label per node, constant cardinality across rounds — count
-    // ONCE and broadcast the label side into the per-round edge join
-    // when it fits (round 11, guide §2.4/§3.1): the persisted edge
-    // relation is then never re-shuffled per round
-    val nNodes = labels.count()
-    var changed = true
-    var it = 0
-    while (changed && it < maxIter) {
-      val nbrMin = edges
-        .join(graft.util.Joins.maybeBroadcast(
-          labels.select(col("node").as("b"),
-            col("component").as("__nbr")), nNodes), "b")
-        .groupBy(col("a").as("node")).agg(min("__nbr").as("__nbr"))
-      val next = labels
-        .join(nbrMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("component"), coalesce(col("__nbr"), col("component")))
-            .as("component"))
-        .localCheckpoint(eager = true)
-      // isEmpty stops at the FIRST changed row — non-converged rounds
-      // (the common case) no longer evaluate the whole node-sized join
-      // just to learn "something changed" (round 10, guide §1.2)
-      changed = !next
-        .join(labels.select(col("node"), col("component").as("__old")),
-          "node")
-        .filter(col("component") =!= col("__old")).isEmpty
-      labels = next
-      it += 1
+      .select(col("node"), col("node").as("own"), col("component")))
+    val out = Fixpoint.iterate("duplicateComponents", edges, seed, maxIter)(
+        _("changed") == 0L) { r =>
+      val l = r.broadcast(r.state.df, seed("nodes"))
+      labels(edges
+        .join(l.select(col("node").as("b"), col("component").as("nbr")), "b")
+        .join(l.select(col("node").as("a"), col("component").as("own")), "a")
+        .groupBy(col("a").as("node"), col("own"))
+        .agg(least(col("own"), min("nbr")).as("component")))
     }
-    if (changed)
+    if (out("changed") > 0L)
       log.warn(s"duplicateComponents: not converged after $maxIter rounds " +
         "(a duplicate chain longer than maxIter links); labels are an " +
         "upper bound — raise maxIter")
-    edges.unpersist(blocking = false)
-    labels.withColumnRenamed("node", idA)
+    out.df.select(col("node").as(idA), col("component"))
   }
 
   /** Quality-aware cluster representative selection — SemDeDup's keep

@@ -91,15 +91,12 @@ object TextFunctions {
       .otherwise(hits.cast("double") / size(ts).cast("double"))
   }
 
-  /** Composite quality score in [0,1]:
+  /** Composite quality score in [0,1] of text `c` with tokens `ts`:
     * 0.4·min(len/2000, 1)  — enough content
     * + 0.3·(1 − punctRatio) — not punctuation soup
     * + 0.3·(1 − |stopwordRatio − 0.35|) — natural-language-like function-word
     * density. Rational arithmetic only (see object doc).
     */
-  def qualityScore(c: Column): Column =
-    qualityScoreT(c, tokensLower(c))
-
   def qualityScoreT(c: Column, ts: Column): Column =
     least(length(c).cast("double") / lit(2000.0), lit(1.0)) * lit(0.4) +
       (lit(1.0) - punctRatio(c)) * lit(0.3) +
@@ -111,9 +108,6 @@ object TextFunctions {
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "mit", "ein", "zu"),
     "fr" -> Seq("le", "les", "et", "est", "une", "que", "pour", "dans", "il"),
     "es" -> Seq("el", "los", "las", "es", "y", "por", "para", "con", "se"))
-
-  def langScore(c: Column, markers: Seq[String]): Column =
-    size(filter(tokensLower(c), t => t.isin(markers.map(x => x: Any): _*)))
 
   /** Heuristic language id: argmax of marker-hit counts, ties broken in
     * [[LangMarkers]] order; no hits → "und" (undetermined). */

@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions.broadcast
   * node-sized relation once per round. Left to the planner, that join
   * shuffles the edge relation every round (sort-merge or shuffled-hash
   * — both sides exchange), even though the node side is usually tiny
-  * and its size is KNOWN exactly: every loop already runs a `count()`
-  * or carries one from its convergence check. Guide §3.1: size
+  * and its size is KNOWN exactly: [[Fixpoint]] observes every loop
+  * relation's row count on the job that materializes it, so the count
+  * costs no action of its own. Guide §3.1: size
   * estimates are often badly wrong — use an explicit broadcast when
   * you know a side is small; §2.4: a broadcast join removes the
   * shuffle of the large side outright.
@@ -53,8 +54,12 @@ object Joins {
       }
   }
 
-  /** Broadcast-hint `df` iff its exact `rows` count is ≤ `maxRows`. */
-  def maybeBroadcast(df: DataFrame, rows: Long,
-      maxRows: Long = DefaultMaxRows): DataFrame =
-    if (rows <= maxRows) broadcast(df) else df
+  /** The threshold [[maybeBroadcast]] applies by default: [[DefaultMaxRows]]
+    * unless a caller on this thread rebinds it (`withValue`), as the specs
+    * do to pin the over-threshold shuffle-join path. */
+  private[graft] val threshold = new scala.util.DynamicVariable(DefaultMaxRows)
+
+  /** Broadcast-hint `df` iff its exact `rows` count is ≤ the threshold. */
+  def maybeBroadcast(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= threshold.value) broadcast(df) else df
 }

@@ -307,31 +307,8 @@ class FusionSpec extends SparkSpec {
   }
 
   /** The INFO lines FitFusion logs while `body` runs. */
-  private def decisions(body: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.{Configurator, Property}
-    val name = FitFusion.getClass.getName
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("fusion-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        { lines.add(e.getMessage.getFormattedMessage); () }
-    }
-    appender.start()
-    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
-    val (level, additive) = (logger.getLevel, logger.isAdditive)
-    Configurator.setLevel(name, Level.INFO)
-    logger.setAdditive(false)
-    logger.addAppender(appender)
-    try body finally {
-      logger.removeAppender(appender)
-      logger.setAdditive(additive)
-      Configurator.setLevel(name, level)
-    }
-    scala.jdk.CollectionConverters.CollectionHasAsScala(lines).asScala.toSeq
-  }
+  private def decisions(body: => Unit): Seq[String] =
+    logLines(FitFusion.getClass.getName)(body)._2
 
   test("one decision line per batch: members, grouping sets, fallbacks") {
     val fraud = decisions {

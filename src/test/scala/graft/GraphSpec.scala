@@ -1,6 +1,7 @@
 package graft
 
 import graft.relational.Graph
+import org.apache.spark.sql.functions.col
 
 /** Integer-deterministic PageRank: mass conservation (up to documented
   * floor leak), dangling redistribution, symmetry, and weight
@@ -68,6 +69,29 @@ class GraphSpec extends SparkSpec {
     val b = Graph.pageRank(edges.repartition(13), "src", "dst", "w", 4)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(a == b)
+  }
+
+  test("edges with a null endpoint are dropped like non-positive weights") {
+    val withNulls = Seq[(String, String, java.lang.Long)](("a", "b", 1L),
+      ("b", "c", 2L), (null, "a", 5L), ("c", null, 4L), ("c", "a", 1L))
+      .toDF("src", "dst", "w")
+    assert(Graph.pageRank(withNulls, "src", "dst", "w", 3)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      ranks(Seq(("a", "b", 1L), ("b", "c", 2L), ("c", "a", 1L)), 3))
+  }
+
+  test("every loop's output is partition-count invariant") {
+    val es = FixpointSpec.hub(150, 21)
+    def all(df: org.apache.spark.sql.DataFrame) = Seq(
+      Graph.pageRank(df, "src", "dst", "w", 3),
+      Graph.shortestPaths(df, "src", "dst", Seq("0", "7").toDF("node"), 4),
+      Graph.kCore(df, "src", "dst", 3, 10),
+      Graph.labelPropagation(df, "src", "dst", 5),
+      graft.text.Dedup.duplicateComponents(df.select(
+        col("src").as("id_a"), col("dst").as("id_b")), maxCollect = 0L))
+      .map(_.collect().map(_.toSeq).toSet)
+    val df = es.toDF("src", "dst", "w")
+    assert(all(df.coalesce(1)) == all(df.repartition(13)))
   }
 
   private def bfs(edges: Seq[(String, String)], sources: Seq[String],

@@ -177,6 +177,17 @@ class GeoSpec extends SparkSpec {
     assert(rows((1L, 2L)) == 2500L && rows((2L, 3L)) == 2601L)
   }
 
+  test("distanceJoin never pairs ids that are equal or null, in one cell " +
+      "or across cells") {
+    // all four points within 20 cdeg of each other, cells split at lon 100
+    val pts = Seq((Some(5L), 0L, 90L), (Some(5L), 0L, 110L),
+      (None, 0L, 95L), (Some(7L), 0L, 105L)).toDF("id", "lat", "lon")
+    val pairs = Geo.distanceJoin(pts, "id", "lat", "lon", 100)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+    // each 5 point pairs with the 7 point; 5-5 and the null id never pair
+    assert(pairs == Seq((5L, 7L), (5L, 7L)), pairs)
+  }
+
   test("haversine: one degree of latitude is ~111.19 km") {
     val pts = Seq((1L, 0L, 0L), (2L, 100L, 0L)).toDF("id", "lat", "lon")
     val km = Geo.distanceJoin(pts, "id", "lat", "lon", 150)

@@ -37,6 +37,34 @@ trait SparkSpec extends AnyFunSuite {
 
   def dtypeOf(df: DataFrame, c: String): String =
     df.schema(c).dataType.simpleString
+
+  /** `body`'s result and the INFO lines logger `name` emits while it runs;
+    * the logger's level and additivity are restored afterwards. */
+  def logLines[T](name: String)(body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("spec-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        { lines.add(e.getMessage.getFormattedMessage); () }
+    }
+    appender.start()
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    val (level, additive) = (logger.getLevel, logger.isAdditive)
+    Configurator.setLevel(name, Level.INFO)
+    logger.setAdditive(false)
+    logger.addAppender(appender)
+    val out = try body finally {
+      logger.removeAppender(appender)
+      logger.setAdditive(additive)
+      Configurator.setLevel(name, level)
+    }
+    (out, scala.jdk.CollectionConverters.CollectionHasAsScala(lines).asScala
+      .toSeq)
+  }
 }
 
 object SparkSpec {
