@@ -144,14 +144,15 @@ object StressBench {
     }),
 
     // percentileRank, WINDOW path forced (threshold above any distinct
-    // count): the single-task ordered window over ~60k×reps distinct
-    // values — the plan the binned path exists to replace. Output
-    // projected to keys + rank so the timed difference is the rank
-    // computation, not an 11-column join-back payload + sink
+    // count, driver finish off): the single-task ordered window over
+    // ~60k×reps distinct values — the plan the binned path exists to
+    // replace. Output projected to keys + rank so the timed difference is
+    // the rank computation, not an 11-column join-back payload + sink
     "s_pctrank_window" -> ((s, d, r) =>
-      graft.relational.Relational.percentileRank(
-        lineitemScaled(s, d, r), "l_extendedprice", "pr",
-        maxDistinctBroadcast = Long.MaxValue)
+      graft.relational.CumulativeEngine.driverMaxRows.withValue(0L)(
+        graft.relational.Relational.percentileRank(
+          lineitemScaled(s, d, r), "l_extendedprice", "pr",
+          maxDistinctBroadcast = Long.MaxValue))
         .select("l_orderkey", "l_linenumber", "pr")),
 
     // percentileRank, BINNED path forced (threshold 0): 64×64 bins,

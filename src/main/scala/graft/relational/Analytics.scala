@@ -922,14 +922,15 @@ object Analytics {
     * is ≤ maxBasket entries BY CONSTRUCTION (over-cap rows arrive as
     * nulls, which collect_list skips — a collect_set-then-slice would
     * build the full degenerate basket in an unspillable buffer first).
-    * The capped relation is localCheckpoint'ed once — the cap audit,
-    * the pair explode, the item marginals, and the basket total all
-    * read it instead of re-aggregating the corpus; the pair explode is
-    * ≤ maxBasket²/2 rows per basket into one map-side-combined pair
+    * The capped relation is localCheckpoint'ed once, and the basket total
+    * and the cap audit's count are observed on that same job
+    * ([[graft.util.Fixpoint.checkpoint]]) — the total enters the plan as
+    * a literal; the pair explode and the item marginals read the
+    * checkpoint instead of re-aggregating the corpus. The pair explode
+    * is ≤ maxBasket²/2 rows per basket into one map-side-combined pair
     * count; the marginal joins run at pair scale against an
-    * item-cardinality relation (AQE broadcasts dictionary-sized sides);
-    * the basket total rides a broadcast one-row cross join. Never
-    * all-pairs across baskets, never a corpus re-scan. */
+    * item-cardinality relation (AQE broadcasts dictionary-sized sides).
+    * Never all-pairs across baskets, never a corpus re-scan. */
   def basketAffinity(df: DataFrame, basketCol: String, itemCol: String,
       maxBasket: Int = 256, minPairs: Long = 1L): DataFrame = {
     require(maxBasket >= 2, s"maxBasket must be >= 2, got $maxBasket")
@@ -940,7 +941,9 @@ object Analytics {
     // the collect_list sees nulls for over-cap rows (nulls are skipped),
     // so the per-basket buffer is ≤ maxBasket entries by construction.
     val wb = Window.partitionBy(col(basketCol)).orderBy(col(itemCol))
-    val items = df
+    // the basket and capped-basket counts are observed on the job that
+    // checkpoints the baskets — no count action, no one-row aggregate
+    val baskets = graft.util.Fixpoint.checkpoint(df
       .filter(col(basketCol).isNotNull && col(itemCol).isNotNull)
       .select(col(basketCol), col(itemCol)).distinct()
       .withColumn("__rn", row_number().over(wb))
@@ -948,15 +951,16 @@ object Analytics {
       .agg(
         sort_array(collect_list(
           when(col("__rn") <= maxBasket, col(itemCol)))).as("__items"),
-        (max(col("__rn")) > maxBasket).as("__capped"))
-      .localCheckpoint(true)
-    val nCapped = items.filter(col("__capped")).count()
+        (max(col("__rn")) > maxBasket).as("__capped")),
+      count(lit(1)).as("n_baskets"),
+      sum(when(col("__capped"), 1L).otherwise(0L)).as("n_capped"))
+    val items = baskets.df
+    val nCapped = baskets("n_capped")
     if (nCapped > 0)
       logger.warn(s"basketAffinity: $nCapped basket(s) over the " +
         s"$maxBasket-item cap were truncated to their $maxBasket " +
         "smallest items; pairs beyond the cap were not counted (raise " +
         "maxBasket to restore coverage)")
-    val nBaskets = items.select(count(lit(1)).as("n_baskets"))
     val singles = items
       .select(explode(col("__items")).as("__item"))
       .groupBy(col("__item")).agg(count(lit(1)).as("__ci"))
@@ -973,7 +977,7 @@ object Analytics {
         col("item_a") === col("__ia"))
       .join(singles.select(col("__item").as("__ib"), col("__ci").as("n_b")),
         col("item_b") === col("__ib"))
-      .crossJoin(broadcast(nBaskets))
+      .withColumn("n_baskets", lit(baskets("n_baskets")))
       .select(col("item_a"), col("item_b"), col("n_ab"), col("n_a"),
         col("n_b"), col("n_baskets"),
         round(dAb / col("n_baskets"), 6).as("support"),

@@ -33,11 +33,11 @@ object Eval {
     * 6 dp under the repo's aggregate-derived-double discipline anyway.
     *
     * Shape at 100 TB: ONE corpus aggregate to the distinct-score
-    * relation, then a dual path on its counted size (the same fit-time
-    * decision [[Relational.percentileRank]] makes):
+    * relation, then [[CumulativeEngine.rank]]'s guarded choice (the one
+    * [[Relational.percentileRank]] makes):
     *  - distinct ≤ `maxDistinctBroadcast` (quantized model scores —
-    *    the common case): ordered cumulative over the PROVEN-bounded
-    *    distinct relation;
+    *    the common case): collected once and cumulated on the driver
+    *    into a local relation;
     *  - above (raw continuous scores): the shared 64×64
     *    quantile-balanced macro/micro binned engine
     *    ([[CumulativeEngine]] — per-bin ordered windows partitioned →
@@ -56,62 +56,43 @@ object Eval {
     // materialize before releasing the fit cache (mirrors
     // percentileRank): the result is one row
     val materialized = out.localCheckpoint(eager = true)
-    counts.unpersist(blocking = false)
+    graft.util.Fixpoint.release(counts)
     materialized
   }
 
-  /** Generic strictly-below cumulative over a persisted distinct-value
-    * relation: appends `__below_<m>` for every measure column `m`, via
-    * [[CumulativeEngine]] — ordered window when the relation is
-    * pre-counted ≤ `maxDistinctBroadcast`, else the quantile-balanced
-    * 64×64 macro/micro binned path (per-bin parallel windows, per-task
-    * state ~distinct/4096). The shared ranking engine behind [[auc]] /
-    * [[prAuc]] / [[lorenzGini]] / [[spearman]] / [[ksExact]] /
-    * [[quantileNormalize]] — the SAME engine [[Relational.percentileRank]]
-    * rides, unified in round 7 (the previous separate 256-equal-bin
-    * variant held distinct/256 rows per task with no skew guard).
-    * `counts` must carry a `__s` value column and be persisted by the
-    * caller. */
-  private def belowCumulative(counts: DataFrame, measures: Seq[String],
-      nDistinct: Long, maxDistinctBroadcast: Long): DataFrame =
-    CumulativeEngine.strictlyBelow(counts, "__s", measures,
-      groupCols = Nil, small = nDistinct <= maxDistinctBroadcast)
-
-  /** Ranking machinery for [[auc]] and [[prAuc]]: the distinct-score
-    * relation `(__s, __p, __q)` extended with `__posbelow` /
-    * `__negbelow` (strictly-below cumulative positive/negative counts).
-    * Returns the extended relation plus the persisted counts relation
-    * the caller must unpersist. */
-  private def scoreBelowCounts(df: DataFrame, scoreCol: String,
-      labelCol: String,
-      maxDistinctBroadcast: Long): (DataFrame, DataFrame) = {
+  /** Ranking machinery for [[auc]], [[prAuc]], [[rankSumTest]] and
+    * [[ksExact]]: the distinct-score relation `(__s, __p, __q)` ranked by
+    * the shared [[CumulativeEngine.rank]] (driver-finished when it has ≤
+    * `maxDistinctBroadcast` rows, else the quantile-balanced 64×64
+    * binned path), with `__below___p` / `__below___q` the strictly-below
+    * cumulative positive/negative counts and `__total___p` /
+    * `__total___q` the totals. The caller releases it once its result is
+    * materialized. */
+  private def scoreRanked(df: DataFrame, scoreCol: String,
+      labelCol: String, maxDistinctBroadcast: Long,
+      site: String): CumulativeEngine.Ranked = {
     val lab = col(labelCol).cast("long")
-    val counts = df
+    CumulativeEngine.rank(df
       .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
       .groupBy(col(scoreCol).as("__s"))
       .agg(sum(lab).as("__p"),
-        sum(lit(1L) - lab).as("__q"))
-      .persist()
-    val nDistinct = counts.count()
-    val withBelow = belowCumulative(counts, Seq("__p", "__q"),
-      nDistinct, maxDistinctBroadcast)
-      .withColumnRenamed("__below___p", "__posbelow")
-      .withColumnRenamed("__below___q", "__negbelow")
-    (withBelow, counts)
+        sum(lit(1L) - lab).as("__q")),
+      "__s", Seq("__p", "__q"), Nil, maxDistinctBroadcast, site)
   }
 
-  /** The unmaterialized AUC plan plus the persisted fit-time counts
-    * relation — split out so plan-shape tests can assert on the real
-    * plan (the public method checkpoints, which hides it). Callers must
-    * unpersist the returned counts once the plan is consumed. */
+  /** The unmaterialized AUC plan plus the fit-time counts relation —
+    * split out so plan-shape tests can assert on the real plan (the
+    * public method checkpoints, which hides it). Callers must
+    * release the returned counts ([[graft.util.Fixpoint.release]]) once
+    * the plan is consumed. */
   private[graft] def aucPlan(df: DataFrame, scoreCol: String,
       labelCol: String,
       maxDistinctBroadcast: Long): (DataFrame, DataFrame) = {
-    val (withBelow, counts) = scoreBelowCounts(df, scoreCol, labelCol,
-      maxDistinctBroadcast)
-    val out = withBelow.agg(
+    val r = scoreRanked(df, scoreCol, labelCol, maxDistinctBroadcast,
+      "auc")
+    val out = r.below.agg(
       sum(col("__p").cast("double") *
-        (col("__negbelow").cast("double") +
+        (col("__below___q").cast("double") +
           col("__q").cast("double") / 2.0)).as("__u"),
       sum("__p").as("n_pos"),
       sum("__q").as("n_neg"))
@@ -120,7 +101,7 @@ object Eval {
           (col("n_pos").cast("double") * col("n_neg").cast("double")), 6)
           .as("auc"),
         col("n_pos"), col("n_neg"))
-    (out, counts)
+    (out, r.counts)
   }
 
   /** PR-AUC (average precision) with threshold-grouped ties: sweeping
@@ -140,17 +121,16 @@ object Eval {
     * re-sort, no second pass. */
   def prAuc(df: DataFrame, scoreCol: String, labelCol: String,
       maxDistinctBroadcast: Long = 100000): DataFrame = {
-    val (withBelow, counts) = scoreBelowCounts(df, scoreCol, labelCol,
-      maxDistinctBroadcast)
-    // totals as a broadcast one-row aggregate of the persisted counts —
-    // NOT a global window over the distinct relation, which on the
-    // binned path (distinct ≈ N) would be a single-task pass
-    val totals = counts.agg(sum("__p").as("__tp_all"),
-      sum("__q").as("__tq_all"))
-    val tp = (col("__tp_all") - col("__posbelow")).cast("double")
-    val predicted = (col("__tp_all") + col("__tq_all") -
-      col("__posbelow") - col("__negbelow")).cast("double")
-    val out = withBelow.crossJoin(broadcast(totals))
+    val r = scoreRanked(df, scoreCol, labelCol, maxDistinctBroadcast,
+      "prAuc")
+    // totals from the engine (local on the driver path, a broadcast
+    // one-row aggregate of the checkpointed counts otherwise) — NOT a global
+    // window over the distinct relation, which on the binned path
+    // (distinct ≈ N) would be a single-task pass
+    val tp = (col("__total___p") - col("__below___p")).cast("double")
+    val predicted = (col("__total___p") + col("__total___q") -
+      col("__below___p") - col("__below___q")).cast("double")
+    val out = r.withTotals
       .withColumn("__term",
         col("__p").cast("double") * (tp / predicted))
       .agg(sum("__term").as("__ap"),
@@ -159,7 +139,7 @@ object Eval {
         round(col("__ap") / col("n_pos").cast("double"), 6).as("pr_auc"),
         col("n_pos"), col("n_neg"))
       .localCheckpoint(eager = true)
-    counts.unpersist(blocking = false)
+    r.release()
     out
   }
 
@@ -174,35 +154,30 @@ object Eval {
     *
     * Shape at 100 TB: one corpus aggregate to the distinct-value
     * relation carrying TWO measures (count, value·count mass), the
-    * shared dual small/binned strictly-below cumulative, broadcast
-    * totals, a one-row finish — the same no-global-sort guarantee as
+    * shared driver/binned strictly-below cumulative with its totals, a
+    * one-row finish — the same no-global-sort guarantee as
     * [[auc]]. */
   def lorenzGini(df: DataFrame, valueCol: String,
       maxDistinctBroadcast: Long = 100000): DataFrame = {
     val v = col(valueCol).cast("double")
-    val counts = df.filter(v.isNotNull && v >= 0)
+    val r = CumulativeEngine.rank(df.filter(v.isNotNull && v >= 0)
       .groupBy(v.as("__s"))
       .agg(count(lit(1)).as("__c"),
-        sum(v).as("__m"))
-      .persist()
-    val nDistinct = counts.count()
-    val withBelow = belowCumulative(counts, Seq("__c", "__m"),
-      nDistinct, maxDistinctBroadcast)
-    val totals = counts.agg(sum("__c").as("__n_all"),
-      sum("__m").as("__m_all"))
-    val fPrev = col("__below___c").cast("double") / col("__n_all")
+        sum(v).as("__m")),
+      "__s", Seq("__c", "__m"), Nil, maxDistinctBroadcast, "lorenzGini")
+    val fPrev = col("__below___c").cast("double") / col("__total___c")
     val fCur = (col("__below___c") + col("__c")).cast("double") /
-      col("__n_all")
-    val lPrev = col("__below___m") / col("__m_all")
-    val lCur = (col("__below___m") + col("__m")) / col("__m_all")
-    val out = withBelow.crossJoin(broadcast(totals))
+      col("__total___c")
+    val lPrev = col("__below___m") / col("__total___m")
+    val lCur = (col("__below___m") + col("__m")) / col("__total___m")
+    val out = r.withTotals
       .withColumn("__trap", (fCur - fPrev) * (lCur + lPrev))
       .agg(sum("__trap").as("__b"), sum("__c").as("n"),
         round(sum("__m"), 6).as("total"))
       .select(round(lit(1.0) - col("__b"), 6).as("gini"),
         col("n"), col("total"))
       .localCheckpoint(eager = true)
-    counts.unpersist(blocking = false)
+    r.release()
     out
   }
 
@@ -213,30 +188,33 @@ object Eval {
     * the paired sample, the standard definition).
     *
     * Shape at 100 TB: per column, one distinct-value aggregate + the
-    * shared dual small/binned strictly-below cumulative → a
-    * checkpointed rank relation (`midrank = below + (c+1)/2`), joined
-    * back (AQE broadcasts when the value dictionary is small, shuffles
-    * when distinct ≈ N — the percentileRank join-back discipline); the
-    * finish is one `corr` aggregate. No global sort of the corpus at
-    * any point. */
+    * shared driver/binned strictly-below cumulative → a rank relation
+    * (`midrank = below + (c+1)/2`) joined back: under
+    * `maxDistinctBroadcast` distinct values it is a local relation built
+    * on the driver and the join-back is its broadcast (no shuffle);
+    * above it (distinct ≈ N) the relation is checkpointed and the
+    * join-back shuffles — the percentileRank join-back discipline. The
+    * finish is one `corr` aggregate. No global sort of the corpus at any
+    * point. */
   def spearman(df: DataFrame, aCol: String, bCol: String,
       maxDistinctBroadcast: Long = 100000): DataFrame = {
     val paired = df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(aCol).as("__a"), col(bCol).as("__b"))
-    def rankRel(c: String, out: String): DataFrame = {
-      val counts = paired.groupBy(col(c).as("__s"))
-        .agg(count(lit(1)).as("__c")).persist()
-      val n = counts.count()
-      val ranked = belowCumulative(counts, Seq("__c"), n,
-        maxDistinctBroadcast)
-        .select(col("__s").as(s"${c}_v"),
-          (col("__below___c") + (col("__c") + 1) / 2.0).as(out))
-        .localCheckpoint(eager = true)
-      counts.unpersist(blocking = false)
-      ranked
+    def rankRel(c: String, out: String, site: String): DataFrame = {
+      val r = CumulativeEngine.rank(paired.groupBy(col(c).as("__s"))
+        .agg(count(lit(1)).as("__c")), "__s", Seq("__c"), Nil,
+        maxDistinctBroadcast, s"spearman.$site")
+      val ranked = r.below.select(col("__s").as(s"${c}_v"),
+        (col("__below___c") + (col("__c") + 1) / 2.0).as(out))
+      if (r.onDriver) broadcast(ranked)
+      else {
+        val m = ranked.localCheckpoint(eager = true)
+        r.release()
+        m
+      }
     }
-    val ra = rankRel("__a", "__rka")
-    val rb = rankRel("__b", "__rkb")
+    val ra = rankRel("__a", "__rka", aCol)
+    val rb = rankRel("__b", "__rkb", bCol)
     paired
       .join(ra, col("__a") === col("__a_v"))
       .join(rb, col("__b") === col("__b_v"))
@@ -610,12 +588,12 @@ object Eval {
     * corpus pass. */
   def rankSumTest(df: DataFrame, scoreCol: String, labelCol: String,
       maxDistinctBroadcast: Long = 100000): DataFrame = {
-    val (withBelow, counts) = scoreBelowCounts(df, scoreCol, labelCol,
-      maxDistinctBroadcast)
+    val r = scoreRanked(df, scoreCol, labelCol, maxDistinctBroadcast,
+      "rankSumTest")
     val t = (col("__p") + col("__q")).cast("double")
-    val out = withBelow.agg(
+    val out = r.below.agg(
       sum(col("__p").cast("double") *
-        (col("__negbelow").cast("double") +
+        (col("__below___q").cast("double") +
           col("__q").cast("double") / 2.0)).as("__u"),
       sum(t * t * t - t).as("__ties"),
       sum("__p").as("n_pos"),
@@ -633,7 +611,7 @@ object Eval {
           col("n_pos"), col("n_neg"))
       }: _*)
       .localCheckpoint(eager = true)
-    counts.unpersist(blocking = false)
+    r.release()
     out
   }
 
@@ -1449,11 +1427,11 @@ object Eval {
     * `(d, at_value, z, n_a, n_b)`.
     *
     * Shape at 100 TB: ONE corpus aggregate to the distinct-value
-    * relation with per-group counts, the SAME dual small/binned
-    * cumulative engine as [[auc]]/[[lorenzGini]] (ordered window under
+    * relation with per-group counts, the SAME driver/binned cumulative
+    * engine as [[auc]]/[[lorenzGini]] (finished on the driver under
     * `maxDistinctBroadcast`, else the 64×64 quantile-balanced bins with
-    * parallel per-bin windows + broadcast offsets), a one-row broadcast
-    * totals join, and a TakeOrdered(1) argmax finish — the corpus is
+    * parallel per-bin windows + broadcast offsets), the engine's
+    * one-row totals, and a TakeOrdered(1) argmax finish — the corpus is
     * never globally sorted and the ECDF divisions are single IEEE ops
     * over exact integer cumulatives, so the result replays bit-for-bit
     * in any engine. */
@@ -1463,7 +1441,7 @@ object Eval {
     val (out, counts) = ksExactPlan(df, valueCol, groupCol, groupA,
       groupB, maxDistinctBroadcast)
     val m = out.localCheckpoint(eager = true)
-    counts.unpersist(blocking = false)
+    graft.util.Fixpoint.release(counts)
     m
   }
 
@@ -1476,29 +1454,28 @@ object Eval {
     val labeled = df.filter(col(valueCol).isNotNull &&
         (g === groupA || g === groupB))
       .withColumn("__lab", when(g === groupA, 1L).otherwise(0L))
-    val (withBelow, counts) = scoreBelowCounts(labeled, valueCol,
-      "__lab", maxDistinctBroadcast)
-    // totals aggregate the PERSISTED counts relation, not withBelow —
-    // aggregating withBelow re-evaluated the entire cumulative engine
+    val r = scoreRanked(labeled, valueCol, "__lab", maxDistinctBroadcast,
+      "ksExact")
+    // the engine's totals sum the counted relation, not the cumulative
+    // output — summing that re-evaluated the entire cumulative engine
     // (binned path: bounds + windows + offsets join) a second time just
-    // to sum columns the cumulative never changes (round 11, guide
-    // §1.2; prAuc already did this right)
-    val totals = counts.agg(sum("__p").as("__na"),
-      sum("__q").as("__nb"))
+    // to sum columns the cumulative never changes (round 11, guide §1.2)
     val naD = col("__na").cast("double")
     val nbD = col("__nb").cast("double")
-    val scored = withBelow.crossJoin(broadcast(totals))
+    val out = r.withTotals
+      .withColumnRenamed("__total___p", "__na")
+      .withColumnRenamed("__total___q", "__nb")
       .withColumn("__d", abs(
-        (col("__posbelow") + col("__p")).cast("double") / col("__na") -
-          (col("__negbelow") + col("__q")).cast("double") / col("__nb")))
-    val out = scored.orderBy(col("__d").desc, col("__s").asc).limit(1)
+        (col("__below___p") + col("__p")).cast("double") / col("__na") -
+          (col("__below___q") + col("__q")).cast("double") / col("__nb")))
+      .orderBy(col("__d").desc, col("__s").asc).limit(1)
       .select(
         round(col("__d"), 6).as("d"),
         col("__s").cast("double").as("at_value"),
         round(col("__d") * sqrt(naD * nbD /
           (col("__na") + col("__nb")).cast("double")), 6).as("z"),
         col("__na").as("n_a"), col("__nb").as("n_b"))
-    (out, counts)
+    (out, r.counts)
   }
 
   /** Quantile normalization (distribution matching): the exact value
@@ -1512,27 +1489,28 @@ object Eval {
     * score alignment tool ("make source B's quality scores comparable
     * to source A's").
     *
-    * Shape at 100 TB: both sides reduce to distinct-value relations via
-    * the SHARED dual small/binned cumulative engine ([[auc]]'s); the
-    * rank lookup is a RANK-SPACE bin equi-join (width `ceil(n_ref/4096)`
-    * — exact integer bins, no approx quantiles): ref intervals explode
+    * Shape at 100 TB: ONE (side, value) counting aggregate ranked by the
+    * SHARED driver/binned cumulative engine ([[auc]]'s) with the side as
+    * its group — finished on the driver when both sides together have ≤
+    * `maxDistinctBroadcast` distinct values; the rank lookup is a
+    * RANK-SPACE bin equi-join (width `ceil(n_ref/4096)` — exact integer
+    * bins, no approx quantiles): ref intervals explode
     * across the ≤(distinct + 4096) bins they cover, target ranks join
     * their bin, and the interval containment filter finishes. No
     * corpus-sized sort, broadcast, or nested-loop join anywhere. */
   def quantileNormalize(df: DataFrame, valueCol: String, groupCol: String,
       target: String, ref: String,
       maxDistinctBroadcast: Long = 100000): DataFrame = {
-    val (plan, a, b) = quantileNormalizePlan(df, valueCol, groupCol,
+    val (plan, counts, _) = quantileNormalizePlan(df, valueCol, groupCol,
       target, ref, maxDistinctBroadcast)
     val out = plan.localCheckpoint(eager = true)
-    a.unpersist(blocking = false)
-    b.unpersist(blocking = false)
+    graft.util.Fixpoint.release(counts)
     out
   }
 
-  /** The unmaterialized [[quantileNormalize]] plan plus the two
-    * persisted fit-time counts relations (the aucPlan pattern, for
-    * plan-shape tests). */
+  /** The unmaterialized [[quantileNormalize]] plan plus, once per side,
+    * the counted relation both sides share — to release after the plan
+    * is consumed (the aucPlan pattern, for plan-shape tests). */
   private[graft] def quantileNormalizePlan(df: DataFrame, valueCol: String,
       groupCol: String, target: String, ref: String,
       maxDistinctBroadcast: Long): (DataFrame, DataFrame, DataFrame) = {
@@ -1541,44 +1519,30 @@ object Eval {
         (g === ref || g === target))
       .select(g.as("__g"), col(valueCol).cast("double").as("__s"))
     // ONE corpus aggregate for BOTH sides (round 10, guide §2.3/§1.2:
-    // the previous per-side groupBy scanned the corpus twice); the
-    // persisted (side, value) relation is what each side filters
-    val counted = vals.groupBy(col("__g"), col("__s"))
-      .agg(count(lit(1)).as("__c")).persist()
-    def side(s: String): DataFrame =
-      counted.filter(col("__g") === s).select("__s", "__c")
-    val aCounts = side(ref).persist()
-    val bCounts = side(target).persist()
-    val aN = aCounts.count()
-    val bN = bCounts.count()
-    counted.unpersist(blocking = false)
-    val aBelow = belowCumulative(aCounts, Seq("__c"), aN,
-      maxDistinctBroadcast)
-      .select(col("__s").as("__va"), col("__c").as("__ca"),
-        col("__below___c").as("__ba"))
-    val bCum = belowCumulative(bCounts, Seq("__c"), bN,
-      maxDistinctBroadcast)
-      .select(col("__s").as("__vb"),
-        (col("__below___c") + col("__c")).as("__cumb"))
-    // totals aggregate the PERSISTED per-side counts, not the cumulative
-    // outputs — aggregating aBelow/bCum re-evaluated the entire
-    // cumulative engine a second time per side just to reach numbers
-    // the counts already hold: Σ__ca over aBelow ≡ Σ__c over aCounts,
-    // and max inclusive cumulative over bCum ≡ the target side's total
-    // row count ≡ Σ__c over bCounts (round 11, guide §1.2 — the ksExact
-    // totals fix applied to both sides here; 4 cumulative evaluations
-    // per run → 2)
-    val aTot = aCounts.agg(sum("__c").as("__na"))
-    val bTot = bCounts.agg(sum("__c").as("__nb"))
+    // the previous per-side groupBy scanned the corpus twice), ranked with
+    // the side as the group: one guarded collect, and each side's filter
+    // (on the group key) pushes below the binned path's windows
+    val r = CumulativeEngine.rank(
+      vals.groupBy(col("__g"), col("__s")).agg(count(lit(1)).as("__c")),
+      "__s", Seq("__c"), Seq("__g"), maxDistinctBroadcast,
+      "quantileNormalize")
+    def side(s: String): DataFrame = r.withTotals.filter(col("__g") === s)
+    val aBelow = side(ref).select(col("__s").as("__va"),
+      col("__c").as("__ca"), col("__below___c").as("__ba"),
+      col("__total___c").as("__na"))
+    val bCum = side(target).select(col("__s").as("__vb"),
+      (col("__below___c") + col("__c")).as("__cumb"),
+      col("__total___c").as("__nb"))
+    val aTot = r.totals.filter(col("__g") === ref)
+      .select(col("__total___c").as("__na"))
     val w = greatest(lit(1L),
       ceil(col("__na").cast("double") / 4096.0).cast("long"))
-    val aExploded = aBelow.crossJoin(broadcast(aTot))
+    val aExploded = aBelow
       .withColumn("__w", w)
       .withColumn("__bin", explode(sequence(
         expr("__ba div __w"),
         expr("(__ba + __ca - 1) div __w"))))
     val bKeyed = bCum.crossJoin(broadcast(aTot))
-      .crossJoin(broadcast(bTot))
       .withColumn("__ka",
         expr("(__cumb * __na + __nb - 1) div __nb"))
       .withColumn("__w", w)
@@ -1589,7 +1553,7 @@ object Eval {
         col("__ka") <= col("__ba") + col("__ca"))
       .select(col("__vb").as("value"), col("__va").as("normalized"),
         col("__ka").as("ref_rank"))
-    (out, aCounts, bCounts)
+    (out, r.counts, r.counts)
   }
 
   /** Forecast-quality backtest per series: score the SEASONAL-NAIVE

@@ -999,14 +999,13 @@ object Relational {
     * Non-empty `groupCols` computes the ECDF within each group
     * (per-segment normalization).
     *
-    * Dual path on the fitted distinct count (one count() action over the
-    * persisted distinct relation — the same fit-time decision the
-    * encoders make), computed by the shared [[CumulativeEngine]] (also
-    * behind the [[Eval]] ranking family — AUC/Gini/KS/Spearman/
-    * quantile-norm; unified round 7):
-    *  - distinct ≤ `maxDistinctBroadcast`: one ordered window over the
-    *    small distinct set (single task per group — bounded by
-    *    construction) and a BROADCAST join back;
+    * Three paths on the distinct relation's size, chosen by the shared
+    * [[CumulativeEngine.rank]] (also behind the [[Eval]] ranking family —
+    * AUC/Gini/KS/Spearman/quantile-norm; unified round 7) from ONE
+    * guarded collect of at most `maxDistinctBroadcast + 1` rows:
+    *  - distinct ≤ `maxDistinctBroadcast`: the cumulative is finished on
+    *    the driver into a local relation, joined back by a BROADCAST (no
+    *    checkpoint, no window);
     *  - above (continuous columns, distinct ≈ N): an exact BINNED
     *    cumulative — 64 approx-quantile macro-bins (balanced by DISTINCT
     *    count, so a heavy-tailed outlier occupies the top bin alone
@@ -1016,13 +1015,15 @@ object Relational {
     *    under total skew, ~distinct/4096 typical), a bins-sized
     *    cumulative for cross-bin offsets, and a SHUFFLE join back. No
     *    single-task window and no N-sized broadcast anywhere; requires a
-    *    numeric value column (non-numeric high-cardinality keeps the
-    *    window path — bounded dictionary columns are the only realistic
-    *    non-numeric input). Binning only partitions the value space; the
-    *    cumulative arithmetic is exact either way.
+    *    numeric value column (non-numeric high-cardinality takes one
+    *    ordered window per group and a broadcast join back — bounded
+    *    dictionary columns are the only realistic non-numeric input).
+    *    Binning only partitions the value space; the cumulative
+    *    arithmetic is exact on every path.
     *
-    * The ranked relation is localCheckpoint'ed (eager) and the fit-time
-    * distinct cache released before returning, so long-lived sessions
+    * Off the driver path the ranked relation is localCheckpoint'ed
+    * (eager) and the fit-time distinct cache released before returning,
+    * so long-lived sessions
     * don't accumulate corpus-sized cached relations (the checkpoint
     * itself is freed by the ContextCleaner once the returned plan is
     * unreferenced; on a cluster with executor loss, swap in reliable
@@ -1031,48 +1032,42 @@ object Relational {
       df: DataFrame, valueCol: String, out: String,
       groupCols: Seq[String] = Nil,
       maxDistinctBroadcast: Long = 100000): DataFrame = {
-    val counts = df.filter(col(valueCol).isNotNull)
-      .groupBy((groupCols.map(col) :+ col(valueCol).as("__v")): _*)
-      .agg(count(lit(1)).as("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nDistinct = counts.count()
     val numeric = df.schema(valueCol).dataType
       .isInstanceOf[org.apache.spark.sql.types.NumericType]
     val gb = groupCols.map(col)
-    val small = nDistinct <= maxDistinctBroadcast || !numeric
-
-    // the shared dual small/binned strictly-below engine (round 7: the
-    // SAME [[CumulativeEngine]] the Eval ranking family rides — this
-    // method's quantile-balanced 64×64 scheme, factored out once)
-    val below = CumulativeEngine.strictlyBelow(counts, "__v", Seq("__n"),
-      groupCols, small)
-    // per-group totals: one aggregate of the persisted distinct relation
-    // — ONE row ungrouped (broadcast unconditionally), groups-sized
-    // grouped (no hint; AQE broadcasts when actually small)
-    val totals = counts.groupBy(gb: _*).agg(sum("__n").as("__nn"))
-    val ranked = (if (groupCols.isEmpty)
-        below.crossJoin(broadcast(totals))
-      else below.join(totals, groupCols))
-      .select(gb ++ Seq(col("__v"),
-        col("__below___n").as("__below"), col("__nn")): _*)
+    // the shared driver/binned/window strictly-below engine (round 7: the
+    // SAME [[CumulativeEngine]] the Eval ranking family rides), with the
+    // per-group totals `__total___n` beside each row
+    val r = CumulativeEngine.rank(df.filter(col(valueCol).isNotNull)
+        .groupBy((gb :+ col(valueCol).as("__v")): _*)
+        .agg(count(lit(1)).as("__n")),
+      "__v", Seq("__n"), groupCols, maxDistinctBroadcast, "percentileRank",
+      binnable = numeric)
 
     // alias the ranked side's group columns to FRESH names: group-key
     // attributes survive groupBy with their expression ids intact, so an
     // un-aliased `df(c) === ranked(c)` can resolve trivially true
     // (self-join ambiguity) and match rows across groups.
-    // localCheckpoint (eager) materializes the distinct-sized ranked
-    // relation so the fit-time distinct cache can be released NOW — the
-    // persist otherwise outlives the call (ADVICE r5): for continuous
-    // columns distinct ≈ N, so every percentileRank call would pin a
-    // corpus-sized relation until clearCache
-    val rankedR = ranked.select(
+    // Off the driver path, localCheckpoint (eager) materializes the
+    // distinct-sized ranked relation so the fit-time distinct cache can be
+    // released NOW — the persist otherwise outlives the call (ADVICE r5):
+    // for continuous columns distinct ≈ N, so every percentileRank call
+    // would pin a corpus-sized relation until clearCache
+    val ranked = r.withTotals.select(
       (groupCols.map(c => col(c).as(s"__g_$c")) ++
-        Seq(col("__v"), col("__below"), col("__nn"))): _*)
-      .localCheckpoint(eager = true)
-    counts.unpersist(blocking = false)
+        Seq(col("__v"), col("__below___n").as("__below"),
+          col("__total___n").as("__nn"))): _*)
+    val rankedR =
+      if (r.onDriver) ranked
+      else {
+        val m = ranked.localCheckpoint(eager = true)
+        r.release()
+        m
+      }
     val cond = (df(valueCol) === rankedR("__v")) +:
       groupCols.map(c => df(c) === rankedR(s"__g_$c"))
-    val rankedSide = if (small) broadcast(rankedR) else rankedR
+    val rankedSide =
+      if (r.path == "binned") rankedR else broadcast(rankedR)
     val joined = df.join(rankedSide, cond.reduce(_ && _), "left")
       .withColumn(out,
         when(col(valueCol).isNotNull,

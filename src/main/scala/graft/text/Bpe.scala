@@ -2,6 +2,12 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.util.Fixpoint
+
+import scala.collection.mutable
 
 /** Distributed byte-pair-encoding merge-rule learning (Sennrich, Haddow &
   * Birch 2016, "Neural Machine Translation of Rare Words with Subword
@@ -11,18 +17,27 @@ import org.apache.spark.sql.functions._
   * stops at whitespace tokens); this is north-star training-pipeline
   * surface like the rest of graft.text.
   *
-  * Algorithm, re-expressed Spark-first:
+  * Algorithm — classic BPE counts once, then learns on the word-frequency
+  * table:
   *   1. ONE corpus-wide pass aggregates the distinct-word frequency table
-  *      (word, cnt) — classic BPE fits on word frequencies, not raw text,
-  *      so every later round touches only distinct words.
-  *   2. Each merge round is ONE (pair -> weighted count) aggregate over
-  *      that table — the same shape as Ranking.collocations: map-side
-  *      combine, exchange carries distinct pairs, global top-1 plans as
-  *      TakeOrderedAndProject. The winning pair (count DESC, pair ASC
-  *      tie-break) is collected — one bounded row per round.
-  *   3. The merge is applied to every word's segmentation and the next
-  *      round repeats. Rounds = numMerges, driver state = the merge table
-  *      (numMerges rows) — bounded like the LangId profile.
+  *      (word, cnt) — BPE fits on word frequencies, not raw text, so every
+  *      later round touches only distinct words.
+  *   2. The table is checkpointed and collected behind a guard of
+  *      [[DriverMaxWords]] + 1 rows (`coalesce(1).limit`: one job, two
+  *      under AQE with the aggregate's map stage). When it fits, the
+  *      merges are learned on the driver ([[learn]]): weighted pair counts
+  *      kept incrementally — a round touches only the words that contain
+  *      the winning pair — and a heap ordered by (count DESC, pair ASC),
+  *      the pair compared as the UTF-8 bytes of `"l r"` exactly as Spark
+  *      orders strings. No job runs per merge.
+  *   3. Over the guard each merge round is ONE (pair -> weighted count)
+  *      aggregate over the checkpointed table — the shape of
+  *      Ranking.collocations: map-side combine, exchange carries distinct
+  *      pairs, global top-1 plans as TakeOrderedAndProject; the winning
+  *      pair is collected (one row) and applied to every word's
+  *      segmentation. Rounds = numMerges.
+  * Both paths learn the same table, tie for tie (BpeDriverSpec runs both
+  * against a plain-Scala reference).
   *
   * Exact-replay representation: a word's segmentation is stored as each
   * token wrapped in pipes and concatenated — "unit" segmented as
@@ -41,18 +56,37 @@ import org.apache.spark.sql.functions._
   * occurs inside a token.
   *
   * Shape at 100 TB: the corpus is touched once (the word-count
-  * aggregate); every round shuffles only distinct (pair, count) rows —
-  * bounded by distinct words x average word length, orders of magnitude
-  * below the corpus. The evolving segmentation table is localCheckpointed
-  * every [[CheckpointEvery]] rounds (the Graph.scala discipline) so
-  * lineage never grows with numMerges. No collect ever exceeds one row
-  * per round, and [[encodeBpe]] ships the bounded merge table inside the
-  * plan — no join, no shuffle, scan-speed encoding.
+  * aggregate). A vocabulary of up to [[DriverMaxWords]] distinct words
+  * (natural-language corpora stay far below it) is learned on the driver
+  * in two jobs at any numMerges, holding the words, their segmentations
+  * and pair index — a few hundred bytes per word, a few hundred MB of
+  * driver heap at the bound. A larger vocabulary costs
+  * one bounded probe (at most `DriverMaxWords + 1` rows read in one task)
+  * and then runs the distributed rounds on the checkpointed table, never
+  * re-reading the corpus: each round shuffles only distinct (pair, count)
+  * rows, bounded by distinct words × average word length, and the
+  * evolving segmentation table is localCheckpointed every
+  * [[CheckpointEvery]] rounds (the Graph.scala discipline) so lineage
+  * never grows with numMerges. [[encodeBpe]] ships the bounded merge
+  * table inside the plan — no join, no shuffle, scan-speed encoding.
   */
 object Bpe {
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Rounds between localCheckpoints of the (cnt, seg) table. */
   val CheckpointEvery = 8
+
+  /** The most distinct words [[fitBpe]] learns from on the driver: the
+    * collect bound the fitted encoders use. */
+  val DriverMaxWords: Long =
+    graft.operators.ComplementLabelEncoder.DefaultMaxCollect
+
+  /** The driver bound in force: [[DriverMaxWords]] unless a caller on
+    * this thread rebinds it (`withValue`), as the specs do to pin the
+    * distributed rounds. */
+  private[graft] val driverMaxWords =
+    new scala.util.DynamicVariable(DriverMaxWords)
 
   private[text] def bpeWordsC(text: Column): Column =
     filter(TextFunctions.tokensLower(coalesce(text, lit(""))),
@@ -95,23 +129,45 @@ object Bpe {
   /** Learn `numMerges` BPE merge rules from the corpus. Returns the
     * merge table in rank order; fewer rows if the corpus runs out of
     * adjacent pairs. Deterministic: ties break on the space-joined pair
-    * string ascending (bytewise — identical ordering in DuckDB). */
+    * string ascending (bytewise — identical ordering in DuckDB). Logs one
+    * INFO line: the distinct words (exact, or `>guard`), the guard and
+    * the path (`driver` or `rounds`). */
   def fitBpe(df: DataFrame, textCol: String, numMerges: Int): Seq[Merge] = {
     require(numMerges >= 1 && numMerges <= 4096,
       s"numMerges must be in [1, 4096], got $numMerges")
-    // the one corpus-wide pass: distinct-word frequencies, seeded with
-    // the all-chars segmentation
-    var cur = df
+    // the one corpus-wide pass: distinct-word frequencies, checkpointed
+    // lazily — written by the guard's own job (a persist would cost a
+    // separate cache-materialization job under AQE)
+    val words = df
       .select(explode(bpeWords(textCol)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .select(col("cnt"), wrapChars(col("word")).as("seg"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer[Merge]()
+      .localCheckpoint(eager = false)
+    val guard = math.max(0L, driverMaxWords.value)
+    // coalesce(1): ONE job that reads at most guard + 1 rows in one task
+    // (executeTake would probe the partitions incrementally)
+    val rows = words.coalesce(1).limit((guard + 1).toInt).collect()
+    if (rows.length <= guard) {
+      Fixpoint.release(words)
+      log.info(s"Bpe.fitBpe: words=${rows.length} guard=$guard path=driver")
+      learn(rows.map(r => (r.getString(0), r.getLong(1))), numMerges)
+    } else {
+      log.info(s"Bpe.fitBpe: words>$guard guard=$guard path=rounds")
+      rounds(words, numMerges)
+    }
+  }
+
+  /** The distributed rounds over the checkpointed (word, cnt) table, seeded
+    * with the all-chars segmentation; the table and every checkpoint are
+    * released by the end. */
+  private def rounds(words: DataFrame, numMerges: Int): Seq[Merge] = {
+    var cur = words.select(col("cnt"), wrapChars(col("word")).as("seg"))
+    val merges = mutable.ArrayBuffer[Merge]()
     var exhausted = false
-    // the previous checkpoint is released once the next one materializes
-    // (ADVICE r9): at numMerges=4096, never-unpersisted checkpoints would
-    // pile ~512 copies of the segmentation table into the block manager
-    var prevCheckpoint = cur
+    // the previous materialization is released once the next checkpoint
+    // exists (ADVICE r9): at numMerges=4096, never-unpersisted checkpoints
+    // would pile ~512 copies of the segmentation table into the block
+    // manager
+    var prevCheckpoint = words
     while (merges.size < numMerges && !exhausted) {
       val top = cur
         .select(explode(segPairs(col("seg"))).as("pair"), col("cnt"))
@@ -126,8 +182,106 @@ object Bpe {
         cur = cur.select(col("cnt"), applyMerge(col("seg"), l, r).as("seg"))
         if (merges.size % CheckpointEvery == 0) {
           cur = cur.localCheckpoint(true)
-          prevCheckpoint.unpersist(blocking = false)
+          Fixpoint.release(prevCheckpoint)
           prevCheckpoint = cur
+        }
+      }
+    }
+    Fixpoint.release(prevCheckpoint)
+    merges.toSeq
+  }
+
+  /** The driver learner over a collected word-frequency table — the exact
+    * [[fitBpe]] rounds: the pair with the largest weighted count wins,
+    * ties to the smaller `"l r"` in UTF-8 byte order, and the merge is the
+    * greedy left-to-right non-overlapping replace.
+    *
+    * Words are symbol-id arrays. `counts` holds every adjacent pair's
+    * weighted count (a pair is two 32-bit symbol ids in one long), `where`
+    * the words that may contain it, and `heap` a (count, pair) entry per
+    * count change — entries whose count is no longer current are skipped
+    * when they surface. A round rewrites only the words in `where` of the
+    * winner, moving their old pairs' weight to their new pairs, so its
+    * cost is the winner's occurrences, not the vocabulary. */
+  private def learn(words: Seq[(String, Long)],
+      numMerges: Int): Seq[Merge] = {
+    val symbols = mutable.ArrayBuffer[String]()
+    val symbolIds = mutable.HashMap[String, Int]()
+    def symbol(s: String): Int =
+      symbolIds.getOrElseUpdate(s, { symbols += s; symbols.size - 1 })
+    def pairOf(l: Int, r: Int): Long = (l.toLong << 32) | (r & 0xffffffffL)
+    val segs = words.map { case (w, _) =>
+      w.codePoints.toArray.map(c => symbol(new String(Character.toChars(c))))
+    }.toArray
+    val freq = words.map(_._2).toArray
+    def pairsIn(seg: Array[Int]): Array[Long] =
+      Array.tabulate(math.max(seg.length - 1, 0))(i =>
+        pairOf(seg(i), seg(i + 1)))
+
+    val counts = mutable.LongMap[Long]()
+    val where = mutable.LongMap[mutable.ArrayBuffer[Int]]()
+    val names = mutable.LongMap[UTF8String]()
+    def name(p: Long): UTF8String = names.getOrElseUpdate(p,
+      UTF8String.fromString(
+        symbols((p >>> 32).toInt) + " " + symbols(p.toInt)))
+    val heap = mutable.PriorityQueue[(Long, Long)]()(
+      new Ordering[(Long, Long)] {
+        def compare(a: (Long, Long), b: (Long, Long)): Int =
+          if (a._1 != b._1) java.lang.Long.compare(a._1, b._1)
+          else name(b._2).compareTo(name(a._2))
+      })
+    segs.indices.foreach { w =>
+      pairsIn(segs(w)).distinct.foreach { p =>
+        where.getOrElseUpdate(p, mutable.ArrayBuffer[Int]()) += w
+      }
+      pairsIn(segs(w)).foreach(p =>
+        counts(p) = counts.getOrElse(p, 0L) + freq(w))
+    }
+    counts.foreach { case (p, c) => heap.enqueue((c, p)) }
+
+    val merges = mutable.ArrayBuffer[Merge]()
+    val seen = Array.fill(segs.length)(-1)
+    var exhausted = false
+    while (merges.size < numMerges && !exhausted) {
+      while (heap.nonEmpty &&
+          counts.getOrElse(heap.head._2, 0L) != heap.head._1) heap.dequeue()
+      if (heap.isEmpty) exhausted = true
+      else {
+        val (n, win) = heap.dequeue()
+        val (l, r) = ((win >>> 32).toInt, win.toInt)
+        merges += Merge(merges.size + 1, symbols(l), symbols(r), n)
+        val lr = symbol(symbols(l) + symbols(r))
+        val delta = mutable.LongMap[Long]()
+        where.remove(win).foreach(_.foreach { w =>
+          if (seen(w) != merges.size) {
+            seen(w) = merges.size
+            val old = segs(w)
+            val merged = mutable.ArrayBuilder.make[Int]
+            var i = 0
+            while (i < old.length) {
+              if (i + 1 < old.length && old(i) == l && old(i + 1) == r) {
+                merged += lr; i += 2
+              } else { merged += old(i); i += 1 }
+            }
+            val now = merged.result()
+            if (now.length != old.length) {
+              val before = pairsIn(old).sorted
+              before.foreach(p => delta(p) = delta.getOrElse(p, 0L) - freq(w))
+              pairsIn(now).foreach { p =>
+                delta(p) = delta.getOrElse(p, 0L) + freq(w)
+                if (java.util.Arrays.binarySearch(before, p) < 0)
+                  where.getOrElseUpdate(p, mutable.ArrayBuffer[Int]()) += w
+              }
+              segs(w) = now
+            }
+          }
+        })
+        delta.foreach { case (p, d) =>
+          if (d != 0) {
+            val c = counts.getOrElse(p, 0L) + d
+            if (c == 0) { counts.remove(p); where.remove(p) }
+            else { counts(p) = c; heap.enqueue((c, p)) }
+          }
         }
       }
     }
@@ -160,15 +314,23 @@ object Bpe {
     * MinHashIndex save/load contract). Plain parquet: engine-portable,
     * human-inspectable, and the rank order IS the rule priority. */
   def save(merges: Seq[Merge], spark: SparkSession, path: String): Unit =
-    mergesDF(spark, merges).repartition(1)
+    // coalesce, not repartition: the local table is written as one file
+    // in rank order by one job, with no exchange
+    mergesDF(spark, merges).coalesce(1)
       .write.mode("overwrite").parquet(path)
 
-  /** Reload a saved merge table in rank order. */
+  /** The saved merge table's schema (as [[mergesDF]] writes it). */
+  private val MergesSchema = StructType(Seq(
+    StructField("merge_rank", IntegerType), StructField("lhs", StringType),
+    StructField("rhs", StringType), StructField("n_pairs", LongType)))
+
+  /** Reload a saved merge table in rank order: one read job with the
+    * known schema (no footer inference), sorted on the driver. */
   def load(spark: SparkSession, path: String): Seq[Merge] =
-    spark.read.parquet(path)
-      .orderBy("merge_rank").collect().toSeq
-      .map(r => Merge(r.getAs[Int]("merge_rank"), r.getAs[String]("lhs"),
-        r.getAs[String]("rhs"), r.getAs[Long]("n_pairs")))
+    spark.read.schema(MergesSchema).parquet(path).collect().toSeq
+      .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
+        r.getLong(3)))
+      .sortBy(_.merge_rank)
 
   /** Encode every document against a learned merge table: each word is
     * segmented to characters, then the merges are applied in rank order —

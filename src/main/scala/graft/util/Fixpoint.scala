@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -53,6 +54,14 @@ object Fixpoint {
     State(out, row.schema.fieldNames.zipWithIndex.map { case (k, i) =>
       k -> (if (row.isNullAt(i)) 0L else row.getAs[Number](i).longValue)
     }.toMap)
+  }
+
+  /** Frees the blocks `df` holds now rather than when the context cleaner
+    * notices: those of the local checkpoint it IS (a `localCheckpoint`
+    * result, eager or not), else its cache entry. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
+    case _ => df.unpersist(blocking = false); ()
   }
 
   /** Round `index` (1-based) of a loop, stepping from `state`. */

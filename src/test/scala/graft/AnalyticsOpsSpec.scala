@@ -540,6 +540,23 @@ class BasketAffinitySpec extends SparkSpec {
     assert(got(("c", "d")) == (1L, 1L, 1L, 2L))
   }
 
+  test("the basket total and the capped-basket count are read off the " +
+      "checkpoint job: at most 8 jobs, the over-cap warning still fires") {
+    // baskets 0..199 hold 13 distinct items (ids b + 400k, items id % 97)
+    val df = spark.range(5000).select((col("id") % 400).as("bk"),
+      concat(lit("i"), (col("id") % 97).cast("string")).as("it"))
+      .localCheckpoint(true)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val (jobs, lines) = logLines(Analytics.getClass.getName) {
+      countJobs { rows = Analytics.basketAffinity(df, "bk", "it",
+        maxBasket = 12).collect() }
+    }
+    assert(jobs <= 8, s"$jobs jobs")
+    assert(rows.nonEmpty && rows.forall(_.getLong(5) == 400L))
+    assert(lines.exists(_.startsWith(
+      "basketAffinity: 200 basket(s) over the 12-item cap")), lines)
+  }
+
   test("pair explode + counts stay inside aggregates — no cartesian; " +
       "the only window is the basket-partitioned cap rank") {
     val df = Seq((1L, "a"), (1L, "b")).toDF("bk", "it")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.relational.CumulativeEngine
+import graft.relational.{CumulativeEngine, Eval, Relational}
 
 /** The unified strictly-below cumulative engine (round 7: one engine
   * behind percentileRank AND the Eval ranking family) — exactness of
@@ -114,5 +114,146 @@ class CumulativeEngineSpec extends SparkSpec {
         .select(col("__v"), col("__below___n"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(run(small = true) == run(small = false))
+  }
+
+  // ---- the guarded driver path (CumulativeEngine.rank) ------------------
+
+  /** `body` on each path: the driver finish (threshold above every
+    * count), the window (driver bound 0, threshold above every count) and
+    * the binned path (threshold 0). */
+  private def onEachPath[T](body: Long => T): Seq[(String, T)] = Seq(
+    "driver" -> body(Long.MaxValue),
+    "window" -> CumulativeEngine.driverMaxRows.withValue(0L)(
+      body(Long.MaxValue)),
+    "binned" -> body(0L))
+
+  /** Rows as comparable values: doubles by their bits, so NaN and the
+    * signed zeros compare exactly. */
+  private def bits(df: DataFrame, order: String*): Seq[Seq[Any]] =
+    df.orderBy(order.map(col): _*).collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    })
+
+  test("rank: driver == window == binned, bit for bit — long and double " +
+      "measures, ungrouped and grouped, below and totals") {
+    for (groups <- Seq(0, 4)) {
+      val gcols = if (groups == 0) Nil else Seq("g")
+      val c = counts(600, groups)
+      val got = onEachPath { max =>
+        val r = CumulativeEngine.rank(c, "__v", Seq("__n", "__m"), gcols,
+          max, "spec")
+        val out = (r.path,
+          bits(r.below.select((gcols ++ Seq("__v", "__n", "__m",
+            "__below___n", "__below___m")).map(col): _*), gcols :+ "__v": _*),
+          bits(r.totals, gcols: _*),
+          bits(r.withTotals.select((gcols ++ Seq("__v", "__below___n",
+            "__total___n", "__total___m")).map(col): _*),
+            gcols :+ "__v": _*))
+        r.release()
+        out
+      }
+      got.foreach { case (path, (taken, _, _, _)) => assert(taken == path) }
+      val Seq(driver, window, binned) = got.map(_._2)
+      assert(driver._2.size == c.count() &&
+        driver._3.size == math.max(groups, 1))
+      assert(driver.productIterator.drop(1).toSeq ==
+        window.productIterator.drop(1).toSeq, s"groups=$groups: window")
+      assert(driver.productIterator.drop(1).toSeq ==
+        binned.productIterator.drop(1).toSeq, s"groups=$groups: binned")
+    }
+  }
+
+  test("rank: driver == window on arbitrary doubles — the driver adds in " +
+      "the window's order (totals are Spark sums off the driver path, " +
+      "exact only where the addition order cannot matter)") {
+    val rng = new scala.util.Random(0x5EED)
+    val c = (1 to 500).map(i => (i * 0.731 % 97.0, rng.nextGaussian() * 1e3))
+      .toDF("__v", "__m").groupBy("__v").agg(sum("__m").as("__m"))
+    val got = onEachPath { max =>
+      val r = CumulativeEngine.rank(c, "__v", Seq("__m"), Nil, max, "spec")
+      val out = bits(r.below.select("__v", "__below___m"), "__v")
+      r.release()
+      out
+    }.toMap
+    assert(got("driver") == got("window"))
+  }
+
+  test("NaN, ±0.0, ties and null groups: percentileRank (ungrouped and " +
+      "grouped) and the Eval ranking family agree on every path") {
+    val vals = Seq(Double.NaN, -0.0, 0.0, 1.5, 1.5, -2.0, Double.NaN, 3.25,
+      0.0, -0.0, 7.0, 1.5, -2.0, 11.0, Double.NegativeInfinity)
+    val df = vals.zipWithIndex.map { case (v, i) =>
+      (i.toLong, if (i == 4) None else Some(v),
+        if (i % 5 == 0) None else Some(s"g${i % 2}"),
+        (i % 3 == 0).compare(false),
+        (i * 7 % 5).toDouble, if (i % 2 == 0) "a" else "b")
+    }.toDF("row_id", "v", "g", "label", "w", "side")
+    def same(name: String)(run: Long => DataFrame, order: String*): Unit = {
+      val got = onEachPath(max => bits(run(max), order: _*))
+      got.tail.foreach { case (path, rows) =>
+        assert(rows == got.head._2, s"$name: $path != driver")
+      }
+    }
+    same("percentileRank")(m =>
+      Relational.percentileRank(df, "v", "pr", maxDistinctBroadcast = m)
+        .select("row_id", "pr"), "row_id")
+    same("percentileRank grouped")(m =>
+      Relational.percentileRank(df, "v", "pr", Seq("g"),
+        maxDistinctBroadcast = m).select("row_id", "pr"), "row_id")
+    same("auc")(m => Eval.auc(df, "v", "label", m))
+    same("prAuc")(m => Eval.prAuc(df, "v", "label", m))
+    same("rankSumTest")(m => Eval.rankSumTest(df, "v", "label", m))
+    same("lorenzGini")(m => Eval.lorenzGini(df, "w", m))
+    same("spearman")(m => Eval.spearman(df, "v", "w", m))
+    same("ksExact")(m => Eval.ksExact(df, "v", "side", "a", "b", m))
+    same("quantileNormalize")(m =>
+      Eval.quantileNormalize(df, "v", "side", "a", "b", m), "value")
+  }
+
+  test("over the guard the distributed paths read the checkpointed " +
+      "distinct relation: the corpus is scanned once") {
+    val scans = spark.sparkContext.longAccumulator("rank-corpus-scans")
+    // nondeterministic: a deterministic UDF is re-evaluated wherever the
+    // optimizer copies it (the null filter), which would count one row twice
+    val tap = udf { (v: Double) => scans.add(1); v }.asNondeterministic()
+    val df = (1 to 300).map(i => (i * 0.37 % 29.0, (i % 3 == 0).compare(false),
+      if (i % 2 == 0) "a" else "b")).toDF("x", "label", "side")
+      .select(tap(col("x")).as("x"), col("label"), col("side"))
+    Eval.auc(df, "x", "label", maxDistinctBroadcast = 0).collect()
+    assert(scans.sum == 300, s"auc binned read ${scans.sum} rows")
+    scans.reset()
+    CumulativeEngine.driverMaxRows.withValue(0L)(
+      Eval.ksExact(df, "x", "side", "a", "b", Long.MaxValue).collect())
+    assert(scans.sum == 300, s"ksExact window read ${scans.sum} rows")
+  }
+
+  test("spearman + quantileNormalize + ksExact on a 5k-row table finish " +
+      "in at most 20 jobs, and each ranking logs its decision") {
+    val tx = (1 to 5000).map { i =>
+      (i * 0.37 % 101, (i * 7 % 13).toDouble,
+        if (i % 3 == 0) "web" else "pos", if (i % 5 == 0) "fraud" else "legit",
+        (i % 5 == 0).compare(false))
+    }.toDF("amount", "score", "channel", "klass", "label")
+      .localCheckpoint(true)
+    val jobs = countJobs {
+      Eval.spearman(tx, "amount", "score").collect()
+      Eval.quantileNormalize(tx, "amount", "channel", "web", "pos")
+      Eval.ksExact(tx, "score", "klass", "fraud", "legit").collect()
+    }
+    assert(jobs <= 20, s"$jobs jobs")
+    val (_, lines) = logLines(CumulativeEngine.getClass.getName) {
+      Eval.spearman(tx, "amount", "score").collect()
+      Eval.auc(tx, "score", "label", maxDistinctBroadcast = 5).collect()
+      CumulativeEngine.driverMaxRows.withValue(5L)(
+        Eval.auc(tx, "score", "label", maxDistinctBroadcast = 100).collect())
+    }
+    val nAmount = tx.select("amount").distinct().count()
+    assert(lines == Seq(
+      s"CumulativeEngine spearman.amount: rows=$nAmount guard=100000 " +
+        "path=driver",
+      "CumulativeEngine spearman.score: rows=13 guard=100000 path=driver",
+      "CumulativeEngine auc: rows>5 guard=5 path=binned",
+      "CumulativeEngine auc: rows>5 guard=5 path=window"))
   }
 }

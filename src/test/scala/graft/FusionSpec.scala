@@ -2,7 +2,6 @@ package graft
 
 import graft.operators._
 import org.apache.spark.ml.{Estimator, PipelineStage, Transformer}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,27 +16,6 @@ class FusionSpec extends SparkSpec {
     (1L, Some("a"), 10.0), (2L, Some("a"), 20.0), (3L, Some("b"), 30.0),
     (4L, None, 40.0), (5L, Some("c"), 50.0), (6L, Some("b"), 60.0))
     .toDF("row_id", "k", "v")
-
-  private def countJobs(body: => Unit): Int = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        { counter.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener events are async; poll until the count is stable
-      var last = -1
-      var same = 0
-      while (same < 3) {
-        val now = counter.get()
-        if (now == last) same += 1 else { same = 0; last = now }
-        Thread.sleep(100)
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    counter.get()
-  }
 
   private def sameFrames(a: DataFrame, b: DataFrame): Unit = {
     assert(a.schema == b.schema)

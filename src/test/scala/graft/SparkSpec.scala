@@ -38,6 +38,29 @@ trait SparkSpec extends AnyFunSuite {
   def dtypeOf(df: DataFrame, c: String): String =
     df.schema(c).dataType.simpleString
 
+  /** The Spark jobs `body` starts. */
+  def countJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        { counter.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // listener events are async; poll until the count is stable
+      var last = -1
+      var same = 0
+      while (same < 3) {
+        val now = counter.get()
+        if (now == last) same += 1 else { same = 0; last = now }
+        Thread.sleep(100)
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+    counter.get()
+  }
+
   /** `body`'s result and the INFO lines logger `name` emits while it runs;
     * the logger's level and additivity are restored afterwards. */
   def logLines[T](name: String)(body: => T): (T, Seq[String]) = {
