@@ -75,10 +75,10 @@ object PlanDump {
     if (names.contains("internal_quantile_norm")) {
       import org.apache.spark.sql.functions._
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      val (out, a, b) = graft.relational.Eval.quantileNormalizePlan(
+      val (out, counts) = graft.relational.Eval.quantileNormalizePlan(
         li, "l_extendedprice", "l_returnflag", "N", "R", 100000)
       writeInternal("internal_quantile_norm", out)
-      a.unpersist(blocking = false); b.unpersist(blocking = false)
+      graft.util.Fixpoint.release(counts)
     }
     if (names.contains("internal_lpa_vote")) {
       import org.apache.spark.sql.functions._

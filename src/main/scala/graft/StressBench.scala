@@ -143,17 +143,27 @@ object StressBench {
         k = 3, dim = 64)
     }),
 
-    // percentileRank, WINDOW path forced (threshold above any distinct
-    // count, driver finish off): the single-task ordered window over
-    // ~60k×reps distinct values — the plan the binned path exists to
-    // replace. Output projected to keys + rank so the timed difference is
-    // the rank computation, not an 11-column join-back payload + sink
-    "s_pctrank_window" -> ((s, d, r) =>
-      graft.relational.CumulativeEngine.driverMaxRows.withValue(0L)(
-        graft.relational.Relational.percentileRank(
-          lineitemScaled(s, d, r), "l_extendedprice", "pr",
-          maxDistinctBroadcast = Long.MaxValue))
-        .select("l_orderkey", "l_linenumber", "pr")),
+    // percentileRank through the WINDOW cumulative
+    // (CumulativeEngine.strictlyBelow `small = true`): the single-task
+    // ordered window over ~60k×reps distinct values — the plan the binned
+    // path exists to replace — with percentileRank's own finish (totals,
+    // broadcast join-back, `below / (n − 1)`). Output projected to keys +
+    // rank so the timed difference is the rank computation, not an
+    // 11-column join-back payload + sink
+    "s_pctrank_window" -> ((s, d, r) => {
+      val li = lineitemScaled(s, d, r)
+      val counts = li.filter(col("l_extendedprice").isNotNull)
+        .groupBy(col("l_extendedprice").as("__v"))
+        .agg(count(lit(1)).as("__n"))
+        .localCheckpoint(eager = false)
+      val ranked = graft.relational.CumulativeEngine.strictlyBelow(counts,
+          "__v", Seq("__n"), Nil, small = true)
+        .crossJoin(broadcast(counts.agg(sum("__n").as("__nn"))))
+      li.join(broadcast(ranked), li("l_extendedprice") === ranked("__v"),
+          "left")
+        .select(col("l_orderkey"), col("l_linenumber"),
+          (col("__below___n") / (col("__nn") - lit(1.0))).as("pr"))
+    }),
 
     // percentileRank, BINNED path forced (threshold 0): 64×64 bins,
     // per-bin parallel windows — same input, same output, scale plan

@@ -502,12 +502,11 @@ object FitFusion {
       else math.min(parts.filter(_.sets.contains(s)).map(_.guard).max,
         Int.MaxValue.toLong) + 1
     }.sum
-    // one row past `need` tells a complete collect from a truncated one
+    // one row past `need` tells a complete collect from a truncated one;
+    // the final reduce of a vocab-sized aggregate runs in one task, so the
+    // guarded collect is exactly ONE job
     val limit = math.min(need + 1, Int.MaxValue - 1L).toInt
-    // coalesce(1): the final reduce of a vocab-sized aggregate runs in one
-    // task, so the guarded collect is exactly ONE job (executeTake would
-    // otherwise probe the reduce partitions incrementally = several jobs)
-    val rows = result.coalesce(1).limit(limit).collect()
+    val rows = graft.util.Fixpoint.collectAtMost(result, limit)
     val nG = groupCols.length
     val setOf = gid.map(_.swap)
     val bySet = rows.toSeq.groupBy(_.getLong(nG)).map { case (g, rs) =>

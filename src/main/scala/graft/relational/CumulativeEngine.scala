@@ -7,6 +7,8 @@ import org.apache.spark.sql.types._
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.operators.ComplementLabelEncoder.DefaultMaxCollect
+
 /** THE shared strictly-below cumulative engine: given a DISTINCT-value
   * relation (one row per value — per group when `groupCols` is
   * non-empty — carrying one or more additive measure columns), appends
@@ -22,12 +24,12 @@ import scala.collection.mutable.ArrayBuffer
   * mass). One implementation means one scale argument, one set of
   * plan-shape assertions, and no drift between paths.
   *
-  * [[rank]] checkpoints the counted relation lazily and collects it
-  * ONCE, sorted in Spark's order, behind a guard of
-  * `min(threshold, DriverMaxRows) + 1` rows: `coalesce(1).limit(guard + 1)`
-  * with the sort in that one task — one job (two with the counting
-  * aggregate's map stage), which also writes the checkpoint. Then one of
-  * three paths:
+  * [[rank]] collects the counted relation ONCE, sorted in Spark's order,
+  * behind a guard of `min(threshold, 1 M)` rows
+  * ([[graft.util.Fixpoint.guardedCollect]]: `guard + 1` rows read in one
+  * task, the sort in that task — one job, two with the counting
+  * aggregate's map stage — which also writes the lazy local checkpoint
+  * the distributed paths read). Then one of three paths:
   *
   *  - driver (the relation fits the guard — quantized scores,
   *    dictionaries, anything up to the caller's threshold): exact
@@ -52,10 +54,8 @@ import scala.collection.mutable.ArrayBuffer
   *
   *  - window (over the guard but not binnable — a non-numeric
   *    [[Relational.percentileRank]] column, whose bounded dictionary is
-  *    the only realistic input — or a caller threshold above
-  *    [[DriverMaxRows]] that one `count` of the checkpoint shows is not
-  *    exceeded): ONE ordered window per group over the checkpoint
-  *    ([[strictlyBelow]] `small = true`).
+  *    the only realistic input): ONE ordered window per group over the
+  *    checkpoint ([[strictlyBelow]] `small = true`).
   *
   * Shape at 100 TB: the corpus is aggregated once into the distinct
   * relation. The guard reads at most `guard + 1` of its rows in one task
@@ -85,27 +85,17 @@ private[graft] object CumulativeEngine {
   private val NMacro = 64
   private val NMicro = 64 // NMacro * NMicro = 4096 total bins
 
-  /** The most rows [[rank]] finishes on the driver, whatever the caller's
-    * threshold: the collect bound the fitted encoders use. */
-  val DriverMaxRows: Long =
-    graft.operators.ComplementLabelEncoder.DefaultMaxCollect
-
-  /** The driver bound in force: [[DriverMaxRows]] unless a caller on this
-    * thread rebinds it (`withValue`), as the specs do to pin the window
-    * path. */
-  private[graft] val driverMaxRows =
-    new scala.util.DynamicVariable(DriverMaxRows)
-
   /** A ranked relation. `below` is the counted relation plus
     * `__below_<m>` per measure; `totals` has one row per group (one row
     * ungrouped) of `__total_<m>`; `withTotals` is `below` with its group's
     * totals appended. On the driver path all three are LOCAL relations;
     * on the distributed paths `withTotals` joins the totals back (a
     * broadcast cross join ungrouped, an AQE-decided equi-join grouped).
-    * `counts` is the counted relation, checkpointed on the distributed
-    * paths until the caller has materialized its result and calls
-    * [[release]] (already released on the driver path). `path` is
-    * `driver`, `binned` or `window`. */
+    * `counts` is the counted relation: on the distributed paths its
+    * checkpoint, held until the caller has materialized its result and
+    * calls [[release]]; on the driver path the relation as given, already
+    * collected, which [[release]] leaves alone. `path` is `driver`,
+    * `binned` or `window`. */
   final class Ranked private[CumulativeEngine] (val path: String,
       val counts: DataFrame, belowOf: => DataFrame, totalsOf: => DataFrame,
       withTotalsOf: => DataFrame) {
@@ -113,7 +103,8 @@ private[graft] object CumulativeEngine {
     lazy val totals: DataFrame = totalsOf
     lazy val withTotals: DataFrame = withTotalsOf
     def onDriver: Boolean = path == "driver"
-    def release(): Unit = graft.util.Fixpoint.release(counts)
+    def release(): Unit =
+      if (!onDriver) graft.util.Fixpoint.release(counts)
   }
 
   /** Ranks the DISTINCT relation `counts` (not yet materialized) on
@@ -125,32 +116,24 @@ private[graft] object CumulativeEngine {
       groupCols: Seq[String], maxRows: Long, site: String,
       binnable: Boolean = true): Ranked = {
     require(measures.nonEmpty, "need at least one measure column")
-    // a lazy local checkpoint: written by the guard's own job (a persist
-    // would cost a separate cache-materialization job under AQE)
-    val cached = counts.localCheckpoint(eager = false)
-    val guard = math.max(0L, math.min(maxRows, driverMaxRows.value))
-    // coalesce(1): ONE job (executeTake would probe the partitions
-    // incrementally) that reads at most guard + 1 rows in one task; the
-    // sort runs in that task, after the limit
-    val rows = cached.coalesce(1).limit((guard + 1).toInt)
-      .orderBy((groupCols :+ valueCol).map(col): _*).collect()
-    val ranked =
-      if (rows.length <= guard) {
-        graft.util.Fixpoint.release(cached)
-        onDriver(rows, cached, measures, groupCols)
-      } else {
-        val small = !binnable ||
-          (maxRows > guard && cached.count() <= maxRows)
+    // whatever the caller's threshold, at most the collect bound the
+    // fitted encoders use (1 M rows) comes to the driver
+    val guard = math.max(0L, math.min(maxRows, DefaultMaxCollect))
+    val (ranked, seen) = graft.util.Fixpoint.guardedCollect(counts, guard,
+        (groupCols :+ valueCol).map(col): _*) match {
+      case Right(rows) =>
+        (onDriver(rows, counts, measures, groupCols), s"=${rows.length}")
+      case Left(cached) =>
         val below = strictlyBelow(cached, valueCol, measures, groupCols,
-          small)
+          small = !binnable)
         val totals = cached.groupBy(groupCols.map(col): _*).agg(
           sum(measures.head).as(s"__total_${measures.head}"),
           measures.tail.map(m => sum(m).as(s"__total_$m")): _*)
-        new Ranked(if (small) "window" else "binned", cached, below, totals,
+        (new Ranked(if (binnable) "binned" else "window", cached, below,
+          totals,
           if (groupCols.isEmpty) below.crossJoin(broadcast(totals))
-          else below.join(totals, groupCols))
-      }
-    val seen = if (ranked.onDriver) s"=${rows.length}" else s">$guard"
+          else below.join(totals, groupCols)), s">$guard")
+    }
     log.info(s"CumulativeEngine $site: rows$seen guard=$guard " +
       s"path=${ranked.path}")
     ranked
@@ -235,8 +218,8 @@ private[graft] object CumulativeEngine {
     require(measures.nonEmpty, "need at least one measure column")
     val gb = groupCols.map(col)
     if (small) {
-      // bounded by the count [[rank]] took (or a non-numeric dictionary)
-      // — single-task window per group intended
+      // a bounded non-numeric dictionary when [[rank]] takes it —
+      // single-task window per group intended
       val base =
         if (groupCols.isEmpty) graft.util.BoundedWindow.globalUnordered()
         else Window.partitionBy(gb: _*)

@@ -1445,7 +1445,7 @@ object Eval {
     m
   }
 
-  /** The unmaterialized [[ksExact]] plan plus the persisted counts
+  /** The unmaterialized [[ksExact]] plan plus the checkpointed counts
     * relation (the aucPlan pattern, for plan-shape tests). */
   private[graft] def ksExactPlan(df: DataFrame, valueCol: String,
       groupCol: String, groupA: String, groupB: String,
@@ -1501,19 +1501,20 @@ object Eval {
   def quantileNormalize(df: DataFrame, valueCol: String, groupCol: String,
       target: String, ref: String,
       maxDistinctBroadcast: Long = 100000): DataFrame = {
-    val (plan, counts, _) = quantileNormalizePlan(df, valueCol, groupCol,
+    val (plan, counts) = quantileNormalizePlan(df, valueCol, groupCol,
       target, ref, maxDistinctBroadcast)
     val out = plan.localCheckpoint(eager = true)
     graft.util.Fixpoint.release(counts)
     out
   }
 
-  /** The unmaterialized [[quantileNormalize]] plan plus, once per side,
-    * the counted relation both sides share — to release after the plan
-    * is consumed (the aucPlan pattern, for plan-shape tests). */
+  /** The unmaterialized [[quantileNormalize]] plan plus the counted
+    * relation both sides share — to release
+    * ([[graft.util.Fixpoint.release]]) after the plan is consumed (the
+    * aucPlan pattern, for plan-shape tests). */
   private[graft] def quantileNormalizePlan(df: DataFrame, valueCol: String,
       groupCol: String, target: String, ref: String,
-      maxDistinctBroadcast: Long): (DataFrame, DataFrame, DataFrame) = {
+      maxDistinctBroadcast: Long): (DataFrame, DataFrame) = {
     val g = col(groupCol).cast("string")
     val vals = df.filter(col(valueCol).isNotNull &&
         (g === ref || g === target))
@@ -1553,7 +1554,7 @@ object Eval {
         col("__ka") <= col("__ba") + col("__ca"))
       .select(col("__vb").as("value"), col("__va").as("normalized"),
         col("__ka").as("ref_rank"))
-    (out, r.counts, r.counts)
+    (out, r.counts)
   }
 
   /** Forecast-quality backtest per series: score the SEASONAL-NAIVE

@@ -22,9 +22,9 @@ import scala.collection.mutable
   *   1. ONE corpus-wide pass aggregates the distinct-word frequency table
   *      (word, cnt) — BPE fits on word frequencies, not raw text, so every
   *      later round touches only distinct words.
-  *   2. The table is checkpointed and collected behind a guard of
-  *      [[DriverMaxWords]] + 1 rows (`coalesce(1).limit`: one job, two
-  *      under AQE with the aggregate's map stage). When it fits, the
+  *   2. The table is collected behind a guard of 1 M words
+  *      ([[graft.util.Fixpoint.guardedCollect]]: one job, two under AQE
+  *      with the aggregate's map stage). When it fits, the
   *      merges are learned on the driver ([[learn]]): weighted pair counts
   *      kept incrementally — a round touches only the words that contain
   *      the winning pair — and a heap ordered by (count DESC, pair ASC),
@@ -56,12 +56,12 @@ import scala.collection.mutable
   * occurs inside a token.
   *
   * Shape at 100 TB: the corpus is touched once (the word-count
-  * aggregate). A vocabulary of up to [[DriverMaxWords]] distinct words
+  * aggregate). A vocabulary of up to 1 M distinct words
   * (natural-language corpora stay far below it) is learned on the driver
   * in two jobs at any numMerges, holding the words, their segmentations
   * and pair index — a few hundred bytes per word, a few hundred MB of
   * driver heap at the bound. A larger vocabulary costs
-  * one bounded probe (at most `DriverMaxWords + 1` rows read in one task)
+  * one bounded probe (at most 1 M + 1 rows read in one task)
   * and then runs the distributed rounds on the checkpointed table, never
   * re-reading the corpus: each round shuffles only distinct (pair, count)
   * rows, bounded by distinct words × average word length, and the
@@ -78,15 +78,12 @@ object Bpe {
   val CheckpointEvery = 8
 
   /** The most distinct words [[fitBpe]] learns from on the driver: the
-    * collect bound the fitted encoders use. */
-  val DriverMaxWords: Long =
-    graft.operators.ComplementLabelEncoder.DefaultMaxCollect
-
-  /** The driver bound in force: [[DriverMaxWords]] unless a caller on
-    * this thread rebinds it (`withValue`), as the specs do to pin the
+    * collect bound the fitted encoders use
+    * (`ComplementLabelEncoder.DefaultMaxCollect`) unless a caller on this
+    * thread rebinds it (`withValue`), as the specs do to pin the
     * distributed rounds. */
-  private[graft] val driverMaxWords =
-    new scala.util.DynamicVariable(DriverMaxWords)
+  private[graft] val driverMaxWords = new scala.util.DynamicVariable(
+    graft.operators.ComplementLabelEncoder.DefaultMaxCollect)
 
   private[text] def bpeWordsC(text: Column): Column =
     filter(TextFunctions.tokensLower(coalesce(text, lit(""))),
@@ -135,24 +132,19 @@ object Bpe {
   def fitBpe(df: DataFrame, textCol: String, numMerges: Int): Seq[Merge] = {
     require(numMerges >= 1 && numMerges <= 4096,
       s"numMerges must be in [1, 4096], got $numMerges")
-    // the one corpus-wide pass: distinct-word frequencies, checkpointed
-    // lazily — written by the guard's own job (a persist would cost a
-    // separate cache-materialization job under AQE)
+    // the one corpus-wide pass: distinct-word frequencies, collected
+    // behind the guard or checkpointed for the rounds
     val words = df
       .select(explode(bpeWords(textCol)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = false)
-    val guard = math.max(0L, driverMaxWords.value)
-    // coalesce(1): ONE job that reads at most guard + 1 rows in one task
-    // (executeTake would probe the partitions incrementally)
-    val rows = words.coalesce(1).limit((guard + 1).toInt).collect()
-    if (rows.length <= guard) {
-      Fixpoint.release(words)
-      log.info(s"Bpe.fitBpe: words=${rows.length} guard=$guard path=driver")
-      learn(rows.map(r => (r.getString(0), r.getLong(1))), numMerges)
-    } else {
-      log.info(s"Bpe.fitBpe: words>$guard guard=$guard path=rounds")
-      rounds(words, numMerges)
+    val guard = driverMaxWords.value
+    Fixpoint.guardedCollect(words, guard) match {
+      case Right(rows) =>
+        log.info(s"Bpe.fitBpe: words=${rows.length} guard=$guard path=driver")
+        learn(rows.map(r => (r.getString(0), r.getLong(1))), numMerges)
+      case Left(cached) =>
+        log.info(s"Bpe.fitBpe: words>$guard guard=$guard path=rounds")
+        rounds(cached, numMerges)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
@@ -62,6 +62,32 @@ object Fixpoint {
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
     case _ => df.unpersist(blocking = false); ()
+  }
+
+  /** At most `n` rows of `df` in ONE job: `coalesce(1)` reads them in one
+    * task (`executeTake` would probe the partitions incrementally, a job
+    * per probe), and `order`, when given, sorts them in that task, after
+    * the limit. */
+  def collectAtMost(df: DataFrame, n: Int, order: Column*): Array[Row] = {
+    val taken = df.coalesce(1).limit(n)
+    (if (order.isEmpty) taken else taken.orderBy(order: _*)).collect()
+  }
+
+  /** The guarded driver finish: `df` (not yet materialized) collected when
+    * it has at most `guard` rows — `Right(rows)`, sorted by `order` —
+    * else `Left` of `df` as a lazy local checkpoint for the distributed
+    * path. One job ([[collectAtMost]] of `guard + 1` rows) decides, and it
+    * also writes the checkpoint (a persist would cost a separate
+    * cache-materialization job under AQE), so the over-guard path never
+    * recomputes `df`. Under the guard the checkpoint is released at once.
+    * `guard` must be below `Int.MaxValue`. */
+  def guardedCollect(df: DataFrame, guard: Long, order: Column*)
+      : Either[DataFrame, Array[Row]] = {
+    require(guard >= 0 && guard < Int.MaxValue, s"guard $guard")
+    val cached = df.localCheckpoint(eager = false)
+    val rows = collectAtMost(cached, (guard + 1).toInt, order: _*)
+    if (rows.length > guard) Left(cached)
+    else { release(cached); Right(rows) }
   }
 
   /** Round `index` (1-based) of a loop, stepping from `state`. */

@@ -113,7 +113,7 @@ class AnalyticsPlanSpec extends SparkSpec {
     // exactly the unified engine's two window passes (cross-bin offsets
     // + within-bin) — a third means a pass leaked in above the engine
     assert("Window \\[".r.findAllIn(p).size == 2, p.take(1200))
-    counts.unpersist(blocking = false)
+    graft.util.Fixpoint.release(counts)
   }
 
   test("ksExact binned path: per-bin partitioned windows, only " +
@@ -130,14 +130,14 @@ class AnalyticsPlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), p.take(400))
     // the unified engine's two window passes, nothing more
     assert("Window \\[".r.findAllIn(p).size == 2, p.take(1200))
-    counts.unpersist(blocking = false)
+    graft.util.Fixpoint.release(counts)
   }
 
   test("quantileNormalize: the rank lookup is a BIN EQUI-join — no " +
       "cartesian, no broadcast-nested-loop, no sort-merge on values") {
     val df = Seq(("a", 1.0), ("a", 2.0), ("b", 1.5), ("b", 2.5))
       .toDF("g", "x")
-    val (out, a, b) = graft.relational.Eval.quantileNormalizePlan(df,
+    val (out, counts) = graft.relational.Eval.quantileNormalizePlan(df,
       "x", "g", target = "b", ref = "a", maxDistinctBroadcast = 100000)
     val p = plan(out)
     // the rank lookup joins hash-equi on the rank-space bin (the
@@ -147,7 +147,7 @@ class AnalyticsPlanSpec extends SparkSpec {
       p.contains("ShuffledHashJoin [__bin") ||
       p.contains("SortMergeJoin [__bin"), p.take(1200))
     assert(!p.contains("CartesianProduct"), p.take(1200))
-    a.unpersist(blocking = false); b.unpersist(blocking = false)
+    graft.util.Fixpoint.release(counts)
   }
 
   test("spearman join-back: equi-joins only (no cartesian, no " +

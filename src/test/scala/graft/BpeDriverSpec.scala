@@ -113,7 +113,7 @@ class BpeDriverSpec extends SparkSpec {
     val words = corpus(7, 200, "abcdefgh", 9).flatMap(_.split(" ")).distinct
     val (_, lines) = logLines(Bpe.getClass.getName)(Bpe.fitBpe(df, "text", 3))
     assert(lines == Seq(s"Bpe.fitBpe: words=${words.size} " +
-      s"guard=${Bpe.DriverMaxWords} path=driver"))
+      "guard=1000000 path=driver"))
     val (_, over) = logLines(Bpe.getClass.getName) {
       Bpe.driverMaxWords.withValue(5L)(Bpe.fitBpe(df, "text", 3))
     }

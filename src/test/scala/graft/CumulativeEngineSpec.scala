@@ -118,14 +118,13 @@ class CumulativeEngineSpec extends SparkSpec {
 
   // ---- the guarded driver path (CumulativeEngine.rank) ------------------
 
-  /** `body` on each path: the driver finish (threshold above every
-    * count), the window (driver bound 0, threshold above every count) and
-    * the binned path (threshold 0). */
-  private def onEachPath[T](body: Long => T): Seq[(String, T)] = Seq(
-    "driver" -> body(Long.MaxValue),
-    "window" -> CumulativeEngine.driverMaxRows.withValue(0L)(
-      body(Long.MaxValue)),
-    "binned" -> body(0L))
+  /** `body(threshold, binnable)` on each path of [[CumulativeEngine.rank]]:
+    * the driver finish (threshold above every count), the window
+    * (threshold 0, not binnable — what a non-numeric value column takes)
+    * and the binned path (threshold 0). */
+  private def onEachPath[T](body: (Long, Boolean) => T): Seq[(String, T)] =
+    Seq("driver" -> body(Long.MaxValue, true), "window" -> body(0L, false),
+      "binned" -> body(0L, true))
 
   /** Rows as comparable values: doubles by their bits, so NaN and the
     * signed zeros compare exactly. */
@@ -140,9 +139,9 @@ class CumulativeEngineSpec extends SparkSpec {
     for (groups <- Seq(0, 4)) {
       val gcols = if (groups == 0) Nil else Seq("g")
       val c = counts(600, groups)
-      val got = onEachPath { max =>
+      val got = onEachPath { (max, binnable) =>
         val r = CumulativeEngine.rank(c, "__v", Seq("__n", "__m"), gcols,
-          max, "spec")
+          max, "spec", binnable)
         val out = (r.path,
           bits(r.below.select((gcols ++ Seq("__v", "__n", "__m",
             "__below___n", "__below___m")).map(col): _*), gcols :+ "__v": _*),
@@ -164,14 +163,18 @@ class CumulativeEngineSpec extends SparkSpec {
     }
   }
 
-  test("rank: driver == window on arbitrary doubles — the driver adds in " +
-      "the window's order (totals are Spark sums off the driver path, " +
-      "exact only where the addition order cannot matter)") {
+  test("rank: driver == window on arbitrary doubles, NaN and ±0.0 values " +
+      "included — the driver adds in the window's order (totals are Spark " +
+      "sums off the driver path, exact only where the addition order " +
+      "cannot matter)") {
     val rng = new scala.util.Random(0x5EED)
-    val c = (1 to 500).map(i => (i * 0.731 % 97.0, rng.nextGaussian() * 1e3))
+    val c = ((1 to 500).map(i => (i * 0.731 % 97.0, rng.nextGaussian() * 1e3))
+      ++ Seq(Double.NaN, -0.0, 0.0, Double.NegativeInfinity, Double.NaN)
+        .map(v => (v, rng.nextGaussian() * 1e3)))
       .toDF("__v", "__m").groupBy("__v").agg(sum("__m").as("__m"))
-    val got = onEachPath { max =>
-      val r = CumulativeEngine.rank(c, "__v", Seq("__m"), Nil, max, "spec")
+    val got = onEachPath { (max, binnable) =>
+      val r = CumulativeEngine.rank(c, "__v", Seq("__m"), Nil, max, "spec",
+        binnable)
       val out = bits(r.below.select("__v", "__below___m"), "__v")
       r.release()
       out
@@ -180,7 +183,8 @@ class CumulativeEngineSpec extends SparkSpec {
   }
 
   test("NaN, ±0.0, ties and null groups: percentileRank (ungrouped and " +
-      "grouped) and the Eval ranking family agree on every path") {
+      "grouped) and the Eval ranking family agree on the driver and binned " +
+      "paths, a string percentileRank on the driver and window paths") {
     val vals = Seq(Double.NaN, -0.0, 0.0, 1.5, 1.5, -2.0, Double.NaN, 3.25,
       0.0, -0.0, 7.0, 1.5, -2.0, 11.0, Double.NegativeInfinity)
     val df = vals.zipWithIndex.map { case (v, i) =>
@@ -189,18 +193,20 @@ class CumulativeEngineSpec extends SparkSpec {
         (i % 3 == 0).compare(false),
         (i * 7 % 5).toDouble, if (i % 2 == 0) "a" else "b")
     }.toDF("row_id", "v", "g", "label", "w", "side")
-    def same(name: String)(run: Long => DataFrame, order: String*): Unit = {
-      val got = onEachPath(max => bits(run(max), order: _*))
-      got.tail.foreach { case (path, rows) =>
-        assert(rows == got.head._2, s"$name: $path != driver")
-      }
+      .withColumn("sv", col("v").cast("string"))
+    // threshold above every count: the driver; threshold 0: the binned
+    // path, or the window for the string column
+    def same(name: String)(run: Long => DataFrame, order: String*): Unit =
+      assert(bits(run(0L), order: _*) == bits(run(Long.MaxValue), order: _*),
+        s"$name: distributed path != driver")
+    for (value <- Seq("v", "sv")) {
+      same(s"percentileRank $value")(m =>
+        Relational.percentileRank(df, value, "pr", maxDistinctBroadcast = m)
+          .select("row_id", "pr"), "row_id")
+      same(s"percentileRank grouped $value")(m =>
+        Relational.percentileRank(df, value, "pr", Seq("g"),
+          maxDistinctBroadcast = m).select("row_id", "pr"), "row_id")
     }
-    same("percentileRank")(m =>
-      Relational.percentileRank(df, "v", "pr", maxDistinctBroadcast = m)
-        .select("row_id", "pr"), "row_id")
-    same("percentileRank grouped")(m =>
-      Relational.percentileRank(df, "v", "pr", Seq("g"),
-        maxDistinctBroadcast = m).select("row_id", "pr"), "row_id")
     same("auc")(m => Eval.auc(df, "v", "label", m))
     same("prAuc")(m => Eval.prAuc(df, "v", "label", m))
     same("rankSumTest")(m => Eval.rankSumTest(df, "v", "label", m))
@@ -223,9 +229,14 @@ class CumulativeEngineSpec extends SparkSpec {
     Eval.auc(df, "x", "label", maxDistinctBroadcast = 0).collect()
     assert(scans.sum == 300, s"auc binned read ${scans.sum} rows")
     scans.reset()
-    CumulativeEngine.driverMaxRows.withValue(0L)(
-      Eval.ksExact(df, "x", "side", "a", "b", Long.MaxValue).collect())
-    assert(scans.sum == 300, s"ksExact window read ${scans.sum} rows")
+    val r = CumulativeEngine.rank(
+      df.groupBy(col("x").cast("string").as("__v"))
+        .agg(count(lit(1)).as("__n")),
+      "__v", Seq("__n"), Nil, 0L, "spec", binnable = false)
+    r.withTotals.collect()
+    r.release()
+    assert(r.path == "window" && scans.sum == 300,
+      s"${r.path} path read ${scans.sum} rows")
   }
 
   test("spearman + quantileNormalize + ksExact on a 5k-row table finish " +
@@ -245,8 +256,8 @@ class CumulativeEngineSpec extends SparkSpec {
     val (_, lines) = logLines(CumulativeEngine.getClass.getName) {
       Eval.spearman(tx, "amount", "score").collect()
       Eval.auc(tx, "score", "label", maxDistinctBroadcast = 5).collect()
-      CumulativeEngine.driverMaxRows.withValue(5L)(
-        Eval.auc(tx, "score", "label", maxDistinctBroadcast = 100).collect())
+      Relational.percentileRank(tx, "channel", "pr",
+        maxDistinctBroadcast = 1).collect()
     }
     val nAmount = tx.select("amount").distinct().count()
     assert(lines == Seq(
@@ -254,6 +265,6 @@ class CumulativeEngineSpec extends SparkSpec {
         "path=driver",
       "CumulativeEngine spearman.score: rows=13 guard=100000 path=driver",
       "CumulativeEngine auc: rows>5 guard=5 path=binned",
-      "CumulativeEngine auc: rows>5 guard=5 path=window"))
+      "CumulativeEngine percentileRank: rows>1 guard=1 path=window"))
   }
 }
