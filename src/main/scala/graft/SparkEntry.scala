@@ -68,7 +68,7 @@ object SparkEntry {
     * twins, with thresholds forced down so the DISTRIBUTED branch — the
     * branch a 1000-executor job actually takes — runs under the DuckDB
     * oracle: BigDict/BigFreq/big-target fitted-state joins instead of
-    * collected literal maps, the binned percentileRank instead of the
+    * collected dictionary lookups, the binned percentileRank instead of the
     * broadcast window, and distributed min-label components instead of
     * driver union-find. A green row here means the big branch is
     * bit-identical to the collected one. */

@@ -618,6 +618,147 @@ object SubwordEncode {
   }
 }
 
+/** A driver-built key → value table: open addressing with linear probing
+  * over two parallel arrays, at most half full. Keys and values are
+  * Catalyst-internal values (`UTF8String` for strings, boxed primitives,
+  * `Decimal`), compared with `equals` as a join compares them; float
+  * keys are stored and probed through [[DictTable.normalize]]. A null
+  * key never enters the table, so a probe never matches one. */
+final class DictTable private (keys: Array[AnyRef], vals: Array[AnyRef],
+    val size: Int) extends Serializable {
+  private val mask = keys.length - 1
+
+  /** The value stored under `k` (already normalized), or null on a miss. */
+  def get(k: AnyRef): AnyRef = {
+    var i = DictTable.spread(k.hashCode) & mask
+    while (true) {
+      val s = keys(i)
+      if (s == null) return null
+      if (s.equals(k)) return vals(i)
+      i = (i + 1) & mask
+    }
+    null
+  }
+}
+
+object DictTable {
+  /** The key types whose Catalyst values have join equality as `equals`
+    * (after [[normalize]]): atomic types other than binary and collated
+    * strings. */
+  def supports(t: DataType): Boolean = t match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType |
+        FloatType | DoubleType | DateType | TimestampType |
+        TimestampNTZType | _: DecimalType => true
+    case s: StringType => s == StringType
+    case _ => false
+  }
+
+  /** Join key equality for floats: -0.0 is 0.0 and every NaN is one NaN
+    * (boxed `equals` compares canonical bits). */
+  def normalize(k: Any): AnyRef = k match {
+    case d: Double => doubleKey(d)
+    case f: Float => floatKey(f)
+    case o => o.asInstanceOf[AnyRef]
+  }
+  def doubleKey(d: Double): AnyRef =
+    java.lang.Double.valueOf(if (d == 0.0) 0.0 else d)
+  def floatKey(f: Float): AnyRef =
+    java.lang.Float.valueOf(if (f == 0.0f) 0.0f else f)
+
+  private[functions] def spread(h: Int): Int = h ^ (h >>> 16)
+
+  /** A table of `entries` given as external (Scala) values of `keyType` and
+    * `valueType`; entries with a null key are dropped, and of duplicate
+    * keys the first wins. */
+  def apply(entries: Iterable[(Any, Any)], keyType: DataType,
+      valueType: DataType): DictTable = {
+    require(supports(keyType), s"dictionary key type ${keyType.sql}")
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    val toKey = CatalystTypeConverters.createToCatalystConverter(keyType)
+    val toValue = CatalystTypeConverters.createToCatalystConverter(valueType)
+    val n = entries.size
+    val cap = Integer.highestOneBit(math.max(2, 2 * n - 1)) << 1
+    val keys = new Array[AnyRef](cap)
+    val vals = new Array[AnyRef](cap)
+    var size = 0
+    entries.foreach { case (k, v) =>
+      if (k != null) {
+        val key = normalize(toKey(k))
+        var i = spread(key.hashCode) & (cap - 1)
+        while (keys(i) != null && !keys(i).equals(key)) i = (i + 1) & (cap - 1)
+        if (keys(i) == null) {
+          keys(i) = key
+          vals(i) = toValue(v).asInstanceOf[AnyRef]
+          size += 1
+        }
+      }
+    }
+    new DictTable(keys, vals, size)
+  }
+}
+
+/** `table[key]` for a driver-built [[DictTable]] shipped as a `Broadcast`:
+  * the value of `dataType` stored under the key, null on a miss or a null
+  * key. The generated code reaches the broadcast through the plan's
+  * references and unwraps it once per task (a mutable-state initializer),
+  * so tasks carry the broadcast handle, never the table, and each row is
+  * one hash probe — no per-row scan, join or key `toString`. The
+  * interpreted path unwraps it once per deserialized expression. The
+  * plan prints the entry count, never the entries. */
+case class DictLookup(key: Expression,
+    table: org.apache.spark.broadcast.Broadcast[DictTable],
+    dataType: DataType) extends UnaryExpression {
+  override def child: Expression = key
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (DictTable.supports(key.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"dict_lookup cannot key on ${key.dataType.sql}")
+
+  @transient private lazy val local: DictTable = table.value
+
+  override def nullSafeEval(k: Any): Any = local.get(DictTable.normalize(k))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val bc = ctx.addReferenceObj("dictBroadcast", table,
+      "org.apache.spark.broadcast.Broadcast")
+    val tbl = ctx.addMutableState("graft.functions.DictTable", "dictTable",
+      v => s"$v = (graft.functions.DictTable) $bc.value();",
+      forceInline = true)
+    val boxed = CodeGenerator.boxedType(dataType)
+    nullSafeCodeGen(ctx, ev, k => {
+      val probe = key.dataType match {
+        case DoubleType => s"graft.functions.DictTable.doubleKey($k)"
+        case FloatType => s"graft.functions.DictTable.floatKey($k)"
+        case t if CodeGenerator.isPrimitiveType(t) =>
+          s"${CodeGenerator.boxedType(t)}.valueOf($k)"
+        case _ => k
+      }
+      val hit = ctx.freshName("hit")
+      val value =
+        if (CodeGenerator.isPrimitiveType(dataType))
+          s"(($boxed) $hit).${CodeGenerator.javaType(dataType)}Value()"
+        else s"($boxed) $hit"
+      s"""
+       |Object $hit = $tbl.get($probe);
+       |if ($hit == null) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = $value;
+       |}
+     """.stripMargin
+    })
+  }
+
+  override def toString: String = s"dict_lookup($key, ${local.size} entries)"
+  override def sql: String = s"dict_lookup(${key.sql}, ${local.size} entries)"
+
+  override protected def withNewChildInternal(c: Expression): DictLookup =
+    copy(key = c)
+}
+
 /** Column-level entry points for graft's custom expressions. */
 object GraftFunctions {
   def cosine_sim(a: Column, b: Column): Column =
@@ -648,6 +789,11 @@ object GraftFunctions {
 
   def md5_hash60(c: Column): Column =
     Bridge.column(Md5Hash60(Bridge.expression(c)))
+
+  def dict_lookup(key: Column,
+      table: org.apache.spark.broadcast.Broadcast[DictTable],
+      dataType: DataType): Column =
+    Bridge.column(DictLookup(Bridge.expression(key), table, dataType))
 
   /** Optional SQL registration (`SELECT cosine_sim(a, b) ...`). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

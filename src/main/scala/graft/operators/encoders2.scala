@@ -51,9 +51,10 @@ class HashingEncoder(
   * columns (posexplode, like the other encoders) producing per-(column,
   * value, fold) partial sums; per-value totals come from re-aggregating
   * those partials (cardinality × nFolds rows, never the data again). The
-  * fitted state is the (value, fold) → encoding table per column: literal
-  * map / broadcast join below `maxCollect` entries, distributed join above
-  * (SURVEY §7.1.3). Serve-time rows (no fold membership) get the all-data
+  * fitted state is the (value, fold) → encoding table per column: a
+  * driver table applied by one codegen'd hash probe per row up to
+  * `maxCollect` entries, a distributed join above (SURVEY §7.1.3).
+  * Serve-time rows (no fold membership) get the all-data
   * encoding `(sum(v) + m·prior)/(cnt(v) + m)` via [[TargetEncoderModel
   * .transformDF]]; unseen values get the prior. Null target rows are
   * excluded from the statistics (pandas `mean` semantics); null category
@@ -166,7 +167,12 @@ object TargetEncoder {
 
 sealed trait TargetState
 case class SmallTarget(oof: Map[String, Double],
-    full: Map[String, Double]) extends TargetState
+    full: Map[String, Double]) extends TargetState {
+  @transient private[operators] lazy val oofTable =
+    Lookup.table(oof, DoubleType)
+  @transient private[operators] lazy val fullTable =
+    Lookup.table(full, DoubleType)
+}
 case class BigTarget(lookup: DataFrame) extends TargetState
 
 class TargetEncoderModel(
@@ -183,9 +189,9 @@ class TargetEncoderModel(
     ins.zip(outs).zip(states).foldLeft(df) { case (d, ((in, out), st)) =>
       val key = col(in).cast(StringType)
       st match {
-        case SmallTarget(_, full) =>
-          Lookup.withLookup[Double](d, out, key, full, lit(prior),
-            _.cast(DoubleType), s"te_$out")
+        case st: SmallTarget =>
+          Lookup.withLookup(d, out, key, st.fullTable, lit(prior),
+            _.cast(DoubleType))
         case BigTarget(lookup) =>
           val l = lookup.select(col("value").as(s"__te_k_$out"),
             col("full").as(s"__te_v_$out")).distinct()
@@ -205,12 +211,12 @@ class TargetEncoderModel(
       val v = col(in).cast(StringType)
       val f = TargetEncoder.foldOf(col(idCol), nFolds)
       st match {
-        case SmallTarget(oof, full) =>
-          val withOof = Lookup.withLookup[Double](d, s"__oof_$out",
-            concat(v, lit("\u0001"), f.cast(StringType)), oof, lit(null),
-            identity, s"teo_$out")
-          val done = Lookup.withLookup[Double](withOof, s"__full_$out",
-            v, full, lit(prior), identity, s"tef_$out")
+        case st: SmallTarget =>
+          val withOof = Lookup.withLookup(d, s"__oof_$out",
+            concat(v, lit("\u0001"), f.cast(StringType)), st.oofTable,
+            lit(null), identity)
+          val done = Lookup.withLookup(withOof, s"__full_$out",
+            v, st.fullTable, lit(prior), identity)
           done.withColumn(out,
               coalesce(col(s"__oof_$out"), col(s"__full_$out"),
                 lit(prior)).cast(DoubleType))
@@ -236,7 +242,9 @@ class TargetEncoderModel(
 }
 
 sealed trait WoeState
-case class SmallWoe(woe: Map[String, Double]) extends WoeState
+case class SmallWoe(woe: Map[String, Double]) extends WoeState {
+  @transient private[operators] lazy val table = Lookup.table(woe, DoubleType)
+}
 case class BigWoe(lookup: DataFrame) extends WoeState
 
 /** Weight-of-evidence categorical encoder as a PIPELINE stage — the
@@ -249,9 +257,10 @@ case class BigWoe(lookup: DataFrame) extends WoeState
   * posexplode discipline — inputs × rows explode carries only (i, value,
   * label)), totals per feature ride a window over the CARDINALITY-sized
   * partials. Per-feature state follows the SmallDict/BigDict dual path:
-  * ≤ maxCollect distinct values collect to a driver map (literal-map or
-  * broadcast-join transform via Lookup), above that the lookup relation
-  * stays distributed and persists as parquet beside the pipeline JSON.
+  * ≤ maxCollect distinct values collect to a driver map (applied by one
+  * codegen'd hash probe per row via Lookup), above that the lookup
+  * relation stays distributed and persists as parquet beside the pipeline
+  * JSON.
   *
   * Transform: unseen/null category → 0.0, WOE's no-information point
   * (the FrequencyEncoder unseen→default contract). */
@@ -319,9 +328,9 @@ class WoeEncoderModel(
     ins.zip(outs).zip(states).foldLeft(df) { case (d, ((in, out), st)) =>
       val key = col(in).cast(StringType)
       st match {
-        case SmallWoe(m) =>
-          Lookup.withLookup[Double](d, out, key, m, lit(0.0),
-            _.cast(DoubleType), s"woe_$out")
+        case sw: SmallWoe =>
+          Lookup.withLookup(d, out, key, sw.table, lit(0.0),
+            _.cast(DoubleType))
         case BigWoe(lookup) =>
           val l = lookup.select(col("value").as(s"__woe_k_$out"),
             col("woe").as(s"__woe_v_$out"))

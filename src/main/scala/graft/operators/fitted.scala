@@ -1,44 +1,41 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-private[operators] object Lookup {
-  /** Above this size a fitted dictionary is applied as a broadcast hash join
-    * of a lookup relation instead of a literal in-plan map —
-    * `element_at` on a literal `MapType` is a per-row linear scan, fine for
-    * small encoder dictionaries, wrong for high-cardinality keys
-    * (SURVEY §7.1.3). */
-  val LiteralMapMax = 1000
+import graft.functions.{DictTable, GraftFunctions}
 
-  /** Apply `value -> result` dictionary to `key(in)`, null-free keys assumed
-    * handled by caller; misses become `default`. */
-  def withLookup[T: scala.reflect.runtime.universe.TypeTag](
-      df: DataFrame,
-      out: String,
-      key: Column,
-      m: Map[String, T],
-      default: Column,
-      finish: Column => Column,
-      tag: String): DataFrame = {
-    if (m.size <= LiteralMapMax) {
-      val hit =
-        if (m.isEmpty) lit(null)
-        else try_element_at(typedLit(m), key)
-      df.withColumn(out, finish(coalesce(hit, default)))
-    } else {
-      val spark = df.sparkSession
-      val k = s"__${tag}_k"
-      val v = s"__${tag}_v"
-      val enc = org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[(String, T)]()
-      val lookup = spark.createDataset(m.toSeq)(enc).toDF(k, v)
-      df.join(broadcast(lookup), key === col(k), "left")
-        .withColumn(out, finish(coalesce(col(v), default)))
-        .drop(k, v)
+private[operators] object Lookup {
+  /** A driver-resident dictionary applied as one
+    * [[graft.functions.DictLookup]] hash probe
+    * per row: the [[DictTable]] is built once, and broadcast at most once
+    * per SparkContext (`sparkContext.broadcast` runs no job). Fitted state
+    * holds one per map, so repeated transforms of a model reuse it. */
+  final class Table(dict: DictTable, valueType: DataType) {
+    private var held: (SparkContext, Broadcast[DictTable]) = _
+
+    /** `dict[key]`, null on a miss or a null key. */
+    def apply(key: Column, sc: SparkContext): Column = {
+      val bc = synchronized {
+        if (held == null || (held._1 ne sc))
+          held = (sc, sc.broadcast(dict))
+        held._2
+      }
+      GraftFunctions.dict_lookup(key, bc, valueType)
     }
   }
+
+  def table(m: Map[String, _], valueType: DataType): Table =
+    new Table(DictTable(m, StringType, valueType), valueType)
+
+  /** `out` = `finish(table[key])`, misses (and null keys) `default`. */
+  def withLookup(df: DataFrame, out: String, key: Column, t: Table,
+      default: Column, finish: Column => Column): DataFrame =
+    df.withColumn(out,
+      finish(coalesce(t(key, df.sparkSession.sparkContext), default)))
 
   /** One distributed pass over `df` yielding the distinct (columnIndex,
     * stringValue) pairs for all `cols` — a single shuffle fits every
@@ -57,7 +54,9 @@ private[operators] object Lookup {
   * cardinalities, distributed lookup relation when the vocabulary is too
   * large to collect (SCALE.md known-limit #1 — the 100 TB path). */
 sealed trait Dict extends Serializable
-case class SmallDict(m: Map[String, Int], sentinelCode: Int) extends Dict
+case class SmallDict(m: Map[String, Int], sentinelCode: Int) extends Dict {
+  @transient private[operators] lazy val table = Lookup.table(m, IntegerType)
+}
 case class BigDict(lookup: DataFrame, sentinelCode: Int) extends Dict
 
 /** Label encoding with an always-present unseen/missing sentinel class.
@@ -71,10 +70,12 @@ case class BigDict(lookup: DataFrame, sentinelCode: Int) extends Dict
   * value → code, with null AND any unseen value collapsing to the sentinel
   * code; output is int (int32, tests/test_le.py:32).
   *
-  * NOT Spark's `StringIndexer` (frequency-ordered, no sentinel). Dictionaries
-  * ≤1000 entries ride the plan as literal maps; larger ones become broadcast
-  * hash joins. Ordering note: Scala/Java string sort is UTF-16 code-unit
-  * order vs Python's codepoint order — they differ only beyond the BMP.
+  * NOT Spark's `StringIndexer` (frequency-ordered, no sentinel). A
+  * dictionary of up to `maxCollect` entries is applied as one codegen'd
+  * hash probe per row ([[graft.functions.DictLookup]] over a broadcast
+  * table); a larger one stays a distributed relation and is joined.
+  * Ordering note: Scala/Java string sort is UTF-16 code-unit order vs
+  * Python's codepoint order — they differ only beyond the BMP.
   */
 class ComplementLabelEncoder(
     inputs: Seq[String] = Nil,
@@ -168,9 +169,9 @@ class ComplementLabelEncoderModel(
     ins.zip(outs).zip(dicts).foldLeft(df) { case (d, ((in, out), dict)) =>
       val key = coalesce(col(in).cast(StringType), lit(S))
       dict match {
-        case SmallDict(m, sentCode) =>
-          Lookup.withLookup[Int](d, out, key, m,
-            lit(sentCode), _.cast(IntegerType), s"cle_$out")
+        case sd @ SmallDict(_, sentCode) =>
+          Lookup.withLookup(d, out, key, sd.table, lit(sentCode),
+            _.cast(IntegerType))
         case BigDict(lookup, sentCode) =>
           // no broadcast hint: the relation may be huge; AQE decides
           val l = lookup.withColumnRenamed("value", s"__cle_k_$out")
@@ -194,7 +195,9 @@ class ComplementLabelEncoderModel(
 /** A fitted value→frequency dictionary (double: exact for counts < 2^53,
   * and the ratio for the normalized mode). */
 sealed trait FreqDict extends Serializable
-case class SmallFreq(m: Map[String, Double]) extends FreqDict
+case class SmallFreq(m: Map[String, Double]) extends FreqDict {
+  @transient private[operators] lazy val table = Lookup.table(m, DoubleType)
+}
 case class BigFreq(lookup: DataFrame) extends FreqDict
 
 class FrequencyEncoder(
@@ -267,9 +270,8 @@ class FrequencyEncoderModel(
       val finish: Column => Column =
         if (normalize) _.cast(DoubleType) else _.cast(LongType)
       dict match {
-        case SmallFreq(m) =>
-          Lookup.withLookup[Double](d, out, key, m, default, finish,
-            s"fe_$out")
+        case sf: SmallFreq =>
+          Lookup.withLookup(d, out, key, sf.table, default, finish)
         case BigFreq(lookup) =>
           val l = lookup.withColumnRenamed("value", s"__fe_k_$out")
             .withColumnRenamed("freq", s"__fe_v_$out")
@@ -287,9 +289,11 @@ class FrequencyEncoderModel(
   * (`mean`/`std`/`count`/...) and transform broadcasts it as a constant
   * column. Grouped mode: `groupby` is a PARALLEL list (one key column per
   * input, not a composite key); fit materializes the per-key aggregate as a
-  * small relation and transform is a broadcast-hash-join lookup of the
-  * TRAINING-time aggregate — not a recomputation — with unseen keys (and
-  * null keys, which pandas groupby drops) yielding null.
+  * small relation and transform looks the TRAINING-time aggregate up — not
+  * a recomputation — with unseen keys (and null keys, which pandas groupby
+  * drops) yielding null. A collected relation on a string key is applied
+  * as one [[graft.functions.DictLookup]] hash probe per output; any other
+  * key type keeps a broadcast hash join.
   *
   * pandas `std` is sample std (ddof=1) → `stddev_samp`; `median` is exact →
   * sort-based `percentile` (SURVEY §4). The fitted relation stays a
@@ -405,7 +409,20 @@ object Aggregator {
 /** One fitted per-key aggregate relation: columns `__agg_k` plus one
   * `__agg_v_<out>` per served output. */
 case class AggLookup(
-    key: String, outs: Seq[String], df: DataFrame, broadcastable: Boolean)
+    key: String, outs: Seq[String], df: DataFrame, broadcastable: Boolean) {
+  /** One driver table per served output, from ONE collect of `df`: a
+    * fitted or fused lookup is a local relation (the collect runs no job);
+    * a reloaded one reads its parquet here, once per model. */
+  @transient private[operators] lazy val tables: Map[String, Lookup.Table] = {
+    val rows = df.collect()
+    outs.map { o =>
+      val i = df.schema.fieldIndex(s"__agg_v_$o")
+      val dt = df.schema(i).dataType
+      o -> new Lookup.Table(
+        DictTable(rows.map(r => r.get(0) -> r.get(i)), StringType, dt), dt)
+    }.toMap
+  }
+}
 
 class AggregatorModel(
     val ins: Seq[String],
@@ -422,11 +439,21 @@ class AggregatorModel(
       }
     } else {
       lookups.foldLeft(df) { case (d, lk) =>
-        val right = if (lk.broadcastable) broadcast(lk.df) else lk.df
-        val joined = d.join(right, col(lk.key) === col("__agg_k"), "left")
-        lk.outs.foldLeft(joined)((dd, o) =>
-            dd.withColumn(o, col(s"__agg_v_$o")))
-          .drop("__agg_k" +: lk.outs.map(o => s"__agg_v_$o"): _*)
+        val key = col(lk.key)
+        def isString(f: DataFrame, c: Column) =
+          f.select(c).schema.head.dataType == StringType
+        if (lk.broadcastable && isString(d, key) &&
+            isString(lk.df, col("__agg_k"))) {
+          val sc = d.sparkSession.sparkContext
+          lk.outs.foldLeft(d)((dd, o) =>
+            dd.withColumn(o, lk.tables(o)(key, sc)))
+        } else {
+          val right = if (lk.broadcastable) broadcast(lk.df) else lk.df
+          val joined = d.join(right, key === col("__agg_k"), "left")
+          lk.outs.foldLeft(joined)((dd, o) =>
+              dd.withColumn(o, col(s"__agg_v_$o")))
+            .drop("__agg_k" +: lk.outs.map(o => s"__agg_v_$o"): _*)
+        }
       }
     }
 }

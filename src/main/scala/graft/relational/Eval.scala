@@ -1,8 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.functions.{DictTable, GraftFunctions}
 
 /** Model-evaluation and monitoring operators: exact AUC via the
   * Mann-Whitney rank statistic, calibration (reliability) bins,
@@ -189,10 +192,11 @@ object Eval {
     *
     * Shape at 100 TB: per column, one distinct-value aggregate + the
     * shared driver/binned strictly-below cumulative → a rank relation
-    * (`midrank = below + (c+1)/2`) joined back: under
-    * `maxDistinctBroadcast` distinct values it is a local relation built
-    * on the driver and the join-back is its broadcast (no shuffle);
-    * above it (distinct ≈ N) the relation is checkpointed and the
+    * (`midrank = below + (c+1)/2`) applied back to the rows: under
+    * `maxDistinctBroadcast` distinct values it is finished on the driver
+    * and applied as a [[graft.functions.DictLookup]] hash probe per row
+    * (join key equality: -0.0 is 0.0, NaN is NaN; no join, no broadcast
+    * job); above it (distinct ≈ N) the relation is checkpointed and the
     * join-back shuffles — the percentileRank join-back discipline. The
     * finish is one `corr` aggregate. No global sort of the corpus at any
     * point. */
@@ -200,24 +204,30 @@ object Eval {
       maxDistinctBroadcast: Long = 100000): DataFrame = {
     val paired = df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(aCol).as("__a"), col(bCol).as("__b"))
-    def rankRel(c: String, out: String, site: String): DataFrame = {
+    def withRank(d: DataFrame, c: String, out: String,
+        site: String): DataFrame = {
       val r = CumulativeEngine.rank(paired.groupBy(col(c).as("__s"))
         .agg(count(lit(1)).as("__c")), "__s", Seq("__c"), Nil,
         maxDistinctBroadcast, s"spearman.$site")
       val ranked = r.below.select(col("__s").as(s"${c}_v"),
         (col("__below___c") + (col("__c") + 1) / 2.0).as(out))
-      if (r.onDriver) broadcast(ranked)
-      else {
+      val keyType = ranked.schema.head.dataType
+      if (r.onDriver && DictTable.supports(keyType)) {
+        // a local relation: the collect runs no job
+        val table = DictTable(ranked.collect().map(x => x.get(0) -> x.get(1)),
+          keyType, DoubleType)
+        val bc = d.sparkSession.sparkContext.broadcast(table)
+        // every paired value has a rank; the filter keeps the inner
+        // join's meaning regardless
+        d.withColumn(out, GraftFunctions.dict_lookup(col(c), bc, DoubleType))
+          .filter(col(out).isNotNull)
+      } else {
         val m = ranked.localCheckpoint(eager = true)
         r.release()
-        m
+        d.join(m, col(c) === col(s"${c}_v"))
       }
     }
-    val ra = rankRel("__a", "__rka", aCol)
-    val rb = rankRel("__b", "__rkb", bCol)
-    paired
-      .join(ra, col("__a") === col("__a_v"))
-      .join(rb, col("__b") === col("__b_v"))
+    withRank(withRank(paired, "__a", "__rka", aCol), "__b", "__rkb", bCol)
       .agg(round(corr(col("__rka"), col("__rkb")), 6).as("rho"),
         count(lit(1)).as("n"))
   }
@@ -1491,13 +1501,16 @@ object Eval {
     *
     * Shape at 100 TB: ONE (side, value) counting aggregate ranked by the
     * SHARED driver/binned cumulative engine ([[auc]]'s) with the side as
-    * its group — finished on the driver when both sides together have ≤
-    * `maxDistinctBroadcast` distinct values; the rank lookup is a
-    * RANK-SPACE bin equi-join (width `ceil(n_ref/4096)` — exact integer
-    * bins, no approx quantiles): ref intervals explode
-    * across the ≤(distinct + 4096) bins they cover, target ranks join
-    * their bin, and the interval containment filter finishes. No
-    * corpus-sized sort, broadcast, or nested-loop join anywhere. */
+    * its group. When both sides together have ≤ `maxDistinctBroadcast`
+    * distinct values the ranked rows are on the driver and the mapping is
+    * finished there: each target rank's ref value by binary search over
+    * the ref side's rank intervals, handed back as a local relation (no
+    * join, no broadcast job). Otherwise the rank lookup is a RANK-SPACE
+    * bin equi-join (width `ceil(n_ref/4096)` — exact integer bins, no
+    * approx quantiles): ref intervals explode across the ≤(distinct +
+    * 4096) bins they cover, target ranks join their bin, and the interval
+    * containment filter finishes. No corpus-sized sort, broadcast, or
+    * nested-loop join anywhere. */
   def quantileNormalize(df: DataFrame, valueCol: String, groupCol: String,
       target: String, ref: String,
       maxDistinctBroadcast: Long = 100000): DataFrame = {
@@ -1527,6 +1540,8 @@ object Eval {
       vals.groupBy(col("__g"), col("__s")).agg(count(lit(1)).as("__c")),
       "__s", Seq("__c"), Seq("__g"), maxDistinctBroadcast,
       "quantileNormalize")
+    if (r.onDriver)
+      return (quantileMapOnDriver(r.withTotals, target, ref), r.counts)
     def side(s: String): DataFrame = r.withTotals.filter(col("__g") === s)
     val aBelow = side(ref).select(col("__s").as("__va"),
       col("__c").as("__ca"), col("__below___c").as("__ba"),
@@ -1555,6 +1570,43 @@ object Eval {
       .select(col("__vb").as("value"), col("__va").as("normalized"),
         col("__ka").as("ref_rank"))
     (out, r.counts)
+  }
+
+  /** [[quantileNormalizePlan]]'s driver finish over the LOCAL ranked
+    * relation (columns `__g, __s, __c, __below___c, __total___c`, sorted
+    * by side then value): the target's nearest ref rank by the plan's
+    * integer formula (overflow raises, as the ANSI expression does), and
+    * the ref value whose rank interval `(below, below + c]` holds it. */
+  private def quantileMapOnDriver(ranked: DataFrame, target: String,
+      ref: String): DataFrame = {
+    val rows = ranked.collect() // a local relation: no job
+    def side(s: String) = rows.filter(_.getAs[String]("__g") == s)
+    def long(r: Row, c: String) = r.getAs[Long](c)
+    val a = side(ref)
+    val aBelow = a.map(long(_, "__below___c"))
+    val out = if (a.isEmpty) Array.empty[Row] else {
+      val na = long(a.head, "__total___c")
+      side(target).map { b =>
+        val nb = long(b, "__total___c")
+        val cum = long(b, "__below___c") + long(b, "__c")
+        val ka = Math.subtractExact(
+          Math.addExact(Math.multiplyExact(cum, na), nb), 1L) / nb
+        // the last ref row starting below ka: below is strictly increasing
+        // from 0 and 1 <= ka <= na, so its interval holds ka
+        var lo = 0
+        var hi = a.length - 1
+        while (lo < hi) {
+          val mid = (lo + hi + 1) >>> 1
+          if (aBelow(mid) < ka) lo = mid else hi = mid - 1
+        }
+        Row(b.getAs[Double]("__s"),
+          a(lo).getAs[Double]("__s"), ka)
+      }
+    }
+    ranked.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*),
+      StructType(Seq(StructField("value", DoubleType),
+        StructField("normalized", DoubleType),
+        StructField("ref_rank", LongType))))
   }
 
   /** Forecast-quality backtest per series: score the SEASONAL-NAIVE

@@ -58,9 +58,11 @@ object Fixpoint {
 
   /** Frees the blocks `df` holds now rather than when the context cleaner
     * notices: those of the local checkpoint it IS (a `localCheckpoint`
-    * result, eager or not), else its cache entry. */
+    * result, eager or not; freed without `RDD.unpersist`'s WARN that its
+    * lineage is truncated), else its cache entry. */
   def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
+    case r: LogicalRDD =>
+      org.apache.spark.sql.graft.Bridge.unpersist(r.rdd, blocking = false)
     case _ => df.unpersist(blocking = false); ()
   }
 

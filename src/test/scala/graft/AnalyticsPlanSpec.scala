@@ -137,8 +137,9 @@ class AnalyticsPlanSpec extends SparkSpec {
       "cartesian, no broadcast-nested-loop, no sort-merge on values") {
     val df = Seq(("a", 1.0), ("a", 2.0), ("b", 1.5), ("b", 2.5))
       .toDF("g", "x")
+    // over the guard (0 rows): the distributed rank lookup
     val (out, counts) = graft.relational.Eval.quantileNormalizePlan(df,
-      "x", "g", target = "b", ref = "a", maxDistinctBroadcast = 100000)
+      "x", "g", target = "b", ref = "a", maxDistinctBroadcast = 0)
     val p = plan(out)
     // the rank lookup joins hash-equi on the rank-space bin (the
     // interval containment is its residual filter); the only
@@ -148,6 +149,12 @@ class AnalyticsPlanSpec extends SparkSpec {
       p.contains("SortMergeJoin [__bin"), p.take(1200))
     assert(!p.contains("CartesianProduct"), p.take(1200))
     graft.util.Fixpoint.release(counts)
+    // under the guard the driver finishes the map: no join at all
+    val (local, _) = graft.relational.Eval.quantileNormalizePlan(df,
+      "x", "g", target = "b", ref = "a", maxDistinctBroadcast = 100000)
+    val lp = plan(local)
+    assert(!lp.contains("Join") && !lp.contains("CartesianProduct"),
+      lp.take(1200))
   }
 
   test("spearman join-back: equi-joins only (no cartesian, no " +

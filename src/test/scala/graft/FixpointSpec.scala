@@ -119,6 +119,27 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .writeObject(spark)
   }
 
+  test("release frees a local checkpoint's blocks without the " +
+      "truncated-lineage WARN that RDD.unpersist logs") {
+    def checkpointed() = {
+      val cp = spark.range(0, 40, 1, 2).toDF("x").localCheckpoint(eager = true)
+      (cp, cp.queryExecution.logical
+        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd)
+    }
+    val warning = "lineage has been truncated"
+    val sc = spark.sparkContext
+    val (cp, rdd) = checkpointed()
+    assert(sc.getPersistentRDDs.contains(rdd.id))
+    val (_, lines) = logLines(rdd.getClass.getName)(Fixpoint.release(cp))
+    assert(!lines.exists(_.contains(warning)), lines)
+    assert(!sc.getPersistentRDDs.contains(rdd.id))
+    // the capture sees the WARN when the RDD API releases a checkpoint
+    val (_, other) = checkpointed()
+    val (_, warned) = logLines(other.getClass.getName)(
+      other.unpersist(blocking = false))
+    assert(warned.exists(_.contains(warning)), warned)
+  }
+
   // ---- the five loops against plain-Scala replays ------------------------
 
   test("pageRank equals an integer replay on a hub graph and edge cases, " +

@@ -139,37 +139,8 @@ class FusionSpec extends SparkSpec {
       case (d, t: Transformer) => t.transform(d)
     }
 
-  /** The fraud feature pipeline's input shape: > 1000 distinct cards (the
-    * broadcast-lookup dictionary path), a composite merchant key, a 0/1
-    * label, and nulls in card and country. */
-  private def fraudFrame(n: Int): DataFrame = spark.range(0, n, 1, 3).select(
-    col("id").as("row_id"),
-    when(col("id") % 211 === 0, null)
-      .otherwise(concat(lit("c"), (col("id") * 7919 % 1500).cast("string")))
-      .as("card"),
-    concat(lit("m"), (col("id") * 31 % 60).cast("string")).as("merchant"),
-    (col("id") * 17 % 12).cast("int").as("mcc"),
-    when(col("id") % 97 === 0, null)
-      .otherwise(concat(lit("k"), (col("id") * 13 % 15).cast("string")))
-      .as("country"),
-    round(exp((col("id") * 37 % 1000) / 100.0), 2).as("amount"),
-    (col("id") % 24).cast("int").as("hour"),
-    when(col("id") * 101 % 17 === 0, 1).otherwise(0).as("label"))
-
-  private def fraudStages(): Seq[PipelineStage] = Seq(
-    new StringConcatenator(Seq(Seq("merchant", "mcc")), Seq("mkey"), "_"),
-    new ComplementLabelEncoder(Seq("card", "mkey"),
-      Seq("card_code", "mkey_code")),
-    new FrequencyEncoder(Seq("country", "mkey"),
-      Seq("country_freq", "mkey_freq"), normalize = true),
-    new Aggregator(Seq("amount"), Seq("mkey_amount_mean"), Seq("mkey"),
-      "mean"),
-    new TargetEncoder(Seq("mkey"), Seq("mkey_te"), targetCol = "label",
-      idCol = "row_id"),
-    new HashingEncoder(Seq("card"), Seq("card_bucket"), 256),
-    new Scaler(Seq("amount", "hour"), Seq("amount_std", "hour_std"),
-      "standard"),
-    new OneHotEncoder(Seq("country")))
+  private def fraudFrame(n: Int): DataFrame = FraudFixture.frame(spark, n)
+  private def fraudStages(): Seq[PipelineStage] = FraudFixture.stages()
 
   test("fraud pipeline: one batch, ≤ 3 jobs, equal to the stage-by-stage fit") {
     val df = fraudFrame(3000)
