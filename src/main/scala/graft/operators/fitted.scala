@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{DictTable, GraftFunctions}
+import graft.util.Fixpoint
 
 private[operators] object Lookup {
   /** A driver-resident dictionary applied as one
@@ -354,19 +355,17 @@ class Aggregator(
         val aggDF = df.filter(col(key).isNotNull)
           .groupBy(col(key).as("__agg_k"))
           .agg(aggs.head, aggs.tail: _*)
-        // persist so the size probe and the fetch (or the transform-time
-        // join, in the big case) read the materialized aggregate — NOT a
-        // limit(): a global limit funnels the relation through one task
-        val cached = aggDF.persist()
-        val n = cached.count()
-        if (n <= Aggregator.CollectMax) {
-          val local = AggLookup(key, cols.map(_._3),
+        // one guarded job decides: under the guard the rows become a
+        // driver-held local relation; over it the lookup is the lazy
+        // checkpoint that job wrote, joined at transform time
+        Fixpoint.guardedCollect(aggDF, Aggregator.CollectMax) match {
+          case Right(rows) => AggLookup(key, cols.map(_._3),
             df.sparkSession.createDataFrame(
-              java.util.Arrays.asList(cached.collect(): _*), aggDF.schema),
+              java.util.Arrays.asList(rows: _*), aggDF.schema),
             broadcastable = true)
-          cached.unpersist()
-          local
-        } else AggLookup(key, cols.map(_._3), cached, broadcastable = false)
+          case Left(cached) =>
+            AggLookup(key, cols.map(_._3), cached, broadcastable = false)
+        }
       }
       new AggregatorModel(inputs, outputs, groupby, func, Nil, lookups)
     }
@@ -407,12 +406,16 @@ object Aggregator {
 }
 
 /** One fitted per-key aggregate relation: columns `__agg_k` plus one
-  * `__agg_v_<out>` per served output. */
+  * `__agg_v_<out>` per served output. A `broadcastable` lookup is a
+  * driver-held local relation; [[GraftPersistence]] saves its rows inline
+  * in `pipeline.json` and reloads them as one. */
 case class AggLookup(
     key: String, outs: Seq[String], df: DataFrame, broadcastable: Boolean) {
   /** One driver table per served output, from ONE collect of `df`: a
-    * fitted or fused lookup is a local relation (the collect runs no job);
-    * a reloaded one reads its parquet here, once per model. */
+    * fitted, fused or reloaded-inline lookup is a local relation (the
+    * collect runs no job); one reloaded from parquet (a decimal-valued
+    * lookup, or a pipeline saved before lookups went inline) reads it
+    * here, once per model. */
   @transient private[operators] lazy val tables: Map[String, Lookup.Table] = {
     val rows = df.collect()
     outs.map { o =>

@@ -182,15 +182,17 @@ object Op {
   }
 }
 
-/** Scalar-literal JSON coding shared by the op tree and stage persistence. */
+/** Scalar-literal JSON coding shared by the op tree and stage persistence.
+  * Floats keep their own tag, so a reloaded literal keeps its type. */
 private[operators] object LitJson {
   def write(v: Any): JValue = v match {
     case null       => JObject("t" -> JString("n"))
     case s: String  => JObject("t" -> JString("s"), "v" -> JString(s))
     case i: Int     => JObject("t" -> JString("i"), "v" -> JInt(i))
     case l: Long    => JObject("t" -> JString("l"), "v" -> JInt(l))
-    case d: Double  => JObject("t" -> JString("d"), "v" -> JDouble(d))
-    case f: Float   => JObject("t" -> JString("d"), "v" -> JDouble(f.toDouble))
+    case d: Double  => JObject("t" -> JString("d"), "v" -> JsonDouble.write(d))
+    case f: Float   =>
+      JObject("t" -> JString("f"), "v" -> JsonDouble.write(f.toDouble))
     case b: Boolean => JObject("t" -> JString("b"), "v" -> JBool(b))
     case other => throw new IllegalArgumentException(
       s"unsupported literal type ${other.getClass} in persisted stage")
@@ -203,9 +205,41 @@ private[operators] object LitJson {
       case ("s", JString(s)) => s
       case ("i", JInt(i))    => i.toInt
       case ("l", JInt(i))    => i.toLong
-      case ("d", JDouble(d)) => d
+      case ("d", v)          => JsonDouble.read(v)
+      case ("f", v)          => JsonDouble.read(v).toFloat
       case ("b", JBool(b))   => b
       case other => throw new IllegalArgumentException(s"bad literal $other")
     }
+  }
+}
+
+/** The one JSON coding of a persisted double. JSON numbers have no NaN or
+  * infinity (Jackson quotes them, so they would reload as strings): these
+  * are written as the tokens `"NaN"`, `"Infinity"` and `"-Infinity"` — the
+  * strings Jackson wrote, so older files read back too — and a NaN whose
+  * bits differ from `Double.NaN` as `"NaN:<16 hex digits>"`. Finite values,
+  * -0.0 included, stay JSON numbers. Reading is bit-exact. */
+private[operators] object JsonDouble {
+  private val NaNBits = java.lang.Double.doubleToRawLongBits(Double.NaN)
+
+  def write(d: Double): JValue =
+    if (d == Double.PositiveInfinity) JString("Infinity")
+    else if (d == Double.NegativeInfinity) JString("-Infinity")
+    else if (!d.isNaN) JDouble(d)
+    else {
+      val bits = java.lang.Double.doubleToRawLongBits(d)
+      JString(if (bits == NaNBits) "NaN" else f"NaN:$bits%016x")
+    }
+
+  def read(j: JValue): Double = j match {
+    case JDouble(d)           => d
+    case JInt(i)              => i.toDouble
+    case JString("NaN")       => Double.NaN
+    case JString("Infinity")  => Double.PositiveInfinity
+    case JString("-Infinity") => Double.NegativeInfinity
+    case JString(s) if s.startsWith("NaN:") => java.lang.Double
+      .longBitsToDouble(java.lang.Long.parseUnsignedLong(s.drop(4), 16))
+    case other => throw new IllegalArgumentException(
+      s"not a persisted double: $other")
   }
 }

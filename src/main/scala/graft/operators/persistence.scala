@@ -2,9 +2,11 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ml.{PipelineModel, Transformer}
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods._
 
@@ -12,10 +14,16 @@ import org.json4s.jackson.JsonMethods._
   * (DataframePipeline.export, SURVEY §3.2): freeze a fitted pipeline to
   * storage and reload it for serving.
   *
-  * Layout: `<path>/pipeline.json` (stage params + small fitted state) plus
-  * `<path>/data/<i>_<j>/` parquet relations for grouped-Aggregator lookups
-  * (which may be too large for JSON, and at 100 TB never pass through the
-  * driver at all).
+  * Layout: `<path>/pipeline.json` holds every stage's params and its
+  * driver-resident fitted state — the `Small*` maps, and each broadcastable
+  * grouped-Aggregator lookup as its schema plus its rows — so saving and
+  * loading such a pipeline runs no Spark job. `<path>/data/<i>_…/` parquet
+  * relations hold the rest: `Big*` state, lookups that are not
+  * broadcastable (too large for the driver, and at 100 TB never passing
+  * through it), and lookups holding a type the inline rows do not code
+  * (decimal, date, timestamp, binary, nested). Pipelines saved when every
+  * lookup was parquet still load. Every double goes through [[JsonDouble]],
+  * so NaN, ±Infinity and -0.0 reload bit for bit.
   *
   * `FunctionTransformer` persists when built via `fromOp` (its expression
   * is a serializable [[Op]] tree — the analog of the reference's
@@ -35,10 +43,44 @@ object GraftPersistence {
     j.asInstanceOf[JArray].arr.map { case JString(s) => s; case x => x.toString }
   private def jarr(xs: Seq[JValue]): JArray = JArray(xs.toList)
   private def jstrs(xs: Seq[String]): JArray = jarr(xs.map(JString(_)))
+  private def jd(d: Double): JValue = JsonDouble.write(d)
   private def optD(j: JValue): Option[Double] = j match {
-    case JDouble(d) => Some(d)
-    case JInt(i)    => Some(i.toDouble)
-    case _          => None
+    case JNothing | JNull => None
+    case x                => Some(JsonDouble.read(x))
+  }
+  private def jdmap(m: Map[String, Double]): JObject =
+    JObject(m.toList.map { case (k, v) => k -> jd(v) })
+  private def dmap(j: JValue): Map[String, Double] =
+    j.asInstanceOf[JObject].obj.map { case (k, v) =>
+      k -> JsonDouble.read(v) }.toMap
+
+  /** Column types whose values a lookup's inline rows can hold. */
+  private def inlineType(dt: DataType): Boolean = dt match {
+    case StringType | BooleanType | ByteType | ShortType | IntegerType |
+        LongType | FloatType | DoubleType => true
+    case _ => false
+  }
+  private def cellToJson(v: Any): JValue = v match {
+    case null                => JNull
+    case s: String           => JString(s)
+    case b: Boolean          => JBool(b)
+    case f: Float            => jd(f.toDouble)
+    case d: Double           => jd(d)
+    case n: java.lang.Number => JInt(n.longValue)
+  }
+  /** The inverse of [[cellToJson]], typed by the column: integers come back
+    * as the column's own width, so column types stay exact. */
+  private def cellFromJson(j: JValue, dt: DataType): Any = (j, dt) match {
+    case (JNull, _)               => null
+    case (JString(s), StringType) => s
+    case (JBool(b), BooleanType)  => b
+    case (JInt(i), ByteType)      => i.toByte
+    case (JInt(i), ShortType)     => i.toShort
+    case (JInt(i), IntegerType)   => i.toInt
+    case (JInt(i), LongType)      => i.toLong
+    case (x, FloatType)           => JsonDouble.read(x).toFloat
+    case (x, DoubleType)          => JsonDouble.read(x)
+    case other => throw new IllegalArgumentException(s"bad lookup cell $other")
   }
 
   private def stageToJson(
@@ -90,8 +132,8 @@ object GraftPersistence {
       "type" -> JString("RangeTransformer"),
       "inputs" -> jstrs(t.inputs), "outputs" -> jstrs(t.outputs),
       "rules" -> jarr(t.rules.map { case ((u, l), v) => JObject(
-        "upper" -> u.map(JDouble(_)).getOrElse(JNothing),
-        "lower" -> l.map(JDouble(_)).getOrElse(JNothing),
+        "upper" -> u.map(jd).getOrElse(JNothing),
+        "lower" -> l.map(jd).getOrElse(JNothing),
         "value" -> anyToJson(v)) }),
       "useAllElements" -> JBool(t.useAllElements))
     case m: ComplementLabelEncoderModel => JObject(
@@ -114,9 +156,7 @@ object GraftPersistence {
       "normalize" -> JBool(m.normalize),
       "dicts" -> jarr(m.dicts.zipWithIndex.map {
         case (SmallFreq(mm), _) => JObject(
-          "kind" -> JString("small"),
-          "m" -> JObject(mm.toList.map { case (k, v) =>
-            k -> (JDouble(v): JValue) }))
+          "kind" -> JString("small"), "m" -> jdmap(mm))
         case (BigFreq(lookup), j) =>
           val rel = s"data/${idx}_fe_$j"
           lookup.write.mode("overwrite").parquet(s"$path/$rel")
@@ -127,9 +167,9 @@ object GraftPersistence {
       "ins" -> jstrs(m.ins), "outs" -> jstrs(m.outs),
       "strategy" -> JString(m.strategy),
       "stats" -> jarr(m.stats.map(s => JObject(
-        "minRaw" -> anyToJson(s.minRaw), "max" -> JDouble(s.max),
-        "mean" -> JDouble(s.mean), "stdPop" -> JDouble(s.stdPop),
-        "median" -> JDouble(s.median), "iqr" -> JDouble(s.iqr)))))
+        "minRaw" -> anyToJson(s.minRaw), "max" -> jd(s.max),
+        "mean" -> jd(s.mean), "stdPop" -> jd(s.stdPop),
+        "median" -> jd(s.median), "iqr" -> jd(s.iqr)))))
     case m: OneHotEncoderModel => JObject(
       "type" -> JString("OneHotEncoderModel"),
       "cols" -> jstrs(m.cols),
@@ -138,27 +178,37 @@ object GraftPersistence {
       "type" -> JString("WinsorizerModel"),
       "ins" -> jstrs(m.ins), "outs" -> jstrs(m.outs),
       "bounds" -> jarr(m.bounds.map { case (lo, hi) => JObject(
-        "lo" -> lo.fold[JValue](JNull)(JDouble(_)),
-        "hi" -> hi.fold[JValue](JNull)(JDouble(_))) }))
+        "lo" -> lo.fold[JValue](JNull)(jd),
+        "hi" -> hi.fold[JValue](JNull)(jd)) }))
     case m: QuantileBinnerModel => JObject(
       "type" -> JString("QuantileBinnerModel"),
       "ins" -> jstrs(m.ins), "outs" -> jstrs(m.outs),
       "cuts" -> jarr(m.cuts.map(
-        _.fold[JValue](JNull)(cs => jarr(cs.map(JDouble(_)))))))
+        _.fold[JValue](JNull)(cs => jarr(cs.map(jd))))))
     case m: AggregatorModel =>
-      val lookupPaths = m.lookups.zipWithIndex.map { case (lk, j) =>
-        val rel = s"data/${idx}_$j"
-        lk.df.write.mode("overwrite").parquet(s"$path/$rel")
-        JObject("path" -> JString(rel), "key" -> JString(lk.key),
-          "outs" -> jstrs(lk.outs),
-          "broadcastable" -> JBool(lk.broadcastable))
+      val lookups = m.lookups.zipWithIndex.map { case (lk, j) =>
+        val schema = lk.df.schema
+        // a broadcastable lookup is a driver-held local relation (fitted,
+        // fused or reloaded inline): collecting its rows runs no job
+        val state =
+          if (lk.broadcastable && schema.forall(f => inlineType(f.dataType)))
+            List("schema" -> JString(schema.json),
+              "rows" -> jarr(lk.df.collect().toSeq.map(r =>
+                jarr(r.toSeq.map(cellToJson)))))
+          else {
+            val rel = s"data/${idx}_$j"
+            lk.df.write.mode("overwrite").parquet(s"$path/$rel")
+            List("path" -> JString(rel))
+          }
+        JObject(List("key" -> JString(lk.key), "outs" -> jstrs(lk.outs),
+          "broadcastable" -> JBool(lk.broadcastable)) ++ state)
       }
       JObject(
         "type" -> JString("AggregatorModel"),
         "ins" -> jstrs(m.ins), "outs" -> jstrs(m.outs),
         "groupby" -> jstrs(m.groupby), "func" -> JString(m.func),
         "globals" -> jarr(m.globals.map(anyToJson)),
-        "lookups" -> jarr(lookupPaths))
+        "lookups" -> jarr(lookups))
     case t: HashingEncoder => JObject(
       "type" -> JString("HashingEncoder"),
       "inputs" -> jstrs(t.inputs), "outputs" -> jstrs(t.outputs),
@@ -172,16 +222,13 @@ object GraftPersistence {
       "type" -> JString("TargetEncoderModel"),
       "ins" -> jstrs(m.ins), "outs" -> jstrs(m.outs),
       "idCol" -> JString(m.idCol), "nFolds" -> JInt(m.nFolds),
-      "prior" -> JDouble(m.prior),
+      "prior" -> jd(m.prior),
       "states" -> jarr(m.states.zipWithIndex.map {
         case (SmallTarget(oof, full), _) => JObject(
           "kind" -> JString("small"),
           // oof keys embed the  (value, fold) separator — JSON
           // string escaping round-trips control chars faithfully
-          "oof" -> JObject(oof.toList.map { case (k, v) =>
-            k -> (JDouble(v): JValue) }),
-          "full" -> JObject(full.toList.map { case (k, v) =>
-            k -> (JDouble(v): JValue) }))
+          "oof" -> jdmap(oof), "full" -> jdmap(full))
         case (BigTarget(lookup), jx) =>
           val rel = s"data/${idx}_te_$jx"
           lookup.write.mode("overwrite").parquet(s"$path/$rel")
@@ -192,9 +239,7 @@ object GraftPersistence {
       "ins" -> jstrs(m.ins), "outs" -> jstrs(m.outs),
       "states" -> jarr(m.states.zipWithIndex.map {
         case (SmallWoe(woe), _) => JObject(
-          "kind" -> JString("small"),
-          "woe" -> JObject(woe.toList.map { case (k, v) =>
-            k -> (JDouble(v): JValue) }))
+          "kind" -> JString("small"), "woe" -> jdmap(woe))
         case (BigWoe(lookup), jx) =>
           val rel = s"data/${idx}_woe_$jx"
           lookup.write.mode("overwrite").parquet(s"$path/$rel")
@@ -299,13 +344,7 @@ object GraftPersistence {
           (j \ "normalize").asInstanceOf[JBool].value,
           (j \ "dicts").asInstanceOf[JArray].arr.map { d =>
             d \ "kind" match {
-              case JString("small") => SmallFreq(
-                (d \ "m").asInstanceOf[JObject].obj.map { case (k, v) =>
-                  k -> (v match {
-                    case JDouble(x) => x
-                    case JInt(i)    => i.toDouble
-                    case x => throw new IllegalArgumentException(x.toString)
-                  }) }.toMap)
+              case JString("small") => SmallFreq(dmap(d \ "m"))
               case _ => BigFreq(spark.read.parquet(
                 s"$path/${(d \ "path").asInstanceOf[JString].s}"))
             }
@@ -315,9 +354,9 @@ object GraftPersistence {
           (j \ "strategy").asInstanceOf[JString].s,
           (j \ "stats").asInstanceOf[JArray].arr.map(s => ScalerStats(
             jsonToAny(s \ "minRaw"),
-            (s \ "max").asInstanceOf[JDouble].num,
-            (s \ "mean").asInstanceOf[JDouble].num,
-            (s \ "stdPop").asInstanceOf[JDouble].num,
+            JsonDouble.read(s \ "max"),
+            JsonDouble.read(s \ "mean"),
+            JsonDouble.read(s \ "stdPop"),
             // absent in pipelines saved before the robust strategy
             optD(s \ "median").getOrElse(0.0),
             optD(s \ "iqr").getOrElse(0.0))))
@@ -333,7 +372,7 @@ object GraftPersistence {
           (j \ "cuts").asInstanceOf[JArray].arr.map {
             case JNull => None
             case a: JArray =>
-              Some(a.arr.map(_.asInstanceOf[JDouble].num))
+              Some(a.arr.map(JsonDouble.read))
             case other => throw new IllegalArgumentException(
               s"bad cuts entry: $other")
           })
@@ -342,12 +381,19 @@ object GraftPersistence {
           strs(j \ "groupby"), (j \ "func").asInstanceOf[JString].s,
           (j \ "globals").asInstanceOf[JArray].arr.map(jsonToAny),
           (j \ "lookups").asInstanceOf[JArray].arr.map { lk =>
-            AggLookup(
-              (lk \ "key").asInstanceOf[JString].s,
-              strs(lk \ "outs"),
-              spark.read.parquet(
-                s"$path/${(lk \ "path").asInstanceOf[JString].s}"),
-              (lk \ "broadcastable").asInstanceOf[JBool].value)
+            val df = lk \ "rows" match {
+              case JArray(rows) =>
+                val JString(js) = lk \ "schema"
+                val schema = DataType.fromJson(js).asInstanceOf[StructType]
+                spark.createDataFrame(rows.map { r =>
+                  Row.fromSeq(r.asInstanceOf[JArray].arr.zip(schema.fields)
+                    .map { case (c, f) => cellFromJson(c, f.dataType) })
+                }.asJava, schema)
+              case _ => spark.read.parquet(
+                s"$path/${(lk \ "path").asInstanceOf[JString].s}")
+            }
+            AggLookup((lk \ "key").asInstanceOf[JString].s, strs(lk \ "outs"),
+              df, (lk \ "broadcastable").asInstanceOf[JBool].value)
           })
       case "HashingEncoder" =>
         new HashingEncoder(strs(j \ "inputs"), strs(j \ "outputs"),
@@ -358,18 +404,10 @@ object GraftPersistence {
           (j \ "nBuckets").asInstanceOf[JInt].num.toInt,
           (j \ "scale").asInstanceOf[JInt].num.toLong)
       case "TargetEncoderModel" =>
-        def dmap(v: JValue): Map[String, Double] =
-          v.asInstanceOf[JObject].obj.map { case (k, x) =>
-            k -> (x match {
-              case JDouble(d) => d
-              case JInt(i)    => i.toDouble
-              case other => throw new IllegalArgumentException(other.toString)
-            })
-          }.toMap
         new TargetEncoderModel(strs(j \ "ins"), strs(j \ "outs"),
           (j \ "idCol").asInstanceOf[JString].s,
           (j \ "nFolds").asInstanceOf[JInt].num.toInt,
-          (j \ "prior").asInstanceOf[JDouble].num,
+          JsonDouble.read(j \ "prior"),
           (j \ "states").asInstanceOf[JArray].arr.map { st =>
             st \ "kind" match {
               case JString("small") =>
@@ -379,18 +417,10 @@ object GraftPersistence {
             }
           })
       case "WoeEncoderModel" =>
-        def wmap(v: JValue): Map[String, Double] =
-          v.asInstanceOf[JObject].obj.map { case (k, x) =>
-            k -> (x match {
-              case JDouble(d) => d
-              case JInt(i)    => i.toDouble
-              case other => throw new IllegalArgumentException(other.toString)
-            })
-          }.toMap
         new WoeEncoderModel(strs(j \ "ins"), strs(j \ "outs"),
           (j \ "states").asInstanceOf[JArray].arr.map { st =>
             st \ "kind" match {
-              case JString("small") => SmallWoe(wmap(st \ "woe"))
+              case JString("small") => SmallWoe(dmap(st \ "woe"))
               case _ => BigWoe(spark.read.parquet(
                 s"$path/${(st \ "path").asInstanceOf[JString].s}"))
             }

@@ -1,5 +1,13 @@
 package graft.text
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
+  GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -304,25 +312,54 @@ object Bpe {
   /** Persist a learned merge table (a production pipeline fits the
     * tokenizer once and serves it to every encode pass — the
     * MinHashIndex save/load contract). Plain parquet: engine-portable,
-    * human-inspectable, and the rank order IS the rule priority. */
-  def save(merges: Seq[Merge], spark: SparkSession, path: String): Unit =
-    // coalesce, not repartition: the local table is written as one file
-    // in rank order by one job, with no exchange
-    mergesDF(spark, merges).coalesce(1)
-      .write.mode("overwrite").parquet(path)
+    * human-inspectable, and the rank order IS the rule priority. The
+    * table is driver-held, so parquet-hadoop's own writer puts it in ONE
+    * file on the driver, in rank order, with no Spark job; its columns
+    * are [[mergesDF]]'s names and types, so Spark and DuckDB read it like
+    * a Spark-written table. `path` is a directory, replaced as a whole. */
+  def save(merges: Seq[Merge], spark: SparkSession, path: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    dir.getFileSystem(conf).delete(dir, true)
+    val out = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(new Path(dir, "part-00000.parquet"),
+        conf))
+      .withConf(conf).withType(MergesSchema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    val groups = new SimpleGroupFactory(MergesSchema)
+    try merges.foreach(m => out.write(groups.newGroup()
+      .append("merge_rank", m.merge_rank).append("lhs", m.lhs)
+      .append("rhs", m.rhs).append("n_pairs", m.n_pairs)))
+    finally out.close()
+  }
 
-  /** The saved merge table's schema (as [[mergesDF]] writes it). */
-  private val MergesSchema = StructType(Seq(
-    StructField("merge_rank", IntegerType), StructField("lhs", StringType),
-    StructField("rhs", StringType), StructField("n_pairs", LongType)))
+  /** The saved merge table's parquet schema (as [[mergesDF]] writes it). */
+  private val MergesSchema = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional int32 merge_rank;
+      |  optional binary lhs (STRING);
+      |  optional binary rhs (STRING);
+      |  optional int64 n_pairs;
+      |}""".stripMargin)
 
-  /** Reload a saved merge table in rank order: one read job with the
-    * known schema (no footer inference), sorted on the driver. */
-  def load(spark: SparkSession, path: String): Seq[Merge] =
-    spark.read.schema(MergesSchema).parquet(path).collect().toSeq
-      .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
-        r.getLong(3)))
-      .sortBy(_.merge_rank)
+  /** Reload a saved merge table in rank order: every `*.parquet` file of
+    * the directory (one, or a Spark-written table's parts) read on the
+    * driver by parquet-hadoop's reader, with no Spark job, then sorted. */
+  def load(spark: SparkSession, path: String): Seq[Merge] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    val parts = dir.getFileSystem(conf)
+      .listStatus(dir, (p: Path) => p.getName.endsWith(".parquet"))
+    parts.toSeq.flatMap { st =>
+      val in = ParquetReader.builder(new GroupReadSupport(), st.getPath)
+        .withConf(conf).build()
+      try Iterator.continually(in.read()).takeWhile(_ != null)
+        .map(g => Merge(g.getInteger("merge_rank", 0), g.getString("lhs", 0),
+          g.getString("rhs", 0), g.getLong("n_pairs", 0)))
+        .toList
+      finally in.close()
+    }.sortBy(_.merge_rank)
+  }
 
   /** Encode every document against a learned merge table: each word is
     * segmented to characters, then the merges are applied in rank order —

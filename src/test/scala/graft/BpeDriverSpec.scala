@@ -134,14 +134,31 @@ class BpeDriverSpec extends SparkSpec {
     assert(merges == refBpe(docs, 12))
   }
 
-  test("save and load are one job each and round-trip the table") {
+  test("save and load run no Spark job and round-trip the table") {
     val merges = Bpe.fitBpe(corpus(5, 30, "abc", 6).toDF("text"), "text", 20)
     val dir = java.nio.file.Files.createTempDirectory("bpe-driver").toString
-    assert(countJobs(Bpe.save(merges, spark, s"$dir/m")) <= 1)
+    assert(countJobs(Bpe.save(merges, spark, s"$dir/m")) == 0)
     var back = Seq.empty[Bpe.Merge]
-    assert(countJobs { back = Bpe.load(spark, s"$dir/m") } <= 1)
+    assert(countJobs { back = Bpe.load(spark, s"$dir/m") } == 0)
     assert(back == merges)
     assert(new java.io.File(s"$dir/m").listFiles()
       .count(_.getName.endsWith(".parquet")) == 1)
+    // Spark reads the driver-written file with mergesDF's columns and types
+    val read = spark.read.parquet(s"$dir/m")
+    assert(read.schema.map(f => (f.name, f.dataType)) ==
+      Bpe.mergesDF(spark, merges).schema.map(f => (f.name, f.dataType)))
+    assert(read.orderBy("merge_rank").collect().toSeq ==
+      Bpe.mergesDF(spark, merges).collect().toSeq)
+  }
+
+  test("load reads a merge table Spark wrote in several part files") {
+    val merges = Bpe.fitBpe(corpus(7, 30, "abcd", 6).toDF("text"), "text", 15)
+    val dir = java.nio.file.Files.createTempDirectory("bpe-parts").toString
+    Bpe.mergesDF(spark, merges).repartition(3)
+      .write.mode("overwrite").parquet(s"$dir/m")
+    assert(Bpe.load(spark, s"$dir/m") == merges)
+    // and a driver-written save replaces that directory as a whole
+    Bpe.save(merges.take(4), spark, s"$dir/m")
+    assert(Bpe.load(spark, s"$dir/m") == merges.take(4))
   }
 }
