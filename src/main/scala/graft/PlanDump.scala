@@ -78,7 +78,7 @@ object PlanDump {
       val (out, counts) = graft.relational.Eval.quantileNormalizePlan(
         li, "l_extendedprice", "l_returnflag", "N", "R", 100000)
       writeInternal("internal_quantile_norm", out)
-      graft.util.Fixpoint.release(counts)
+      graft.util.Materialize.release(counts)
     }
     if (names.contains("internal_lpa_vote")) {
       import org.apache.spark.sql.functions._

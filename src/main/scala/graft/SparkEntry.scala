@@ -481,13 +481,12 @@ object SparkEntry {
     "q_pipeline" -> ((s, d) => {
       val customer = t(s, d, "customer")
       val orders = t(s, d, "orders")
-      // persisted: three estimator fits + the final transform each scan the
-      // training frame; caching it turns 4 scan+join passes into 1
-      val joined = orders.join(broadcast(customer),
-          orders("o_custkey") === customer("c_custkey"))
+      // shared: the pipeline fit and the final transform each scan the
+      // training frame; a lazy checkpoint turns the scan+join passes into 1
+      val joined = graft.util.Materialize.shared(orders.join(
+          broadcast(customer), orders("o_custkey") === customer("c_custkey"))
         .select(col("o_orderkey"), col("o_totalprice"),
-          col("c_mktsegment"), col("c_nationkey"))
-        .persist()
+          col("c_mktsegment"), col("c_nationkey")))
       val model = DFPipeline(
         new StringConcatenator(Seq(Seq("c_mktsegment", "c_nationkey")),
           Seq("ckey"), "_"),

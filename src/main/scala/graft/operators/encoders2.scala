@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.GraftFunctions
+import graft.util.Materialize
 
 /** Hashing-trick categorical encoder (stateless): each input value maps to
   * `md5_hash60(colName + '=' + value) mod numBuckets` — the fixed-width
@@ -85,15 +86,16 @@ class TargetEncoder(
   override def fitDF(df: DataFrame): TargetEncoderModel = {
     val y = col(targetCol).cast(DoubleType)
     val fold = TargetEncoder.foldOf(col(idCol), nFolds)
-    val partials = df
+    // recomputable, like `table`: a BigTarget's lineage runs through both
+    val partials = Materialize.shared(df
       .filter(y.isNotNull)
       .select(y.as("__y"), fold.as("__f"),
         posexplode(array(inputs.map(c => col(c).cast(StringType)): _*))
           .as(Seq("__i", "__v")))
       .filter(col("__v").isNotNull)
       .groupBy("__i", "__v", "__f")
-      .agg(sum("__y").as("__s"), count(lit(1)).as("__c"))
-      .persist()
+      .agg(sum("__y").as("__s"), count(lit(1)).as("__c")),
+      recomputable = true)
     try {
       val prior = df.agg(avg(y)).head().getDouble(0)
       val m = lit(smoothing)
@@ -107,8 +109,8 @@ class TargetEncoder(
       val oof = when(oofDen > 0,
           (sum("__s").over(w) - col("__s") + m * pr) / oofDen)
         .otherwise(pr)
-      val table = partials.select(col("__i"), col("__v"), col("__f"),
-        oof.as("__oof"), full.as("__full")).persist()
+      val table = Materialize.shared(partials.select(col("__i"), col("__v"),
+        col("__f"), oof.as("__oof"), full.as("__full")), recomputable = true)
       val sizes = table.groupBy("__i").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       val states: Seq[TargetState] = inputs.indices.map { i =>
@@ -122,17 +124,14 @@ class TargetEncoder(
             rows.groupBy(_.getString(1))
               .map { case (v, rs) => v -> rs.head.getDouble(4) })
         } else {
-          val lookup = slice
+          BigTarget(Materialize.persist(slice
             .select(col("__v").as("value"), col("__f").as("fold"),
-              col("__oof").as("oof"), col("__full").as("full"))
-            .persist()
-          lookup.count() // materialize before partials unpersist
-          BigTarget(lookup)
+              col("__oof").as("oof"), col("__full").as("full"))).df)
         }
       }
-      table.unpersist()
+      Materialize.release(table)
       new TargetEncoderModel(inputs, outputs, idCol, nFolds, prior, states)
-    } finally { partials.unpersist(); () }
+    } finally Materialize.release(partials)
   }
 }
 
@@ -278,15 +277,16 @@ class WoeEncoder(
 
   override def fitDF(df: DataFrame): WoeEncoderModel = {
     val y = col(targetCol).cast(LongType)
-    val partials = df
+    // recomputable, like `table`: a BigWoe's lineage runs through both
+    val partials = Materialize.shared(df
       .filter(y.isNotNull)
       .select(y.as("__y"),
         posexplode(array(inputs.map(c => col(c).cast(StringType)): _*))
           .as(Seq("__i", "__v")))
       .filter(col("__v").isNotNull)
       .groupBy("__i", "__v")
-      .agg(count(lit(1)).as("__n"), sum("__y").as("__p"))
-      .persist()
+      .agg(count(lit(1)).as("__n"), sum("__y").as("__p")),
+      recomputable = true)
     try {
       val w = org.apache.spark.sql.expressions.Window.partitionBy("__i")
       val pt = sum(col("__p")).over(w)
@@ -295,8 +295,8 @@ class WoeEncoder(
       val woe = round(org.apache.spark.sql.functions.log(
         (((col("__n") - col("__p")) + lit(0.5)) / nt) /
           ((col("__p") + lit(0.5)) / pt)), 6)
-      val table = partials
-        .select(col("__i"), col("__v"), woe.as("__woe")).persist()
+      val table = Materialize.shared(partials
+        .select(col("__i"), col("__v"), woe.as("__woe")), recomputable = true)
       val sizes = table.groupBy("__i").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       val states: Seq[WoeState] = inputs.indices.map { i =>
@@ -305,16 +305,13 @@ class WoeEncoder(
           SmallWoe(slice.collect()
             .map(r => r.getString(1) -> r.getDouble(2)).toMap)
         else {
-          val lookup = slice
-            .select(col("__v").as("value"), col("__woe").as("woe"))
-            .persist()
-          lookup.count() // materialize before partials unpersist
-          BigWoe(lookup)
+          BigWoe(Materialize.persist(slice
+            .select(col("__v").as("value"), col("__woe").as("woe"))).df)
         }
       }
-      table.unpersist()
+      Materialize.release(table)
       new WoeEncoderModel(inputs, outputs, states)
-    } finally { partials.unpersist(); () }
+    } finally Materialize.release(partials)
   }
 }
 

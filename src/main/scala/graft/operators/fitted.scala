@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{DictTable, GraftFunctions}
-import graft.util.Fixpoint
+import graft.util.Materialize
 
 private[operators] object Lookup {
   /** A driver-resident dictionary applied as one
@@ -99,7 +99,9 @@ class ComplementLabelEncoder(
     val ins = GraftSchema.resolve(inputs, df)
     val outs = if (outputs.isEmpty) ins else outputs
     val S = ComplementLabelEncoder.Sentinel
-    val pairs = Lookup.distinctPairsDF(df, ins).persist()
+    // recomputable: a BigDict's lineage runs through it
+    val pairs = Materialize.shared(Lookup.distinctPairsDF(df, ins),
+      recomputable = true)
     try {
       val sizes = pairs.groupBy("__i").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -129,23 +131,23 @@ class ComplementLabelEncoder(
           val hasMissing = values.filter(col("value") === S).count() > 0
           val sorted = values.sort("value")
           val spark = df.sparkSession
-          val indexed = spark.createDataFrame(
+          val indexed = Materialize.persist(spark.createDataFrame(
             sorted.rdd.zipWithIndex.map { case (r, idx) =>
               Row(r.getString(0), idx.toInt)
             },
             StructType(Seq(StructField("value", StringType),
-              StructField("code", IntegerType))))
-            .persist()
-          val n = indexed.count() // materialize before pairs unpersists
+              StructField("code", IntegerType)))),
+            count(lit(1)).as("n"))
+          val n = indexed("n")
           val sentCode =
             if (hasMissing)
-              indexed.filter(col("value") === S).head().getInt(1)
+              indexed.df.filter(col("value") === S).head().getInt(1)
             else n.toInt
-          BigDict(indexed, sentCode)
+          BigDict(indexed.df, sentCode)
         }
       }
       new ComplementLabelEncoderModel(ins, outs, dicts)
-    } finally { pairs.unpersist(); () }
+    } finally Materialize.release(pairs)
   }
 }
 
@@ -218,13 +220,13 @@ class FrequencyEncoder(
       if (normalize) DoubleType else LongType))
 
   override def fitDF(df: DataFrame): FrequencyEncoderModel = {
-    val countsDF = df
+    val countsDF = Materialize.shared(df
       .select(
         posexplode(array(inputs.map(c => col(c).cast(StringType)): _*))
           .as(Seq("__i", "__v")))
       .filter(col("__v").isNotNull)
-      .groupBy("__i", "__v").agg(count(lit(1)).as("__c"))
-      .persist()
+      .groupBy("__i", "__v").agg(count(lit(1)).as("__c")),
+      recomputable = true)
     try {
       val sizes = countsDF.groupBy("__i").agg(
           count(lit(1)).as("n"), sum("__c").as("total"))
@@ -242,14 +244,12 @@ class FrequencyEncoder(
           // 100 TB path: the frequency table stays distributed
           val v = if (normalize) col("__c") / lit(total.toDouble)
                   else col("__c").cast(DoubleType)
-          val lookup = countsDF.filter(col("__i") === i)
-            .select(col("__v").as("value"), v.as("freq")).persist()
-          lookup.count() // materialize before countsDF unpersists
-          BigFreq(lookup)
+          BigFreq(Materialize.persist(countsDF.filter(col("__i") === i)
+            .select(col("__v").as("value"), v.as("freq"))).df)
         }
       }
       new FrequencyEncoderModel(inputs, outputs, normalize, dicts)
-    } finally { countsDF.unpersist(); () }
+    } finally Materialize.release(countsDF)
   }
 }
 
@@ -358,7 +358,7 @@ class Aggregator(
         // one guarded job decides: under the guard the rows become a
         // driver-held local relation; over it the lookup is the lazy
         // checkpoint that job wrote, joined at transform time
-        Fixpoint.guardedCollect(aggDF, Aggregator.CollectMax) match {
+        Materialize.guardedCollect(aggDF, Aggregator.CollectMax) match {
           case Right(rows) => AggLookup(key, cols.map(_._3),
             df.sparkSession.createDataFrame(
               java.util.Arrays.asList(rows: _*), aggDF.schema),

@@ -506,7 +506,7 @@ object FitFusion {
     // the final reduce of a vocab-sized aggregate runs in one task, so the
     // guarded collect is exactly ONE job
     val limit = math.min(need + 1, Int.MaxValue - 1L).toInt
-    val rows = graft.util.Fixpoint.collectAtMost(result, limit)
+    val rows = graft.util.Materialize.collectAtMost(result, limit)
     val nG = groupCols.length
     val setOf = gid.map(_.swap)
     val bySet = rows.toSeq.groupBy(_.getLong(nG)).map { case (g, rs) =>

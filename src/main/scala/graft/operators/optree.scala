@@ -183,13 +183,19 @@ object Op {
 }
 
 /** Scalar-literal JSON coding shared by the op tree and stage persistence.
-  * Floats keep their own tag, so a reloaded literal keeps its type. */
+  * Every numeric type keeps its own tag, so a reloaded literal keeps its
+  * type; a decimal keeps its unscaled digits and its scale (`lit` of it
+  * then has the same precision and scale). */
 private[operators] object LitJson {
   def write(v: Any): JValue = v match {
     case null       => JObject("t" -> JString("n"))
     case s: String  => JObject("t" -> JString("s"), "v" -> JString(s))
+    case b: Byte    => JObject("t" -> JString("y"), "v" -> JInt(b.toInt))
+    case h: Short   => JObject("t" -> JString("h"), "v" -> JInt(h.toInt))
     case i: Int     => JObject("t" -> JString("i"), "v" -> JInt(i))
     case l: Long    => JObject("t" -> JString("l"), "v" -> JInt(l))
+    case d: java.math.BigDecimal => JObject("t" -> JString("m"),
+      "v" -> JString(d.unscaledValue.toString), "scale" -> JInt(d.scale))
     case d: Double  => JObject("t" -> JString("d"), "v" -> JsonDouble.write(d))
     case f: Float   =>
       JObject("t" -> JString("f"), "v" -> JsonDouble.write(f.toDouble))
@@ -203,8 +209,13 @@ private[operators] object LitJson {
     (t, j \ "v") match {
       case ("n", _)          => null
       case ("s", JString(s)) => s
+      case ("y", JInt(i))    => i.toByte
+      case ("h", JInt(i))    => i.toShort
       case ("i", JInt(i))    => i.toInt
       case ("l", JInt(i))    => i.toLong
+      case ("m", JString(u)) =>
+        val JInt(scale) = j \ "scale"
+        new java.math.BigDecimal(new java.math.BigInteger(u), scale.toInt)
       case ("d", v)          => JsonDouble.read(v)
       case ("f", v)          => JsonDouble.read(v).toFloat
       case ("b", JBool(b))   => b

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.Materialize
+
 /** Missing-value fill. Reference: dfpipeline/Imputer.py:43-79.
   *
   * Deliberate reference quirk preserved (SURVEY §2.5.1): there is NO fit —
@@ -105,19 +107,18 @@ class MinorityTransformer(
 
   /** Freeze the value counts against `train` (streaming option): the frozen
     * count relations join against any future frame, including streams.
-    * The relations stay persisted — call `release()` on the returned stage
-    * when done with it. */
+    * They are owned state, persisted — call `release()` on the returned
+    * stage when done with it. */
   def freeze(train: DataFrame): FrozenStage = {
-    val frozenCounts = inputs.map { in =>
-      in -> train.groupBy(col(in)).agg(count(lit(1))).persist()
+    val frozenCounts = inputs.map { in => in ->
+      Materialize.persist(train.groupBy(col(in)).agg(count(lit(1)))).df
     }.toMap
-    frozenCounts.values.foreach(_.count())
     val self = this
     new FrozenStage {
       override def transformDF(df: DataFrame): DataFrame =
         self.applyWith(df, frozenCounts(_))
       override def release(): Unit =
-        frozenCounts.values.foreach { d => d.unpersist(); () }
+        Materialize.release(frozenCounts.values.toSeq: _*)
     }
   }
 }

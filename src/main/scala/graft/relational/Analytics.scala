@@ -1,9 +1,9 @@
 package graft.relational
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Statistical / analytical relational operators: grouped OLS regression,
   * categorical-association scoring (chi-squared + mutual information),
@@ -787,12 +787,11 @@ object Analytics {
     * thing re-scanned; the corpus is read once. */
   def rfmSegments(df: DataFrame, keyCol: String, dateCol: String,
       amountCol: String): DataFrame = {
-    val cust = df.filter(col(keyCol).isNotNull)
+    val cust = Materialize.shared(df.filter(col(keyCol).isNotNull)
       .groupBy(col(keyCol))
       .agg(max(col(dateCol).cast("long")).as("last_active"),
         count(lit(1)).as("frequency"),
-        sum(floor(col(amountCol) * 100).cast("long")).as("monetary"))
-      .persist()
+        sum(floor(col(amountCol) * 100).cast("long")).as("monetary")))
     val dims = Seq("last_active", "frequency", "monetary")
     // all 12 quintile edges (4 ranks × 3 dims) from ONE shared narrowing
     // session — the engine batches ranks per histogram scan, so this
@@ -813,7 +812,7 @@ object Analytics {
       .withColumn("segment", concat(col("r_score").cast("string"),
         col("f_score").cast("string"), col("m_score").cast("string")))
       .localCheckpoint(eager = true)
-    cust.unpersist(blocking = false)
+    Materialize.release(cust)
     out
   }
 
@@ -924,7 +923,7 @@ object Analytics {
     * build the full degenerate basket in an unspillable buffer first).
     * The capped relation is localCheckpoint'ed once, and the basket total
     * and the cap audit's count are observed on that same job
-    * ([[graft.util.Fixpoint.checkpoint]]) — the total enters the plan as
+    * ([[graft.util.Materialize.checkpoint]]) — the total enters the plan as
     * a literal; the pair explode and the item marginals read the
     * checkpoint instead of re-aggregating the corpus. The pair explode
     * is ≤ maxBasket²/2 rows per basket into one map-side-combined pair
@@ -943,7 +942,7 @@ object Analytics {
     val wb = Window.partitionBy(col(basketCol)).orderBy(col(itemCol))
     // the basket and capped-basket counts are observed on the job that
     // checkpoints the baskets — no count action, no one-row aggregate
-    val baskets = graft.util.Fixpoint.checkpoint(df
+    val baskets = Materialize.checkpoint(df
       .filter(col(basketCol).isNotNull && col(itemCol).isNotNull)
       .select(col(basketCol), col(itemCol)).distinct()
       .withColumn("__rn", row_number().over(wb))
@@ -1354,12 +1353,12 @@ object Analytics {
     val complete = featureCols
       .map(c => col(c).isNotNull && !isnan(col(c).cast("double")))
       .reduce(_ && _)
-    val q = df.filter(complete && col(idCol).isNotNull)
-      .select((col(idCol).as("__id") +:
-        featureCols.map(c =>
-          floor(col(c).cast("double") * scale).cast("long").as(s"__q_$c")))
-        : _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val q = Materialize.shared(
+      df.filter(complete && col(idCol).isNotNull)
+        .select((col(idCol).as("__id") +:
+          featureCols.map(c =>
+            floor(col(c).cast("double") * scale).cast("long").as(s"__q_$c")))
+          : _*))
     val mm = q.agg(
       featureCols.flatMap(c => Seq(min(s"__q_$c").as(s"lo_$c"),
         max(s"__q_$c").as(s"hi_$c"))).head,
@@ -1370,7 +1369,7 @@ object Analytics {
     // unboxing nulls to 0 and crashing on the empty histogram map
     // (ADVICE r7)
     if (mm.isNullAt(mm.fieldIndex(s"lo_${featureCols.head}"))) {
-      q.unpersist(blocking = false)
+      Materialize.release(q)
       return q.limit(0).select(
         col("__id").as(idCol) +:
           featureCols.map(c => lit(0L).as(s"bin_$c")) :+
@@ -1394,7 +1393,7 @@ object Analytics {
         expr(s"((`__q_$c` - ${lo}L) * ${nBins}L) div ${range}L"))
     }.select(col("__id") +: featureCols.map(c => col(s"bin_$c")): _*)
       .localCheckpoint(true)
-    q.unpersist(blocking = false)
+    Materialize.release(q)
     val hist = binned.select(explode(array(
         featureCols.map(c =>
           struct(lit(c).as("__f"), col(s"bin_$c").as("__b"))): _*))

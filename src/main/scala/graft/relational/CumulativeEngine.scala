@@ -26,7 +26,7 @@ import graft.operators.ComplementLabelEncoder.DefaultMaxCollect
   *
   * [[rank]] collects the counted relation ONCE, sorted in Spark's order,
   * behind a guard of `min(threshold, 1 M)` rows
-  * ([[graft.util.Fixpoint.guardedCollect]]: `guard + 1` rows read in one
+  * ([[graft.util.Materialize.guardedCollect]]: `guard + 1` rows read in one
   * task, the sort in that task — one job, two with the counting
   * aggregate's map stage — which also writes the lazy local checkpoint
   * the distributed paths read). Then one of three paths:
@@ -104,7 +104,7 @@ private[graft] object CumulativeEngine {
     lazy val withTotals: DataFrame = withTotalsOf
     def onDriver: Boolean = path == "driver"
     def release(): Unit =
-      if (!onDriver) graft.util.Fixpoint.release(counts)
+      if (!onDriver) graft.util.Materialize.release(counts)
   }
 
   /** Ranks the DISTINCT relation `counts` (not yet materialized) on
@@ -119,7 +119,7 @@ private[graft] object CumulativeEngine {
     // whatever the caller's threshold, at most the collect bound the
     // fitted encoders use (1 M rows) comes to the driver
     val guard = math.max(0L, math.min(maxRows, DefaultMaxCollect))
-    val (ranked, seen) = graft.util.Fixpoint.guardedCollect(counts, guard,
+    val (ranked, seen) = graft.util.Materialize.guardedCollect(counts, guard,
         (groupCols :+ valueCol).map(col): _*) match {
       case Right(rows) =>
         (onDriver(rows, counts, measures, groupCols), s"=${rows.length}")

@@ -59,7 +59,7 @@ object Eval {
     // materialize before releasing the fit cache (mirrors
     // percentileRank): the result is one row
     val materialized = out.localCheckpoint(eager = true)
-    graft.util.Fixpoint.release(counts)
+    graft.util.Materialize.release(counts)
     materialized
   }
 
@@ -86,7 +86,7 @@ object Eval {
   /** The unmaterialized AUC plan plus the fit-time counts relation —
     * split out so plan-shape tests can assert on the real plan (the
     * public method checkpoints, which hides it). Callers must
-    * release the returned counts ([[graft.util.Fixpoint.release]]) once
+    * release the returned counts ([[graft.util.Materialize.release]]) once
     * the plan is consumed. */
   private[graft] def aucPlan(df: DataFrame, scoreCol: String,
       labelCol: String,
@@ -1451,7 +1451,7 @@ object Eval {
     val (out, counts) = ksExactPlan(df, valueCol, groupCol, groupA,
       groupB, maxDistinctBroadcast)
     val m = out.localCheckpoint(eager = true)
-    graft.util.Fixpoint.release(counts)
+    graft.util.Materialize.release(counts)
     m
   }
 
@@ -1517,13 +1517,13 @@ object Eval {
     val (plan, counts) = quantileNormalizePlan(df, valueCol, groupCol,
       target, ref, maxDistinctBroadcast)
     val out = plan.localCheckpoint(eager = true)
-    graft.util.Fixpoint.release(counts)
+    graft.util.Materialize.release(counts)
     out
   }
 
   /** The unmaterialized [[quantileNormalize]] plan plus the counted
     * relation both sides share — to release
-    * ([[graft.util.Fixpoint.release]]) after the plan is consumed (the
+    * ([[graft.util.Materialize.release]]) after the plan is consumed (the
     * aucPlan pattern, for plan-shape tests). */
   private[graft] def quantileNormalizePlan(df: DataFrame, valueCol: String,
       groupCol: String, target: String, ref: String,

@@ -1,5 +1,6 @@
 package graft.relational
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -147,8 +148,8 @@ object Geo {
       latCdegCol: String, lonCdegCol: String, radiusCdeg: Int,
       minPts: Int, maxCollect: Long = 1000000L): DataFrame = {
     require(minPts >= 2, s"minPts must be >= 2, got $minPts")
-    val pairs = distanceJoin(points, idCol, latCdegCol, lonCdegCol,
-      radiusCdeg).select(col("id_a"), col("id_b")).persist()
+    val pairs = Materialize.shared(distanceJoin(points, idCol, latCdegCol,
+      lonCdegCol, radiusCdeg).select(col("id_a"), col("id_b")))
     val directed = pairs.unionByName(
       pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
     val counts = directed.groupBy(col("id_a").as("__id"))
@@ -162,22 +163,24 @@ object Geo {
         "left_semi")
     val comp = graft.text.Dedup.duplicateComponents(coreEdges,
       maxCollect = maxCollect)
-    // cores in no core-core edge are singleton clusters labeled by id
-    val coreLabels = coreIds
+    // cores in no core-core edge are singleton clusters labeled by id.
+    // Both label relations (bounded by the core and border point counts)
+    // are checkpointed, so the returned lazy plan reads them and never the
+    // released pairs
+    val coreLabels = Materialize.checkpoint(coreIds
       .join(comp.select(col("id_a").as("__id"), col("component")),
         Seq("__id"), "left")
       .select(col("__id"),
-        coalesce(col("component"), col("__id")).as("__cluster"))
-      .persist()
-    coreLabels.count() // materialize before the pair cache releases
-    val borderLabels = directed
+        coalesce(col("component"), col("__id")).as("__cluster"))).df
+    val borderLabels = Materialize.checkpoint(directed
       .join(coreLabels.select(col("__id").as("id_b"),
         col("__cluster")), Seq("id_b"))
       .join(coreIds.select(col("__id").as("id_a")), Seq("id_a"),
         "left_anti")
       .groupBy(col("id_a").as("__id"))
-      .agg(min("__cluster").as("__bcluster"))
-    val out = points.select(col(idCol))
+      .agg(min("__cluster").as("__bcluster"))).df
+    Materialize.release(pairs)
+    points.select(col(idCol))
       .join(coreLabels.withColumnRenamed("__id", idCol), Seq(idCol),
         "left")
       .join(borderLabels.withColumnRenamed("__id", idCol), Seq(idCol),
@@ -187,8 +190,6 @@ object Geo {
           .when(col("__bcluster").isNotNull, lit("border"))
           .otherwise(lit("noise")).as("role"),
         coalesce(col("__cluster"), col("__bcluster")).as("cluster"))
-    pairs.unpersist(blocking = false)
-    out
   }
 
   /** Assign each left point to its nearest right "site" within

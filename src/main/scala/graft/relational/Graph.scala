@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * allows per-edge weights up to ~10^8.
   */
 object Graph {
-  import graft.util.Fixpoint
+  import graft.util.{Fixpoint, Materialize}
 
   /** PageRank over `(srcCol, dstCol, wCol)` edges (long weights > 0;
     * rows with w ≤ 0 or a null endpoint are dropped). Returns
@@ -49,15 +49,15 @@ object Graph {
     val e = Fixpoint.edges(e0.withColumn("pw", lit(null).cast("long"))
       .union(e0.select(lit(null).cast("string"), col("src"),
         lit(null).cast("long"), col("w"))), "dst", dedup = false)
-    val seed = Fixpoint.checkpoint(
+    val seed = Materialize.checkpoint(
       e.groupBy(col("dst").as("node")).agg(sum("pw").as("ow")),
       count(lit(1)).as("nodes"), count(when(col("ow").isNull, 1)).as("sinks"))
     val n = math.max(seed("nodes"), 1L)
-    val rank0 = Fixpoint.State(seed.df.withColumn("rank", lit(scale / n)),
+    val rank0 = Materialize.State(seed.df.withColumn("rank", lit(scale / n)),
       Map("dang" -> seed("sinks") * (scale / n)))
     Fixpoint.iterate("pageRank", e, rank0, iters)(_ => false) { r =>
       val base = 15L * scale / (100L * n) + 85L * (r.state("dang") / n) / 100L
-      Fixpoint.checkpoint(e.join(r.broadcast(r.state.df.select(
+      Materialize.checkpoint(e.join(r.broadcast(r.state.df.select(
             col("node").as("src"), col("ow").as("sow"), col("rank")), n),
           Seq("src"), "left")
         .groupBy(col("dst").as("node"))
@@ -122,21 +122,21 @@ object Graph {
         col(dstCol).cast("string").as("dst"))
       .filter(col("src") =!= col("dst")), "dst")
     val frontier = count(lit(1)).as("frontier")
-    val seed = Fixpoint.checkpoint(sources.select(col(sources.columns.head)
+    val seed = Materialize.checkpoint(sources.select(col(sources.columns.head)
         .cast("string").as("node")).distinct()
       .withColumn("dist", lit(0L)), frontier)
     Fixpoint.iterate("shortestPaths", e,
         seed + ("visited" -> seed("frontier")), maxHops)(
         _("frontier") == 0L) { r =>
       val visited = r.broadcast(r.state.df.select("node"), r.state("visited"))
-      val next = Fixpoint.checkpoint(e
+      val next = Materialize.checkpoint(e
           .join(visited.withColumnRenamed("node", "src"), "src")
           .join(visited.withColumnRenamed("node", "dst"), Seq("dst"),
             "left_anti")
           .select(col("dst").as("node")).distinct()
           .withColumn("dist", lit(r.index.toLong)),
         frontier)
-      Fixpoint.State(r.state.df.union(next.df),
+      Materialize.State(r.state.df.union(next.df),
         Map("frontier" -> next("frontier"),
           "visited" -> (r.state("visited") + next("frontier"))))
     }.df
@@ -191,7 +191,7 @@ object Graph {
     require(k >= 1 && maxRounds >= 1 && maxRounds <= 30,
       s"need k >= 1, 1 <= maxRounds <= 30; got k=$k rounds=$maxRounds")
     val e = Fixpoint.edges(undirected(edges, srcCol, dstCol), "d")
-    def degrees(in: DataFrame) = Fixpoint.checkpoint(
+    def degrees(in: DataFrame) = Materialize.checkpoint(
       in.groupBy(col("d").as("node")).agg(count(lit(1)).as("deg")),
       count(lit(1)).as("nodes"), count(when(col("deg") >= k, 1)).as("kept"))
     // "active" is |active set|: a round converges when it keeps them all
@@ -269,7 +269,7 @@ object Graph {
     require(rounds >= 1 && rounds <= 30,
       s"need 1 <= rounds <= 30, got $rounds")
     val e = Fixpoint.edges(undirected(edges, srcCol, dstCol), "d")
-    def labels(df: DataFrame) = Fixpoint.checkpoint(df,
+    def labels(df: DataFrame) = Materialize.checkpoint(df,
       count(lit(1)).as("nodes"),
       count(when(col("label") =!= col("own"), 1)).as("changed"))
     val seed = labels(e.groupBy(col("d").as("node"))

@@ -1,5 +1,6 @@
 package graft.relational
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1097,15 +1098,14 @@ object Relational {
     require(keys.nonEmpty && aggExprs.nonEmpty)
     val bucket = (col(timeCol) - pmod(col(timeCol), lit(step)))
       .as("bucket")
-    // persisted: the aggregate feeds BOTH the span/grid branch and the
-    // value join — without it each branch re-scans and re-aggregates the
-    // raw data (2 full scans at 100 TB). The cached relation is
-    // keys × occupied buckets, tiny next to the input; first branch
-    // evaluated populates it, the other reads it.
-    val agg = df.filter(col(timeCol).isNotNull)
+    // shared: the aggregate feeds BOTH the span/grid branch and the value
+    // join — without it each branch re-scans and re-aggregates the raw
+    // data (2 full scans at 100 TB). The lazy checkpoint is keys × occupied
+    // buckets, tiny next to the input; the context cleaner frees it with
+    // the returned plan (no cache entry stays pinned).
+    val agg = Materialize.shared(df.filter(col(timeCol).isNotNull)
       .groupBy((keys.map(col) :+ bucket): _*)
-      .agg(aggExprs.head, aggExprs.tail: _*)
-      .persist()
+      .agg(aggExprs.head, aggExprs.tail: _*))
     val valueCols = agg.columns.drop(keys.size + 1).toSeq
     val grid = agg.groupBy(keys.map(col): _*)
       .agg(min("bucket").as("__lo"), max("bucket").as("__hi"))
@@ -1181,27 +1181,29 @@ object Relational {
     // collapse ("aaa" has one deletion variant, not three), so the cap
     // counts STRINGS per variant and the candidate join never fans out
     // over duplicate witnesses
-    val variants = strs.select(col("__s"),
+    val variants = Materialize.shared(strs.select(col("__s"),
       explode(transform(sequence(lit(0), length(col("__s"))),
         i => when(i === 0, col("__s")).otherwise(
           concat(substring(col("__s"), lit(1), i - 1),
             col("__s").substr(i + 1, length(col("__s"))))))).as("__v"))
-      .distinct()
-      .persist()
+      .distinct())
     // hot-variant cap (the Dedup.capBuckets contract, VERDICT r6 #4): a
     // variant shared by k strings forms a k² candidate set — an
     // adversarial vocabulary (many strings one substitution apart at the
     // same position) makes one variant quadratic. Variants over the cap
-    // are dropped WITH A LOGGED COUNT after the result materializes;
+    // are dropped WITH A LOGGED COUNT, observed on the result's job;
     // pairs witnessed only by a dropped variant are lost (raise the cap
     // to restore coverage)
-    val counts = variants.groupBy("__v").count().persist()
+    val counts = variants.groupBy("__v").count()
+      .observe(s"editDistancePairs-${java.util.UUID.randomUUID}",
+        count(when(col("count") > maxVariantBucket, 1))
+          .as("editDistancePairs.dropped"))
     val ok = variants
       .join(counts.filter(col("count") <= maxVariantBucket).select("__v"),
         Seq("__v"))
     val a = ok.select(col("__s").as("a"), col("__v"))
     val b = ok.select(col("__s").as("b"), col("__v"))
-    val result = a.join(b, Seq("__v"))
+    val result = Materialize.checkpoint(a.join(b, Seq("__v"))
       .filter(col("a") < col("b"))
       // free prefilter BEFORE the distinct and the levenshtein verify:
       // |len(a) − len(b)| > 1 cannot be within edit distance 1
@@ -1212,17 +1214,15 @@ object Relational {
       // evaluations by the witness count; kept verify-after-distinct)
       .filter(abs(length(col("a")) - length(col("b"))) <= 1)
       .select("a", "b").distinct()
-      .filter(levenshtein(col("a"), col("b")) <= 1)
-      .localCheckpoint(eager = true)
-    val dropped = counts.filter(col("count") > maxVariantBucket).count()
+      .filter(levenshtein(col("a"), col("b")) <= 1))
+    val dropped = result.stats.getOrElse("editDistancePairs.dropped", 0L)
     if (dropped > 0)
       log.warn(s"editDistancePairs: $dropped variant bucket(s) over the " +
         s"$maxVariantBucket-string cap were dropped; pairs witnessed only " +
         "by those variants were not compared (raise maxVariantBucket to " +
         "restore coverage)")
-    variants.unpersist(blocking = false)
-    counts.unpersist(blocking = false)
-    result
+    Materialize.release(variants)
+    result.df
   }
 
   /** Cross-relation FUZZY equi-join: all (left value, right value) pairs
@@ -1246,7 +1246,7 @@ object Relational {
     * bounding the worst case at cap² candidates per variant; a
     * length-difference prefilter prunes candidates before the
     * levenshtein verify. The result is eagerly materialized (pair-sized)
-    * so the internal caches release before return. */
+    * so the shared variant relations release before return. */
   def fuzzyJoin(
       left: DataFrame, right: DataFrame, leftCol: String, rightCol: String,
       maxDist: Int = 1, maxLen: Int = 32,
@@ -1270,26 +1270,27 @@ object Relational {
           explode(array_distinct(delOne(col("__v1")))).as("__v"))
       lvlD.select(col("__s").as(out), col("__v")).distinct()
     }
-    val la = neighborhood(left, leftCol, "a").persist()
-    val rb = neighborhood(right, rightCol, "b").persist()
+    val la = Materialize.shared(neighborhood(left, leftCol, "a"))
+    val rb = Materialize.shared(neighborhood(right, rightCol, "b"))
     // hot-variant cap (the Dedup.capBuckets contract, VERDICT r6 #4): a
     // variant shared by ka left × kb right strings forms a ka·kb
     // candidate set — an adversarial vocabulary (many strings one
     // substitution apart at the same position, e.g. shared long prefixes
     // with short varying tails) makes single variants quadratic. Variants
-    // over the cap ON EITHER SIDE are dropped WITH A LOGGED COUNT after
-    // the result materializes; pairs witnessed only by a dropped variant
-    // are lost (raise maxVariantBucket to restore coverage). Only
+    // over the cap ON EITHER SIDE are dropped WITH A LOGGED COUNT,
+    // observed on the result's job; pairs witnessed only by a dropped
+    // variant are lost (raise maxVariantBucket to restore coverage). Only
     // variants present on BOTH sides matter (inner counts join — a
     // one-sided variant forms no pair)
-    val counts = la.groupBy("__v").agg(count(lit(1)).as("__ca"))
+    val hot = col("__ca") > maxVariantBucket || col("__cb") > maxVariantBucket
+    val okV = la.groupBy("__v").agg(count(lit(1)).as("__ca"))
       .join(rb.groupBy("__v").agg(count(lit(1)).as("__cb")), Seq("__v"))
-      .persist()
-    val okV = counts
-      .filter(col("__ca") <= maxVariantBucket &&
-        col("__cb") <= maxVariantBucket)
+      .observe(s"fuzzyJoin-${java.util.UUID.randomUUID}",
+        count(when(hot, 1)).as("fuzzyJoin.dropped"))
+      .filter(!hot)
       .select("__v")
-    val result = la.join(okV, Seq("__v")).join(rb, Seq("__v"))
+    val result = Materialize.checkpoint(la.join(okV, Seq("__v"))
+      .join(rb, Seq("__v"))
       // free prefilter BEFORE the distinct and the levenshtein verify:
       // |len(a) − len(b)| > maxDist cannot be within maxDist
       // (round 11 note: verify-before-distinct measured slower — see
@@ -1298,19 +1299,15 @@ object Relational {
       .filter(abs(length(col("a")) - length(col("b"))) <= maxDist)
       .select("a", "b").distinct()
       .withColumn("dist", levenshtein(col("a"), col("b")))
-      .filter(col("dist") <= maxDist)
-      .localCheckpoint(eager = true)
-    val dropped = counts.filter(col("__ca") > maxVariantBucket ||
-      col("__cb") > maxVariantBucket).count()
+      .filter(col("dist") <= maxDist))
+    val dropped = result.stats.getOrElse("fuzzyJoin.dropped", 0L)
     if (dropped > 0)
       log.warn(s"fuzzyJoin: $dropped variant bucket(s) over the " +
         s"$maxVariantBucket-string cap were dropped; pairs witnessed only " +
         "by those variants were not compared (raise maxVariantBucket to " +
         "restore coverage)")
-    la.unpersist(blocking = false)
-    rb.unpersist(blocking = false)
-    counts.unpersist(blocking = false)
-    result
+    Materialize.release(la, rb)
+    result.df
   }
 
   /** Rolling active users (DAU/WAU/MAU family): for every period in the

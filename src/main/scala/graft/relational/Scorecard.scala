@@ -245,11 +245,10 @@ object Scorecard {
         s"$nPreBins")
     val scale = 1L << 20
     val x = col(featureCol).cast("double")
-    val q = df
+    val q = graft.util.Materialize.shared(df
       .filter(x.isNotNull && !isnan(x) && col(labelCol).isNotNull)
       .select(floor(x * scale).cast("long").as("__xq"),
-        col(labelCol).cast("long").as("__y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col(labelCol).cast("long").as("__y")))
     val mm = q.agg(min("__xq").as("lo"), max("__xq").as("hi")).head()
     val lo = mm.getAs[Long]("lo")
     val range = mm.getAs[Long]("hi") - lo + 1L
@@ -268,7 +267,7 @@ object Scorecard {
       .withColumn("ord",
         if (decreasing) -col("bin") else col("bin"))
       .localCheckpoint(true) // <= nPreBins rows feeding four consumers
-    q.unpersist(blocking = false)
+    graft.util.Materialize.release(q)
     // prefix sums + closed minimax over the bounded bin relation
     val wc = graft.util.BoundedWindow.global(col("ord"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

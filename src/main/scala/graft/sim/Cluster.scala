@@ -1,8 +1,8 @@
 package graft.sim
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed Lloyd's k-means over an `array<float>` embedding column —
   * the corpus-clustering primitive behind cluster-balanced sampling and
@@ -80,7 +80,7 @@ object Cluster {
   def fitQuantized(df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, dims: Int): Array[Array[Double]] = {
     val (q, cents) = fitCentroids(df, idCol, vecCol, k, iters, dims)
-    q.unpersist(blocking = false)
+    Materialize.release(q)
     cents
   }
 
@@ -97,19 +97,20 @@ object Cluster {
     val out = q.select(col(idCol), argminCol(cents, dims).as("cluster"))
     // the final pass recomputes from source if the cache is gone — correct
     // either way; don't pin executor memory past the fit
-    q.unpersist(blocking = false)
+    Materialize.release(q)
     out
   }
 
-  /** The Lloyd's fit: returns the persisted quantized projection and the
-    * final centroids (caller unpersists). */
+  /** The Lloyd's fit: returns the quantized projection, persisted for the
+    * iterations and the caller's lazy plan over it, and the final
+    * centroids (the caller releases the projection). */
   private def fitCentroids(df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, dims: Int): (DataFrame, Array[Array[Double]]) = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dims >= 1, s"dims must be >= 1, got $dims")
-    val q = quantized(df, idCol, vecCol, dims)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val q = Materialize.shared(quantized(df, idCol, vecCol, dims),
+      recomputable = true)
     // init: the first k rows by id — deterministic and oracle-replayable
     // (k rows of driver state; the fetch is a TakeOrdered, not a sort)
     var cents: Array[Array[Double]] = q.orderBy(col(idCol)).limit(k).collect()
@@ -163,7 +164,7 @@ object Cluster {
       .topKPerGroup(scored, Seq("cluster"), "__negdist", idCol, topN)
       .select(col("cluster"), col(idCol), (-col("score")).as("dist2"),
         col("rank").cast("long").as("rank"))
-    q.unpersist(blocking = false)
+    Materialize.release(q)
     out
   }
 

@@ -3,6 +3,7 @@ package graft.sim
 import java.nio.file.{Files, Paths}
 
 import graft.functions.GraftFunctions
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -78,7 +79,7 @@ object Similarity {
 
   /** Shared finish: bounded-heap top-k per query, exploded to
     * (query, id, sim, rank) rows. */
-  private[sim] def topKFinish(
+  private[graft] def topKFinish(
       scored: DataFrame, qIdCol: String, idCol: String, k: Int): DataFrame =
     scored.groupBy(col(qIdCol))
       .agg(graft.functions.TopK.collect_top_k(col("__cand"), k).as("__top"))
@@ -213,10 +214,9 @@ object Similarity {
     // cap data-side hot buckets (same guard as the dedup paths): a bucket of
     // B docs costs B × (colliding queries) cosines; capped coverage is
     // logged, never silent
-    val dataBuckets = bucketed(data, idCol, vecCol, probe = false).persist()
-    val counts = dataBuckets.groupBy("band", "bucket").count()
-    val (ok, countsCached, reportDrops) = graft.text.Dedup.capBuckets(
-      dataBuckets, counts, maxBucket, "lshTopK")
+    val dataBuckets = Materialize.shared(
+      bucketed(data, idCol, vecCol, probe = false))
+    val ok = graft.text.Dedup.capBuckets(dataBuckets, maxBucket, "lshTopK")
     // the distinct dedups (qid, candidate) pairs only — carrying the
     // ~512 B qvec array through it would double the shuffle bytes for zero
     // extra dedup power (qvec is constant per qid); the vector comes back
@@ -239,12 +239,10 @@ object Similarity {
       .select(col(qIdCol),
         struct(cosine(col(vecCol), col(qVecCol)).as("score"),
           col(idCol).cast("long").as("id")).as("__cand"))
-    val result = topKFinish(scored, qIdCol, idCol, k).persist()
-    result.count() // materialize, then release the bucket cache
-    reportDrops()
-    dataBuckets.unpersist()
-    countsCached.unpersist()
-    result
+    val result = Materialize.checkpoint(topKFinish(scored, qIdCol, idCol, k))
+    graft.text.Dedup.reportDrops(result.stats, maxBucket, "lshTopK")
+    Materialize.release(dataBuckets)
+    result.df
   }
 
   /** IVF-style ANN top-k (one-shot convenience): fit an [[IvfIndex]], query
@@ -259,10 +257,25 @@ object Similarity {
       k: Int, nCentroids: Int = 16, nProbe: Int = 4,
       seed: Long = 42L): DataFrame = {
     val index = IvfIndex.fit(data, idCol, vecCol, nCentroids, seed = seed)
-    val result = index.query(queries, qIdCol, qVecCol, k, nProbe).persist()
-    result.count() // materialize before releasing the index's assignments
+    val result = Materialize.checkpoint(
+      index.query(queries, qIdCol, qVecCol, k, nProbe))
     index.release()
-    result
+    result.df
+  }
+
+  /** `(idCol, band, bucket)` rows of the `nPlanes`-hyperplane signature,
+    * `nPlanes / bands` bits per band: the candidate buckets of the LSH
+    * self-joins. */
+  private[graft] def idBuckets(data: DataFrame, idCol: String,
+      vecCol: String, dim: Int, nPlanes: Int, bands: Int, seed: Long,
+      portable: Boolean): DataFrame = {
+    require(nPlanes % bands == 0)
+    val r = nPlanes / bands
+    withSignature(data, vecCol, "__sig", nPlanes, dim, seed, portable)
+      .select(col(idCol), explode(array((0 until bands).map(j =>
+        struct(lit(j).as("band"), shiftrightunsigned(col("__sig"), j * r)
+          .bitwiseAND(lit((1L << r) - 1)).as("bucket"))): _*)).as("__b"))
+      .select(col(idCol), col("__b.band"), col("__b.bucket"))
   }
 
   /** Embedding near-duplicate pairs: LSH self-join buckets, then exact
@@ -272,45 +285,32 @@ object Similarity {
       dim: Int, threshold: Double = 0.95, nPlanes: Int = 16, bands: Int = 4,
       maxBucket: Int = 1000, seed: Long = 42L,
       portable: Boolean = false): DataFrame = {
-    require(nPlanes % bands == 0)
-    val r = nPlanes / bands
-    val mask = (1L << r) - 1
-    // persisted: the signature projection feeds the count aggregate and both
+    // shared: the signature projection feeds the count aggregate and both
     // sides of the pair join. IDs ONLY — carrying the vector payload
     // through the bucket join + distinct would shuffle ~vecBytes × bands ×
     // bucketSize per row; the vectors come back via two narrow joins on
     // the deduped pair set instead (same trade as lshTopK's query side)
-    val buckets = withSignature(data, vecCol, "__sig",
-        nPlanes, dim, seed, portable)
-      .select(col(idCol), explode(array((0 until bands).map(j =>
-        struct(lit(j).as("band"),
-          shiftrightunsigned(col("__sig"), j * r).bitwiseAND(lit(mask))
-            .as("bucket"))): _*)).as("__b"))
-      .select(col(idCol), col("__b.band"), col("__b.bucket"))
-      .persist()
-    val counts = buckets.groupBy("band", "bucket").count()
-    val (ok, countsCached, reportDrops) = graft.text.Dedup.capBuckets(
-      buckets, counts, maxBucket, "embeddingNearDup")
+    val buckets = Materialize.shared(
+      idBuckets(data, idCol, vecCol, dim, nPlanes, bands, seed, portable))
+    val ok = graft.text.Dedup.capBuckets(buckets, maxBucket,
+      "embeddingNearDup")
     val a = ok.select(col("band"), col("bucket"), col(idCol).as("id_a"))
     val b = ok.select(col("band"), col("bucket"), col(idCol).as("id_b"))
     val pairs = a.join(b, Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
     val vecs = data.select(col(idCol), col(vecCol))
-    val result = pairs
+    val result = Materialize.checkpoint(pairs
       .join(vecs.select(col(idCol).as("id_a"), col(vecCol).as("__v_a")),
         "id_a")
       .join(vecs.select(col(idCol).as("id_b"), col(vecCol).as("__v_b")),
         "id_b")
       .withColumn("sim", cosine(col("__v_a"), col("__v_b")))
       .filter(col("sim") >= threshold)
-      .select("id_a", "id_b", "sim")
-      .persist()
-    result.count() // materialize, then release the bucket cache
-    reportDrops()
-    buckets.unpersist()
-    countsCached.unpersist()
-    result
+      .select("id_a", "id_b", "sim"))
+    graft.text.Dedup.reportDrops(result.stats, maxBucket, "embeddingNearDup")
+    Materialize.release(buckets)
+    result.df
   }
   /** Self kNN join: the `k` nearest neighbors of EVERY row, over the
     * same LSH-bucketed candidate generation as [[embeddingNearDup]] —
@@ -328,23 +328,12 @@ object Similarity {
       k: Int, dim: Int, nPlanes: Int = 16, bands: Int = 4,
       maxBucket: Int = 1000, seed: Long = 42L,
       portable: Boolean = false): DataFrame = {
-    require(nPlanes % bands == 0)
-    val r = nPlanes / bands
-    val mask = (1L << r) - 1
     // id-only buckets; vectors rejoin on the deduped pair set (see
     // embeddingNearDup — shuffling vector payloads through the bucket
     // join is the one way this goes quadratic in bytes)
-    val buckets = withSignature(data, vecCol, "__sig",
-        nPlanes, dim, seed, portable)
-      .select(col(idCol), explode(array((0 until bands).map(j =>
-        struct(lit(j).as("band"),
-          shiftrightunsigned(col("__sig"), j * r).bitwiseAND(lit(mask))
-            .as("bucket"))): _*)).as("__b"))
-      .select(col(idCol), col("__b.band"), col("__b.bucket"))
-      .persist()
-    val counts = buckets.groupBy("band", "bucket").count()
-    val (ok, countsCached, reportDrops) = graft.text.Dedup.capBuckets(
-      buckets, counts, maxBucket, "knnJoin")
+    val buckets = Materialize.shared(
+      idBuckets(data, idCol, vecCol, dim, nPlanes, bands, seed, portable))
+    val ok = graft.text.Dedup.capBuckets(buckets, maxBucket, "knnJoin")
     val a = ok.select(col("band"), col("bucket"), col(idCol))
     val b = ok.select(col("band"), col("bucket"), col(idCol).as("nbr_id"))
     val pairs = a.join(b, Seq("band", "bucket"))
@@ -358,29 +347,25 @@ object Similarity {
       .select(col(idCol),
         struct(cosine(col("__v"), col("__v_n")).as("score"),
           col("nbr_id").cast("long").as("id")).as("__cand"))
-    val result = topKFinish(scored, idCol, "nbr_id", k).persist()
-    result.count() // materialize, then release the bucket cache
-    reportDrops()
+    val result = Materialize.checkpoint(topKFinish(scored, idCol, "nbr_id", k))
+    graft.text.Dedup.reportDrops(result.stats, maxBucket, "knnJoin")
     // LOUD coverage check (VERDICT r6 #3): when the cap removes most of
     // the corpus from candidate generation, the result is sparser, not
     // faster — a per-bucket drop log line is easy to miss, so a majority
     // drop escalates to ERROR with the fix spelled out (the ×16 stress
     // failure mode: defaults overflowed every bucket and the run "sped
     // up" by comparing nothing)
-    val cov = countsCached.agg(
-      sum(when(col("count") > maxBucket, col("count")).otherwise(lit(0L))),
-      sum(col("count"))).collect()(0)
-    if (!cov.isNullAt(1) && cov.getLong(1) > 0) {
-      val frac = cov.getLong(0).toDouble / cov.getLong(1)
+    val entries = result.stats.getOrElse("knnJoin.entries", 0L)
+    if (entries > 0) {
+      val frac = result.stats("knnJoin.droppedEntries").toDouble / entries
       if (frac > 0.5)
         log.error(f"knnJoin: ${frac * 100}%.0f%% of bucket entries were " +
           s"dropped by the $maxBucket cap — recall has collapsed. Raise " +
           "bits per band (nPlanes/bands) for this corpus size, or use " +
           "knnJoinAuto to derive them from the corpus count")
     }
-    buckets.unpersist()
-    countsCached.unpersist()
-    result
+    Materialize.release(buckets)
+    result.df
   }
 
   /** Two-stage retrieval: coarse shortlist on Johnson–Lindenstrauss
@@ -462,14 +447,14 @@ object Similarity {
     val pairs = embeddingNearDup(data, idCol, vecCol, dim, threshold,
       nPlanes, bands, maxBucket, seed, portable)
     val comp = graft.text.Dedup.duplicateComponents(pairs)
+    // the components are materialized (a driver-built relation or the
+    // loop's checkpoint): nothing reads the pairs any more
+    Materialize.release(pairs)
     // no broadcast hint: the drop list is data-dependent (could be most of
     // the corpus in a heavily-duplicated crawl) — let AQE size the join
     val drops = comp.filter(col("id_a") =!= col("component"))
       .select(col("id_a").as(idCol))
-    val result = data.join(drops, Seq(idCol), "left_anti").persist()
-    result.count() // materialize before releasing the pairs cache
-    pairs.unpersist(blocking = false)
-    result
+    data.join(drops, Seq(idCol), "left_anti")
   }
 }
 
@@ -575,18 +560,17 @@ class IvfIndex private[sim] (
     * pruned-probe recall degrades. */
   def add(newData: DataFrame): IvfIndex = {
     val newAssigned = IvfIndex.assign(newData, idCol, vecCol, centroids)
-    val merged = assigned
+    // materialized BEFORE the parent's cache is released
+    val merged = Materialize.persist(assigned
       .join(newAssigned.select(col(idCol)).distinct(), Seq(idCol),
         "left_anti")
-      .unionByName(newAssigned)
-      .persist()
-    merged.count() // materialize BEFORE releasing the parent cache
-    assigned.unpersist(blocking = false)
+      .unionByName(newAssigned)).df
+    release()
     new IvfIndex(centroids, merged, idCol, vecCol)
   }
 
   /** Free the persisted assignment cache. */
-  def release(): Unit = { assigned.unpersist(); () }
+  def release(): Unit = Materialize.release(assigned)
 }
 
 object IvfIndex {
@@ -617,10 +601,9 @@ object IvfIndex {
         if (norm == 0) v else v.map(_ / norm)
       }
     val centroids = lloyds(sampled, nCentroids, maxIter, seed)
-    val index = new IvfIndex(centroids,
-      assign(data, idCol, vecCol, centroids).persist(), idCol, vecCol)
-    index.assigned.count()
-    index
+    new IvfIndex(centroids,
+      Materialize.persist(assign(data, idCol, vecCol, centroids)).df,
+      idCol, vecCol)
   }
 
   /** Reload a saved index (see [[IvfIndex.save]]). */

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.util.Materialize
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -53,8 +54,9 @@ object Streaming {
       .drop("__fp")
 
   /** Freeze a reference corpus into its MinHash band buckets — the STATIC
-    * side of streaming near-dup detection, fitted once (persisted and
-    * materialized; release with `unpersist()` when retired). Hot buckets
+    * side of streaming near-dup detection, fitted once (owned state,
+    * persisted and materialized; free it with
+    * [[graft.util.Materialize.release]] when retired). Hot buckets
     * over `maxBucket` docs are dropped at freeze time with a logged
     * warning, same guard as the batch dedup paths: one degenerate
     * boilerplate bucket would otherwise multiply every matching stream row
@@ -63,22 +65,20 @@ object Streaming {
       corpus: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
       maxBucket: Int = 10000): DataFrame = {
-    // persisted BEFORE capBuckets: the shingle+minhash pass over the whole
+    // shared BEFORE capBuckets: the shingle+minhash pass over the whole
     // corpus otherwise runs twice (once for the counts aggregate, once for
-    // the surviving-buckets join) — same guard as lshTopK's dataBuckets
-    val buckets = graft.text.Dedup
+    // the surviving-buckets join) — same guard as lshTopK's dataBuckets;
+    // persisted, so a lost block of the frozen state is recomputable
+    val buckets = Materialize.shared(graft.text.Dedup
       .bandBuckets(corpus, textCol, idCol, numHashes, bands, shingleK)
-      .withColumnRenamed(idCol, "corpus_id")
-      .persist()
-    val counts = buckets.groupBy("band", "bucket").count()
-    val (ok, countsCached, reportDrops) = graft.text.Dedup.capBuckets(
-      buckets, counts, maxBucket, "freezeNearDupCorpus")
-    val frozen = ok.select("corpus_id", "band", "bucket").persist()
-    frozen.count()
-    reportDrops()
-    buckets.unpersist()
-    countsCached.unpersist()
-    frozen
+      .withColumnRenamed(idCol, "corpus_id"), recomputable = true)
+    val frozen = Materialize.persist(graft.text.Dedup
+      .capBuckets(buckets, maxBucket, "freezeNearDupCorpus")
+      .select("corpus_id", "band", "bucket"))
+    graft.text.Dedup.reportDrops(frozen.stats, maxBucket,
+      "freezeNearDupCorpus")
+    Materialize.release(buckets)
+    frozen.df
   }
 
   /** Near-duplicate candidates of a live stream against a frozen corpus:

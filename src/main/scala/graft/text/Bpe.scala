@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.util.Fixpoint
+import graft.util.Materialize
 
 import scala.collection.mutable
 
@@ -31,7 +31,7 @@ import scala.collection.mutable
   *      (word, cnt) — BPE fits on word frequencies, not raw text, so every
   *      later round touches only distinct words.
   *   2. The table is collected behind a guard of 1 M words
-  *      ([[graft.util.Fixpoint.guardedCollect]]: one job, two under AQE
+  *      ([[graft.util.Materialize.guardedCollect]]: one job, two under AQE
   *      with the aggregate's map stage). When it fits, the
   *      merges are learned on the driver ([[learn]]): weighted pair counts
   *      kept incrementally — a round touches only the words that contain
@@ -146,7 +146,7 @@ object Bpe {
       .select(explode(bpeWords(textCol)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
     val guard = driverMaxWords.value
-    Fixpoint.guardedCollect(words, guard) match {
+    Materialize.guardedCollect(words, guard) match {
       case Right(rows) =>
         log.info(s"Bpe.fitBpe: words=${rows.length} guard=$guard path=driver")
         learn(rows.map(r => (r.getString(0), r.getLong(1))), numMerges)
@@ -182,12 +182,12 @@ object Bpe {
         cur = cur.select(col("cnt"), applyMerge(col("seg"), l, r).as("seg"))
         if (merges.size % CheckpointEvery == 0) {
           cur = cur.localCheckpoint(true)
-          Fixpoint.release(prevCheckpoint)
+          Materialize.release(prevCheckpoint)
           prevCheckpoint = cur
         }
       }
     }
-    Fixpoint.release(prevCheckpoint)
+    Materialize.release(prevCheckpoint)
     merges.toSeq
   }
 

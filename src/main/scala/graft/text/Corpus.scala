@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -513,9 +514,9 @@ object Corpus {
             transform(TextFunctions.tokensLower(col(text)), t => xxhash64(t)),
             k))).as("__sh"))
     // bench shingles feed the count, the bloom build, and the exact join —
-    // persist the (small) benchmark side once
-    val benchSh = shingled(bench, benchTextCol, benchIdCol, "bench_id")
-      .distinct().persist()
+    // share the (small) benchmark side
+    val benchSh = Materialize.shared(
+      shingled(bench, benchTextCol, benchIdCol, "bench_id").distinct())
     val n = math.max(1L, benchSh.count())
     val numBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(n, fpp)
@@ -535,16 +536,14 @@ object Corpus {
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
           Bridge.expression(lit(bloomBytes)),
           Bridge.expression(col("__sh"))))
-    val result = shingled(docs, textCol, idCol, idCol)
+    val result = Materialize.checkpoint(shingled(docs, textCol, idCol, idCol)
       .filter(mightContain)
       .join(broadcast(benchSh), "__sh")
       .groupBy(col(idCol), col("bench_id"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .persist()
-    result.count() // materialize, then release the bench-shingle cache
-    benchSh.unpersist(blocking = false)
-    result
+      .filter(col("n_shared") >= minShared))
+    Materialize.release(benchSh)
+    result.df
   }
 
   /** DSIR-style importance score (Xie et al. 2023, "Data Selection for

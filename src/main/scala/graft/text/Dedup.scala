@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.functions.GraftFunctions
-import graft.util.Fixpoint
+import graft.util.{Fixpoint, Materialize}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,26 +15,34 @@ import org.apache.spark.sql.functions._
 object Dedup {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Cap hot buckets and report the ones dropped, so capped coverage is
-    * never silent (a dropped bucket means those docs were not compared —
-    * SCALE.md). Returns (surviving buckets, cached counts, report
-    * thunk): callers invoke the thunk AFTER materializing their result —
-    * the drop count then reads the already-cached aggregate (~free)
-    * instead of forcing an extra scheduling wave up front — and unpersist
-    * the counts frame last. */
+  /** `buckets` (`band`, `bucket`, …) without the hot buckets, those over
+    * `maxBucket` rows. The bucket-count aggregate observes the buckets
+    * dropped, the entries they held and all entries (`<what>.dropped`,
+    * `.droppedEntries`, `.entries`) on the job that materializes the
+    * result ([[graft.util.Materialize]]), and [[reportDrops]] logs them:
+    * capped coverage is never silent (a dropped bucket means those docs
+    * were not compared — SCALE.md) and costs no job of its own. */
   private[graft] def capBuckets(
-      buckets: DataFrame, counts: DataFrame, maxBucket: Int,
-      what: String): (DataFrame, DataFrame, () => Unit) = {
-    val cached = counts.persist()
-    val report = () => {
-      val dropped = cached.filter(col("count") > maxBucket).count()
-      if (dropped > 0)
-        log.warn(s"$what: $dropped bucket(s) over the $maxBucket-doc cap " +
-          "were dropped; their members were not compared (raise maxBucket " +
-          "or add bands to restore coverage)")
-    }
-    (buckets.join(cached.filter(col("count") <= maxBucket),
-      Seq("band", "bucket")), cached, report)
+      buckets: DataFrame, maxBucket: Int, what: String): DataFrame = {
+    val hot = col("count") > maxBucket
+    val counts = buckets.groupBy("band", "bucket").count()
+      .observe(s"$what-cap-${java.util.UUID.randomUUID}",
+        count(when(hot, 1)).as(s"$what.dropped"),
+        sum(when(hot, col("count"))).as(s"$what.droppedEntries"),
+        sum(col("count")).as(s"$what.entries"))
+    buckets.join(counts.filter(!hot), Seq("band", "bucket"))
+  }
+
+  /** Logs the buckets [[capBuckets]] dropped, read off `stats` of the job
+    * that materialized its result (absent when that job never read the
+    * counts: then nothing was compared). */
+  private[graft] def reportDrops(
+      stats: Map[String, Long], maxBucket: Int, what: String): Unit = {
+    val dropped = stats.getOrElse(s"$what.dropped", 0L)
+    if (dropped > 0)
+      log.warn(s"$what: $dropped bucket(s) over the $maxBucket-doc cap " +
+        "were dropped; their members were not compared (raise maxBucket " +
+        "or add bands to restore coverage)")
   }
 
   /** Exact dedup: keep the row with the smallest `orderCol` per key group.
@@ -64,6 +72,12 @@ object Dedup {
       transform(TextFunctions.tokensLower(text), t => xxhash64(t)),
       numHashes, shingleK)
 
+  /** `(id, __sig)`: the MinHash signature of every doc that has a shingle. */
+  private[text] def signed(df: DataFrame, textCol: String, id: Column,
+      numHashes: Int, shingleK: Int): DataFrame =
+    df.select(id, minHashSignature(col(textCol), numHashes, shingleK)
+      .as("__sig")).filter(size(col("__sig")) > 0)
+
   /** (id, band, bucket) rows for a signature frame (`idCol`, `__sig`). */
   private[text] def bucketsOfSig(
       withSig: DataFrame, idCol: String, bands: Int, r: Int): DataFrame =
@@ -83,12 +97,8 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val withSig = df
-      .withColumn("__sig",
-        minHashSignature(col(textCol), numHashes, shingleK))
-      .filter(size(col("__sig")) > 0)
-      .select(col(idCol), col("__sig"))
-    bucketsOfSig(withSig, idCol, bands, numHashes / bands)
+    bucketsOfSig(signed(df, textCol, col(idCol), numHashes, shingleK),
+      idCol, bands, numHashes / bands)
   }
 
   /** MinHash + banded LSH near-duplicate candidate pairs.
@@ -121,23 +131,15 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     // signatures feed three join branches (buckets, both pair sides) —
-    // persist so the hash pass runs once, not 3×
-    val withSig = df
-      .withColumn("__sig",
-        minHashSignature(col(textCol), numHashes, shingleK))
-      .filter(size(col("__sig")) > 0)
-      .select(col(idCol), col("__sig"))
-      .persist()
-
-    val buckets = bucketsOfSig(withSig, idCol, bands, r)
+    // shared so the hash pass runs once, not 3×
+    val withSig = Materialize.shared(
+      signed(df, textCol, col(idCol), numHashes, shingleK))
 
     // aggregate + join (not a window): pre-combines map-side and lets AQE
     // broadcast the small count relation; a window over (band,bucket) would
     // funnel each hot bucket through one task.
-    val counts = buckets.groupBy("band", "bucket").count()
-    val (ok0, countsCached, reportDrops) = capBuckets(buckets, counts,
-      maxBucket, "minHashLSH")
-    val ok = ok0.select(col("band"), col("bucket"), col(idCol))
+    val ok = capBuckets(bucketsOfSig(withSig, idCol, bands, r), maxBucket,
+      "minHashLSH").select(col("band"), col("bucket"), col(idCol))
 
     val pairs = ok.toDF("band", "bucket", "id_a")
       .join(ok.toDF("band", "bucket", "id_b"), Seq("band", "bucket"))
@@ -149,7 +151,7 @@ object Dedup {
         (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v).cast("double") / lit(numHashes.toDouble)
 
-    val result = (if (!withEstimate) pairs
+    val result = Materialize.checkpoint(if (!withEstimate) pairs
       else pairs
         .join(withSig.select(col(idCol).as("id_a"), col("__sig").as("__sig_a")),
           "id_a")
@@ -158,14 +160,9 @@ object Dedup {
         .withColumn("est_jaccard", est)
         .filter(col("est_jaccard") >= minEstJaccard)
         .select("id_a", "id_b", "est_jaccard"))
-      .persist()
-    // the returned frame stays persisted (callers filter/join it repeatedly;
-    // unpersist it when done) — materializing lets the signature cache go
-    result.count()
-    reportDrops()
-    withSig.unpersist()
-    countsCached.unpersist()
-    result
+    reportDrops(result.stats, maxBucket, "minHashLSH")
+    Materialize.release(withSig)
+    result.df
   }
 
   /** Engine-portable 60-bit token hash — the value DuckDB recomputes as
@@ -215,8 +212,8 @@ object Dedup {
       maxBucket: Int = 1000,
       tag: String = "hammingNearDup"): DataFrame = {
     require(maxHamming <= 3, "4x16 banding guarantees recall only to 3 bits")
-    val sigs = sigsIn.select(col(idCol), col(sigCol).as("__sim"))
-      .persist()
+    val sigs = Materialize.shared(
+      sigsIn.select(col(idCol), col(sigCol).as("__sim")))
     val buckets = sigs.select(col(idCol), col("__sim"),
       explode(array((0 until 4).map(j => struct(lit(j).as("band"),
         // mask, NOT `% 65536`: % keeps the dividend's sign, so a negative
@@ -226,25 +223,20 @@ object Dedup {
           .as("bucket"))
       ): _*)).as("__b"))
       .select(col(idCol), col("__sim"), col("__b.band"), col("__b.bucket"))
-    val counts = buckets.groupBy("band", "bucket").count()
-    val (ok, countsCached, reportDrops) = capBuckets(buckets, counts,
-      maxBucket, tag)
+    val ok = capBuckets(buckets, maxBucket, tag)
     val a = ok.select(col("band"), col("bucket"), col(idCol).as("id_a"),
       col("__sim").as("__sim_a"))
     val b = ok.select(col("band"), col("bucket"), col(idCol).as("id_b"),
       col("__sim").as("__sim_b"))
-    val result = a.join(b, Seq("band", "bucket"))
+    val result = Materialize.checkpoint(a.join(b, Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("hamming",
         bit_count(col("__sim_a").bitwiseXOR(col("__sim_b"))))
       .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming").distinct()
-      .persist()
-    result.count() // materialize, then release the signature cache
-    reportDrops()
-    sigs.unpersist()
-    countsCached.unpersist()
-    result
+      .select("id_a", "id_b", "hamming").distinct())
+    reportDrops(result.stats, maxBucket, tag)
+    Materialize.release(sigs)
+    result.df
   }
 
   /** Cross-document repeated-span statistics — the word-k-gram
@@ -273,8 +265,9 @@ object Dedup {
       transform(TextFunctions.tokensLower(col(textCol)), t => xxhash64(t)), k)
     val grams = when(size(grams0) >= 1, array_distinct(grams0))
     // the gram explode feeds the frequency aggregate and the mark join —
-    // persist so the shingle+md5 pass runs once
-    val g = df.select(col(idCol), explode(grams).as("__gram")).persist()
+    // shared so the shingle+md5 pass runs once
+    val g = Materialize.shared(
+      df.select(col(idCol), explode(grams).as("__gram")))
     // per-doc-distinct grams → count(*) per gram == containing-doc count;
     // filtered to the duplicated grams only, the relation is small and AQE
     // broadcasts the mark join — the big frame then shuffles just ONCE
@@ -283,14 +276,12 @@ object Dedup {
       .filter(col("__n_docs") >= minDocs)
       .withColumn("__is_dup", lit(1))
       .drop("__n_docs")
-    val result = g.join(dupGrams, Seq("__gram"), "left")
+    val result = Materialize.checkpoint(g.join(dupGrams, Seq("__gram"), "left")
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_grams"), count(col("__is_dup")).as("n_dup_grams"))
-      .withColumn("dup_frac", col("n_dup_grams") / col("n_grams"))
-      .persist()
-    result.count() // materialize, then release the gram cache
-    g.unpersist(blocking = false)
-    result
+      .withColumn("dup_frac", col("n_dup_grams") / col("n_grams")))
+    Materialize.release(g)
+    result.df
   }
 
   /** WITHIN-document repeated-span statistics — the self-repetition
@@ -350,23 +341,20 @@ object Dedup {
       t => lower(t))
     val gramHashes = graft.functions.GraftFunctions.shingle_hashes(
       transform(lowerToks, t => xxhash64(t)), k)
-    // persisted: the tokenize+hash+shingle explode feeds BOTH the ownership
+    // shared: the tokenize+hash+shingle explode feeds BOTH the ownership
     // aggregate and the claim join (same guard as duplicateSpans)
-    val g = df.select(col(idCol),
-      posexplode(gramHashes).as(Seq("__pos0", "__gh")))
-      .persist()
+    val g = Materialize.shared(df.select(col(idCol),
+      posexplode(gramHashes).as(Seq("__pos0", "__gh"))))
     val owners = g.groupBy("__gh").agg(min(col(idCol)).as("__owner"))
-    // 1-based span starts claimed by an EARLIER doc; bounded by doc length
-    val dupStarts = g.join(owners, "__gh")
+    // 1-based span starts claimed by an EARLIER doc; bounded by doc length.
+    // Checkpointed, the small claimed-positions relation rides the
+    // returned lazy plan (docs-with-dups × positions) and the big gram
+    // explode is released
+    val dupStarts = Materialize.checkpoint(g.join(owners, "__gh")
       .filter(col("__owner") < col(idCol))
       .groupBy(idCol)
-      .agg(collect_set(col("__pos0") + 1).as("__starts"))
-      .persist()
-    // materialize the small claimed-positions relation, then release the
-    // big gram explode; dupStarts stays cached inside the returned plan
-    // (bounded: docs-with-dups × positions) until the plan is dropped
-    dupStarts.count()
-    g.unpersist(blocking = false)
+      .agg(collect_set(col("__pos0") + 1).as("__starts"))).df
+    Materialize.release(g)
     val starts = coalesce(col("__starts"),
       array().cast("array<int>"))
     val toks = TextFunctions.tokens(col(textCol))
@@ -407,10 +395,9 @@ object Dedup {
       .filter(df.columns.contains)
     require(reserved.isEmpty, s"$reserved reserved by dedupLines")
     val sepRe = java.util.regex.Pattern.quote(lineSep)
-    val lines = df.select(col(idCol),
+    val lines = Materialize.shared(df.select(col(idCol),
         posexplode(split(col(textCol), sepRe)).as(Seq("__pos", "__line")))
-      .withColumn("__key", xxhash64(trim(col("__line"))))
-      .persist()
+      .withColumn("__key", xxhash64(trim(col("__line")))))
     val firsts = lines.filter(trim(col("__line")) =!= "")
       .groupBy("__key")
       .agg(min(struct(col(idCol).as("id"), col("__pos").as("pos")))
@@ -425,17 +412,15 @@ object Dedup {
             col("__line").as("l")))), s => s.getField("l")), lineSep)
           .as("clean_text"),
         count(lit(1)).as("__kept"))
-    val result = df
+    val result = Materialize.checkpoint(df
       .select(col(idCol),
         size(split(col(textCol), sepRe)).cast("long").as("n_lines"))
       .join(rebuilt, Seq(idCol), "left")
       .select(col(idCol), coalesce(col("clean_text"), lit("")).as("clean_text"),
         col("n_lines"),
-        (col("n_lines") - coalesce(col("__kept"), lit(0L))).as("n_removed"))
-      .persist()
-    result.count() // materialize, then release the line explode
-    lines.unpersist(blocking = false)
-    result
+        (col("n_lines") - coalesce(col("__kept"), lit(0L))).as("n_removed")))
+    Materialize.release(lines)
+    result.df
   }
 
   /** Within-DOCUMENT repeated-line removal — the doc-local half of C4's
@@ -537,11 +522,10 @@ object Dedup {
       t => lower(t))
     val gramHashes = graft.functions.GraftFunctions.shingle_hashes(
       transform(lowerToks, t => xxhash64(t)), k)
-    // persisted: the tokenize+hash+shingle explode feeds both the
+    // shared: the tokenize+hash+shingle explode feeds both the
     // ownership aggregate and the claim join (same guard as the siblings)
-    val g = df.select(col(idCol),
-        posexplode(gramHashes).as(Seq("__pos0", "__gh")))
-      .persist()
+    val g = Materialize.shared(df.select(col(idCol),
+        posexplode(gramHashes).as(Seq("__pos0", "__gh"))))
     val owners = g.groupBy("__gh").agg(min(col(idCol)).as("__owner"))
     val claimed = g.join(owners, "__gh")
       .filter(col("__owner") < col(idCol))
@@ -551,7 +535,7 @@ object Dedup {
     // which is the island-0 seed both engines agree on
     val brk = when(
       col("__start") > lag(col("__start"), 1).over(w) + k, 1L).otherwise(0L)
-    val result = claimed
+    val result = Materialize.checkpoint(claimed
       .withColumn("__island", sum(brk).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy(col(idCol), col("__island"))
@@ -559,11 +543,9 @@ object Dedup {
         (max("__start") + (k - 1)).as("span_end"),
         count(lit(1)).as("n_grams"))
       .withColumn("span_tokens", col("span_end") - col("span_start") + 1)
-      .drop("__island")
-      .persist()
-    result.count() // materialize, then release the gram explode
-    g.unpersist(blocking = false)
-    result
+      .drop("__island"))
+    Materialize.release(g)
+    result.df
   }
 
   /** Connected components over a near-duplicate pair list: every doc in a
@@ -594,7 +576,7 @@ object Dedup {
     // pays NO shuffle at all — symmetrization + distinct happen only if
     // the edge list overflows into the iterative path. The pairs are
     // materialized once, their count observed on that same job.
-    val undirected = Fixpoint.checkpoint(pairs.select(
+    val undirected = Materialize.checkpoint(pairs.select(
         col(idA).cast("long").as("a"), col(idB).cast("long").as("b"))
       .filter(col("a") =!= col("b")), count(lit(1)).as("pairs"))
     if (undirected("pairs") <= maxCollect) {
@@ -613,6 +595,7 @@ object Dedup {
         val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
+      Materialize.release(undirected.df)
       val nodes = (parent.keys ++ parent.values).toArray.distinct
       val rows = nodes.map(n => Row(n, find(n))).toSeq
       import org.apache.spark.sql.types._
@@ -628,7 +611,7 @@ object Dedup {
     // intra-cluster pairs) converge on the first confirmation round
     val edges = Fixpoint.edges(undirected.df
       .union(undirected.df.select(col("b").as("a"), col("a").as("b"))), "a")
-    def labels(df: DataFrame) = Fixpoint.checkpoint(df,
+    def labels(df: DataFrame) = Materialize.checkpoint(df,
       count(lit(1)).as("nodes"),
       count(when(col("component") =!= col("own"), 1)).as("changed"))
     val seed = labels(edges.groupBy(col("a").as("node"))
@@ -643,6 +626,7 @@ object Dedup {
         .groupBy(col("a").as("node"), col("own"))
         .agg(least(col("own"), min("nbr")).as("component")))
     }
+    Materialize.release(undirected.df)
     if (out("changed") > 0L)
       log.warn(s"duplicateComponents: not converged after $maxIter rounds " +
         "(a duplicate chain longer than maxIter links); labels are an " +
@@ -766,12 +750,13 @@ object Dedup {
       transform(TextFunctions.tokensLower(col(textCol)), t => xxhash64(t)),
       shingleK)
     // one shingle pass feeds sizes, document frequencies, and both join
-    // sides — persist it
-    val g = df.select(col(idCol).as("__id"),
-        explode(array_distinct(grams0)).as("__g"))
-      .persist()
+    // sides — shared; the hot grams are counted on the result's job
+    val g = Materialize.shared(df.select(col(idCol).as("__id"),
+        explode(array_distinct(grams0)).as("__g")))
     val sizes = g.groupBy("__id").agg(count(lit(1)).as("__n"))
-    val dfreq = g.groupBy("__g").agg(count(lit(1)).as("__df")).persist()
+    val dfreq = g.groupBy("__g").agg(count(lit(1)).as("__df"))
+      .observe(s"containmentPairs-${java.util.UUID.randomUUID}",
+        count(when(col("__df") > maxPostings, 1)).as("containmentPairs.hot"))
     val ok = g.join(
       dfreq.filter(col("__df").between(2, maxPostings)).select("__g"),
       "__g")
@@ -779,7 +764,7 @@ object Dedup {
       .join(ok.select(col("__g"), col("__id").as("id_b")), "__g")
       .filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared_grams"))
-    val result = shared
+    val result = Materialize.checkpoint(shared
       .join(sizes.select(col("__id").as("id_a"), col("__n").as("n_grams_a")),
         "id_a")
       .join(sizes.select(col("__id").as("id_b"), col("__n").as("n_grams_b")),
@@ -788,17 +773,14 @@ object Dedup {
         least(col("n_grams_a"), col("n_grams_b")))
       .filter(col("containment") >= threshold)
       .select("id_a", "id_b", "n_grams_a", "n_grams_b", "shared_grams",
-        "containment")
-      .persist()
-    result.count() // materialize, then release + report drops from cache
-    val hot = dfreq.filter(col("__df") > maxPostings).count()
+        "containment"))
+    val hot = result.stats.getOrElse("containmentPairs.hot", 0L)
     if (hot > 0)
       log.warn(s"containmentPairs: $hot gram(s) over the $maxPostings-doc " +
         "posting cap were dropped from intersection counts (containment " +
         "may undercount; raise maxPostings to restore exactness)")
-    g.unpersist(blocking = false)
-    dfreq.unpersist(blocking = false)
-    result
+    Materialize.release(g)
+    result.df
   }
 
   /** Pairwise SOURCE overlap matrix: for every pair of values of
@@ -824,11 +806,10 @@ object Dedup {
     val grams0 = graft.functions.GraftFunctions.shingle_hashes(
       transform(TextFunctions.tokensLower(col(textCol)), t => xxhash64(t)),
       shingleK)
-    val g = df.filter(col(srcCol).isNotNull)
+    val g = Materialize.shared(df.filter(col(srcCol).isNotNull)
       .select(col(srcCol).as("__s"),
         explode(array_distinct(grams0)).as("__g"))
-      .distinct()
-      .persist()
+      .distinct())
     val sizes = g.groupBy("__s").agg(count(lit(1)).as("__n"))
     val shared = g.select(col("__g"), col("__s").as("src_a"))
       .join(g.select(col("__g"), col("__s").as("src_b")), "__g")
@@ -837,7 +818,8 @@ object Dedup {
     // all pairs from the tiny sizes relation; zero-overlap pairs coalesce
     val a = sizes.select(col("__s").as("src_a"), col("__n").as("n_grams_a"))
     val b = sizes.select(col("__s").as("src_b"), col("__n").as("n_grams_b"))
-    val result = a.crossJoin(b).filter(col("src_a") < col("src_b"))
+    val result = Materialize.checkpoint(a.crossJoin(b)
+      .filter(col("src_a") < col("src_b"))
       .join(shared, Seq("src_a", "src_b"), "left")
       .withColumn("shared_grams", coalesce(col("shared_grams"), lit(0L)))
       .withColumn("jaccard", col("shared_grams").cast("double") /
@@ -845,11 +827,9 @@ object Dedup {
       .withColumn("containment", col("shared_grams").cast("double") /
         least(col("n_grams_a"), col("n_grams_b")))
       .select("src_a", "src_b", "n_grams_a", "n_grams_b", "shared_grams",
-        "jaccard", "containment")
-      .persist()
-    result.count() // materialize, then release the gram cache
-    g.unpersist(blocking = false)
-    result
+        "jaccard", "containment"))
+    Materialize.release(g)
+    result.df
   }
 
   /** Duplicate-cluster size distribution — the "how much of my corpus

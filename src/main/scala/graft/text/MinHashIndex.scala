@@ -2,6 +2,7 @@ package graft.text
 
 import java.nio.file.{Files, Paths}
 
+import graft.util.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
@@ -46,16 +47,10 @@ class MinHashIndex private[text] (
       withEstimate: Boolean = true): DataFrame = {
     require(newIdCol != idCol,
       s"rename the batch id column (both sides named '$idCol')")
-    val bSig = batch
-      .withColumn("__sig",
-        Dedup.minHashSignature(col(textCol), numHashes, shingleK))
-      .filter(size(col("__sig")) > 0)
-      .select(col(newIdCol), col("__sig"))
-      .persist()
-    val corpusBuckets = Dedup.bucketsOfSig(signatures, idCol, bands, r)
-    val counts = corpusBuckets.groupBy("band", "bucket").count()
-    val (ok, countsCached, reportDrops) = Dedup.capBuckets(
-      corpusBuckets, counts, maxBucket, "MinHashIndex.matchNew")
+    val bSig = Materialize.shared(
+      Dedup.signed(batch, textCol, col(newIdCol), numHashes, shingleK))
+    val ok = Dedup.capBuckets(Dedup.bucketsOfSig(signatures, idCol, bands, r),
+      maxBucket, "MinHashIndex.matchNew")
     val batchBuckets = Dedup.bucketsOfSig(bSig, newIdCol, bands, r)
     val pairs = ok.select(col("band"), col("bucket"), col(idCol))
       .join(batchBuckets.select(col("band"), col("bucket"), col(newIdCol)),
@@ -71,7 +66,7 @@ class MinHashIndex private[text] (
       zip_with(col("__sig_n"), col("__sig_c"),
         (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v).cast("double") / lit(numHashes.toDouble)
-    val result = (if (!withEstimate) pairs
+    val result = Materialize.checkpoint(if (!withEstimate) pairs
       else pairs
         .join(bSig.select(col(newIdCol), col("__sig").as("__sig_n")),
           newIdCol)
@@ -79,24 +74,17 @@ class MinHashIndex private[text] (
           idCol)
         .withColumn("est_jaccard", est)
         .select(col(newIdCol), col(idCol), col("est_jaccard")))
-      .persist()
-    result.count() // materialize, then release the batch signature cache
-    reportDrops()
-    bSig.unpersist(blocking = false)
-    countsCached.unpersist(blocking = false)
-    result
+    Dedup.reportDrops(result.stats, maxBucket, "MinHashIndex.matchNew")
+    Materialize.release(bSig)
+    result.df
   }
 
   /** Grow the index with a signed batch (e.g. yesterday's deduped ingest):
     * signs `batch` and unions — the corpus half stays as-is, so `add` is
     * one batch scan, never a corpus re-sign. */
   def add(batch: DataFrame, textCol: String, batchIdCol: String): MinHashIndex = {
-    val bSig = batch
-      .withColumn("__sig",
-        Dedup.minHashSignature(col(textCol), numHashes, shingleK))
-      .filter(size(col("__sig")) > 0)
-      .select(col(batchIdCol).as(idCol), col("__sig"))
-      .persist()
+    val bSig = Materialize.shared(Dedup.signed(batch, textCol,
+      col(batchIdCol).as(idCol), numHashes, shingleK), recomputable = true)
     // idempotence: re-adding an already-indexed batch must be a no-op —
     // a duplicated signature row would double every estimate rejoin and
     // double-bucket its bands. Shape: one scan of the index's id column
@@ -111,33 +99,30 @@ class MinHashIndex private[text] (
     // the handoff — otherwise matchNew on the returned index re-signs the
     // batch on every evaluation (twice per call: bucket side + estimate
     // rejoin) and release() on the child never frees the parent (ADVICE r5)
-    val unioned = signatures.unionByName(fresh).persist()
-    unioned.count()
-    bSig.unpersist(blocking = false)
-    signatures.unpersist(blocking = false)
+    val unioned = Materialize.persist(signatures.unionByName(fresh)).df
+    Materialize.release(bSig)
+    release()
     new MinHashIndex(unioned, idCol, numHashes, bands, shingleK)
   }
 
   /** The index's banded buckets in the frozen-corpus shape
     * [[graft.streaming.Streaming.nearDupCandidates]] consumes
     * (`(corpus_id, band, bucket)`, hot buckets capped with a logged
-    * warning, persisted + materialized — release with `.unpersist()`).
+    * warning): owned state, persisted and materialized — free it with
+    * [[graft.util.Materialize.release]] when retired.
     * Ties the lifecycle together: fit or load an index once, serve BOTH
     * batch `matchNew` and streaming near-dup from the same saved
     * signatures — the corpus text is never re-signed for either. */
   def frozenBuckets(maxBucket: Int = 10000): DataFrame = {
+    // the buckets are a projection of the persisted signatures: the
+    // count aggregate and the join both read the signature cache
     val buckets = Dedup.bucketsOfSig(signatures, idCol, bands, r)
       .withColumnRenamed(idCol, "corpus_id")
-      .persist()
-    val counts = buckets.groupBy("band", "bucket").count()
-    val (ok, countsCached, reportDrops) = Dedup.capBuckets(
-      buckets, counts, maxBucket, "MinHashIndex.frozenBuckets")
-    val frozen = ok.select("corpus_id", "band", "bucket").persist()
-    frozen.count()
-    reportDrops()
-    buckets.unpersist()
-    countsCached.unpersist()
-    frozen
+    val frozen = Materialize.persist(
+      Dedup.capBuckets(buckets, maxBucket, "MinHashIndex.frozenBuckets")
+        .select("corpus_id", "band", "bucket"))
+    Dedup.reportDrops(frozen.stats, maxBucket, "MinHashIndex.frozenBuckets")
+    frozen.df
   }
 
   /** Persist: `<path>/signatures/` parquet + `<path>/index.json`. */
@@ -152,8 +137,8 @@ class MinHashIndex private[text] (
     Files.writeString(Paths.get(s"$path/index.json"), compact(render(json)))
   }
 
-  /** Free the persisted signature cache (fit-path indexes only). */
-  def release(): Unit = { signatures.unpersist(); () }
+  /** Free the persisted signature cache. */
+  def release(): Unit = Materialize.release(signatures)
 }
 
 object MinHashIndex {
@@ -165,13 +150,8 @@ object MinHashIndex {
       numHashes: Int = 64, bands: Int = 16,
       shingleK: Int = 3): MinHashIndex = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val sigs = df
-      .withColumn("__sig",
-        Dedup.minHashSignature(col(textCol), numHashes, shingleK))
-      .filter(size(col("__sig")) > 0)
-      .select(col(idCol), col("__sig"))
-      .persist()
-    sigs.count()
+    val sigs = Materialize.persist(
+      Dedup.signed(df, textCol, col(idCol), numHashes, shingleK)).df
     new MinHashIndex(sigs, idCol, numHashes, bands, shingleK)
   }
 

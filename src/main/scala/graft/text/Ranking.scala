@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -24,20 +25,17 @@ object Ranking {
     * Output: (idCol, n_tokens, avg_logprob). */
   def unigramLogProb(
       df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val tk = df.select(col(idCol),
-      explode(TextFunctions.tokensLower(col(textCol))).as("__t"))
-      .persist()
+    val tk = Materialize.shared(df.select(col(idCol),
+      explode(TextFunctions.tokensLower(col(textCol))).as("__t")))
     val freq = tk.groupBy("__t").agg(count(lit(1)).as("__c"))
     val total = tk.count().toDouble
-    val result = tk.join(freq, "__t")
+    val result = Materialize.checkpoint(tk.join(freq, "__t")
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_tokens"),
         avg(log(col("__c").cast("double") / lit(total)))
-          .as("avg_logprob"))
-      .persist()
-    result.count() // materialize, then release the token explode
-    tk.unpersist(blocking = false)
-    result
+          .as("avg_logprob")))
+    Materialize.release(tk)
+    result.df
   }
 
   /** Per-document top-`kTerms` terms by TF-IDF — the classic keyword /
@@ -60,25 +58,22 @@ object Ranking {
       kTerms: Int): DataFrame = {
     require(kTerms >= 1, "need kTerms >= 1")
     val nDocs = df.count().toDouble
-    val tf = df.select(col(idCol),
+    val tf = Materialize.shared(df.select(col(idCol),
         explode(TextFunctions.tokensLower(col(textCol))).as("__t"))
       .groupBy(col(idCol), col("__t"))
-      .agg(count(lit(1)).as("tf"))
-      .persist()
+      .agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("__t").agg(count(lit(1)).as("__df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol))
       .orderBy(round(col("tfidf"), 6).desc, col("__t").asc)
-    val result = tf.join(dfreq, "__t")
+    val result = Materialize.checkpoint(tf.join(dfreq, "__t")
       .withColumn("tfidf", col("tf") * log(lit(nDocs) / col("__df")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= kTerms)
       .select(col(idCol), col("__t").as("term"), col("tf"),
-        col("tfidf"), col("rank"))
-      .persist()
-    result.count() // materialize, then release the doc-term relation
-    tf.unpersist(blocking = false)
-    result
+        col("tfidf"), col("rank")))
+    Materialize.release(tf)
+    result.df
   }
 
   /** Bigram upgrade of [[unigramLogProb]]: each document's mean bigram
@@ -105,7 +100,7 @@ object Ranking {
     // string work per doc — measured 4× on the full-corpus bench);
     // zip_with over two slices of the materialized array is O(tokens)
     val ts = col("__ts")
-    val bg = df
+    val bg = Materialize.shared(df
       .select(col(idCol), TextFunctions.tokensLower(col(textCol)).as("__ts"))
       .select(col(idCol),
         explode(when(size(ts) >= 2,
@@ -113,20 +108,17 @@ object Ranking {
             slice(ts, lit(1), size(ts) - 1),
             slice(ts, lit(2), size(ts) - 1),
             (a, b) => struct(a.as("w1"), b.as("w2"))))).as("__bg"))
-      .select(col(idCol), col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2"))
-      .persist()
+      .select(col(idCol), col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2")))
     val freq = bg.groupBy("__w1", "__w2").agg(count(lit(1)).as("__c12"))
     val probs = freq.withColumn("__c1",
       sum(col("__c12")).over(org.apache.spark.sql.expressions.Window
         .partitionBy("__w1")))
-    val result = bg.join(probs, Seq("__w1", "__w2"))
+    val result = Materialize.checkpoint(bg.join(probs, Seq("__w1", "__w2"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_bigrams"),
-        avg(log(col("__c12") / col("__c1"))).as("avg_logprob"))
-      .persist()
-    result.count() // materialize, then release the bigram explode
-    bg.unpersist(blocking = false)
-    result
+        avg(log(col("__c12") / col("__c1"))).as("avg_logprob")))
+    Materialize.release(bg)
+    result.df
   }
 
   /** Corpus-wide PMI collocation mining: the top-`topK` adjacent token
@@ -150,10 +142,9 @@ object Ranking {
     require(minCount >= 1, "need minCount >= 1")
     require(topK >= 1, "need topK >= 1")
     val ts = col("__ts")
-    val arrs = df
+    val arrs = Materialize.shared(df
       .select(filter(TextFunctions.tokensLower(col(textCol)),
-        t => t =!= "").as("__ts"))
-      .persist()
+        t => t =!= "").as("__ts")))
     val uni = arrs.select(explode(ts).as("__t"))
       .groupBy("__t").agg(count(lit(1)).as("__c"))
     val big = arrs
@@ -165,18 +156,16 @@ object Ranking {
       .groupBy("w1", "w2").agg(count(lit(1)).as("pair_cnt"))
       .filter(col("pair_cnt") >= minCount)
     val n = arrs.select(sum(size(ts))).head().getLong(0).toDouble
-    val result = big
+    val result = Materialize.checkpoint(big
       .join(uni.select(col("__t").as("w1"), col("__c").as("__c1")), "w1")
       .join(uni.select(col("__t").as("w2"), col("__c").as("__c2")), "w2")
       .select(col("w1"), col("w2"), col("pair_cnt"),
         round(log(col("pair_cnt") * lit(n) /
           (col("__c1") * col("__c2"))), 6).as("pmi"))
       .orderBy(col("pmi").desc, col("w1"), col("w2"))
-      .limit(topK)
-      .persist()
-    result.count() // materialize, then release the token arrays
-    arrs.unpersist(blocking = false)
-    result
+      .limit(topK))
+    Materialize.release(arrs)
+    result.df
   }
 
   /** Which tokens most distinguish corpus A from corpus B: per-token
@@ -203,25 +192,22 @@ object Ranking {
       .select(explode(TextFunctions.tokensLower(col(textCol))).as("token"))
       .filter(col("token") =!= "")
       .groupBy("token").agg(count(lit(1)).as(out))
-    val joined = counts(dfA, "cnt_a")
+    val joined = Materialize.shared(counts(dfA, "cnt_a")
       .join(counts(dfB, "cnt_b"), Seq("token"), "full_outer")
-      .na.fill(0L, Seq("cnt_a", "cnt_b"))
-      .persist()
+      .na.fill(0L, Seq("cnt_a", "cnt_b")))
     val row = joined
       .agg(sum("cnt_a"), sum("cnt_b"), count(lit(1))).head()
     val denA = lit(row.getLong(0).toDouble + row.getLong(2))
     val denB = lit(row.getLong(1).toDouble + row.getLong(2))
     val pa = (col("cnt_a") + lit(1.0)) / denA
     val pb = (col("cnt_b") + lit(1.0)) / denB
-    val result = joined
+    val result = Materialize.checkpoint(joined
       .select(col("token"), col("cnt_a"), col("cnt_b"),
         round(pa * log(pa / pb), 9).as("kl_term"))
       .orderBy(col("kl_term").desc, col("token"))
-      .limit(topK)
-      .persist()
-    result.count() // materialize, then release the joined counts
-    joined.unpersist(blocking = false)
-    result
+      .limit(topK))
+    Materialize.release(joined)
+    result.df
   }
 
   /** BM25 score of every document against a fixed bag of query `terms`.
@@ -327,7 +313,7 @@ object Ranking {
       .groupBy("__t").agg(count(lit(1)).as(out))
     // vocabulary-bounded; materialized ONCE — totals and the finish both
     // read the checkpoint, so each corpus is scanned exactly once (the
-    // divergingTerms persist discipline)
+    // divergingTerms sharing discipline)
     val joined = counts(dfA, "__ca")
       .join(counts(dfB, "__cb"), Seq("__t"), "full_outer")
       .na.fill(0L, Seq("__ca", "__cb"))
@@ -402,23 +388,21 @@ object Ranking {
   def stupidBackoffScore(train: DataFrame, df: DataFrame, textCol: String,
       idCol: String, alpha: Double = 0.4): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha in (0,1], got $alpha")
-    val tg3 = trigramStream(train, textCol, idCol).persist()
+    val tg3 = Materialize.shared(trigramStream(train, textCol, idCol))
     val c3 = tg3.groupBy("__w1", "__w2", "__w3")
       .agg(count(lit(1)).as("__c3"))
     val ts = col("__ts")
-    val bg = train
+    val bg = Materialize.shared(train
       .select(TextFunctions.tokensLower(col(textCol)).as("__ts"))
       .select(explode(when(size(ts) >= 2,
         zip_with(
           slice(ts, lit(1), size(ts) - 1),
           slice(ts, lit(2), size(ts) - 1),
           (a, b) => struct(a.as("w1"), b.as("w2"))))).as("__bg"))
-      .select(col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2"))
-      .persist()
+      .select(col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2")))
     val c2 = bg.groupBy("__w1", "__w2").agg(count(lit(1)).as("__c2"))
-    val uni = train
-      .select(explode(TextFunctions.tokensLower(col(textCol))).as("__w"))
-      .persist()
+    val uni = Materialize.shared(train
+      .select(explode(TextFunctions.tokensLower(col(textCol))).as("__w")))
     val c1 = uni.groupBy("__w").agg(count(lit(1)).as("__c1"))
     val n = uni.agg(count(lit(1)).as("__nt"))
 
@@ -432,7 +416,7 @@ object Ranking {
       .when(col("__c1w").isNotNull,
         a2 * col("__c1w") / col("__nt"))
       .otherwise(a2 * lit(0.5) / col("__nt"))
-    val result = scoreTg
+    val result = Materialize.checkpoint(scoreTg
       .join(c3, Seq("__w1", "__w2", "__w3"), "left")
       .join(c2.withColumnRenamed("__c2", "__c2p"),
         Seq("__w1", "__w2"), "left")
@@ -445,13 +429,9 @@ object Ranking {
       .crossJoin(broadcast(n))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_trigrams"),
-        round(avg(log(s)), 6).as("avg_logscore"))
-      .persist()
-    result.count() // materialize, then release the n-gram streams
-    tg3.unpersist(blocking = false)
-    bg.unpersist(blocking = false)
-    uni.unpersist(blocking = false)
-    result
+        round(avg(log(s)), 6).as("avg_logscore")))
+    Materialize.release(tg3, bg, uni)
+    result.df
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher 2009) — the

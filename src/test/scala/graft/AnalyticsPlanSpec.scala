@@ -113,7 +113,7 @@ class AnalyticsPlanSpec extends SparkSpec {
     // exactly the unified engine's two window passes (cross-bin offsets
     // + within-bin) — a third means a pass leaked in above the engine
     assert("Window \\[".r.findAllIn(p).size == 2, p.take(1200))
-    graft.util.Fixpoint.release(counts)
+    graft.util.Materialize.release(counts)
   }
 
   test("ksExact binned path: per-bin partitioned windows, only " +
@@ -130,7 +130,7 @@ class AnalyticsPlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), p.take(400))
     // the unified engine's two window passes, nothing more
     assert("Window \\[".r.findAllIn(p).size == 2, p.take(1200))
-    graft.util.Fixpoint.release(counts)
+    graft.util.Materialize.release(counts)
   }
 
   test("quantileNormalize: the rank lookup is a BIN EQUI-join — no " +
@@ -148,7 +148,7 @@ class AnalyticsPlanSpec extends SparkSpec {
       p.contains("ShuffledHashJoin [__bin") ||
       p.contains("SortMergeJoin [__bin"), p.take(1200))
     assert(!p.contains("CartesianProduct"), p.take(1200))
-    graft.util.Fixpoint.release(counts)
+    graft.util.Materialize.release(counts)
     // under the guard the driver finishes the map: no join at all
     val (local, _) = graft.relational.Eval.quantileNormalizePlan(df,
       "x", "g", target = "b", ref = "a", maxDistinctBroadcast = 100000)

@@ -29,9 +29,26 @@ class CollocationsSpec extends SparkSpec {
   }
 
   test("final cut is a TakeOrderedAndProject, not a global sort") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
     val df = Seq("a b a b").toDF("text")
-    val plan = Ranking.collocations(df, "text", 1, 5)
-      .queryExecution.executedPlan.toString
+    // the result is a local checkpoint: its own plan is a scan of the
+    // checkpoint, so read the executed plan of the job that wrote it
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ql = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") { plans.add(qe.executedPlan.toString); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(ql)
+    try {
+      Ranking.collocations(df, "text", 1, 5)
+      val deadline = System.nanoTime() + 10000000000L
+      while (!plans.toArray.exists(_.toString.contains("pair_cnt")) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(ql)
+    val plan = plans.toArray.map(_.toString).filter(_.contains("pair_cnt"))
+      .lastOption.getOrElse("")
     assert(plan.contains("TakeOrderedAndProject"), plan.take(400))
   }
 }

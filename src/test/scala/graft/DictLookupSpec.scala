@@ -280,8 +280,8 @@ class DictLookupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("a reloaded pipeline serves the same rows; its aggregate lookup " +
-      "reads its parquet once") {
+  test("a reloaded pipeline serves the same rows; transforming it again " +
+      "plans without a job") {
     val fit = train(2600, 1001)
     val df = serve(fit)
     val model = DFPipeline(

@@ -100,46 +100,6 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def strEdges(es: Seq[(String, String)]) = es.toDF("src", "dst")
 
-  // ---- checkpoint ----------------------------------------------------------
-
-  test("checkpoint observes its counters on the one job that materializes " +
-      "it; a sum over no rows reads 0; the session stays serializable") {
-    val df = spark.range(0, 500, 1, 4).toDF("x")
-      .withColumn("odd", col("x") % 2 === 1)
-    val s = Fixpoint.checkpoint(df, count(lit(1)).as("n"),
-      count(when(col("odd"), 1)).as("odd"),
-      sum(when(col("x") < 0, col("x"))).as("neg"))
-    assert(s.stats == Map("n" -> df.count(),
-      "odd" -> df.filter(col("odd")).count(), "neg" -> 0L))
-    assert(s("n") == 500L && s("odd") == 250L)
-    assert(s.df.collect().toSeq == df.collect().toSeq)
-    assert(s.df.queryExecution.executedPlan.toString.contains("Scan Existing"))
-    // the session still serializes (Spark ML model closures capture it)
-    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream())
-      .writeObject(spark)
-  }
-
-  test("release frees a local checkpoint's blocks without the " +
-      "truncated-lineage WARN that RDD.unpersist logs") {
-    def checkpointed() = {
-      val cp = spark.range(0, 40, 1, 2).toDF("x").localCheckpoint(eager = true)
-      (cp, cp.queryExecution.logical
-        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd)
-    }
-    val warning = "lineage has been truncated"
-    val sc = spark.sparkContext
-    val (cp, rdd) = checkpointed()
-    assert(sc.getPersistentRDDs.contains(rdd.id))
-    val (_, lines) = logLines(rdd.getClass.getName)(Fixpoint.release(cp))
-    assert(!lines.exists(_.contains(warning)), lines)
-    assert(!sc.getPersistentRDDs.contains(rdd.id))
-    // the capture sees the WARN when the RDD API releases a checkpoint
-    val (_, other) = checkpointed()
-    val (_, warned) = logLines(other.getClass.getName)(
-      other.unpersist(blocking = false))
-    assert(warned.exists(_.contains(warning)), warned)
-  }
-
   // ---- the five loops against plain-Scala replays ------------------------
 
   test("pageRank equals an integer replay on a hub graph and edge cases, " +

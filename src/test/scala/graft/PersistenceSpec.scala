@@ -330,6 +330,28 @@ class PersistenceSpec extends SparkSpec {
       .forall(r => r.isNullAt(0) && r.isNullAt(1)))
   }
 
+  test("global min/max over byte and short columns and a decimal sum " +
+      "save and reload with equal rows and column types") {
+    val df = spark.range(0, 40).select(col("id").as("row_id"),
+      (col("id") % 7 - 3).cast("byte").as("b"),
+      (col("id") * 311 % 1000 - 500).cast("short").as("h"),
+      (col("id") * 1.25 - 7).cast("decimal(12,3)").as("m"))
+    val model = DFPipeline(
+      new Aggregator(Seq("b", "h"), Seq("b_min", "h_min"), Nil, "min"),
+      new Aggregator(Seq("b", "h"), Seq("b_max", "h_max"), Nil, "max"),
+      new Aggregator(Seq("m"), Seq("m_sum"), Nil, "sum")).fit(df)
+    val loaded = assertReloadsExactly(model, df, "graft_global_narrow")
+    val out = loaded.transform(df)
+    assert(Seq("b_min", "b_max", "h_min", "h_max", "m_sum")
+      .map(dtypeOf(out, _)) == Seq("tinyint", "tinyint", "smallint",
+        "smallint", dtypeOf(model.transform(df), "m_sum")))
+    val r = out.head()
+    assert(r.getAs[Byte]("b_min") == -3.toByte &&
+      r.getAs[Short]("h_max") == df.agg(max("h")).head().getShort(0))
+    assert(r.getAs[java.math.BigDecimal]("m_sum") ==
+      df.agg(sum("m")).head().getDecimal(0))
+  }
+
   test("a standalone grouped Aggregator fits in one guarded collect, and " +
       "its lookup saves inline") {
     val df = fraudFrame(2000)
