@@ -153,7 +153,7 @@ class ComplementLabelEncoder(
 
 object ComplementLabelEncoder {
   val Sentinel = "extra_category_"
-  val DefaultMaxCollect = 1000000L
+  val DefaultMaxCollect = Materialize.DriverMaxRows
 }
 
 class ComplementLabelEncoderModel(
@@ -373,7 +373,7 @@ class Aggregator(
 }
 
 object Aggregator {
-  val CollectMax = 1000000L
+  val CollectMax = Materialize.DriverMaxRows
 
   /** The reference accepts arbitrary callables for `func`
     * (`Series.aggregate`, Aggregator.py:73-74); the Spark analog is a

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.operators.ComplementLabelEncoder.DefaultMaxCollect
+import graft.util.Materialize.DriverMaxRows
 
 /** THE shared strictly-below cumulative engine: given a DISTINCT-value
   * relation (one row per value — per group when `groupCols` is
@@ -118,7 +118,7 @@ private[graft] object CumulativeEngine {
     require(measures.nonEmpty, "need at least one measure column")
     // whatever the caller's threshold, at most the collect bound the
     // fitted encoders use (1 M rows) comes to the driver
-    val guard = math.max(0L, math.min(maxRows, DefaultMaxCollect))
+    val guard = math.max(0L, math.min(maxRows, DriverMaxRows))
     val (ranked, seen) = graft.util.Materialize.guardedCollect(counts, guard,
         (groupCols :+ valueCol).map(col): _*) match {
       case Right(rows) =>

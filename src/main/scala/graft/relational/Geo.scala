@@ -146,7 +146,8 @@ object Geo {
     * distributed min-label propagation above it. */
   def densityClusters(points: DataFrame, idCol: String,
       latCdegCol: String, lonCdegCol: String, radiusCdeg: Int,
-      minPts: Int, maxCollect: Long = 1000000L): DataFrame = {
+      minPts: Int,
+      maxCollect: Long = graft.util.Materialize.DriverMaxRows): DataFrame = {
     require(minPts >= 2, s"minPts must be >= 2, got $minPts")
     val pairs = Materialize.shared(distanceJoin(points, idCol, latCdegCol,
       lonCdegCol, radiusCdeg).select(col("id_a"), col("id_b")))

@@ -1,7 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType,
+  StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Weighted PageRank (Page et al. 1999) on an edge relation, in EXACT
   * integer arithmetic so any SQL engine replays every iteration
@@ -22,15 +25,25 @@ import org.apache.spark.sql.functions._
   * edges + N per round, far below rank magnitudes, and both engines
   * leak identically.
   *
-  * Shape at 100 TB: a [[graft.util.Fixpoint]] loop over the edges
-  * persisted on `dst`, plus one marker row per edge keyed on its SOURCE
+  * Shape at 100 TB: each of the four loops ([[pageRank]],
+  * [[shortestPaths]], [[kCore]], [[labelPropagation]]) first takes its
+  * normalized edges (the projection, casts and null/weight filter, before
+  * any symmetrizing or dedup) through one guarded collect
+  * ([[graft.util.Fixpoint.onDriver]], the 1 M-row driver bound). Under
+  * it the loop runs on the driver over interned int ids, in the same
+  * integer arithmetic, string order and stopping rule, and returns a
+  * local relation: one job per call (two for BFS, whose sources take the
+  * same guard). Over it, a [[graft.util.Fixpoint]] loop runs on the lazy
+  * checkpoint that collect wrote. For PageRank that loop persists the
+  * edges on `dst`, plus one marker row per edge keyed on its SOURCE
   * (weight in `pw`): every node is a `dst` group whose Σ pw is its
   * out-weight — no node table, no out-weight join. An iteration is one
   * left join with the broadcast (node, ow, rank) state and one `dst`
   * aggregate with no exchange; its dangling mass is observed on that job
   * and enters the next iteration as an exact literal. Overflow bound:
   * needs scale · max(w) < 2^63 / 85 — at the default 1e9 scale that
-  * allows per-edge weights up to ~10^8.
+  * allows per-edge weights up to ~10^8; past it both paths raise under
+  * ANSI arithmetic (Spark's default) and wrap alike without it.
   */
 object Graph {
   import graft.util.{Fixpoint, Materialize}
@@ -43,9 +56,22 @@ object Graph {
       iters: Int, scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"need 1 <= iters <= 50, got $iters")
     require(scale >= 1000L, s"need scale >= 1000, got $scale")
-    val e0 = edges.select(col(srcCol).cast("string").as("src"),
+    val norm = edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"), col(wCol).cast("long").as("w"))
       .filter(col("w") > 0L && col("src").isNotNull && col("dst").isNotNull)
+    Fixpoint.onDriver(norm) match {
+      case Right(rows) => relation(norm,
+          ("node", StringType, nullable(norm, "src", "dst")),
+          ("rank", LongType, false))(
+        pageRankOnDriver(rows, iters, scale, ansi(norm)))
+      case Left(e0) =>
+        try pageRankLoop(e0, iters, scale) finally Materialize.release(e0)
+    }
+  }
+
+  /** The distributed PageRank over the normalized `(src, dst, w)` edges. */
+  private def pageRankLoop(e0: DataFrame, iters: Int, scale: Long)
+      : DataFrame = {
     val e = Fixpoint.edges(e0.withColumn("pw", lit(null).cast("long"))
       .union(e0.select(lit(null).cast("string"), col("src"),
         lit(null).cast("long"), col("w"))), "dst", dedup = false)
@@ -55,7 +81,8 @@ object Graph {
     val n = math.max(seed("nodes"), 1L)
     val rank0 = Materialize.State(seed.df.withColumn("rank", lit(scale / n)),
       Map("dang" -> seed("sinks") * (scale / n)))
-    Fixpoint.iterate("pageRank", e, rank0, iters)(_ => false) { r =>
+    Fixpoint.iterate("pageRank", e, rank0, iters, Fixpoint.overGuard())(
+        _ => false) { r =>
       val base = 15L * scale / (100L * n) + 85L * (r.state("dang") / n) / 100L
       Materialize.checkpoint(e.join(r.broadcast(r.state.df.select(
             col("node").as("src"), col("ow").as("sow"), col("rank")), n),
@@ -106,27 +133,54 @@ object Graph {
     * pure integer iteration, deterministic in any engine (min hop
     * distance is unique; no weights, no floats). Returns (node, dist).
     *
-    * Frontier-style, as a [[graft.util.Fixpoint]] loop over the edges
-    * persisted on `dst`. The visited set is a union of checkpointed
-    * frontiers, broadcast into two lookups: an edge from a visited node to
-    * an unvisited one must leave the last frontier (an older source's
-    * targets are visited by now), so those edges' `dst` distinct — on the
-    * edge partitioning, no exchange — IS the next frontier. Its size is
-    * observed on the round's job; an empty frontier ends the loop. */
+    * Under the driver bound on both the edges and the sources (two
+    * collects), a frontier BFS on the driver. Over it, a
+    * [[graft.util.Fixpoint]] loop over the edges persisted on `dst`. The
+    * visited set is a union of checkpointed frontiers, broadcast into two
+    * lookups: an edge from a visited node to an unvisited one must leave
+    * the last frontier (an older source's targets are visited by now), so
+    * those edges' `dst` distinct — on the edge partitioning, no exchange —
+    * IS the next frontier. Its size is observed on the round's job; an
+    * empty frontier ends the loop. A null source is reached at distance 0
+    * and leads nowhere. */
   def shortestPaths(
       edges: DataFrame, srcCol: String, dstCol: String,
       sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 20,
       s"need 1 <= maxHops <= 20, got $maxHops")
-    val e = Fixpoint.edges(edges.select(col(srcCol).cast("string").as("src"),
+    val norm = edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
-      .filter(col("src") =!= col("dst")), "dst")
+      .filter(col("src") =!= col("dst"))
+    val from = sources.select(col(sources.columns.head).cast("string")
+      .as("node"))
+    Fixpoint.onDriver(norm) match {
+      case Right(rows) => Fixpoint.onDriver(from) match {
+        case Right(srcs) => relation(norm, ("node", StringType,
+            nullable(from, "node") || srcs.nonEmpty && nullable(norm, "dst")),
+            ("dist", LongType, false))(
+          shortestPathsOnDriver(rows, srcs, maxHops))
+        case Left(s) =>
+          try shortestPathsLoop(norm.sparkSession.createDataFrame(
+              java.util.Arrays.asList(rows: _*), norm.schema), s, maxHops,
+            Fixpoint.overGuard(s"edges=${rows.length} sources"))
+          finally Materialize.release(s)
+      }
+      case Left(e) =>
+        try shortestPathsLoop(e, from, maxHops, Fixpoint.overGuard())
+        finally Materialize.release(e)
+    }
+  }
+
+  /** The distributed BFS over the normalized `(src, dst)` edges from the
+    * `node` column of `from`. */
+  private def shortestPathsLoop(norm: DataFrame, from: DataFrame,
+      maxHops: Int, path: String): DataFrame = {
+    val e = Fixpoint.edges(norm, "dst")
     val frontier = count(lit(1)).as("frontier")
-    val seed = Materialize.checkpoint(sources.select(col(sources.columns.head)
-        .cast("string").as("node")).distinct()
+    val seed = Materialize.checkpoint(from.distinct()
       .withColumn("dist", lit(0L)), frontier)
     Fixpoint.iterate("shortestPaths", e,
-        seed + ("visited" -> seed("frontier")), maxHops)(
+        seed + ("visited" -> seed("frontier")), maxHops, path)(
         _("frontier") == 0L) { r =>
       val visited = r.broadcast(r.state.df.select("node"), r.state("visited"))
       val next = Materialize.checkpoint(e
@@ -179,25 +233,42 @@ object Graph {
     * round is a FIXPOINT: Spark short-circuits when a round removes
     * nothing, while the generated oracle ([[kCoreSql]]) always unrolls
     * all `maxRounds` — identical output either way, which is what makes
-    * the early exit safe under the oracle. A [[graft.util.Fixpoint]] loop
-    * over the symmetric edges persisted on `d`, whose state is the
-    * surviving nodes' within-core degrees — the converged round's degrees
-    * ARE the output, no final recount. Per round the kept nodes (deg ≥ k)
-    * are broadcast into both endpoint joins and one `d` count runs on the
-    * edge partitioning with no exchange, observing the kept count that
-    * decides convergence; work is edges-bound, never quadratic. */
+    * the early exit safe under the oracle. The state is the surviving
+    * nodes' within-core degrees — the converged round's degrees ARE the
+    * output, no final recount; a loop that hits `maxRounds` returns its
+    * last degrees, deg < k nodes included. Under the driver bound the
+    * peeling runs on the driver over the symmetric adjacency. Over it, a
+    * [[graft.util.Fixpoint]] loop over the symmetric edges persisted on
+    * `d`: per round the kept nodes (deg ≥ k) are broadcast into both
+    * endpoint joins and one `d` count runs on the edge partitioning with
+    * no exchange, observing the kept count that decides convergence; work
+    * is edges-bound, never quadratic. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxRounds: Int): DataFrame = {
     require(k >= 1 && maxRounds >= 1 && maxRounds <= 30,
       s"need k >= 1, 1 <= maxRounds <= 30; got k=$k rounds=$maxRounds")
-    val e = Fixpoint.edges(undirected(edges, srcCol, dstCol), "d")
+    val dir = directed(edges, srcCol, dstCol)
+    Fixpoint.onDriver(dir) match {
+      case Right(rows) => relation(dir,
+          ("node", StringType, nullable(dir, "s", "d")),
+          ("deg", LongType, false))(kCoreOnDriver(rows, k, maxRounds))
+      case Left(d) => try kCoreLoop(d, k, maxRounds)
+        finally Materialize.release(d)
+    }
+  }
+
+  /** The distributed peeling over the directed `(s, d)` edges. */
+  private def kCoreLoop(dir: DataFrame, k: Int, maxRounds: Int)
+      : DataFrame = {
+    val e = Fixpoint.edges(symmetric(dir), "d")
     def degrees(in: DataFrame) = Materialize.checkpoint(
       in.groupBy(col("d").as("node")).agg(count(lit(1)).as("deg")),
       count(lit(1)).as("nodes"), count(when(col("deg") >= k, 1)).as("kept"))
     // "active" is |active set|: a round converges when it keeps them all
     val seed = degrees(e)
     Fixpoint.iterate("kCore", e, seed + ("active" -> seed("nodes")),
-        maxRounds)(s => s("kept") == s("active")) { r =>
+        maxRounds, Fixpoint.overGuard())(s => s("kept") == s("active")) {
+        r =>
       val kept = r.broadcast(
         r.state.df.filter(col("deg") >= k).select("node"), r.state("kept"))
       degrees(e.join(kept.withColumnRenamed("node", "s"), "s")
@@ -208,12 +279,18 @@ object Graph {
 
   /** `(s, d)` string edges made symmetric, self-loops dropped. */
   private[graft] def undirected(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val dir = edges.select(col(srcCol).cast("string").as("s"),
-      col(dstCol).cast("string").as("d"))
-    dir.union(dir.select(col("d").as("s"), col("s").as("d")))
+      dstCol: String): DataFrame = symmetric(directed(edges, srcCol, dstCol))
+
+  /** `(s, d)` string edges, self-loops (and so null endpoints) dropped:
+    * what [[kCore]] and [[labelPropagation]] take through the guard. */
+  private def directed(edges: DataFrame, srcCol: String, dstCol: String)
+      : DataFrame =
+    edges.select(col(srcCol).cast("string").as("s"),
+        col(dstCol).cast("string").as("d"))
       .filter(col("s") =!= col("d"))
-  }
+
+  private def symmetric(dir: DataFrame): DataFrame =
+    dir.union(dir.select(col("d").as("s"), col("s").as("d")))
 
   /** Generated k-core oracle: the identical peeling replay as unrolled
     * SQL CTEs from the same (k, maxRounds). `edgesCte` must yield
@@ -257,26 +334,47 @@ object Graph {
     * invariant under further rounds, so the short-circuit is safe
     * under the always-unrolled oracle, exactly like [[kCore]]).
     *
-    * Shape at 100 TB: a [[graft.util.Fixpoint]] loop over the symmetric
-    * edges persisted on `d`. Round 1 is the seed aggregate: labels are
-    * still node ids, so every vote ties at 1 and the smallest of the node
-    * and its neighbors wins. Each later round ([[labelPropagationVote]])
-    * broadcasts the labels into the neighbor (`s`) and own (`d`) joins and
-    * runs its count and argmax aggregates on the edge partitioning with no
-    * exchange, observing the changed-label count on the same job. */
+    * Round 1 is the seed: labels are still node ids, so every vote ties
+    * at 1 and the smallest of the node and its neighbors wins. Labels
+    * compare in UTF-8 byte order, Spark's (and DuckDB's) string order,
+    * not Java's UTF-16 `String` order.
+    *
+    * Shape at 100 TB: under the driver bound the votes run on the driver
+    * over ids interned in that byte order. Over it, a
+    * [[graft.util.Fixpoint]] loop over the symmetric edges persisted on
+    * `d`: the seed is one aggregate, and each later round
+    * ([[labelPropagationVote]]) broadcasts the labels into the neighbor
+    * (`s`) and own (`d`) joins and runs its count and argmax aggregates on
+    * the edge partitioning with no exchange, observing the changed-label
+    * count on the same job. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 30,
       s"need 1 <= rounds <= 30, got $rounds")
-    val e = Fixpoint.edges(undirected(edges, srcCol, dstCol), "d")
+    val dir = directed(edges, srcCol, dstCol)
+    val named = nullable(dir, "s", "d")
+    Fixpoint.onDriver(dir) match {
+      case Right(rows) => relation(dir, ("node", StringType, named),
+          ("community", StringType, named))(
+        labelPropagationOnDriver(rows, rounds))
+      case Left(d) => try labelPropagationLoop(d, rounds)
+        finally Materialize.release(d)
+    }
+  }
+
+  /** The distributed label propagation over the directed `(s, d)`
+    * edges. */
+  private def labelPropagationLoop(dir: DataFrame, rounds: Int)
+      : DataFrame = {
+    val e = Fixpoint.edges(symmetric(dir), "d")
     def labels(df: DataFrame) = Materialize.checkpoint(df,
       count(lit(1)).as("nodes"),
       count(when(col("label") =!= col("own"), 1)).as("changed"))
     val seed = labels(e.groupBy(col("d").as("node"))
       .agg(least(col("d"), min("s")).as("label"))
       .select(col("node"), col("node").as("own"), col("label")))
-    Fixpoint.iterate("labelPropagation", e, seed, rounds - 1)(
-        _("changed") == 0L) { r =>
+    Fixpoint.iterate("labelPropagation", e, seed, rounds - 1,
+        Fixpoint.overGuard())(_("changed") == 0L) { r =>
       labels(labelPropagationVote(e, r.broadcast(r.state.df, seed("nodes"))))
     }.df.select(col("node"), col("label").as("community"))
   }
@@ -368,5 +466,208 @@ object Graph {
        |r0 AS (SELECT node, (SELECT $scale // n FROM nn) AS rank FROM nodes),
        |$rounds
        |SELECT node, CAST(rank AS BIGINT) AS rank FROM r$iters""".stripMargin
+  }
+
+  // ---- the driver path: the four loops over interned int ids ------------
+
+  /** `rows` as a local relation with the loop's output columns. */
+  private def relation(like: DataFrame, fields: (String, DataType, Boolean)*)
+      (rows: Seq[Row]): DataFrame =
+    like.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(fields.map { case (n, t, nulls) => StructField(n, t, nulls) }))
+
+  private def nullable(df: DataFrame, cols: String*): Boolean =
+    cols.exists(df.schema(_).nullable)
+
+  private def ansi(df: DataFrame): Boolean =
+    df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+
+  /** Node names interned in UTF-8 byte order (Spark's string order), so
+    * comparing two ids compares their names as `min` and `least` do. */
+  private final class Nodes(names: Iterator[String]) {
+    val name: Array[String] = {
+      val seen = new java.util.HashSet[String]()
+      names.foreach(seen.add)
+      val bytes = seen.toArray(Array.empty[String]).map(UTF8String.fromString)
+      java.util.Arrays.sort(bytes,
+        (a: UTF8String, b: UTF8String) => a.compareTo(b))
+      bytes.map(_.toString)
+    }
+    private val ids = new java.util.HashMap[String, Integer](2 * name.length)
+    name.indices.foreach(i => ids.put(name(i), i))
+    def apply(s: String): Int = ids.get(s)
+    def size: Int = name.length
+  }
+
+  /** The nodes of `(from, to)` string rows (and of `extra`), and each
+    * row's ids. */
+  private def intern(rows: Array[Row], extra: Iterator[String] = Iterator())
+      : (Nodes, Array[Int], Array[Int]) = {
+    val v = new Nodes(rows.iterator.flatMap(r =>
+      Iterator(r.getString(0), r.getString(1))) ++ extra)
+    (v, rows.map(r => v(r.getString(0))), rows.map(r => v(r.getString(1))))
+  }
+
+  /** Each id's neighbors `to(off(u) until off(u + 1))`, in the order the
+    * pairs come in (a stable counting sort on `from`). */
+  private final class Adjacency(n: Int, from: Array[Int], dst: Array[Int]) {
+    val off = new Array[Int](n + 1)
+    from.foreach(u => off(u + 1) += 1)
+    (0 until n).foreach(u => off(u + 1) += off(u))
+    val to: Array[Int] = {
+      val (t, at) = (new Array[Int](from.length), off.clone())
+      from.indices.foreach { i => t(at(from(i))) = dst(i); at(from(i)) += 1 }
+      t
+    }
+    def degree(u: Int): Int = off(u + 1) - off(u)
+  }
+
+  /** The symmetric simple graph of directed `(s, d)` rows (self-loops
+    * already dropped): its nodes and their ascending neighbor lists. */
+  private def undirectedOnDriver(rows: Array[Row]): (Nodes, Adjacency) = {
+    val (v, s, d) = intern(rows)
+    val keys = new Array[Long](2 * rows.length)
+    rows.indices.foreach { i =>
+      keys(2 * i) = s(i).toLong << 32 | d(i)
+      keys(2 * i + 1) = d(i).toLong << 32 | s(i)
+    }
+    java.util.Arrays.sort(keys)
+    val uniq = keys.indices.filter(i => i == 0 || keys(i) != keys(i - 1))
+      .map(keys).toArray
+    (v, new Adjacency(v.size, uniq.map(k => (k >>> 32).toInt),
+      uniq.map(_.toInt)))
+  }
+
+  /** Spark's long `*` and `+`: overflow raises under ANSI mode and wraps
+    * without it. */
+  private def arithmetic(ansi: Boolean)
+      : ((Long, Long) => Long, (Long, Long) => Long) =
+    if (ansi) (Math.multiplyExact(_: Long, _: Long),
+      Math.addExact(_: Long, _: Long))
+    else (_ * _, _ + _)
+
+  /** [[pageRank]] on the driver over the normalized `(src, dst, w)`
+    * rows: the distributed path's arithmetic, term for term. */
+  private def pageRankOnDriver(rows: Array[Row], iters: Int, scale: Long,
+      ansi: Boolean): Seq[Row] = {
+    val (mul, add) = arithmetic(ansi)
+    val (v, src, dst) = intern(rows)
+    val w = rows.map(_.getLong(2))
+    val ow = new Array[Long](v.size)
+    val sink = Array.fill(v.size)(true)
+    src.indices.foreach { i =>
+      ow(src(i)) = add(ow(src(i)), w(i)); sink(src(i)) = false }
+    val n = math.max(v.size.toLong, 1L)
+    def dang(rank: Array[Long]) = rank.indices.foldLeft(0L)((d, u) =>
+      if (sink(u)) add(d, rank(u)) else d)
+    val (rank, _) = Fixpoint.local("pageRank", (Array.fill(v.size)(scale / n),
+        sink.count(identity) * (scale / n)), iters, rows.length)(
+        s => Map("dang" -> s._2))(_ => false) { (_, s) =>
+      val base = 15L * scale / (100L * n) + 85L * (s._2 / n) / 100L
+      val in = new Array[Long](v.size)
+      // only a wrapped sum is a zero out-weight: Spark divides it to null
+      src.indices.foreach { i => if (ow(src(i)) != 0L)
+        in(dst(i)) = add(in(dst(i)),
+          mul(85L, mul(s._1(src(i)), w(i)) / ow(src(i))) / 100L) }
+      val next = in.map(add(_, base))
+      (next, dang(next))
+    }
+    v.name.indices.map(u => Row(v.name(u), rank(u)))
+  }
+
+  /** [[shortestPaths]] on the driver: a frontier BFS over the normalized
+    * `(src, dst)` rows from the `node` of each source row. */
+  private def shortestPathsOnDriver(rows: Array[Row], sources: Array[Row],
+      maxHops: Int): Seq[Row] = {
+    val named = sources.map(_.getString(0)).filter(_ != null)
+    val (v, src, dst) = intern(rows, named.iterator)
+    val adj = new Adjacency(v.size, src, dst)
+    val dist = Array.fill(v.size)(-1L)
+    val seeds = named.map(v(_)).distinct
+    seeds.foreach(dist(_) = 0L)
+    val nulls = if (named.length < sources.length) 1L else 0L
+    // (frontier, its size, visited): a null source counts, but leads nowhere
+    val seed = (seeds, seeds.length + nulls, seeds.length + nulls)
+    Fixpoint.local("shortestPaths", seed, maxHops, rows.length)(
+        s => Map("frontier" -> s._2, "visited" -> s._3))(_._2 == 0L) {
+        (hop, s) =>
+      val next = Array.newBuilder[Int]
+      for (u <- s._1; i <- adj.off(u) until adj.off(u + 1)) {
+        val x = adj.to(i)
+        if (dist(x) < 0L) { dist(x) = hop.toLong; next += x }
+      }
+      val frontier = next.result()
+      (frontier, frontier.length.toLong, s._3 + frontier.length)
+    }
+    (if (nulls > 0) Seq(Row(null, 0L)) else Nil) ++
+      v.name.indices.filter(dist(_) >= 0L).map(u => Row(v.name(u), dist(u)))
+  }
+
+  /** [[kCore]] on the driver: synchronous peeling over the symmetric
+    * adjacency of the directed `(s, d)` rows. */
+  private def kCoreOnDriver(rows: Array[Row], k: Int, maxRounds: Int)
+      : Seq[Row] = {
+    val (v, adj) = undirectedOnDriver(rows)
+    // the within-core degree of each id (0 once peeled), |active set|
+    final case class Core(deg: Array[Int], active: Long) {
+      val nodes: Long = deg.count(_ > 0).toLong
+      val kept: Long = deg.count(_ >= k).toLong
+    }
+    val seed = Array.tabulate(v.size)(adj.degree)
+    val core = Fixpoint.local("kCore", Core(seed, seed.length.toLong),
+        maxRounds, rows.length)(c => Map("nodes" -> c.nodes,
+        "kept" -> c.kept, "active" -> c.active))(c => c.kept == c.active) {
+        (_, c) =>
+      Core(Array.tabulate(v.size) { u =>
+        var (kept, i) = (0, adj.off(u))
+        if (c.deg(u) >= k) while (i < adj.off(u + 1)) {
+          if (c.deg(adj.to(i)) >= k) kept += 1
+          i += 1
+        }
+        kept
+      }, c.kept)
+    }
+    v.name.indices.filter(core.deg(_) > 0)
+      .map(u => Row(v.name(u), core.deg(u).toLong))
+  }
+
+  /** [[labelPropagation]] on the driver over the symmetric adjacency of
+    * the directed `(s, d)` rows: ids are in byte order, so the smallest
+    * id is the smallest label. */
+  private def labelPropagationOnDriver(rows: Array[Row], rounds: Int)
+      : Seq[Row] = {
+    val (v, adj) = undirectedOnDriver(rows)
+    def changed(from: Int => Int, to: Array[Int]) =
+      to.indices.count(u => to(u) != from(u)).toLong
+    // round 1: every vote ties at 1, the smallest of self and neighbors
+    val seed = Array.tabulate(v.size)(u => math.min(u, adj.to(adj.off(u))))
+    val votes = new Array[Int]((0 until v.size).foldLeft(0)((m, u) =>
+      math.max(m, adj.degree(u))))
+    val (label, _) = Fixpoint.local("labelPropagation",
+        (seed, changed(u => u, seed)), rounds - 1, rows.length)(
+        s => Map("nodes" -> v.size.toLong, "changed" -> s._2))(_._2 == 0L) {
+        (_, s) =>
+      val own = s._1
+      val next = Array.tabulate(v.size) { u =>
+        val n = adj.degree(u)
+        (0 until n).foreach(j => votes(j) = own(adj.to(adj.off(u) + j)))
+        java.util.Arrays.sort(votes, 0, n)
+        // the most votes wins, ties to the smallest label; the own label
+        // gets one self-vote, or competes alone with it
+        var (best, most, i) = (own(u), 1, 0)
+        while (i < n) {
+          var j = i
+          while (j < n && votes(j) == votes(i)) j += 1
+          val c = j - i + (if (votes(i) == own(u)) 1 else 0)
+          if (c > most || c == most && votes(i) < best) {
+            best = votes(i); most = c
+          }
+          i = j
+        }
+        best
+      }
+      (next, changed(own(_), next))
+    }
+    v.name.indices.map(u => Row(v.name(u), v.name(label(u))))
   }
 }

@@ -86,12 +86,11 @@ object Bpe {
   val CheckpointEvery = 8
 
   /** The most distinct words [[fitBpe]] learns from on the driver: the
-    * collect bound the fitted encoders use
-    * (`ComplementLabelEncoder.DefaultMaxCollect`) unless a caller on this
+    * driver bound ([[Materialize.DriverMaxRows]]) unless a caller on this
     * thread rebinds it (`withValue`), as the specs do to pin the
     * distributed rounds. */
   private[graft] val driverMaxWords = new scala.util.DynamicVariable(
-    graft.operators.ComplementLabelEncoder.DefaultMaxCollect)
+    Materialize.DriverMaxRows)
 
   private[text] def bpeWordsC(text: Column): Column =
     filter(TextFunctions.tokensLower(coalesce(text, lit(""))),

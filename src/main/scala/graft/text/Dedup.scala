@@ -567,7 +567,8 @@ object Dedup {
     * is small; `maxIter` bounds pathological chains). */
   def duplicateComponents(
       pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-      maxIter: Int = 20, maxCollect: Long = 1000000L): DataFrame = {
+      maxIter: Int = 20, maxCollect: Long = Materialize.DriverMaxRows)
+      : DataFrame = {
     val spark = pairs.sparkSession
     // self-pairs carry no connectivity and are dropped up front — BOTH
     // paths then agree that a doc appearing only in (x, x) is unlabeled.

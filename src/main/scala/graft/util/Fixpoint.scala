@@ -1,11 +1,12 @@
 package graft.util
 
 import graft.util.Materialize.State
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.DynamicVariable
 
 /** The one loop runner of the iterative operators (PageRank, BFS,
   * k-core, label propagation, distributed duplicate components), laid out
@@ -18,12 +19,41 @@ import scala.collection.mutable.ArrayBuffer
   * is its `localCheckpoint` job plus the broadcast, and its counters are
   * `observe`d on that job ([[Materialize.checkpoint]]) — no count/isEmpty
   * action, and every gate decision on an EXACT count. Over the threshold
-  * the joins shuffle, with bit-identical results. One INFO line per loop
-  * records its rounds, how it stopped, the gate decisions and the
-  * counters. */
+  * the joins shuffle, with bit-identical results.
+  *
+  * A graph loop whose edges fit on the driver skips all of that: one job
+  * collects them ([[onDriver]]) and [[local]] steps a plain-Scala state
+  * with the same stopping rule and counters (COST: for a graph that fits
+  * in memory, one thread beats the cluster). One INFO line per loop, on
+  * either path, records its rounds, how it stopped, the gate decisions,
+  * the counters and the path with its edge count and guard. */
 object Fixpoint {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The most edges a graph loop runs on the driver with: the driver
+    * bound, unless a caller on this thread rebinds it (`withValue`), as
+    * the specs do to pin either path. A negative guard turns the driver
+    * path off, even for an empty edge set. */
+  private[graft] val driverMaxEdges =
+    new DynamicVariable[Long](Materialize.DriverMaxRows)
+
+  /** A graph loop's normalized edges (or BFS sources), not yet
+    * materialized, through the guard: `Right(rows)` when there are at
+    * most [[driverMaxEdges]] of them, else `Left` of a lazy local
+    * checkpoint that the collect's job wrote, for the distributed path
+    * ([[Materialize.guardedCollect]]). */
+  def onDriver(df: DataFrame): Either[DataFrame, Array[Row]] = {
+    val guard = driverMaxEdges.value
+    if (guard < 0) Left(Materialize.shared(df))
+    else Materialize.guardedCollect(df, guard)
+  }
+
+  /** The loop line's path field for a distributed loop over the guard. */
+  def overGuard(what: String = "edges"): String = {
+    val guard = driverMaxEdges.value
+    s"path=distributed $what>$guard guard=$guard"
+  }
 
   /** `df` persisted, hash-partitioned on `key` (and deduplicated when
     * `dedup`: `distinct` groups on every column, which the key
@@ -49,22 +79,43 @@ object Fixpoint {
   /** Steps from `seed` until `done` holds on the current state or
     * `maxRounds` steps ran; returns the last state. The persisted `edges`
     * are released at the end: every state a step returns must already be
-    * materialized (a [[Materialize.checkpoint]], or a union of them). */
-  def iterate(name: String, edges: DataFrame, seed: State, maxRounds: Int)
-      (done: State => Boolean)(step: Round => State): State = {
+    * materialized (a [[Materialize.checkpoint]], or a union of them).
+    * `path`, when given, ends the loop's log line. */
+  def iterate(name: String, edges: DataFrame, seed: State, maxRounds: Int,
+      path: String = "")(done: State => Boolean)(step: Round => State)
+      : State = {
+    val gates = ArrayBuffer[String]()
+    try loop(name, seed, maxRounds, (_: State).stats,
+        s"gate=${gates.mkString("[", ", ", "]")} " +
+          s"threshold=${Joins.threshold.value} ", path)(done)(
+        (i, s) => step(new Round(i, s, gates)))
+    finally edges.unpersist(blocking = false)
+  }
+
+  /** The driver twin of [[iterate]] for a loop over `edges` collected
+    * rows ([[onDriver]]): the same stopping rule, counters and log line,
+    * stepping a plain-Scala state. */
+  def local[S](name: String, seed: S, maxRounds: Int, edges: Int)
+      (stats: S => Map[String, Long])(done: S => Boolean)
+      (step: (Int, S) => S): S =
+    loop(name, seed, maxRounds, stats, "",
+      s"path=driver edges=$edges guard=${driverMaxEdges.value}")(done)(step)
+
+  private def loop[S](name: String, seed: S, maxRounds: Int,
+      stats: S => Map[String, Long], detail: => String, path: String)
+      (done: S => Boolean)(step: (Int, S) => S): S = {
     var (state, rounds) = (seed, 0)
-    val (stats, gates) = (ArrayBuffer(seed.stats), ArrayBuffer[String]())
-    try while (rounds < maxRounds && !done(state)) {
+    val seen = ArrayBuffer(stats(seed))
+    while (rounds < maxRounds && !done(state)) {
       rounds += 1
-      state = step(new Round(rounds, state, gates))
-      stats += state.stats
-    } finally edges.unpersist(blocking = false)
+      state = step(rounds, state)
+      seen += stats(state)
+    }
     val stop = if (done(state)) "converged" else s"maxRounds=$maxRounds hit"
-    log.info(s"Fixpoint $name: rounds=$rounds $stop " +
-      s"gate=${gates.mkString("[", ", ", "]")} " +
-      s"threshold=${Joins.threshold.value} counters=" + stats.map(
-        _.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("{", ",", "}"))
-        .mkString("[", ", ", "]"))
+    log.info(s"Fixpoint $name: rounds=$rounds $stop ${detail}counters=" +
+      seen.map(_.toSeq.sorted.map { case (k, v) => s"$k=$v" }
+        .mkString("{", ",", "}")).mkString("[", ", ", "]") +
+      (if (path.isEmpty) "" else s" $path"))
     state
   }
 }

@@ -31,6 +31,11 @@ import org.apache.spark.storage.StorageLevel
   * it; a local checkpoint is written by the reading job itself. */
 object Materialize {
 
+  /** The most rows any guarded driver finish brings to the driver: the
+    * fitted encoders' and aggregators' collects, the ranking engine, the
+    * graph loops and the union-find of duplicate components. */
+  val DriverMaxRows = 1000000L
+
   /** A materialized relation with the counters observed on the job that
     * built it (a sum over no rows reads 0). */
   final case class State(df: DataFrame, stats: Map[String, Long]) {

@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The fixpoint loop runner behind the five iterative loops: each equals
   * a plain-Scala replay (integer PageRank, BFS, peeling, deterministic
@@ -18,7 +19,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * edge cases, and so do the counters it observes per round; a round is
   * one job plus a broadcast, and under the broadcast gate its executed
   * plan has no shuffle. Over the threshold the same loops shuffle and
-  * still agree. */
+  * still agree. The graph loops run here with their driver guard at 0, so
+  * every non-empty edge set takes the distributed path (GraphPathsSpec
+  * holds the driver path to it). */
 class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
   import FixpointSpec._
@@ -100,10 +103,20 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def strEdges(es: Seq[(String, String)]) = es.toDF("src", "dst")
 
+  /** The jobs a graph loop over its guard runs before the loop: the
+    * guarded collect, and the one that completes the lazy checkpoint that
+    * collect stopped reading. */
+  private val GuardJobs = 2
+
+  /** A test whose graph loops take the distributed path. */
+  private def distributedTest(name: String)(body: => Any): Unit =
+    test(name)(Fixpoint.driverMaxEdges.withValue(0L)(body))
+
   // ---- the five loops against plain-Scala replays ------------------------
 
-  test("pageRank equals an integer replay on a hub graph and edge cases, " +
-      "counters included; one job plus a broadcast per round, no shuffle") {
+  distributedTest("pageRank equals an integer replay on a hub graph and edge " +
+      "cases, counters included; one job plus a broadcast per round, no " +
+      "shuffle") {
     val cases = Seq(hub(300, 1), hub(120, 7),
       Seq(("a", "b", 1L), ("b", "c", 1L), ("c", "a", 1L)),
       Seq(("a", "b", 1L)), Seq(("a", "b", 1L), ("a", "c", 0L), ("a", "d", -3L)),
@@ -116,12 +129,12 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(out.as[(String, Long)].collect().toMap == want, s"case $i")
       assert(t.counters == states, s"case $i: ${t.line}")
       assert(t.rounds == iters && t.line.contains(s"maxRounds=$iters hit"))
-      assertShape(t)
+      assertShape(t, GuardJobs)
     }
   }
 
-  test("shortestPaths equals BFS on a hub graph and edge cases, frontier " +
-      "counters included; one job plus a broadcast per round") {
+  distributedTest("shortestPaths equals BFS on a hub graph and edge cases, " +
+      "frontier counters included; one job plus a broadcast per round") {
     val hubE = hub(300, 3).map(e => (e._1, e._2))
     val cases = Seq(
       (hubE, Seq("0", "60", "120", "180", "240"), 3),
@@ -137,12 +150,12 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val (want, states) = Ref.bfs(es, srcs, hops)
       assert(out.as[(String, Long)].collect().toMap == want, s"case $i")
       assert(t.counters == states, s"case $i: ${t.line}")
-      assertShape(t)
+      assertShape(t, GuardJobs)
     }
   }
 
-  test("kCore equals synchronous peeling on a hub graph and edge cases, " +
-      "counters included; a converged loop reuses its last degrees") {
+  distributedTest("kCore equals synchronous peeling on a hub graph and edge " +
+      "cases, counters included; a converged loop reuses its last degrees") {
     val hubE = hub(300, 5).map(e => (e._1, e._2))
     val k4 = Seq(("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
       ("c", "d"))
@@ -155,12 +168,12 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val (want, states) = Ref.kCore(es, k, rounds)
       assert(out.as[(String, Long)].collect().toMap == want, s"case $i")
       assert(t.counters == states, s"case $i: ${t.line}")
-      assertShape(t)
+      assertShape(t, GuardJobs)
     }
   }
 
-  test("labelPropagation equals deterministic LPA on a hub graph and edge " +
-      "cases, changed-label counters included") {
+  distributedTest("labelPropagation equals deterministic LPA on a hub graph " +
+      "and edge cases, changed-label counters included") {
     val hubE = hub(300, 9).map(e => (e._1, e._2))
     val cases = Seq((hubE, 2), (hubE, 30),
       (Seq(("a", "b"), ("b", "c"), ("c", "a"), ("x", "y"), ("y", "z"),
@@ -176,7 +189,7 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val (want, states) = Ref.lpa(es, rounds)
       assert(out.as[(String, String)].collect().toMap == want, s"case $i")
       assert(t.counters == states, s"case $i: ${t.line}")
-      assertShape(t)
+      assertShape(t, GuardJobs)
     }
   }
 
@@ -202,8 +215,8 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   // ---- the over-threshold path ---------------------------------------------
 
-  test("over the gate threshold every loop shuffles its rounds and still " +
-      "equals the replays") {
+  distributedTest("over the gate threshold every loop shuffles its rounds " +
+      "and still equals the replays") {
     val es = hub(120, 13)
     val un = es.map(e => (e._1, e._2))
     // the planner's own size-based broadcast off too: a checkpoint carries
@@ -243,14 +256,15 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     } finally spark.conf.set(auto, was)
   }
 
-  test("one INFO line per loop: name, rounds, how it stopped, each gate " +
-      "decision with its node count") {
+  distributedTest("one INFO line per loop: name, rounds, how it stopped, " +
+      "each gate decision with its node count") {
     val (_, lpa) = traced(Graph.labelPropagation(
       strEdges(Seq(("a", "b"), ("b", "c"), ("c", "a"))), "src", "dst", 5))
     // round 1 (the seed) labels every node "a"; round 2 changes nothing
     assert(lpa.line == "Fixpoint labelPropagation: rounds=1 converged " +
       s"gate=[taken:3] threshold=${Joins.threshold.value} " +
-      "counters=[{changed=2,nodes=3}, {changed=0,nodes=3}]", lpa.line)
+      "counters=[{changed=2,nodes=3}, {changed=0,nodes=3}] " +
+      "path=distributed edges>0 guard=0", lpa.line)
     val (_, pr) = traced(Graph.pageRank(
       Seq(("a", "b", 1L)).toDF("s", "d", "w"), "s", "d", "w", 2))
     assert(pr.line.startsWith("Fixpoint pageRank: rounds=2 maxRounds=2 hit " +
@@ -274,6 +288,10 @@ object FixpointSpec {
   /** Plain-Scala replays: each returns the output and the counters of
     * every state the loop passes through (seed first). */
   object Ref {
+    private val byteOrder: Ordering[(Int, UTF8String)] =
+      Ordering.Tuple2(Ordering.Int, Ordering.fromLessThan[UTF8String](
+        (a, b) => a.compareTo(b) < 0))
+
     private def undirected(es: Seq[(String, String)]) =
       es.flatMap(e => Seq(e, e.swap)).filter(e => e._1 != e._2).distinct
 
@@ -337,8 +355,10 @@ object FixpointSpec {
     }
 
     /** Synchronous LPA: neighbors' labels plus one self-vote, the most
-      * frequent wins, ties to the smallest label; stops early when a round
-      * changes nothing. States are the rounds' results. */
+      * frequent wins, ties to the smallest label in UTF-8 byte order
+      * (Spark's and DuckDB's string order, not `String`'s UTF-16 order);
+      * stops early when a round changes nothing. States are the rounds'
+      * results. */
     def lpa(es: Seq[(String, String)], rounds: Int)
         : (Map[String, String], Seq[Map[String, Long]]) = {
       val nbrs = undirected(es).groupMap(_._2)(_._1)
@@ -348,7 +368,8 @@ object FixpointSpec {
       while (states.size < rounds && changed != 0L) {
         val next = nbrs.map { case (v, ns) =>
           v -> (ns.map(label) :+ label(v)).groupMapReduce(identity)(_ => 1)(
-            _ + _).toSeq.minBy { case (l, c) => (-c, l) }._1
+            _ + _).toSeq.minBy { case (l, c) =>
+              (-c, UTF8String.fromString(l)) }(byteOrder)._1
         }
         changed = next.count { case (v, l) => label(v) != l }.toLong
         label = next
