@@ -33,8 +33,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * it the loop runs on the driver over interned int ids, in the same
   * integer arithmetic, string order and stopping rule, and returns a
   * local relation: one job per call (two for BFS, whose sources take the
-  * same guard). Over it, a [[graft.util.Fixpoint]] loop runs on the lazy
-  * checkpoint that collect wrote. For PageRank that loop persists the
+  * same guard). Over it, a [[graft.util.Fixpoint]] loop runs on the rows
+  * that collect's job computed, reusing its shuffle outputs, so the guard
+  * costs that one job (none when the edges are a local relation, whose
+  * rows no job reads). For PageRank that loop persists the
   * edges on `dst`, plus one marker row per edge keyed on its SOURCE
   * (weight in `pw`): every node is a `dst` group whose Σ pw is its
   * out-weight — no node table, no out-weight join. An iteration is one

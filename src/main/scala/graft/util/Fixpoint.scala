@@ -33,21 +33,19 @@ object Fixpoint {
 
   /** The most edges a graph loop runs on the driver with: the driver
     * bound, unless a caller on this thread rebinds it (`withValue`), as
-    * the specs do to pin either path. A negative guard turns the driver
-    * path off, even for an empty edge set. */
+    * the specs do to pin either path (at 0 only an empty edge set stays
+    * on the driver). */
   private[graft] val driverMaxEdges =
     new DynamicVariable[Long](Materialize.DriverMaxRows)
 
   /** A graph loop's normalized edges (or BFS sources), not yet
     * materialized, through the guard: `Right(rows)` when there are at
-    * most [[driverMaxEdges]] of them, else `Left` of a lazy local
-    * checkpoint that the collect's job wrote, for the distributed path
+    * most [[driverMaxEdges]] of them, else `Left` for the distributed
+    * path: `df` itself when it is a local relation, whose rows no job
+    * reads, else a relation over the rows the collect's job computed
     * ([[Materialize.guardedCollect]]). */
-  def onDriver(df: DataFrame): Either[DataFrame, Array[Row]] = {
-    val guard = driverMaxEdges.value
-    if (guard < 0) Left(Materialize.shared(df))
-    else Materialize.guardedCollect(df, guard)
-  }
+  def onDriver(df: DataFrame): Either[DataFrame, Array[Row]] =
+    Materialize.guardedCollect(df, driverMaxEdges.value)
 
   /** The loop line's path field for a distributed loop over the guard. */
   def overGuard(what: String = "edges"): String = {

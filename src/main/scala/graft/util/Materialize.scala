@@ -1,10 +1,16 @@
 package graft.util
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.{CollectMetricsExec, LogicalRDD,
-  SparkPlan}
+  SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable.ArrayBuffer
 
 /** The one way graft materializes an intermediate relation and reads exact
   * counts off it, chosen by the relation's lifetime:
@@ -96,21 +102,76 @@ object Materialize {
     (if (order.isEmpty) taken else taken.orderBy(order: _*)).collect()
   }
 
+  /** All rows of `df` (whose rows are `rdd`), in partition order, when it
+    * has at most `n`, in ONE job that reads every partition in parallel. A
+    * partition sends its rows when it holds at most about twice its even
+    * share of `n`; past that it stops reading and sends only that bound, so
+    * at most about `2n` rows reach the driver. When the partitions that
+    * stopped leave the total undecided, a second job reads them whole. */
+  private def collectUpTo(df: DataFrame, rdd: RDD[InternalRow], n: Long)
+      : Option[Array[Row]] = {
+    val parts = rdd.getNumPartitions
+    // each partition's rows when it has at most `cap`, else `cap + 1`
+    def run(cap: Long, which: Seq[Int])
+        : Array[Either[Long, Array[InternalRow]]] =
+      if (which.isEmpty) Array.empty
+      else SQLExecution.withNewExecutionId(df.queryExecution,
+          Some("guardedCollect"))(
+        rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+          val kept = ArrayBuffer[InternalRow]()
+          while (it.hasNext && kept.length <= cap) kept += it.next().copy()
+          if (kept.length <= cap) Right(kept.toArray)
+          else Left(kept.length.toLong)
+        }: Either[Long, Array[InternalRow]], which))
+    def size(p: Either[Long, Array[InternalRow]]) =
+      p.fold(identity, _.length.toLong)
+    val first = run(math.min(n + 1, 2 * (n + 1) / math.max(parts, 1) + 1),
+      0 until parts)
+    val all =
+      if (first.map(size).sum > n) first
+      else {
+        val stopped = first.indices.filter(first(_).isLeft)
+        val whole = stopped.zip(run(n, stopped)).toMap
+        first.indices.map(i => whole.getOrElse(i, first(i))).toArray
+      }
+    if (all.exists(_.isLeft) || all.map(size).sum > n) None
+    else {
+      val decode = ExpressionEncoder(df.schema).resolveAndBind()
+        .createDeserializer()
+      Some(all.flatMap(_.toSeq.flatten).map(decode))
+    }
+  }
+
   /** The guarded driver finish: `df` (not yet materialized) collected when
     * it has at most `guard` rows — `Right(rows)`, sorted by `order` —
-    * else `Left` of `df` as a lazy local checkpoint for the distributed
-    * path. One job ([[collectAtMost]] of `guard + 1` rows) decides, and it
-    * also writes the checkpoint (a persist would cost a separate
-    * cache-materialization job under AQE), so the over-guard path never
-    * recomputes `df`. Under the guard the checkpoint is released at once.
+    * else `Left` of `df` for the distributed path. A local relation (after
+    * optimization) needs no job: its rows are on the driver already, and
+    * `Left` is `df` itself. Otherwise ONE job decides. Without an `order`
+    * it reads every partition in parallel ([[collectUpTo]]), and `Left` is
+    * a relation over the rows that job computed: reading it runs `df`'s
+    * last stage again on the shuffle outputs the job left, so nothing
+    * before that stage is recomputed, and no checkpoint is stored (on a
+    * multi-million-row input, storing one cost more than that re-read);
+    * `df` must be deterministic. With an `order`, [[collectAtMost]] reads
+    * `guard + 1` rows in one sorting task, and `Left` is the lazy local
+    * checkpoint that job wrote, which Spark completes in a job of its own.
     * `guard` must be below `Int.MaxValue`. */
   def guardedCollect(df: DataFrame, guard: Long, order: Column*)
       : Either[DataFrame, Array[Row]] = {
     require(guard >= 0 && guard < Int.MaxValue, s"guard $guard")
-    val cached = shared(df)
-    val rows = collectAtMost(cached, (guard + 1).toInt, order: _*)
-    if (rows.length > guard) Left(cached)
-    else { release(cached); Right(rows) }
+    df.queryExecution.optimizedPlan match {
+      case local: LocalRelation if order.isEmpty =>
+        if (local.data.length > guard) Left(df) else Right(df.collect())
+      case _ if order.isEmpty =>
+        val rdd = df.queryExecution.toRdd
+        collectUpTo(df, rdd, guard).toRight(
+          org.apache.spark.sql.graft.Bridge.relation(df, rdd))
+      case _ =>
+        val cached = shared(df)
+        val rows = collectAtMost(cached, (guard + 1).toInt, order: _*)
+        if (rows.length > guard) Left(cached)
+        else { release(cached); Right(rows) }
+    }
   }
 
   private def observe(df: DataFrame, counters: Seq[Column]): DataFrame =

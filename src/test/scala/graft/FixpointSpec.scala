@@ -103,11 +103,6 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def strEdges(es: Seq[(String, String)]) = es.toDF("src", "dst")
 
-  /** The jobs a graph loop over its guard runs before the loop: the
-    * guarded collect, and the one that completes the lazy checkpoint that
-    * collect stopped reading. */
-  private val GuardJobs = 2
-
   /** A test whose graph loops take the distributed path. */
   private def distributedTest(name: String)(body: => Any): Unit =
     test(name)(Fixpoint.driverMaxEdges.withValue(0L)(body))
@@ -129,7 +124,7 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(out.as[(String, Long)].collect().toMap == want, s"case $i")
       assert(t.counters == states, s"case $i: ${t.line}")
       assert(t.rounds == iters && t.line.contains(s"maxRounds=$iters hit"))
-      assertShape(t, GuardJobs)
+      assertShape(t)
     }
   }
 
@@ -150,7 +145,7 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val (want, states) = Ref.bfs(es, srcs, hops)
       assert(out.as[(String, Long)].collect().toMap == want, s"case $i")
       assert(t.counters == states, s"case $i: ${t.line}")
-      assertShape(t, GuardJobs)
+      assertShape(t)
     }
   }
 
@@ -168,7 +163,7 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val (want, states) = Ref.kCore(es, k, rounds)
       assert(out.as[(String, Long)].collect().toMap == want, s"case $i")
       assert(t.counters == states, s"case $i: ${t.line}")
-      assertShape(t, GuardJobs)
+      assertShape(t)
     }
   }
 
@@ -189,7 +184,7 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val (want, states) = Ref.lpa(es, rounds)
       assert(out.as[(String, String)].collect().toMap == want, s"case $i")
       assert(t.counters == states, s"case $i: ${t.line}")
-      assertShape(t, GuardJobs)
+      assertShape(t)
     }
   }
 

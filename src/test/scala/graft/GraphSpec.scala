@@ -1,6 +1,7 @@
 package graft
 
 import graft.relational.Graph
+import graft.util.{Fixpoint, Materialize}
 import org.apache.spark.sql.functions.col
 
 /** Integer-deterministic PageRank: mass conservation (up to documented
@@ -60,15 +61,23 @@ class GraphSpec extends SparkSpec {
     assert(tri(star :+ ("leaf1", "leaf2")) == 1L)
   }
 
+  /** `body` on the distributed path (a guard of 0 edges) and on the
+    * driver path. */
+  private def onBothPaths(body: => Unit): Unit =
+    for (guard <- Seq(0L, Materialize.DriverMaxRows))
+      Fixpoint.driverMaxEdges.withValue(guard)(body)
+
   test("result is partition-count invariant (integer determinism)") {
     val edges = (1 to 40).map(i =>
       (s"n${i % 7}", s"n${(i * 3) % 7}", (i % 5 + 1).toLong))
       .toDF("src", "dst", "w")
-    val a = Graph.pageRank(edges.coalesce(1), "src", "dst", "w", 4)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val b = Graph.pageRank(edges.repartition(13), "src", "dst", "w", 4)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(a == b)
+    onBothPaths {
+      val a = Graph.pageRank(edges.coalesce(1), "src", "dst", "w", 4)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val b = Graph.pageRank(edges.repartition(13), "src", "dst", "w", 4)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(a == b)
+    }
   }
 
   test("edges with a null endpoint are dropped like non-positive weights") {
@@ -91,7 +100,7 @@ class GraphSpec extends SparkSpec {
         col("src").as("id_a"), col("dst").as("id_b")), maxCollect = 0L))
       .map(_.collect().map(_.toSeq).toSet)
     val df = es.toDF("src", "dst", "w")
-    assert(all(df.coalesce(1)) == all(df.repartition(13)))
+    onBothPaths(assert(all(df.coalesce(1)) == all(df.repartition(13))))
   }
 
   private def bfs(edges: Seq[(String, String)], sources: Seq[String],

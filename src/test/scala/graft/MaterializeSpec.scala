@@ -65,6 +65,42 @@ class MaterializeSpec extends SparkSpec {
     assert(warned.exists(_.contains(warning)), warned)
   }
 
+  test("guardedCollect decides in one parallel job; over the guard its " +
+      "relation reads that job's rows again without rerunning the stages " +
+      "before them; a partition past twice its share costs a second job " +
+      "only when the first leaves the total undecided") {
+    // 100 rows in each of 4 partitions; the filter leaves 100, 30, 0, 0
+    val even = spark.range(0, 400, 1, 4).toDF("id")
+    val skewed = even.filter($"id" < 130)
+    for ((df, n, jobs) <- Seq((even, 400L, 1), (skewed, 130L, 2))) {
+      var got: Either[DataFrame, Array[Row]] = null
+      assert(countJobs { got = Materialize.guardedCollect(df, n) } == jobs,
+        s"$n rows")
+      assert(got.toOption.get.map(_.getLong(0)).toSeq == (0L until n))
+      assert(countJobs { got = Materialize.guardedCollect(df, n - 1) } ==
+        jobs, s"$n rows over the guard")
+      assert(got.left.toOption.get.as[Long].collect().toSeq == (0L until n))
+    }
+    // far over the guard every partition stops at twice its share
+    val big = spark.range(0, 4000, 1, 4).toDF("id")
+    assert(countJobs(assert(Materialize.guardedCollect(big, 399L).isLeft)) ==
+      1)
+    // an aggregate: its map stage runs once, before the deciding job
+    val groups = spark.range(0, 4000, 1, 4).groupBy(($"id" % 400).as("g"))
+      .agg(count(lit(1)).as("n"))
+    var left: DataFrame = null
+    assert(countJobs {
+      left = Materialize.guardedCollect(groups, 399).left.toOption.get } == 2)
+    assert(countJobs(assert(left.as[(Long, Long)].collect().toMap ==
+      (0L until 400L).map(_ -> 10L).toMap)) == 1)
+    // a local relation's rows are on the driver: no job either way
+    val local = (1 to 5).toDF("x")
+    assert(countJobs(assert(
+      Materialize.guardedCollect(local, 5).toOption.get.length == 5)) == 0)
+    assert(countJobs(assert(
+      Materialize.guardedCollect(local, 4).left.toOption.get eq local)) == 0)
+  }
+
   test("checkpoint reads the counters observed anywhere in its query, not " +
       "those of a persisted relation it reads; a counter name observed " +
       "twice is an error") {

@@ -41,10 +41,12 @@ class Round10PlanSpec extends SparkSpec {
       "cuts lineage, so exchanges do not accumulate with rounds") {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("x", "y"),
       ("y", "z"), ("z", "x")).toDF("src", "dst")
-    val p2 = plan(graft.relational.Graph.labelPropagation(
-      edges, "src", "dst", rounds = 2))
-    val p5 = plan(graft.relational.Graph.labelPropagation(
-      edges, "src", "dst", rounds = 5))
+    // the distributed loop: under its guard the result is a local relation
+    def lpa(rounds: Int) = graft.util.Fixpoint.driverMaxEdges.withValue(0L)(
+      plan(graft.relational.Graph.labelPropagation(edges, "src", "dst",
+        rounds)))
+    val (p2, p5) = (lpa(2), lpa(5))
+    assert(!p2.contains("LocalTableScan"), p2)
     assert(exchanges(p2) == exchanges(p5),
       s"rounds leak into the final plan: ${exchanges(p2)} vs " +
         s"${exchanges(p5)}")
