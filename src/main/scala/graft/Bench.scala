@@ -120,6 +120,10 @@ object Bench {
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run to those queries, stress
+    // cells and `online` (iteration aid; unset, a run covers everything)
+    val only = Only.parse(sys.env.get("SPARK_GRAFT_ONLY"),
+      SparkEntry.queries.keySet ++ StressBench.queries.keySet + "online")
     val probeThreads =
       math.max(2, math.min(cpus.toInt, Runtime.getRuntime.availableProcessors))
 
@@ -183,14 +187,7 @@ object Bench {
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (iteration aid; the
-    // driver never sets it, so round benches always cover everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val queries = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    val queries = SparkEntry.queries.filter(kv => only.forall(_(kv._1)))
 
     // A failed query must surface, never be timed as a fast success (the
     // round-4 failure mode: 18 broken queries "clocking" 0.06 s). Record
@@ -228,10 +225,8 @@ object Bench {
     val stressIters = sys.env.get("SPARK_GRAFT_STRESS_ITERS").map(_.toInt)
       .getOrElse(if (fastBox) 2 else 1)
     val stressScale0 = stressScale
-    val stressSelected0 = (only match {
-      case Some(names) => StressBench.queries.filter(kv => names(kv._1))
-      case None => StressBench.queries
-    }).toSeq.sortBy(_._1)
+    val stressSelected0 = StressBench.queries
+      .filter(kv => only.forall(_(kv._1))).toSeq.sortBy(_._1)
     val stressBaseIters =
       scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val stressBigIters =

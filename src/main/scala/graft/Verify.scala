@@ -6,6 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev-loop filter (same contract as Bench); unset, every query is dumped
+    val only = Only.parse(sys.env.get("SPARK_GRAFT_ONLY"),
+      SparkEntry.queries.keySet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -26,13 +29,7 @@ object Verify {
     // failures in round 4's bench tail
     graft.util.BoundedWindow.silenceBoundedWindowWarning()
     new java.io.File(outDir).mkdirs()
-    // dev-loop filter (same contract as Bench); the driver sets nothing
-    // and gets the full dump
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.contains(n))
-    }
+    val selected = SparkEntry.queries.filter(kv => only.forall(_(kv._1)))
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

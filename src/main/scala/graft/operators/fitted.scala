@@ -298,7 +298,7 @@ class FrequencyEncoderModel(
   *
   * pandas `std` is sample std (ddof=1) → `stddev_samp`; `median` is exact →
   * sort-based `percentile` (SURVEY §4). The fitted relation stays a
-  * DataFrame when huge (no driver collect above [[Aggregator.CollectMax]]) —
+  * DataFrame when huge (no driver collect above the driver bound) —
   * the 100 TB path joins it with AQE picking the strategy.
   */
 class Aggregator(
@@ -347,6 +347,7 @@ class Aggregator(
       // relation instead of one shuffle + join per input
       val byKey = inputs.zip(outputs).zip(groupby)
         .map { case ((in, out), key) => (key, in, out) }
+      val guard = Materialize.driverMaxRows.value
       val lookups = groupby.distinct.map { key =>
         val cols = byKey.filter(_._1 == key)
         val aggs = cols.map { case (_, in, out) =>
@@ -356,15 +357,15 @@ class Aggregator(
           .groupBy(col(key).as("__agg_k"))
           .agg(aggs.head, aggs.tail: _*)
         // one guarded job decides: under the guard the rows become a
-        // driver-held local relation; over it the lookup is the lazy
-        // checkpoint that job wrote, joined at transform time
-        Materialize.guardedCollect(aggDF, Aggregator.CollectMax) match {
+        // driver-held local relation; over it the rows that job computed
+        // are persisted, owned state no transform computes again
+        Materialize.guardedCollect(aggDF, guard) match {
           case Right(rows) => AggLookup(key, cols.map(_._3),
             df.sparkSession.createDataFrame(
               java.util.Arrays.asList(rows: _*), aggDF.schema),
             broadcastable = true)
-          case Left(cached) =>
-            AggLookup(key, cols.map(_._3), cached, broadcastable = false)
+          case Left(over) => AggLookup(key, cols.map(_._3),
+            Materialize.persist(over).df, broadcastable = false)
         }
       }
       new AggregatorModel(inputs, outputs, groupby, func, Nil, lookups)
@@ -373,8 +374,6 @@ class Aggregator(
 }
 
 object Aggregator {
-  val CollectMax = Materialize.DriverMaxRows
-
   /** The reference accepts arbitrary callables for `func`
     * (`Series.aggregate`, Aggregator.py:73-74); the Spark analog is a
     * Column-expression aggregate — codegen'd like the named ones. The

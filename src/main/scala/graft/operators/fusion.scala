@@ -12,6 +12,8 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import graft.util.Materialize
+
 /** Shared-scan fit fusion — the fit-time analog of Catalyst's shared-subplan
   * reuse, applied across pipeline stages.
   *
@@ -55,12 +57,14 @@ import scala.util.control.NonFatal
   * global aggregates, Winsorizer/QuantileBinner percentiles and the target
   * prior. Each aggregate sees only its own set's rows
   * (`CASE WHEN grouping_id() = g THEN x END`). The result — vocabulary-sized
-  * — is collected once through a `coalesce(1).limit(n)` guard (two jobs
-  * under AQE: the shuffle map stage and the collect), `n` covering each
-  * keyed set up to its readers' largest `maxCollect`, and every model is
-  * built on the driver. A member with more groups in one of its sets than
-  * its own `maxCollect` falls back to its per-stage fit on the batch base
-  * (which then takes its distributed BigDict path); the others stay fused.
+  * — is collected once through the guarded driver finish
+  * (`Materialize.guardedCollect`: two jobs under AQE, the shuffle map
+  * stage and the parallel collect), its guard covering each keyed set up
+  * to its readers' largest `maxCollect` (at most the 1 M-row driver
+  * bound), and every model is built on the driver. A member with more
+  * groups in one of its sets than its own guard falls back to its
+  * per-stage fit on the batch base (which then takes its distributed
+  * BigDict path); the others stay fused.
   *
   * '''Equivalence.''' Fused models equal per-stage fits exactly — same
   * stringification, null handling, lexicographic vocabulary order, and
@@ -262,7 +266,7 @@ object FitFusion {
       val slots = byKey.flatMap { case (k, cols) =>
         cols.map { case (in, _) => Slot(keyed(k), col(in), e.fuseAgg) }
       }
-      Fused(Nil, slots, Aggregator.CollectMax,
+      Fused(Nil, slots, Materialize.driverMaxRows.value,
         s => {
           val offs = byKey.scanLeft(0)(_ + _._2.length)
           new AggregatorModel(ins, outs, groupby, func, Nil,
@@ -457,15 +461,15 @@ object FitFusion {
     * built from it, and the members that must fit alone with the reason
     * (`overflow`: one of its keyed sets has more groups than its guard;
     * `empty-input`: no rows, so no `()` group; `single`: the only member
-    * left after the others overflowed a truncated collect).
+    * left after the others overflowed).
     *
-    * Each keyed set needs one row more than the largest guard among its
-    * readers to show whether it overflows (`()` has one row); the collect
-    * takes one row past the sum. Within the sum it holds every group, so
-    * each member is judged on its own sets and the rest are built from the
-    * same rows. Past it, the collect is truncated, but then some set is
-    * over its limit, so its readers overflow and the others are aggregated
-    * again without them. */
+    * The collect's guard is the sum of each keyed set's largest guard
+    * among its readers (and one row for `()`). Within it the collect holds
+    * every group, so each member is judged on its own sets and the rest
+    * are built from the same rows. Past it some set is over the guard of
+    * all its readers: the groups per set, counted over the rows the
+    * deciding job computed, judge every member exactly, and the others are
+    * aggregated again without the ones that overflow. */
   private def aggregate(base: DataFrame, ms: Seq[Member])
       : (Seq[(Member, Transformer)], Seq[(Member, String)]) = {
     val parts = ms.map(_.fused.get)
@@ -497,44 +501,44 @@ object FitFusion {
     val result = framed.groupingSets(
       sets.map(s => groupCols.filter(members(s)).map(col)),
       groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    // past the driver bound a member fits alone even under its own guard:
+    // its own fit collects up to that
+    def guard(f: Fused) = math.min(f.guard, Materialize.DriverMaxRows)
     val need = sets.map { s =>
-      if (s == Global) 1L
-      else math.min(parts.filter(_.sets.contains(s)).map(_.guard).max,
-        Int.MaxValue.toLong) + 1
+      if (s == Global) 1L else parts.filter(_.sets.contains(s)).map(guard).max
     }.sum
-    // one row past `need` tells a complete collect from a truncated one;
-    // the final reduce of a vocab-sized aggregate runs in one task, so the
-    // guarded collect is exactly ONE job
-    val limit = math.min(need + 1, Int.MaxValue - 1L).toInt
-    val rows = graft.util.Materialize.collectAtMost(result, limit)
     val nG = groupCols.length
     val setOf = gid.map(_.swap)
-    val bySet = rows.toSeq.groupBy(_.getLong(nG)).map { case (g, rs) =>
-      val s = setOf(g)
-      val ki = s.key.map(keys.indexOf)
-      val fi = s.fold.map(f => keys.length + folds.indexOf(f))
-      s -> rs.map(r => Group(ki.map(r.getString).orNull,
-        fi.fold(-1L)(r.getLong), r.getLong(nG + 1), r))
-    }
-    val (over, fit) = ms.partition(m => m.fused.get.sets.exists(s =>
-      s != Global && bySet.get(s).exists(_.length > m.fused.get.guard)))
-    val overflow = over.map(_ -> "overflow")
-    if (rows.length == limit) { // truncated: the members in `fit` unjudged
-      if (over.isEmpty) (Nil, ms.map(_ -> "overflow")) // only past Int.Max
-      else if (fit.length < 2) (Nil, overflow ++ fit.map(_ -> "single"))
-      else {
-        val (ok, alone) = aggregate(base, fit)
-        (ok, overflow ++ alone)
-      }
-    } else if (sets.contains(Global) && !bySet.contains(Global))
-      (Nil, ms.map(_ -> "empty-input"))
-    else {
-      val firsts = parts.scanLeft(nG + 2)(_ + _.slots.length)
-      val built = ms.zip(firsts).collect {
-        case (m, first) if fit.contains(m) => m -> m.fused.get.build(
-          new Stats(base.sparkSession, bySet, result.schema, first))
-      }
-      (built, overflow)
+    def overflows(groups: GSet => Long) = ms.partition(m => m.fused.get.sets
+      .exists(s => s != Global && groups(s) > guard(m.fused.get)))
+    Materialize.guardedCollect(result, need) match {
+      case Right(rows) =>
+        val bySet = rows.toSeq.groupBy(_.getLong(nG)).map { case (g, rs) =>
+          val s = setOf(g)
+          val ki = s.key.map(keys.indexOf)
+          val fi = s.fold.map(f => keys.length + folds.indexOf(f))
+          s -> rs.map(r => Group(ki.map(r.getString).orNull,
+            fi.fold(-1L)(r.getLong), r.getLong(nG + 1), r))
+        }
+        val (over, fit) = overflows(s => bySet.get(s).fold(0L)(_.length))
+        if (sets.contains(Global) && !bySet.contains(Global))
+          (Nil, ms.map(_ -> "empty-input"))
+        else {
+          val firsts = parts.scanLeft(nG + 2)(_ + _.slots.length)
+          val built = ms.zip(firsts).collect {
+            case (m, first) if fit.contains(m) => m -> m.fused.get.build(
+              new Stats(base.sparkSession, bySet, result.schema, first))
+          }
+          (built, over.map(_ -> "overflow"))
+        }
+      case Left(rows) =>
+        val groups = rows.groupBy("__ff_g").count().collect()
+          .map(r => setOf(r.getLong(0)) -> r.getLong(1)).toMap
+        val (over, fit) = overflows(groups.getOrElse(_, 0L))
+        val (ok, alone) =
+          if (fit.length < 2) (Nil, fit.map(_ -> "single"))
+          else aggregate(base, fit)
+        (ok, over.map(_ -> "overflow") ++ alone)
     }
   }
 }

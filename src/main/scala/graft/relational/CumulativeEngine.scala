@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.util.Materialize.DriverMaxRows
+import graft.util.Materialize
 
 /** THE shared strictly-below cumulative engine: given a DISTINCT-value
   * relation (one row per value — per group when `groupCols` is
@@ -24,20 +24,18 @@ import graft.util.Materialize.DriverMaxRows
   * mass). One implementation means one scale argument, one set of
   * plan-shape assertions, and no drift between paths.
   *
-  * [[rank]] collects the counted relation ONCE, sorted in Spark's order,
-  * behind a guard of `min(threshold, 1 M)` rows
-  * ([[graft.util.Materialize.guardedCollect]]: `guard + 1` rows read in one
-  * task, the sort in that task — one job, two with the counting
-  * aggregate's map stage — which also writes the lazy local checkpoint
-  * the distributed paths read). Then one of three paths:
+  * [[rank]] collects the counted relation ONCE, sorted on the driver in
+  * Spark's order, behind a guard of `min(threshold, 1 M)` rows
+  * ([[graft.util.Materialize.guardedCollect]]: one parallel job, two with
+  * the counting aggregate's map stage). Then one of three paths:
   *
   *  - driver (the relation fits the guard — quantized scores,
   *    dictionaries, anything up to the caller's threshold): exact
   *    sequential prefix sums on the driver in the collected order, handed
-  *    back as LOCAL relations with the same columns. The checkpoint is
-  *    released at once; the callers' totals are local too, and their
-  *    join-backs become broadcasts of local relations (a small
-  *    parallel-collection job each, no shuffle, no window).
+  *    back as LOCAL relations with the same columns. The callers' totals
+  *    are local too, and their join-backs become broadcasts of local
+  *    relations (a small parallel-collection job each, no shuffle, no
+  *    window).
   *
   *  - binned (over the threshold with a numeric value column —
   *    continuous values, distinct ≈ N): an exact BINNED cumulative over
@@ -58,16 +56,19 @@ import graft.util.Materialize.DriverMaxRows
   *    checkpoint ([[strictlyBelow]] `small = true`).
   *
   * Shape at 100 TB: the corpus is aggregated once into the distinct
-  * relation. The guard reads at most `guard + 1` of its rows in one task
-  * and never ships more than that to the driver, so a relation over the
-  * guard costs one bounded probe before the binned path reads the same
-  * checkpoint — the corpus is not scanned again. Under the guard no
-  * window, no shuffle join and no cached relation outlives the collect. Binning
-  * only partitions the value space, and the driver adds in the window's
-  * order, so the cumulative arithmetic is exact on every path: driver,
-  * window and binned are bit-identical (CumulativeEngineSpec; the
-  * forced-path oracle twins q_auc_binned / q_pctrank_binned /
-  * q_ks_exact_binned pin it against DuckDB).
+  * relation. The guard's job reads its partitions in parallel and ships at
+  * most about twice the guard, so over the guard it is one bounded probe;
+  * the distributed paths then read the rows it computed through a lazy
+  * local checkpoint ([[graft.util.Materialize.shared]]) — the binned path
+  * reads them three times and more, and a floating `sum` re-run over the
+  * shuffle outputs need not give the same bits twice — and the corpus is
+  * not scanned again. Under the guard no window, no shuffle join and no
+  * cached relation outlives the collect. Binning only partitions the value
+  * space, and the driver adds in the window's order, so the cumulative
+  * arithmetic is exact on every path: driver, window and binned are
+  * bit-identical (CumulativeEngineSpec; the forced-path oracle twins
+  * q_auc_binned / q_pctrank_binned / q_ks_exact_binned pin it against
+  * DuckDB).
   *
   * Every [[rank]] logs one INFO line: the call site, the rows (exact, or
   * `>guard`), the guard and the path taken.
@@ -104,7 +105,7 @@ private[graft] object CumulativeEngine {
     lazy val withTotals: DataFrame = withTotalsOf
     def onDriver: Boolean = path == "driver"
     def release(): Unit =
-      if (!onDriver) graft.util.Materialize.release(counts)
+      if (!onDriver) Materialize.release(counts)
   }
 
   /** Ranks the DISTINCT relation `counts` (not yet materialized) on
@@ -118,12 +119,13 @@ private[graft] object CumulativeEngine {
     require(measures.nonEmpty, "need at least one measure column")
     // whatever the caller's threshold, at most the collect bound the
     // fitted encoders use (1 M rows) comes to the driver
-    val guard = math.max(0L, math.min(maxRows, DriverMaxRows))
-    val (ranked, seen) = graft.util.Materialize.guardedCollect(counts, guard,
+    val guard = math.max(0L, math.min(maxRows, Materialize.DriverMaxRows))
+    val (ranked, seen) = Materialize.guardedCollect(counts, guard,
         (groupCols :+ valueCol).map(col): _*) match {
       case Right(rows) =>
         (onDriver(rows, counts, measures, groupCols), s"=${rows.length}")
-      case Left(cached) =>
+      case Left(over) =>
+        val cached = Materialize.shared(over)
         val below = strictlyBelow(cached, valueCol, measures, groupCols,
           small = !binnable)
         val totals = cached.groupBy(groupCols.map(col): _*).agg(

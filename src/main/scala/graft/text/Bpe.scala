@@ -31,15 +31,16 @@ import scala.collection.mutable
   *      (word, cnt) — BPE fits on word frequencies, not raw text, so every
   *      later round touches only distinct words.
   *   2. The table is collected behind a guard of 1 M words
-  *      ([[graft.util.Materialize.guardedCollect]]: one job, two under AQE
-  *      with the aggregate's map stage). When it fits, the
+  *      ([[graft.util.Materialize.guardedCollect]]: one job that reads
+  *      every partition in parallel, two under AQE with the aggregate's
+  *      map stage). When it fits, the
   *      merges are learned on the driver ([[learn]]): weighted pair counts
   *      kept incrementally — a round touches only the words that contain
   *      the winning pair — and a heap ordered by (count DESC, pair ASC),
   *      the pair compared as the UTF-8 bytes of `"l r"` exactly as Spark
   *      orders strings. No job runs per merge.
   *   3. Over the guard each merge round is ONE (pair -> weighted count)
-  *      aggregate over the checkpointed table — the shape of
+  *      aggregate over the table the guard's job computed — the shape of
   *      Ranking.collocations: map-side combine, exchange carries distinct
   *      pairs, global top-1 plans as TakeOrderedAndProject; the winning
   *      pair is collected (one row) and applied to every word's
@@ -68,12 +69,13 @@ import scala.collection.mutable
   * (natural-language corpora stay far below it) is learned on the driver
   * in two jobs at any numMerges, holding the words, their segmentations
   * and pair index — a few hundred bytes per word, a few hundred MB of
-  * driver heap at the bound. A larger vocabulary costs
-  * one bounded probe (at most 1 M + 1 rows read in one task)
-  * and then runs the distributed rounds on the checkpointed table, never
-  * re-reading the corpus: each round shuffles only distinct (pair, count)
-  * rows, bounded by distinct words × average word length, and the
-  * evolving segmentation table is localCheckpointed every
+  * driver heap at the bound. A larger vocabulary costs one bounded
+  * parallel probe (each partition read up to about twice its share of the
+  * bound) and then runs the distributed rounds on the table that probe's
+  * job computed (its last stage re-run over the word-count shuffle
+  * outputs), never re-reading the corpus: each round shuffles only
+  * distinct (pair, count) rows, bounded by distinct words × average word
+  * length, and the evolving segmentation table is localCheckpointed every
   * [[CheckpointEvery]] rounds (the Graph.scala discipline) so lineage
   * never grows with numMerges. [[encodeBpe]] ships the bounded merge
   * table inside the plan — no join, no shuffle, scan-speed encoding.
@@ -84,13 +86,6 @@ object Bpe {
 
   /** Rounds between localCheckpoints of the (cnt, seg) table. */
   val CheckpointEvery = 8
-
-  /** The most distinct words [[fitBpe]] learns from on the driver: the
-    * driver bound ([[Materialize.DriverMaxRows]]) unless a caller on this
-    * thread rebinds it (`withValue`), as the specs do to pin the
-    * distributed rounds. */
-  private[graft] val driverMaxWords = new scala.util.DynamicVariable(
-    Materialize.DriverMaxRows)
 
   private[text] def bpeWordsC(text: Column): Column =
     filter(TextFunctions.tokensLower(coalesce(text, lit(""))),
@@ -140,23 +135,23 @@ object Bpe {
     require(numMerges >= 1 && numMerges <= 4096,
       s"numMerges must be in [1, 4096], got $numMerges")
     // the one corpus-wide pass: distinct-word frequencies, collected
-    // behind the guard or checkpointed for the rounds
+    // behind the guard, or read again from the guard's job by the rounds
     val words = df
       .select(explode(bpeWords(textCol)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-    val guard = driverMaxWords.value
+    val guard = Materialize.driverMaxRows.value
     Materialize.guardedCollect(words, guard) match {
       case Right(rows) =>
         log.info(s"Bpe.fitBpe: words=${rows.length} guard=$guard path=driver")
         learn(rows.map(r => (r.getString(0), r.getLong(1))), numMerges)
-      case Left(cached) =>
+      case Left(table) =>
         log.info(s"Bpe.fitBpe: words>$guard guard=$guard path=rounds")
-        rounds(cached, numMerges)
+        rounds(table, numMerges)
     }
   }
 
-  /** The distributed rounds over the checkpointed (word, cnt) table, seeded
-    * with the all-chars segmentation; the table and every checkpoint are
+  /** The distributed rounds over the (word, cnt) table the guard's job
+    * computed, seeded with the all-chars segmentation; every checkpoint is
     * released by the end. */
   private def rounds(words: DataFrame, numMerges: Int): Seq[Merge] = {
     var cur = words.select(col("cnt"), wrapChars(col("word")).as("seg"))

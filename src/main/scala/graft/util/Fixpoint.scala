@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
-import scala.util.DynamicVariable
 
 /** The one loop runner of the iterative operators (PageRank, BFS,
   * k-core, label propagation, distributed duplicate components), laid out
@@ -31,25 +30,18 @@ object Fixpoint {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** The most edges a graph loop runs on the driver with: the driver
-    * bound, unless a caller on this thread rebinds it (`withValue`), as
-    * the specs do to pin either path (at 0 only an empty edge set stays
-    * on the driver). */
-  private[graft] val driverMaxEdges =
-    new DynamicVariable[Long](Materialize.DriverMaxRows)
-
   /** A graph loop's normalized edges (or BFS sources), not yet
     * materialized, through the guard: `Right(rows)` when there are at
-    * most [[driverMaxEdges]] of them, else `Left` for the distributed
-    * path: `df` itself when it is a local relation, whose rows no job
-    * reads, else a relation over the rows the collect's job computed
-    * ([[Materialize.guardedCollect]]). */
+    * most [[Materialize.driverMaxRows]] of them, else `Left` for the
+    * distributed path: `df` itself when it is a local relation, whose rows
+    * no job reads, else a relation over the rows the collect's job
+    * computed ([[Materialize.guardedCollect]]). */
   def onDriver(df: DataFrame): Either[DataFrame, Array[Row]] =
-    Materialize.guardedCollect(df, driverMaxEdges.value)
+    Materialize.guardedCollect(df, Materialize.driverMaxRows.value)
 
   /** The loop line's path field for a distributed loop over the guard. */
   def overGuard(what: String = "edges"): String = {
-    val guard = driverMaxEdges.value
+    val guard = Materialize.driverMaxRows.value
     s"path=distributed $what>$guard guard=$guard"
   }
 
@@ -97,7 +89,8 @@ object Fixpoint {
       (stats: S => Map[String, Long])(done: S => Boolean)
       (step: (Int, S) => S): S =
     loop(name, seed, maxRounds, stats, "",
-      s"path=driver edges=$edges guard=${driverMaxEdges.value}")(done)(step)
+      s"path=driver edges=$edges guard=${Materialize.driverMaxRows.value}")(
+      done)(step)
 
   private def loop[S](name: String, seed: S, maxRounds: Int,
       stats: S => Map[String, Long], detail: => String, path: String)

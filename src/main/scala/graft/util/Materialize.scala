@@ -4,13 +4,15 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
 import org.apache.spark.sql.execution.{CollectMetricsExec, LogicalRDD,
   SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.DynamicVariable
 
 /** The one way graft materializes an intermediate relation and reads exact
   * counts off it, chosen by the relation's lifetime:
@@ -41,6 +43,11 @@ object Materialize {
     * fitted encoders' and aggregators' collects, the ranking engine, the
     * graph loops and the union-find of duplicate components. */
   val DriverMaxRows = 1000000L
+
+  /** The guard of the graph loops, BPE and grouped `Aggregator` fits:
+    * [[DriverMaxRows]] unless a caller on this thread rebinds it, as the
+    * specs do to pin either path. */
+  private[graft] val driverMaxRows = new DynamicVariable[Long](DriverMaxRows)
 
   /** A materialized relation with the counters observed on the job that
     * built it (a sum over no rows reads 0). */
@@ -93,85 +100,78 @@ object Materialize {
     }
   }
 
-  /** At most `n` rows of `df` in ONE job: `coalesce(1)` reads them in one
-    * task (`executeTake` would probe the partitions incrementally, a job
-    * per probe), and `order`, when given, sorts them in that task, after
-    * the limit. */
-  def collectAtMost(df: DataFrame, n: Int, order: Column*): Array[Row] = {
-    val taken = df.coalesce(1).limit(n)
-    (if (order.isEmpty) taken else taken.orderBy(order: _*)).collect()
-  }
-
-  /** All rows of `df` (whose rows are `rdd`), in partition order, when it
-    * has at most `n`, in ONE job that reads every partition in parallel. A
+  /** All rows of `rdd` (an executed plan of `df`), in partition order,
+    * when it has at most `n`. ONE job reads every partition in parallel: a
     * partition sends its rows when it holds at most about twice its even
-    * share of `n`; past that it stops reading and sends only that bound, so
-    * at most about `2n` rows reach the driver. When the partitions that
-    * stopped leave the total undecided, a second job reads them whole. */
+    * share of `n`; past that it stops reading and sends only that it
+    * stopped. When the stopped ones leave the total undecided, a second job
+    * counts their rows, and a third fetches them once the total is known to
+    * fit: at most about `2n` rows reach the driver, `n` when they fit. */
   private def collectUpTo(df: DataFrame, rdd: RDD[InternalRow], n: Long)
-      : Option[Array[Row]] = {
-    val parts = rdd.getNumPartitions
-    // each partition's rows when it has at most `cap`, else `cap + 1`
-    def run(cap: Long, which: Seq[Int])
-        : Array[Either[Long, Array[InternalRow]]] =
-      if (which.isEmpty) Array.empty
+      : Option[Array[InternalRow]] = {
+    // each partition's rows when it has at most `cap` and `keep` holds,
+    // else its row count, read up to `cap + 1`
+    def run(which: Seq[Int], cap: Long, keep: Boolean) =
+      if (which.isEmpty) Array.empty[Either[Long, Array[InternalRow]]]
       else SQLExecution.withNewExecutionId(df.queryExecution,
           Some("guardedCollect"))(
         rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
           val kept = ArrayBuffer[InternalRow]()
-          while (it.hasNext && kept.length <= cap) kept += it.next().copy()
-          if (kept.length <= cap) Right(kept.toArray)
-          else Left(kept.length.toLong)
+          var seen = 0L
+          while (it.hasNext && seen <= cap) {
+            val row = it.next()
+            if (keep) kept += row.copy()
+            seen += 1
+          }
+          if (keep && seen <= cap) Right(kept.toArray) else Left(seen)
         }: Either[Long, Array[InternalRow]], which))
-    def size(p: Either[Long, Array[InternalRow]]) =
-      p.fold(identity, _.length.toLong)
-    val first = run(math.min(n + 1, 2 * (n + 1) / math.max(parts, 1) + 1),
-      0 until parts)
-    val all =
-      if (first.map(size).sum > n) first
-      else {
-        val stopped = first.indices.filter(first(_).isLeft)
-        val whole = stopped.zip(run(n, stopped)).toMap
-        first.indices.map(i => whole.getOrElse(i, first(i))).toArray
-      }
-    if (all.exists(_.isLeft) || all.map(size).sum > n) None
+    val cap = math.min(n + 1,
+      2 * (n + 1) / math.max(rdd.getNumPartitions, 1) + 1)
+    val first = run(0 until rdd.getNumPartitions, cap, keep = true)
+    val stopped = first.indices.filter(first(_).isLeft)
+    val known = first.collect { case Right(rs) => rs.length.toLong }.sum
+    // a stopped partition holds at least `cap + 1` rows, so with the total
+    // at most `n` none holds more than `room`
+    val room = n - known - (stopped.size - 1) * (cap + 1)
+    if (known + stopped.size * (cap + 1) > n || known + run(stopped, room,
+        keep = false).collect { case Left(c) => c }.sum > n) None
     else {
-      val decode = ExpressionEncoder(df.schema).resolveAndBind()
-        .createDeserializer()
-      Some(all.flatMap(_.toSeq.flatten).map(decode))
+      val whole = stopped.zip(run(stopped, room, keep = true)).toMap
+      val all = first.indices.map(i => whole.getOrElse(i, first(i)))
+      Option.when(all.forall(_.isRight))(all.flatMap(_.toOption.get).toArray)
     }
   }
 
   /** The guarded driver finish: `df` (not yet materialized) collected when
-    * it has at most `guard` rows — `Right(rows)`, sorted by `order` —
-    * else `Left` of `df` for the distributed path. A local relation (after
-    * optimization) needs no job: its rows are on the driver already, and
-    * `Left` is `df` itself. Otherwise ONE job decides. Without an `order`
-    * it reads every partition in parallel ([[collectUpTo]]), and `Left` is
-    * a relation over the rows that job computed: reading it runs `df`'s
-    * last stage again on the shuffle outputs the job left, so nothing
-    * before that stage is recomputed, and no checkpoint is stored (on a
-    * multi-million-row input, storing one cost more than that re-read);
-    * `df` must be deterministic. With an `order`, [[collectAtMost]] reads
-    * `guard + 1` rows in one sorting task, and `Left` is the lazy local
-    * checkpoint that job wrote, which Spark completes in a job of its own.
+    * it has at most `guard` rows — `Right(rows)`, sorted by `order` with
+    * the ordering Spark's own sort uses (nulls first, NaN last, -0.0 equal
+    * to 0.0, strings in UTF-8 byte order) — else `Left` of a relation with
+    * its rows. A local relation (after optimization) needs no job, and
+    * `Left` is `df` itself. Otherwise [[collectUpTo]] decides, and `Left`
+    * reads the rows its first job computed: `df`'s last stage runs again
+    * on the shuffle outputs that job left, so nothing before it is
+    * recomputed and no checkpoint is stored (on a multi-million-row input,
+    * storing one cost more than that re-read); `df` must be deterministic.
     * `guard` must be below `Int.MaxValue`. */
   def guardedCollect(df: DataFrame, guard: Long, order: Column*)
       : Either[DataFrame, Array[Row]] = {
     require(guard >= 0 && guard < Int.MaxValue, s"guard $guard")
-    df.queryExecution.optimizedPlan match {
-      case local: LocalRelation if order.isEmpty =>
-        if (local.data.length > guard) Left(df) else Right(df.collect())
-      case _ if order.isEmpty =>
-        val rdd = df.queryExecution.toRdd
-        collectUpTo(df, rdd, guard).toRight(
-          org.apache.spark.sql.graft.Bridge.relation(df, rdd))
+    val (rows, over) = df.queryExecution.optimizedPlan match {
+      case local: LocalRelation =>
+        (Some(local.data.toArray).filter(_.length <= guard), df)
       case _ =>
-        val cached = shared(df)
-        val rows = collectAtMost(cached, (guard + 1).toInt, order: _*)
-        if (rows.length > guard) Left(cached)
-        else { release(cached); Right(rows) }
+        val rdd = df.queryExecution.toRdd
+        (collectUpTo(df, rdd, guard),
+          org.apache.spark.sql.graft.Bridge.relation(df, rdd))
     }
+    rows.map { rs =>
+      val sorted = if (order.isEmpty) rs else rs.sorted(RowOrdering.create(
+        df.orderBy(order: _*).queryExecution.analyzed
+          .collectFirst { case s: Sort => s.order }.get,
+        df.queryExecution.analyzed.output))
+      sorted.map(ExpressionEncoder(df.schema).resolveAndBind()
+        .createDeserializer())
+    }.toRight(over)
   }
 
   private def observe(df: DataFrame, counters: Seq[Column]): DataFrame =

@@ -1,6 +1,7 @@
 package graft
 
 import graft.text.Bpe
+import graft.util.Materialize
 import org.apache.spark.sql.functions.{col, udf}
 
 /** The guarded BPE fit: a word table under the guard is learned on the
@@ -67,7 +68,7 @@ class BpeDriverSpec extends SparkSpec {
   }
 
   private def rounds[T](body: => T): T =
-    Bpe.driverMaxWords.withValue(0L)(body)
+    Materialize.driverMaxRows.withValue(0L)(body)
 
   test("driver fit == distributed rounds == reference: ties, runs, " +
       "exhaustion and seeded random corpora") {
@@ -115,7 +116,7 @@ class BpeDriverSpec extends SparkSpec {
     assert(lines == Seq(s"Bpe.fitBpe: words=${words.size} " +
       "guard=1000000 path=driver"))
     val (_, over) = logLines(Bpe.getClass.getName) {
-      Bpe.driverMaxWords.withValue(5L)(Bpe.fitBpe(df, "text", 3))
+      Materialize.driverMaxRows.withValue(5L)(Bpe.fitBpe(df, "text", 3))
     }
     assert(over == Seq("Bpe.fitBpe: words>5 guard=5 path=rounds"))
   }
@@ -128,7 +129,7 @@ class BpeDriverSpec extends SparkSpec {
     // several expressions, which would count one row more than once
     val tap = udf { (s: String) => scans.add(1); s }.asNondeterministic()
     val tapped = docs.toDF("text").select(tap(col("text")).as("text"))
-    val merges = Bpe.driverMaxWords.withValue(3L)(
+    val merges = Materialize.driverMaxRows.withValue(3L)(
       Bpe.fitBpe(tapped, "text", 12))
     assert(scans.sum == docs.size, s"corpus read ${scans.sum} rows")
     assert(merges == refBpe(docs, 12))

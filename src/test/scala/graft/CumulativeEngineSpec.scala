@@ -186,14 +186,19 @@ class CumulativeEngineSpec extends SparkSpec {
       "grouped) and the Eval ranking family agree on the driver and binned " +
       "paths, a string percentileRank on the driver and window paths") {
     val vals = Seq(Double.NaN, -0.0, 0.0, 1.5, 1.5, -2.0, Double.NaN, 3.25,
-      0.0, -0.0, 7.0, 1.5, -2.0, 11.0, Double.NegativeInfinity)
+      0.0, -0.0, 7.0, 1.5, -2.0, 11.0, Double.NegativeInfinity, 2.5, 4.75,
+      -3.0)
+    // the last three rows' strings: UTF-8 byte order puts U+1F600 after
+    // U+FFFF, where a Java String (UTF-16) sort puts it before
+    val texts = Seq("\u00e9", "\uFFFF", "\uD83D\uDE00")
     val df = vals.zipWithIndex.map { case (v, i) =>
       (i.toLong, if (i == 4) None else Some(v),
         if (i % 5 == 0) None else Some(s"g${i % 2}"),
         (i % 3 == 0).compare(false),
-        (i * 7 % 5).toDouble, if (i % 2 == 0) "a" else "b")
-    }.toDF("row_id", "v", "g", "label", "w", "side")
-      .withColumn("sv", col("v").cast("string"))
+        (i * 7 % 5).toDouble, if (i % 2 == 0) "a" else "b",
+        texts.lift(i - vals.length + texts.length))
+    }.toDF("row_id", "v", "g", "label", "w", "side", "text")
+      .withColumn("sv", coalesce(col("text"), col("v").cast("string")))
     // threshold above every count: the driver; threshold 0: the binned
     // path, or the window for the string column
     def same(name: String)(run: Long => DataFrame, order: String*): Unit =

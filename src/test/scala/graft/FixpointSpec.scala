@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import graft.relational.Graph
 import graft.text.Dedup
-import graft.util.{Fixpoint, Joins}
+import graft.util.{Fixpoint, Joins, Materialize}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -105,7 +105,7 @@ class FixpointSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** A test whose graph loops take the distributed path. */
   private def distributedTest(name: String)(body: => Any): Unit =
-    test(name)(Fixpoint.driverMaxEdges.withValue(0L)(body))
+    test(name)(Materialize.driverMaxRows.withValue(0L)(body))
 
   // ---- the five loops against plain-Scala replays ------------------------
 

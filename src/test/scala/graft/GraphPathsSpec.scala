@@ -29,7 +29,7 @@ class GraphPathsSpec extends SparkSpec {
 
   private def run(guard: Long)(call: => DataFrame): Run = {
     val (df, lines) = logLines(Fixpoint.getClass.getName)(
-      Fixpoint.driverMaxEdges.withValue(guard)(call))
+      Materialize.driverMaxRows.withValue(guard)(call))
     assert(lines.size == 1, lines)
     Run(df.collect().map(_.toSeq.mkString("|")).sorted.toSeq, df.schema,
       lines.head)
@@ -210,7 +210,7 @@ class GraphPathsSpec extends SparkSpec {
       "and wraps alike on both without ANSI mode") {
     val huge = weighted(Seq(("a", "b", Long.MaxValue / 2), ("b", "a", 1L)))
     for (guard <- Seq(Materialize.DriverMaxRows, 0L)) {
-      val e = intercept[Throwable](Fixpoint.driverMaxEdges.withValue(guard)(
+      val e = intercept[Throwable](Materialize.driverMaxRows.withValue(guard)(
         Graph.pageRank(huge, "src", "dst", "w", 2).collect()))
       assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .exists(_.isInstanceOf[ArithmeticException]), s"guard $guard: $e")
@@ -245,7 +245,7 @@ class GraphPathsSpec extends SparkSpec {
       ("labelPropagation", n,
         in => Graph.labelPropagation(in._2, "src", "dst", 5), 1))
     def jobs(guard: Long)(call: => DataFrame) =
-      countJobs(Fixpoint.driverMaxEdges.withValue(guard)(call).collect())
+      countJobs(Materialize.driverMaxRows.withValue(guard)(call).collect())
     for ((name, edges, call, under) <- calls) {
       val (_, lines) = logLines(Fixpoint.getClass.getName)(
         assert(jobs(edges)(call(rdd)) == under, name))

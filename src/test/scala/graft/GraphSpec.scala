@@ -1,7 +1,7 @@
 package graft
 
 import graft.relational.Graph
-import graft.util.{Fixpoint, Materialize}
+import graft.util.Materialize
 import org.apache.spark.sql.functions.col
 
 /** Integer-deterministic PageRank: mass conservation (up to documented
@@ -65,7 +65,7 @@ class GraphSpec extends SparkSpec {
     * driver path. */
   private def onBothPaths(body: => Unit): Unit =
     for (guard <- Seq(0L, Materialize.DriverMaxRows))
-      Fixpoint.driverMaxEdges.withValue(guard)(body)
+      Materialize.driverMaxRows.withValue(guard)(body)
 
   test("result is partition-count invariant (integer determinism)") {
     val edges = (1 to 40).map(i =>

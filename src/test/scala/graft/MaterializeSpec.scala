@@ -69,16 +69,19 @@ class MaterializeSpec extends SparkSpec {
       "relation reads that job's rows again without rerunning the stages " +
       "before them; a partition past twice its share costs a second job " +
       "only when the first leaves the total undecided") {
-    // 100 rows in each of 4 partitions; the filter leaves 100, 30, 0, 0
+    // 100 rows in each of 4 partitions; the filter leaves 100, 30, 0, 0.
+    // The second job counts the stopped partition; a third fetches it only
+    // when that count leaves the total within the guard
     val even = spark.range(0, 400, 1, 4).toDF("id")
     val skewed = even.filter($"id" < 130)
-    for ((df, n, jobs) <- Seq((even, 400L, 1), (skewed, 130L, 2))) {
+    for ((df, n, under, over) <- Seq((even, 400L, 1, 1),
+        (skewed, 130L, 3, 2))) {
       var got: Either[DataFrame, Array[Row]] = null
-      assert(countJobs { got = Materialize.guardedCollect(df, n) } == jobs,
+      assert(countJobs { got = Materialize.guardedCollect(df, n) } == under,
         s"$n rows")
       assert(got.toOption.get.map(_.getLong(0)).toSeq == (0L until n))
       assert(countJobs { got = Materialize.guardedCollect(df, n - 1) } ==
-        jobs, s"$n rows over the guard")
+        over, s"$n rows over the guard")
       assert(got.left.toOption.get.as[Long].collect().toSeq == (0L until n))
     }
     // far over the guard every partition stops at twice its share
@@ -99,6 +102,77 @@ class MaterializeSpec extends SparkSpec {
       Materialize.guardedCollect(local, 5).toOption.get.length == 5)) == 0)
     assert(countJobs(assert(
       Materialize.guardedCollect(local, 4).left.toOption.get eq local)) == 0)
+  }
+
+  /** The bytes of the task results of the jobs `body` starts. */
+  private def resultBytes(body: => Unit): Long = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val bytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.resultSize))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // listener events are async; poll until the total is stable
+      var (last, same) = (-1L, 0)
+      while (same < 3) {
+        val now = bytes.get()
+        if (now == last) same += 1 else { same = 0; last = now }
+        Thread.sleep(100)
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+    bytes.get()
+  }
+
+  test("guardedCollect over the guard with several partitions far past " +
+      "their share sends the driver no more than about twice the guard") {
+    // 16 partitions of 300 rows; the filter keeps 4 of them whole, so
+    // 1 200 rows of about 1 KB, and each kept partition stops the first job
+    val wide = spark.range(0, 4800, 1, 16).toDF("id")
+      .filter(($"id" / 300).cast("long") % 4 === 0)
+      .withColumn("pad", repeat(lit("x"), 1000))
+    val guard = 399L
+    var got: Either[DataFrame, Array[Row]] = null
+    val bytes = resultBytes { got = Materialize.guardedCollect(wide, guard) }
+    assert(bytes < 2 * guard * 1000, s"$bytes bytes")
+    assert(got.left.toOption.get.select("id").as[Long].collect().sorted
+      .toSeq == wide.select("id").as[Long].collect().sorted.toSeq)
+  }
+
+  test("guardedCollect sorts on the driver in Spark's order: nulls first, " +
+      "NaN last, -0.0 equal to 0.0, strings in UTF-8 byte order") {
+    val df = Seq[(Option[Double], String, Int)]((Some(Double.NaN), "b", 0),
+      (Some(0.0), "\uFFFF", 1), (None, "a", 2), (Some(-0.0), "\u00e9", 3),
+      (Some(-1.5), "\uD83D\uDE00", 4), (Some(0.0), "z", 5),
+      (Some(Double.NegativeInfinity), null, 6), (None, "", 7))
+      .toDF("v", "s", "i")
+    for (input <- Seq(df, df.repartition(3)); order <- Seq(
+        Seq(col("v"), col("i")), Seq(col("s")), Seq(col("s").desc, col("i")),
+        Seq(col("v").desc_nulls_last, col("s")))) {
+      val got = Materialize.guardedCollect(input, 8, order: _*)
+      assert(got.toOption.get.map(_.getInt(2)).toSeq ==
+        df.orderBy(order: _*).collect().map(_.getInt(2)).toSeq, order)
+    }
+  }
+
+  test("a grouped Aggregator over the guard persists its lookup, and its " +
+      "transform equals the driver-held lookup's") {
+    val df = (0 until 200).map(i => (s"k${i % 23}", i * 0.5, i % 7))
+      .toDF("k", "x", "n")
+    val agg = new graft.operators.Aggregator(Seq("x", "n"), Seq("mx", "mn"),
+      Seq("k", "k"), "mean")
+    val driver = agg.fit(df)
+    val over = Materialize.driverMaxRows.withValue(0L)(agg.fit(df))
+    assert(driver.lookups.map(_.broadcastable) == Seq(true))
+    assert(over.lookups.map(_.broadcastable) == Seq(false))
+    val lookup = over.lookups.head.df
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    assert(cacheManager.lookupCachedData(lookup).isDefined)
+    assert(over.transform(df).collect().toSet ==
+      driver.transform(df).collect().toSet)
+    Materialize.release(lookup)
   }
 
   test("checkpoint reads the counters observed anywhere in its query, not " +

@@ -42,7 +42,7 @@ class Round10PlanSpec extends SparkSpec {
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("x", "y"),
       ("y", "z"), ("z", "x")).toDF("src", "dst")
     // the distributed loop: under its guard the result is a local relation
-    def lpa(rounds: Int) = graft.util.Fixpoint.driverMaxEdges.withValue(0L)(
+    def lpa(rounds: Int) = graft.util.Materialize.driverMaxRows.withValue(0L)(
       plan(graft.relational.Graph.labelPropagation(edges, "src", "dst",
         rounds)))
     val (p2, p5) = (lpa(2), lpa(5))
